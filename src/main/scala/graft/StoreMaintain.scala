@@ -16,6 +16,8 @@ import graft.sources.{DedupLayout, SubstrLayout, TextLayout, VectorLayout}
   *     ([[DedupLayout.compact]] — which re-bounds the refresh to its
   *     own watermark, so running both is safe and idempotent);
   *   - text: fold the token/partials logs ([[TextLayout.compact]]);
+  *   - substr: fold the fingerprint/count logs ([[SubstrLayout.compact]];
+  *     roots built before the substr family report a skip);
   *   - vectors (only when the layout exists — a root whose vector
   *     family was never built reports a skip instead of crashing):
   *     fold the cell/batch log ([[VectorLayout.compact]]), read the
@@ -27,6 +29,13 @@ import graft.sources.{DedupLayout, SubstrLayout, TextLayout, VectorLayout}
   *     superseded, so the reader-drain grace holds even when runs
   *     collapse in time; the swap run additionally keeps the version
   *     it just retired (keep=2) regardless of age.
+  *
+  * The four family blocks (dedup, text, substr, vectors) touch
+  * disjoint store roots, so they run side by side on driver threads
+  * ([[Families.all]]); the store root conf is set once, before they
+  * fork, and no block writes session conf (the exception is a retrain
+  * under `ncells=auto`, which pins K inside the vector block — only
+  * vector code reads that key). The outcome lines keep family order.
   *
   * Every step is idempotent and watermark-gated, so the job can run on
   * any schedule, after any crash, with nothing to hand it but the
@@ -43,37 +52,45 @@ import graft.sources.{DedupLayout, SubstrLayout, TextLayout, VectorLayout}
   */
 object StoreMaintain {
 
-  /** Run every maintenance action; returns (action, outcome) lines. */
+  /** Run every maintenance action; returns (action, outcome) lines in
+    * family order (dedup, text, substr, sim). The four family blocks
+    * run side by side ([[Families.all]]); the store root is set once,
+    * before they fork.
+    */
   def maintainAll(spark: SparkSession, root: String): Seq[(String, String)] = {
     spark.conf.set(CacheLife.RootKey, root)
-    val dedupRoot = StoreBuild.dedupLayoutDir(root)
-    val textRoot = StoreBuild.textLayoutDir(root)
-    val vecRoot = StoreBuild.vectorLayoutDir(root)
-    val out = Seq.newBuilder[(String, String)]
+    Families.all(Seq(
+      () => dedup(spark, StoreBuild.dedupLayoutDir(root)),
+      () => Seq("text.compact" ->
+        s"watermark=${TextLayout.compact(spark, StoreBuild.textLayoutDir(root))}"),
+      () => substr(spark, StoreBuild.substrLayoutDir(root)),
+      () => vectors(spark, StoreBuild.vectorLayoutDir(root)))).flatten
+  }
 
+  private def dedup(spark: SparkSession, dedupRoot: String): Seq[(String, String)] = {
     DedupLayout.refreshLabels(spark, dedupRoot)
-    out += "dedup.refresh_labels" -> "refreshed"
-    out += "dedup.compact" ->
-      s"watermark=${DedupLayout.compact(spark, dedupRoot)}"
-    out += "text.compact" ->
-      s"watermark=${TextLayout.compact(spark, textRoot)}"
-    val substrRoot = StoreBuild.substrLayoutDir(root)
-    out += "substr.compact" ->
+    Seq("dedup.refresh_labels" -> "refreshed",
+      "dedup.compact" -> s"watermark=${DedupLayout.compact(spark, dedupRoot)}")
+  }
+
+  private def substr(spark: SparkSession, substrRoot: String): Seq[(String, String)] =
+    Seq("substr.compact" ->
       (if (SubstrLayout.exists(spark, substrRoot))
         s"watermark=${SubstrLayout.compact(spark, substrRoot)}"
-      else "skipped: no layout") // roots built before the substr family
-    if (!VectorLayout.exists(spark, vecRoot)) {
-      // the dedup/text steps above no-op gracefully on an absent store,
-      // but every vector action below starts from a layout read — on a
-      // root whose vector family was never built, report the skip
-      // instead of crashing with a bare path error (round-9 advice)
-      out += "sim.layout_drift" -> "skipped: no layout"
-      return out.result()
-    }
+      else "skipped: no layout")) // roots built before the substr family
+
+  private def vectors(spark: SparkSession, vecRoot: String): Seq[(String, String)] = {
+    // the dedup/text steps no-op gracefully on an absent store, but
+    // every vector action below starts from a layout read — on a root
+    // whose vector family was never built, report the skip instead of
+    // crashing with a bare path error (round-9 advice)
+    if (!VectorLayout.exists(spark, vecRoot))
+      return Seq("sim.layout_drift" -> "skipped: no layout")
+    val out = Seq.newBuilder[(String, String)]
     out += "sim.layout_compact" ->
       s"watermark=${VectorLayout.compact(spark, vecRoot)}"
 
-    val drift = VectorLayout.occupancyDrift(spark, vecRoot).head
+    val drift = VectorLayout.occupancyDrift(spark, vecRoot).head()
     val retrain = drift.getAs[Boolean]("retrain")
     out += "sim.layout_drift" -> s"retrain=$retrain"
     val versioned = VectorLayout.currentVersion(spark, vecRoot).isDefined

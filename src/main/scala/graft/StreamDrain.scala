@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.operators.SimilarityQueries
 import graft.sources.{DedupLayout, SubstrLayout, TextLayout, VectorLayout}
 import graft.streaming.{DedupStream, SubstrStream, TextStream, VectorStream}
 
@@ -14,10 +17,11 @@ import graft.streaming.{DedupStream, SubstrStream, TextStream, VectorStream}
   *
   *   1. bases: each incremental store materializes on 80% of the
   *      corpus ([[VectorLayout.materializeWhere]] /
-  *      [[DedupLayout.materialize]] / [[TextLayout.materialize]]);
-  *   2. the held-out 20% lands in a file landing zone split into N
-  *      files → N micro-batches (`maxFilesPerTrigger=1`), and all
-  *      four ingest streams drain it ([[DedupStream.ingestSink]],
+  *      [[DedupLayout.materialize]] / [[TextLayout.materialize]] /
+  *      [[SubstrLayout.materialize]]), and the held-out 20% lands in a
+  *      file landing zone split into N files;
+  *   2. all four ingest streams drain the landing zone, N micro-batches
+  *      each (`maxFilesPerTrigger=1`) ([[DedupStream.ingestSink]],
   *      [[TextStream.ingestSink]], [[SubstrStream.ingestSink]],
   *      [[VectorStream.ingestSink]]);
   *   3. [[StoreMaintain.maintainAll]] runs the between-drains
@@ -25,6 +29,20 @@ import graft.streaming.{DedupStream, SubstrStream, TextStream, VectorStream}
   *   4. [[Doctor.run]] fscks the root — the process exit code is the
   *      Doctor's, so a drain that leaves ANY view-breaking state fails
   *      loudly.
+  *
+  * The four store families (dedup, text, substr, vectors) share no
+  * directory and no mutable engine state, so each phase overlaps them
+  * through [[Families.all]]: the four bases and the landing write run
+  * side by side; the four streams start together (in family order,
+  * from the calling thread) and drain side by side; maintenance runs
+  * its family blocks side by side. Each phase waits for all of its
+  * families, stops every stream it started, and then rethrows the
+  * first family failure. The Doctor gate stays last and serial.
+  * Thread-safety rules for a family step: it writes only under its own
+  * store root, and it writes no session conf — the one corpus-derived
+  * knob on this path (`ncells=auto`) is pinned before the first fork.
+  * Each `[drain] <step>` line prints when that family's step finishes,
+  * timed from the start of its phase.
   *
   * Usage: `runMain graft.StreamDrain <sfDir> <workRoot> [nBatches]`
   * — the round-10 judge ask is `<sfDir> = testdata_up/sf1` (the 10×
@@ -35,8 +53,8 @@ object StreamDrain {
   def run(spark: SparkSession, sfDir: String, root: String,
           nBatches: Int = 4): Int = {
     require(nBatches >= 1, s"nBatches must be >= 1, got $nBatches")
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
+    // run `f`, then print its step line timed from `t0`, its phase's start
+    def timed[A](name: String, t0: Long = System.nanoTime())(f: => A): A = {
       val r = f
       println(f"[drain] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
       r
@@ -45,52 +63,64 @@ object StreamDrain {
     val vecs = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
     val holdDocs = pmod(col("doc_id"), lit(5)) === 4
     val holdVecs = pmod(col("vec_id"), lit(5)) === 4
-
-    // 1. bases on the 80% slice
     val dedupRoot = StoreBuild.dedupLayoutDir(root)
     val textRoot = StoreBuild.textLayoutDir(root)
-    val vecRoot = StoreBuild.vectorLayoutDir(root)
-    timed("base: dedup.materialize")(
-      DedupLayout.materialize(spark, docs.filter(!holdDocs), dedupRoot))
-    timed("base: text.materialize")(
-      TextLayout.materialize(spark, docs.filter(!holdDocs), textRoot))
     val substrRoot = StoreBuild.substrLayoutDir(root)
-    timed("base: substr.materialize")(
-      SubstrLayout.materialize(spark, docs.filter(!holdDocs), substrRoot))
-    timed("base: vectors.materialize")(
-      VectorLayout.materializeWhere(spark, sfDir, vecRoot, !holdVecs))
-
-    // 2. landing zones: the held-out slice in nBatches files each
+    val vecRoot = StoreBuild.vectorLayoutDir(root)
     val docLanding = root.stripSuffix("/") + "/_landing/docs"
     val vecLanding = root.stripSuffix("/") + "/_landing/vecs"
-    timed("land: held-out slices") {
-      docs.filter(holdDocs).repartition(nBatches)
-        .write.mode("overwrite").parquet(docLanding)
-      vecs.filter(holdVecs).repartition(nBatches)
-        .write.mode("overwrite").parquet(vecLanding)
-    }
-    def drain(name: String, start: => org.apache.spark.sql.streaming.StreamingQuery): Unit =
-      timed(s"drain: $name") {
-        val q = start
-        try q.processAllAvailable() finally q.stop()
-      }
-    val ckpt = root.stripSuffix("/") + "/_ckpt"
-    drain("dedup ingest", DedupStream.ingestSink(
-      DedupStream.read(spark, docLanding), dedupRoot, s"$ckpt/dedup"))
-    drain("text ingest", TextStream.ingestSink(
-      TextStream.read(spark, docLanding), textRoot, s"$ckpt/text"))
-    drain("substr ingest", SubstrStream.ingestSink(
-      SubstrStream.read(spark, docLanding), substrRoot, s"$ckpt/substr"))
-    drain("vector ingest", VectorStream.ingestSink(
-      VectorStream.read(spark, vecLanding), sfDir, vecRoot, s"$ckpt/vecs"))
+    // the one session write on the vector path (ncells=auto → K), made
+    // before the families fork so none of them writes session conf
+    SimilarityQueries.pinAutoNCells(spark, sfDir)
 
-    // 3. scheduled maintenance between drains
+    // 1. bases on the 80% slice, and the held-out slice landed in
+    //    nBatches files each — five independent writers
+    Families.all(Seq(
+      () => timed("base: dedup.materialize")(
+        DedupLayout.materialize(spark, docs.filter(!holdDocs), dedupRoot)),
+      () => timed("base: text.materialize")(
+        TextLayout.materialize(spark, docs.filter(!holdDocs), textRoot)),
+      () => timed("base: substr.materialize")(
+        SubstrLayout.materialize(spark, docs.filter(!holdDocs), substrRoot)),
+      () => timed("base: vectors.materialize")(
+        VectorLayout.materializeWhere(spark, sfDir, vecRoot, !holdVecs)),
+      () => timed("land: held-out slices") {
+        docs.filter(holdDocs).repartition(nBatches)
+          .write.mode("overwrite").parquet(docLanding)
+        vecs.filter(holdVecs).repartition(nBatches)
+          .write.mode("overwrite").parquet(vecLanding)
+      }))
+
+    // 2. the four ingest streams: started in family order from this
+    //    thread (each query runs on its own stream thread), then drained
+    //    side by side; a family whose start failed fails its own drain
+    val ckpt = root.stripSuffix("/") + "/_ckpt"
+    val t0 = System.nanoTime()
+    val started = Seq(
+      "dedup" -> Try(DedupStream.ingestSink(
+        DedupStream.read(spark, docLanding), dedupRoot, s"$ckpt/dedup")),
+      "text" -> Try(TextStream.ingestSink(
+        TextStream.read(spark, docLanding), textRoot, s"$ckpt/text")),
+      "substr" -> Try(SubstrStream.ingestSink(
+        SubstrStream.read(spark, docLanding), substrRoot, s"$ckpt/substr")),
+      "vector" -> Try(VectorStream.ingestSink(
+        VectorStream.read(spark, vecLanding), sfDir, vecRoot, s"$ckpt/vecs")))
+    try
+      Families.all(started.map { case (name, q) =>
+        () => timed(s"drain: $name ingest", t0) {
+          val query = q.get
+          try query.processAllAvailable() finally query.stop()
+        }
+      })
+    finally started.foreach(_._2.foreach(_.stop()))
+
+    // 3. scheduled maintenance between drains, its families side by side
     timed("maintain: all families")(
       StoreMaintain.maintainAll(spark, root).foreach { case (a, o) =>
         println(f"[drain]   maintain $a%-24s $o")
       })
 
-    // 4. fsck — the drain's exit code is the Doctor's verdict
+    // 4. fsck — serial and last; the drain's exit code is the Doctor's verdict
     Doctor.run(spark, Seq(root))
   }
 

@@ -35,7 +35,11 @@ class StoreMaintainSpec extends SparkSpec {
         .select((col("vec_id") + off).as("vec_id"), col("embedding")),
       batchId = 0L)
 
-    val outcomes = StoreMaintain.maintainAll(s, root).toMap
+    val lines = StoreMaintain.maintainAll(s, root)
+    assert(lines.map(_._1) === Seq("dedup.refresh_labels", "dedup.compact",
+      "text.compact", "substr.compact", "sim.layout_compact", "sim.layout_drift"),
+      s"outcome lines must come in family order (dedup, text, substr, sim): $lines")
+    val outcomes = lines.toMap
     assert(outcomes("dedup.compact") === "watermark=0", outcomes.toString)
     assert(outcomes("text.compact") === "watermark=0", outcomes.toString)
     assert(outcomes("sim.layout_compact") === "watermark=0", outcomes.toString)
@@ -82,7 +86,10 @@ class StoreMaintainSpec extends SparkSpec {
     DedupLayout.materialize(s, docs, StoreBuild.dedupLayoutDir(root))
     TextLayout.materialize(s, docs, StoreBuild.textLayoutDir(root))
 
-    val outcomes = StoreMaintain.maintainAll(s, root).toMap
+    val lines = StoreMaintain.maintainAll(s, root)
+    assert(lines.map(_._1) === Seq("dedup.refresh_labels", "dedup.compact",
+      "text.compact", "substr.compact", "sim.layout_drift"), lines.toString)
+    val outcomes = lines.toMap
     assert(outcomes("dedup.refresh_labels") === "refreshed", outcomes.toString)
     assert(outcomes("sim.layout_drift") === "skipped: no layout",
       s"an absent vector layout must report a skip, not crash: $outcomes")
@@ -104,7 +111,11 @@ class StoreMaintainSpec extends SparkSpec {
         col("embedding"))
     VectorLayout.append(s, Sf, vecRoot, hot, batchId = 0L)
 
-    val acted = StoreMaintain.maintainAll(s, root).toMap
+    val actedLines = StoreMaintain.maintainAll(s, root)
+    assert(actedLines.map(_._1) === Seq("dedup.refresh_labels", "dedup.compact",
+      "text.compact", "substr.compact", "sim.layout_compact", "sim.layout_drift",
+      "sim.layout_retrain", "sim.layout_gc"), actedLines.toString)
+    val acted = actedLines.toMap
     assert(acted("sim.layout_drift") === "retrain=true", acted.toString)
     assert(acted("sim.layout_retrain") === "swapped=v2", acted.toString)
     assert(acted("sim.layout_gc") === "none",
