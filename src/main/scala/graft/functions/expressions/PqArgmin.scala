@@ -37,7 +37,9 @@ import org.apache.spark.sql.types._
   * non-null by construction; divergence documented here); a
   * dimension-mismatched centroid is skipped (declarative: null
   * distance — same unreachable-by-construction class, both sides are
-  * [[graft.operators.SimilarityQueries.PqSubDim]]-wide).
+  * [[graft.operators.SimilarityQueries.PqSubDim]]-wide), and a
+  * subvector that NO centroid matches fails the task loudly rather
+  * than return a sentinel code id.
   */
 case class PqArgmin(child: Expression,
                     cids: Array[Long],
@@ -104,8 +106,8 @@ object PqArgmin {
       ArrayType(LongType)).map(_.toLongArray())
 
   /** The argmin loop: exact integer L2² per centroid, smallest distance
-    * wins, ties to the lowest code id. Public so generated code can
-    * call it.
+    * wins, ties to the lowest code id. Throws when no centroid has the
+    * subvector's length. Public so generated code can call it.
     */
   def argmin(x: Array[Long], cents: Array[Array[Long]], cids: Array[Long]): Long = {
     var best = Long.MaxValue
@@ -125,6 +127,9 @@ object PqArgmin {
       }
       c += 1
     }
+    if (!found) throw new IllegalArgumentException(
+      s"graft_pq_argmin: no centroid matches the ${x.length}-element " +
+        s"subvector (codebook widths: ${cents.map(_.length).distinct.sorted.mkString(", ")})")
     bestId
   }
 }

@@ -8,6 +8,8 @@ import graft.Tables
 import graft.functions.{TextFunctions => T}
 import graft.operators.DedupQueries
 
+import LogCompaction.{storeExists, writeBase, writeBatch}
+
 /** Incremental near-dup index on disk — the dedup twin of
   * [[VectorLayout.append]] (corpora GROW; a 100 TB pipeline cannot
   * re-mine candidate pairs from scratch per crawl batch).
@@ -96,22 +98,8 @@ object DedupLayout {
     StructField("src", LongType), StructField("dst", LongType),
     StructField("src_bucket", IntegerType), StructField(BatchCol, LongType)))
 
-  /** Dynamic overwrite: replaces ONLY this batch's partitions. */
-  private def writeBatch(df: DataFrame, batchId: Long, dir: String,
-                         extraParts: Seq[String] = Nil): Unit =
-    df.withColumn(BatchCol, lit(batchId))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .partitionBy(BatchCol +: extraParts: _*)
-      .parquet(dir)
-
-  /** Static overwrite: a fresh base build wipes every earlier batch. */
-  private def writeBase(df: DataFrame, dir: String,
-                        extraParts: Seq[String] = Nil): Unit =
-    df.withColumn(BatchCol, lit(BaseBatch))
-      .write.mode("overwrite").partitionBy(BatchCol +: extraParts: _*)
-      .parquet(dir)
+  /** The edge store's partition spec, in directory order. */
+  private val EdgeParts = Seq(BatchCol, "src_bucket")
 
   private def shingled(spark: SparkSession, docs: DataFrame): DataFrame =
     Tables.spread(spark, docs).select(col("doc_id"),
@@ -141,8 +129,7 @@ object DedupLayout {
     writeBase(DedupQueries.lshBandsOver(shingles(spark, root)), bandsDir(root))
     writeBase(DedupQueries.bandPairsCapped(bands(spark, root),
       DedupQueries.MaxBucket), pairsDir(root))
-    writeBase(symmetrized(pairs(spark, root)), edgesDir(root),
-      extraParts = Seq("src_bucket"))
+    writeBase(symmetrized(pairs(spark, root)), edgesDir(root), EdgeParts)
     coldLabels(spark, root, coveredBatch = BaseBatch)
   }
 
@@ -246,8 +233,7 @@ object DedupLayout {
         .localCheckpoint()
       writeBatch(newSh, batchId, shinglesDir(root))
       writeBatch(newPairs, batchId, pairsDir(root))
-      writeBatch(symmetrized(newPairs), batchId, edgesDir(root),
-        extraParts = Seq("src_bucket"))
+      writeBatch(symmetrized(newPairs), batchId, edgesDir(root), EdgeParts)
       writeBatch(newBands, batchId, bandsDir(root))
       newPairs
     } finally IdAuthority.completeAppend(spark, root)
@@ -385,7 +371,7 @@ object DedupLayout {
               upToBatch: Option[Long] = None,
               sweepNow: Boolean = true): Long = {
     val w = LogCompaction.run(spark, root, watermarkDir = bandsDir(root),
-      stores = compactStores(spark, root), upToBatch = upToBatch,
+      stores = compactStores(root), upToBatch = upToBatch,
       sweepNow = sweepNow,
       beforeFold = w => refreshLabels(spark, root, upToBatch = Some(w)))
     // finalized batches can never replay, so their id-authority records
@@ -398,28 +384,17 @@ object DedupLayout {
     * deferred sweep of a `sweepNow = false` [[compact]].
     */
   def vacuum(spark: SparkSession, root: String): Unit =
-    LogCompaction.vacuum(spark, root, compactStores(spark, root).map(_.dir))
+    LogCompaction.vacuum(spark, root, compactStores(root).map(_.dir))
 
-  private def compactStores(spark: SparkSession,
-                            root: String): Seq[LogCompaction.StoreSpec] = {
-    val flat = (df: DataFrame) =>
-      df.coalesce(spark.sessionState.conf.numShufflePartitions)
-    Seq(
-      LogCompaction.StoreSpec(shinglesDir(root), Seq(BatchCol), flat),
-      LogCompaction.StoreSpec(bandsDir(root), Seq(BatchCol), flat),
-      LogCompaction.StoreSpec(pairsDir(root), Seq(BatchCol), flat,
-        schema = Some(PairsSchema)),
-      LogCompaction.StoreSpec(edgesDir(root), Seq(BatchCol, "src_bucket"),
-        _.repartition(col("src_bucket")), schema = Some(EdgesSchema)))
-  }
+  private def compactStores(root: String): Seq[LogCompaction.StoreSpec] = Seq(
+    LogCompaction.StoreSpec(shinglesDir(root)),
+    LogCompaction.StoreSpec(bandsDir(root)),
+    LogCompaction.StoreSpec(pairsDir(root), schema = Some(PairsSchema)),
+    LogCompaction.StoreSpec(edgesDir(root), EdgeParts,
+      _.repartition(col("src_bucket")), schema = Some(EdgesSchema)))
 
   def labels(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(labelsDir(root))
-
-  private def storeExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
 
   private def readStore(spark: SparkSession, dir: String,
                         mk: Option[LogCompaction.Marker],

@@ -176,7 +176,7 @@ object IdAuthority {
     * writes releases via its try/finally; a PROCESS crash leaves the
     * lease, which is exactly the protection — the next appender waits
     * out the liveness grace ([[VectorLayout.StageGraceMs]], the
-    * `.compact-` stage-dir convention) before breaking it. The break
+    * stage-dir convention) before breaking it. The break
     * itself is delete-then-create — two breakers racing inside that
     * window is a double-crash-overlap pathology the lease narrows but
     * cannot close without the conditional writes the FS contract

@@ -20,14 +20,18 @@ import org.apache.spark.sql.functions._
   *
   * THE PROTOCOL (crash-safe without a transaction log):
   *
-  *   1. FOLD — read the store's current view restricted to batches
-  *      `<= W` (the compaction watermark), stage it as a plain parquet
-  *      copy under a dot-prefixed dir (invisible to partition listing;
-  *      reading the live dir while writing a DIFFERENT path needs no
-  *      lineage-severing checkpoint of the whole prefix), then
-  *      dynamic-overwrite it into the live store as the single
-  *      partition `__batch_id = -1-gen`. Generation ids live BELOW the
-  *      base batch (-1), a range no real batch ever uses.
+  *   1. FOLD — delete any unpublished partition of the generation
+  *      about to be written (a crashed attempt's leftovers: the retry
+  *      reuses the generation number, and a dynamic overwrite would keep
+  *      every leftover partition the retry does not write), then
+  *      dynamic-overwrite the store's current view restricted to batches
+  *      `<= W` (the compaction watermark) straight into the live dir as
+  *      the single partition `__batch_id = -1-gen` — one write job per
+  *      store. Writing into the dir it reads is safe: the fold reads
+  *      only the prior generation and batches `<= W`, never the
+  *      partition it writes, and a dynamic overwrite replaces only the
+  *      partitions it writes. Generation ids live BELOW the base batch
+  *      (-1), a range no real batch ever uses.
   *   2. PUBLISH — create the append-only marker file
   *      `_compaction/gen-<g>-wm-<W>` (the `_CURRENT_v<N>` idiom: an
   *      atomic create, never delete+rename). Every reader resolves the
@@ -39,7 +43,8 @@ import org.apache.spark.sql.functions._
   *      anywhere before step 2 therefore leaves readers on the exact
   *      pre-compaction view — no window double-counts.
   *   3. SWEEP — delete the now-shadowed partitions (real batches
-  *      `<= W`, prior generations) and any crashed runs' stage dirs.
+  *      `<= W`, prior generations) and any `.compact-*` stage dir an
+  *      older, staging fold left behind.
   *      A crash before the sweep costs storage, never correctness: the
   *      stale dirs sit outside every reader's filter, and the next
   *      compaction (or its early-exit resweep) removes them.
@@ -131,42 +136,70 @@ object LogCompaction {
   def foldable(df: DataFrame, m: Option[Marker], w: Long): DataFrame =
     view(df, m).filter(col(BatchCol) <= w || col(BatchCol) < BaseBatch)
 
+  private[sources] def storeExists(spark: SparkSession, dir: String): Boolean =
+    fs(spark, dir).exists(new Path(dir))
+
+  /** Dynamic overwrite of batch `batchId`: replaces ONLY the partitions
+    * `df` writes, so a redelivered batch rewrites its own partitions
+    * byte-identically — the per-batch idempotence device every log
+    * shares, and the fold's in-place write. `partitionCols` is the
+    * store's full partition spec in directory order.
+    */
+  private[sources] def writeBatch(df: DataFrame, batchId: Long, dir: String,
+                                  partitionCols: Seq[String] = Seq(BatchCol)): Unit =
+    df.withColumn(BatchCol, lit(batchId))
+      .write
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite")
+      .partitionBy(partitionCols: _*)
+      .parquet(dir)
+
+  /** Static overwrite: a fresh base build wipes every earlier batch. */
+  private[sources] def writeBase(df: DataFrame, dir: String,
+                                 partitionCols: Seq[String] = Seq(BatchCol)): Unit =
+    df.withColumn(BatchCol, lit(BaseBatch))
+      .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(dir)
+
+  /** The `__batch_id = -1-gen` partition dirs of `dir`, at whatever
+    * depth `partitionCols` puts the batch column — a listing, no job.
+    */
+  private def generationDirs(spark: SparkSession, dir: String,
+                             partitionCols: Seq[String], gen: Int): Seq[Path] = {
+    val levels = Seq.fill(partitionCols.indexOf(BatchCol))("*") :+
+      s"$BatchCol=${compactedId(gen)}"
+    Option(fs(spark, dir).globStatus(
+      new Path(dir.stripSuffix("/") + "/" + levels.mkString("/"))))
+      .fold(Seq.empty[Path])(_.toSeq.map(_.getPath))
+  }
+
   /** Fold `rows` (the [[foldable]] set, batch column dropped) into the
-    * generation partition of `dir`. `partitionCols` is the store's FULL
-    * partition spec in directory order ([[VectorLayout]] keeps `cell`
-    * first so probes still prune on level one); `distribute` shapes the
-    * file count (coalesce for flat stores — compaction must not shuffle
-    * unless it re-buckets; repartition-by-key for bucketed ones, one
-    * file per bucket dir). Invisible until [[publish]].
+    * generation partition of `dir`, IN PLACE: first delete whatever an
+    * unpublished earlier attempt at generation `gen` left (otherwise a
+    * retry covering fewer rows would publish the crashed run's extra
+    * partitions beside its own), then ONE dynamic-overwrite write into
+    * the live dir. Safe because `rows` reads only the prior generation
+    * and batches `<= W`, never the partition being written.
+    * `partitionCols` is the store's FULL partition spec in directory
+    * order ([[VectorLayout]] keeps `cell` first so probes still prune
+    * on level one); `distribute` shapes the file count (coalesce for
+    * flat stores — compaction must not shuffle unless it re-buckets;
+    * repartition-by-key for bucketed ones, one file per bucket dir).
+    * Invisible until [[publish]].
     */
   def foldStore(spark: SparkSession, dir: String, rows: DataFrame, gen: Int,
                 partitionCols: Seq[String],
                 distribute: DataFrame => DataFrame): Unit = {
-    val stage = dir.stripSuffix("/") + "/.compact-" +
-      java.util.UUID.randomUUID().toString
-    try {
-      rows.write.mode("overwrite").parquet(stage)
-      val staged = spark.read.parquet(stage)
-      // an empty fold writes NO generation partition (dynamic overwrite
-      // of zero rows) — leave the receipt instead, so fsck can prove
-      // the missing partition legitimate; a non-empty retry of a
-      // crashed empty attempt REUSES the gen number (gen increments
-      // only at publish), so it must also clear a stale receipt
-      val emptyFold = staged.isEmpty
-      distribute(staged)
-        .withColumn(BatchCol, lit(compactedId(gen)))
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .partitionBy(partitionCols: _*)
-        .parquet(dir)
-      val f = fs(spark, dir)
-      val receipt = new Path(dir.stripSuffix("/"), emptyFoldReceipt(gen))
-      if (emptyFold) { if (!f.exists(receipt)) f.create(receipt, false).close() }
-      else f.delete(receipt, false)
-    } finally {
-      fs(spark, dir).delete(new Path(stage), true)
-    }
+    val f = fs(spark, dir)
+    generationDirs(spark, dir, partitionCols, gen).foreach(f.delete(_, true))
+    writeBatch(distribute(rows), compactedId(gen), dir, partitionCols)
+    // an empty fold writes NO generation partition (dynamic overwrite of
+    // zero rows) — leave the receipt instead, so fsck can prove the
+    // missing partition legitimate; a non-empty retry of a crashed
+    // empty attempt reuses the gen number, so it must also clear a
+    // stale receipt
+    val receipt = new Path(dir.stripSuffix("/"), emptyFoldReceipt(gen))
+    if (generationDirs(spark, dir, partitionCols, gen).nonEmpty) f.delete(receipt, false)
+    else if (!f.exists(receipt)) f.create(receipt, false).close()
   }
 
   /** The store's effective max batch — real partition ids from a
@@ -199,20 +232,10 @@ object LogCompaction {
   }
 
   /** Delete everything generation `keep` shadows: real batches `<= w`,
-    * prior generations, crashed runs' stage dirs. Pure storage
-    * reclamation — every deleted path is already outside the published
-    * view.
+    * prior generations, and leftover `.compact-*` stage dirs of the
+    * older staging fold. Pure storage reclamation — every deleted path
+    * is already outside the published view.
     */
-  /** Delete only crashed runs' `.compact-*` stage dirs. */
-  private def sweepStages(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
-    val p = new Path(dir)
-    if (!f.exists(p)) return
-    f.listStatus(p).foreach { s =>
-      if (s.getPath.getName.startsWith(".compact-")) f.delete(s.getPath, true)
-    }
-  }
-
   def sweep(spark: SparkSession, dir: String, keep: Long, w: Long,
             nested: Boolean = false): Unit = {
     val f = fs(spark, dir)
@@ -237,13 +260,21 @@ object LogCompaction {
     if (!nested) sweepIn(p)
   }
 
-  /** One store to fold: its dir, its FULL partition spec in directory
-    * order, the file-count shaper ([[foldStore]]), and — for stores
-    * whose row set can be empty (a fileless dir defeats schema
-    * inference) — the declared read schema.
+  /** The flat stores' file-count shaper: a shuffle-free coalesce to
+    * the session's shuffle width.
     */
-  final case class StoreSpec(dir: String, partitionCols: Seq[String],
-                             distribute: DataFrame => DataFrame,
+  private[sources] val flat: DataFrame => DataFrame =
+    df => df.coalesce(df.sparkSession.sessionState.conf.numShufflePartitions)
+
+  /** One store to fold: its dir, its FULL partition spec in directory
+    * order and the file-count shaper ([[foldStore]]), both defaulting
+    * to a flat batch log, and — for stores whose row set can be empty
+    * (a fileless dir defeats schema inference) — the declared read
+    * schema.
+    */
+  final case class StoreSpec(dir: String,
+                             partitionCols: Seq[String] = Seq(BatchCol),
+                             distribute: DataFrame => DataFrame = flat,
                              schema: Option[org.apache.spark.sql.types.StructType] = None)
 
   /** The whole protocol, once — resolve marker, derive the watermark
@@ -272,14 +303,10 @@ object LogCompaction {
       .getOrElse(return mk.map(_.watermark).getOrElse(BaseBatch))
     val w = upToBatch.fold(maxB)(math.min(_, maxB))
     // a base-only store has one partition per store already — nothing
-    // worth folding into a generation; still reclaim a crashed
-    // predecessor's stage dirs (its unpublished generation partition, if
-    // any, stays invisible under the `>= -1` view until a real batch
-    // arrives and a true fold sweeps it)
-    if (mk.isEmpty && w <= BaseBatch) {
-      if (sweepNow) stores.foreach(s => sweepStages(spark, s.dir))
-      return BaseBatch
-    }
+    // worth folding into a generation (a crashed predecessor's
+    // unpublished generation partition stays invisible under the `>= -1`
+    // view until a real batch arrives and a true fold replaces it)
+    if (mk.isEmpty && w <= BaseBatch) return BaseBatch
     if (mk.exists(_.watermark >= w)) {
       // nothing new to fold — but finish a crashed predecessor's sweep
       if (sweepNow) stores.foreach(s => sweep(spark, s.dir,
@@ -289,8 +316,7 @@ object LogCompaction {
     beforeFold(w)
     val gen = mk.map(_.gen).getOrElse(0) + 1
     stores.foreach { s =>
-      val p = new Path(s.dir)
-      if (fs(spark, s.dir).exists(p))
+      if (storeExists(spark, s.dir))
         foldStore(spark, s.dir,
           foldable(s.schema.fold(spark.read)(spark.read.schema)
             .parquet(s.dir), mk, w).drop(BatchCol),
@@ -342,7 +368,7 @@ object LogCompaction {
     * Listing-only — zero Spark jobs — so [[graft.Doctor]] can fsck a
     * store whose DATA is petabytes in directory-metadata time. The
     * severity contract: `warn` is debris the protocol already tolerates
-    * and its own sweeps reclaim (shadowed partitions, crashed stages,
+    * and its own sweeps reclaim (shadowed partitions, leftover stages,
     * unpublished folds); `fail` is a view-breaking inconsistency no
     * protocol step repairs (a published marker whose folded partition
     * is gone = readers silently lose all history below the watermark).
@@ -369,19 +395,12 @@ object LogCompaction {
       out += (("partitions", "fail", s"unparseable partition dir '$n'"))
     }
     val ids = batchDirs.flatMap(_._2).distinct
-    // a fold's stage lives for minutes — only one that outlived the
-    // liveness grace is crashed debris (the VectorLayout.StageGraceMs
-    // convention); a younger one may be a live compact mid-fold
-    val now = System.currentTimeMillis()
-    val (aged, live) = level1.filter(_.getPath.getName.startsWith(".compact-"))
-      .partition(_.getModificationTime < now - VectorLayout.StageGraceMs)
-    if (aged.nonEmpty)
+    // folds write in place now; a `.compact-*` dir is debris an older,
+    // staging fold left behind
+    val stages = level1.count(_.getPath.getName.startsWith(".compact-"))
+    if (stages > 0)
       out += (("stage", "warn",
-        s"${aged.size} crashed .compact-* stage dir(s); sweep/vacuum reclaims"))
-    if (live.nonEmpty)
-      out += (("stage", "ok",
-        s"${live.size} stage dir(s) younger than the liveness grace " +
-          "(a compact may be in flight)"))
+        s"$stages leftover .compact-* stage dir(s); sweep/vacuum reclaims"))
     val gens = ids.filter(_ < BaseBatch)
     m match {
       case Some(mk) =>

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import graft.Tables
 import graft.operators.SubstrDedup
 
+import LogCompaction.{storeExists, writeBase, writeBatch}
+
 /** Incremental WINNOWED-FINGERPRINT store on disk — the substring-dedup
   * twin of [[TextLayout]] (tokens), [[DedupLayout]] (minhash bands),
   * and [[VectorLayout]] (ANN cells): the fourth index family gets the
@@ -209,11 +211,6 @@ object SubstrLayout {
     partials(fp).unionByName(spark.range(1).select(
       lit(null).cast(StringType).as("h"), lit(0L).as("n")))
 
-  private def storeExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** One-time fingerprint of `docs` (doc_id, text) into the base batch. */
   def materialize(spark: SparkSession, docs: DataFrame, root: String): Unit = {
     // fresh rebuild: a surviving compaction marker would filter out the
@@ -223,11 +220,8 @@ object SubstrLayout {
     writeWPin(spark, root, w) // pin the width BEFORE any log bytes exist
     IdAuthority.recordBase(spark, root, docs.select(col("doc_id")), BaseBatch)
     val fp = winnowed(spark, docs, w).localCheckpoint() // one fingerprint pass, two stores
-    withPresence(fp, docs).withColumn(BatchCol, lit(BaseBatch))
-      .sortWithinPartitions(col(BatchCol), col("pos"))
-      .write.mode("overwrite").partitionBy(BatchCol).parquet(fpDir(root))
-    partialsWithMarker(spark, fp).withColumn(BatchCol, lit(BaseBatch))
-      .write.mode("overwrite").partitionBy(BatchCol).parquet(countsDir(root))
+    writeBase(withPresence(fp, docs).sortWithinPartitions(col("pos")), fpDir(root))
+    writeBase(partialsWithMarker(spark, fp), countsDir(root))
   }
 
   /** Fingerprint ONLY the arrival batch into its own partitions of both
@@ -267,22 +261,12 @@ object SubstrLayout {
       // and a racing appender can no longer overwrite the winner's pin
       val w = leasedW(spark, root)
       val fp = winnowed(spark, arr, w).localCheckpoint()
-      withPresence(fp, arr).withColumn(BatchCol, lit(batchId))
-        .sortWithinPartitions(col(BatchCol), col("pos"))
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .partitionBy(BatchCol)
-        .parquet(fpDir(root))
+      writeBatch(withPresence(fp, arr).sortWithinPartitions(col("pos")),
+        batchId, fpDir(root))
       // counts land LAST: a batch visible here is complete in both
       // logs — the compaction watermark anchor (the marker row keeps
       // that true even when the batch winnowed to zero anchors)
-      partialsWithMarker(spark, fp).withColumn(BatchCol, lit(batchId))
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .partitionBy(BatchCol)
-        .parquet(countsDir(root))
+      writeBatch(partialsWithMarker(spark, fp), batchId, countsDir(root))
     } finally IdAuthority.completeAppend(spark, root)
     // ^ the writer lease guardAndRecord left held spans both log
     // writes — released here (or kept by a process crash, which is the
@@ -297,7 +281,7 @@ object SubstrLayout {
               upToBatch: Option[Long] = None,
               sweepNow: Boolean = true): Long = {
     val w = LogCompaction.run(spark, root, watermarkDir = countsDir(root),
-      stores = compactStores(spark, root), upToBatch = upToBatch,
+      stores = compactStores(root), upToBatch = upToBatch,
       sweepNow = sweepNow)
     IdAuthority.prune(spark, root, w)
     w
@@ -305,24 +289,18 @@ object SubstrLayout {
 
   /** Deferred-sweep reclamation (see [[TextLayout.vacuum]]). */
   def vacuum(spark: SparkSession, root: String): Unit =
-    LogCompaction.vacuum(spark, root, compactStores(spark, root).map(_.dir))
+    LogCompaction.vacuum(spark, root, compactStores(root).map(_.dir))
 
-  private def compactStores(spark: SparkSession,
-                            root: String): Seq[LogCompaction.StoreSpec] = {
-    val flat = (df: DataFrame) =>
-      df.coalesce(spark.sessionState.conf.numShufflePartitions)
-    Seq(LogCompaction.StoreSpec(fpDir(root), Seq(BatchCol), flat,
-        schema = Some(FpSchema)),
-      LogCompaction.StoreSpec(countsDir(root), Seq(BatchCol), flat,
-        schema = Some(CountsSchema)))
-  }
+  private def compactStores(root: String): Seq[LogCompaction.StoreSpec] = Seq(
+    LogCompaction.StoreSpec(fpDir(root), schema = Some(FpSchema)),
+    LogCompaction.StoreSpec(countsDir(root), schema = Some(CountsSchema)))
 
   def exists(spark: SparkSession, root: String): Boolean =
     storeExists(spark, fpDir(root))
 
   /** The winnowed fingerprint rows across all live batches — presence
     * rows (pos = −1) filtered out. Both writers sort within partitions
-    * on (batch, pos), so presence rows cluster at each file's head:
+    * on pos, so presence rows cluster at each file's head:
     * row groups they FILL (large batches) skip on the pos min/max
     * stats; elsewhere the filter is an ordinary cheap scan predicate
     * (round-12 advice: the unsorted union made the skip claim false —

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{TextFunctions => T}
 
+import LogCompaction.{storeExists, writeBase, writeBatch}
+
 /** Incremental token store on disk — the text twin of [[DedupLayout]] /
   * [[VectorLayout.append]]. Tokenize-and-explode is the dominant cost
   * of every vocabulary-shaped query (the reason TextQueries persists
@@ -54,11 +56,6 @@ object TextLayout {
   private def partials(tokens: DataFrame): DataFrame =
     tokens.groupBy("doc_id", "token").agg(count("*").as("tf"))
 
-  private def storeExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** One-time tokenize of `docs` (doc_id, text) into the base batch. */
   def materialize(spark: SparkSession, docs: DataFrame, root: String): Unit = {
     // fresh rebuild: wipe any surviving compaction marker FIRST — it
@@ -67,10 +64,8 @@ object TextLayout {
     // seed the id-authority so the FIRST append is already bloom-guarded
     IdAuthority.recordBase(spark, root, docs.select(col("doc_id")), BaseBatch)
     val log = exploded(spark, docs).localCheckpoint() // one tokenize, two stores
-    log.withColumn(BatchCol, lit(BaseBatch))
-      .write.mode("overwrite").partitionBy(BatchCol).parquet(tokensDir(root))
-    partials(log).withColumn(BatchCol, lit(BaseBatch))
-      .write.mode("overwrite").partitionBy(BatchCol).parquet(countsDir(root))
+    writeBase(log, tokensDir(root))
+    writeBase(partials(log), countsDir(root))
   }
 
   /** Tokenize ONLY the arrival batch into its own partitions of both
@@ -103,18 +98,8 @@ object TextLayout {
       who = "TextLayout.append", what = "token-log prefix")
     try {
       val log = exploded(spark, arrivals).localCheckpoint()
-      log.withColumn(BatchCol, lit(batchId))
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .partitionBy(BatchCol)
-        .parquet(tokensDir(root))
-      partials(log).withColumn(BatchCol, lit(batchId))
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .partitionBy(BatchCol)
-        .parquet(countsDir(root))
+      writeBatch(log, batchId, tokensDir(root))
+      writeBatch(partials(log), batchId, countsDir(root))
     } finally IdAuthority.completeAppend(spark, root)
     // ^ the writer lease guardAndRecord left held spans both log
     // writes — released here (or kept by a process crash, which is the
@@ -137,7 +122,7 @@ object TextLayout {
     // counts are written LAST per batch: a batch listed there is fully
     // present in both logs — the watermark anchor
     val w = LogCompaction.run(spark, root, watermarkDir = countsDir(root),
-      stores = compactStores(spark, root), upToBatch = upToBatch,
+      stores = compactStores(root), upToBatch = upToBatch,
       sweepNow = sweepNow)
     // finalized batches can never replay, so their id-authority records
     // serve nobody — same small-files lever as the fold itself
@@ -149,15 +134,11 @@ object TextLayout {
     * deferred sweep of a `sweepNow = false` [[compact]].
     */
   def vacuum(spark: SparkSession, root: String): Unit =
-    LogCompaction.vacuum(spark, root, compactStores(spark, root).map(_.dir))
+    LogCompaction.vacuum(spark, root, compactStores(root).map(_.dir))
 
-  private def compactStores(spark: SparkSession,
-                            root: String): Seq[LogCompaction.StoreSpec] = {
-    val flat = (df: DataFrame) =>
-      df.coalesce(spark.sessionState.conf.numShufflePartitions)
-    Seq(LogCompaction.StoreSpec(tokensDir(root), Seq(BatchCol), flat),
-      LogCompaction.StoreSpec(countsDir(root), Seq(BatchCol), flat))
-  }
+  private def compactStores(root: String): Seq[LogCompaction.StoreSpec] = Seq(
+    LogCompaction.StoreSpec(tokensDir(root)),
+    LogCompaction.StoreSpec(countsDir(root)))
 
   def tokens(spark: SparkSession, root: String): DataFrame =
     LogCompaction.view(spark.read.parquet(tokensDir(root)),

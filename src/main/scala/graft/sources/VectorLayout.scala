@@ -62,6 +62,11 @@ object VectorLayout {
   private val BatchCol = LogCompaction.BatchCol
   private val BaseBatch = LogCompaction.BaseBatch
 
+  /** The batch log's partition spec in directory order: `cell` first,
+    * so probes prune on level one.
+    */
+  private val CellParts = Seq("cell", BatchCol)
+
   // ---- Versioned lifecycle ----------------------------------------
 
   private def versionDir(root: String, n: Int) =
@@ -259,11 +264,9 @@ object VectorLayout {
   }
 
   private def writeLayout(assigned: DataFrame, dir: String): Unit =
-    assigned
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        lit(BaseBatch).as(BatchCol))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell", BatchCol).parquet(dir)
+    LogCompaction.writeBase(assigned
+      .select(col("vec_id"), col("embedding"), col("cell"))
+      .repartition(col("cell")), dir, CellParts)
 
   private def writeHist(spark: SparkSession, dir: String): Unit =
     spark.read.parquet(dir).drop(BatchCol)
@@ -369,7 +372,7 @@ object VectorLayout {
               sweepNow: Boolean = true): Long = {
     val dir = resolve(spark, outDir)
     LogCompaction.run(spark, dir, watermarkDir = dir,
-      stores = Seq(LogCompaction.StoreSpec(dir, Seq("cell", BatchCol),
+      stores = Seq(LogCompaction.StoreSpec(dir, CellParts,
         // one shuffle keyed like writeLayout's: one file per cell dir
         _.repartition(col("cell")))),
       nested = true, upToBatch = upToBatch, sweepNow = sweepNow)
@@ -500,17 +503,12 @@ object VectorLayout {
     // arrivals assign under the layout's OWN pinned (K, mode) — never
     // the ambient session's (modelFor refuses a session-model mismatch)
     val (cents, trainedK, mode) = modelFor(spark, sfDir, dir)
-    SimilarityQueries
+    val assigned = SimilarityQueries
       .assignVectorsWith(cents,
         arrivals.select(col("vec_id"), col("embedding")), trainedK, mode)
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        lit(batchId).as(BatchCol))
-      .repartition(col("cell"))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .partitionBy("cell", BatchCol)
-      .parquet(dir)
+      .select(col("vec_id"), col("embedding"), col("cell"))
+    LogCompaction.writeBatch(assigned.repartition(col("cell")), batchId, dir,
+      CellParts)
   }
 
   // ---- Read / probe --------------------------------------------------

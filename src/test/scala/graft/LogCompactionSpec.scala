@@ -3,7 +3,10 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.sources.{DedupLayout, LogCompaction, TextLayout, VectorLayout}
 
@@ -275,6 +278,79 @@ class LogCompactionSpec extends SparkSpec {
       "vacuum must reclaim the shadowed dirs")
     assert(pairSet(root) === before, "vacuum must not change the view")
     CacheLife.release(spark)
+  }
+
+  /** Spark jobs `body` starts on this thread (its job group). */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "lc-jobs-" + java.util.UUID.randomUUID()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "LogCompactionSpec job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("a fold is one write job per store, plus schema inference when no schema is declared") {
+    val s = spark
+    import s.implicits._
+    def foldJobs(schema: Option[StructType]): Int = {
+      val root = Files.createTempDirectory("graft-lc-jobs").toString
+      val dir = root + "/log"
+      for (batch <- Seq(-1L, 0L))
+        (0L until 20L).map(_ + 20 * (batch + 1)).toDF("id")
+          .withColumn("__batch_id", lit(batch))
+          .write.mode("append").partitionBy("__batch_id").parquet(dir)
+      val spec = LogCompaction.StoreSpec(dir, Seq("__batch_id"), _.coalesce(2), schema)
+      val jobs = jobsDuring(
+        assert(LogCompaction.run(spark, root, dir, Seq(spec)) === 0L))
+      assert(batchDirs(dir) === Seq("__batch_id=-2"))
+      assert(LogCompaction.view(spark.read.parquet(dir), LogCompaction.marker(spark, root))
+        .select("id").as[Long].collect().sorted.toSeq === (0L until 40L))
+      jobs
+    }
+    val inferred = foldJobs(None)
+    assert(inferred <= 2, s"an undeclared-schema fold ran $inferred jobs (inference + write)")
+    val declared = foldJobs(Some(StructType(Seq(
+      StructField("id", LongType), StructField("__batch_id", LongType)))))
+    assert(declared <= 1, s"a declared-schema fold ran $declared jobs (the write alone)")
+  }
+
+  test("a bounded retry of a crashed fold publishes only its own rows") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-lc-retry").toString
+    val dir = root + "/log"
+    // ten ids per batch -1, 0, 1; b = id / 10 gives each batch its own b dir
+    for (batch <- -1L to 1L)
+      (0L until 10L).map(_ + 10 * (batch + 1)).toDF("id")
+        .withColumn("b", (col("id") / 10).cast("int"))
+        .withColumn("__batch_id", lit(batch))
+        .write.mode("append").partitionBy("__batch_id", "b").parquet(dir)
+    val spec = LogCompaction.StoreSpec(dir, Seq("__batch_id", "b"),
+      _.repartition(col("b")))
+    // a fold through batch 1 that crashed before publishing generation 1…
+    LogCompaction.foldStore(spark, dir,
+      LogCompaction.foldable(spark.read.parquet(dir), None, 1L).drop("__batch_id"),
+      gen = 1, spec.partitionCols, spec.distribute)
+    assert(LogCompaction.marker(spark, root).isEmpty)
+    // …then a retry bounded to batch 0, which reuses generation 1: the
+    // crashed run's b=2 dir must not be published beside it
+    assert(LogCompaction.run(spark, root, dir, Seq(spec), upToBatch = Some(0L)) === 0L)
+    val ids = LogCompaction.view(spark.read.parquet(dir), LogCompaction.marker(spark, root))
+      .select("id").as[Long].collect().toSeq
+    assert(ids.sorted === (0L until 30L),
+      s"view reads ${ids.size} rows, ${ids.distinct.size} distinct; want 30 distinct")
   }
 
   test("marker parsing: stray siblings ignored, negative watermarks round-trip, generations order") {

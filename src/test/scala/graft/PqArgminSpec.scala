@@ -94,6 +94,25 @@ class PqArgminSpec extends SparkSpec {
       "every row's ADC LUT must match the declarative spelling slot-for-slot")
   }
 
+  test("a subvector no centroid matches fails loudly, naming the widths") {
+    val s = spark
+    import s.implicits._
+    val cents = Seq((1L, Seq.fill(SubDim)(0L)), (2L, Seq.fill(SubDim + 1)(5L)))
+    val e = intercept[IllegalArgumentException] {
+      graft.functions.expressions.PqArgmin.argmin(
+        Array.fill(3)(1L), cents.map(_._2.toArray).toArray, cents.map(_._1).toArray)
+    }
+    assert(e.getMessage.contains("3-element") &&
+      e.getMessage.contains(s"$SubDim, ${SubDim + 1}"), e.getMessage)
+    // the same refusal through the registered function, not a code id
+    val df = Seq(Tuple1(Seq.fill(3)(1L))).toDF("sq")
+    val t = intercept[Exception](df.select(argminNative(col("sq"), cents)).collect())
+    def messages(x: Throwable): Seq[String] =
+      Option(x).toSeq.flatMap(y => Option(y.getMessage).toSeq ++ messages(y.getCause))
+    assert(messages(t).exists(_.contains("no centroid matches the 3-element")),
+      messages(t).mkString(" | "))
+  }
+
   test("null elements null the row in both native loops") {
     val s = spark
     import s.implicits._
