@@ -174,10 +174,8 @@ object Bench {
     * bucket waves, CORRECTNESS_STREAM/KNOBS knnbucket chunks), never
     * in a one-piece timing.
     */
-  val KnnFull100x: Set[String] = Set("sim_knn_ann", "sim_knn_ann_auto",
-    "sim_knn_ann_kmeans", "sim_knn_ann_hier", "sim_knn_ann_pq",
-    "sim_knn_ann_pq_res", "sim_knn_ann_hier_pq",
-    "sim_knn_ann_hier_pq_res")
+  val KnnFull100x: Set[String] =
+    SimilarityQueries.knnMemoNames + "sim_knn_ann_auto"
 
   /** 1-minute system load average — `/proc/loadavg` where it exists,
     * the JMX bean elsewhere. Sampled around every pass into the bench

@@ -95,12 +95,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => children match {
         // (vector array<bigint>, flat codebook array<array<bigint>>
         // lit — m-major M×K slots, empty = the never-read 0 slot,
-        // subDim int lit)
-        case Seq(v, cents: Literal, Literal(subDim: Int, _)) =>
-          AdcLut(v, PqArgmin.literalCentsL(cents), subDim)
+        // subDim int lit, M int lit)
+        case Seq(v, cents: Literal, Literal(subDim: Int, _), Literal(m: Int, _)) =>
+          AdcLut(v, PqArgmin.literalCentsL(cents), subDim, m)
         case _ => throw new IllegalArgumentException(
           "graft_adc_lut(v array<bigint>, flat_cents array<array<bigint>> lit, " +
-            "sub_dim int lit)")
+            "sub_dim int lit, m int lit)")
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_cosine"),

@@ -149,11 +149,14 @@ object PqArgmin {
   */
 case class AdcLut(child: Expression,
                   flatCents: Array[Array[Long]],
-                  subDim: Int)
+                  subDim: Int,
+                  m: Int)
     extends UnaryExpression {
 
   require(flatCents.nonEmpty, "empty codebook")
   require(subDim >= 1, s"subDim must be >= 1, got $subDim")
+  require(m >= 1 && flatCents.length % m == 0,
+    s"graft_adc_lut: ${flatCents.length} codebook slots do not split into M=$m subspaces")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
@@ -171,7 +174,7 @@ case class AdcLut(child: Expression,
     var i = 0
     while (i < n) { if (arr.isNullAt(i)) return null; i += 1 }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      AdcLut.lut(arr.toLongArray(), flatCents, subDim))
+      AdcLut.lut(arr.toLongArray(), flatCents, subDim, m))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -191,7 +194,7 @@ case class AdcLut(child: Expression,
          |  ${ev.isNull} = true;
          |} else {
          |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |    $cls.lut($a.toLongArray(), $centsRef, $subDim));
+         |    $cls.lut($a.toLongArray(), $centsRef, $subDim, $m));
          |}
        """.stripMargin
     })
@@ -205,24 +208,25 @@ case class AdcLut(child: Expression,
 
 object AdcLut {
 
-  /** The LUT loop: slot j covers subspace m = j / K (K = slots / M
-    * derives implicitly — the subvector offset is (j / perSub) · subDim
-    * with perSub passed via the layout: the caller flattens m-major, so
-    * the subspace index is just j divided by the per-subspace slot
-    * count). An empty centroid (emptied Lloyd cluster) or one that
-    * would read past the vector yields the declarative form's 0 slot.
-    * Public so generated code can call it.
+  /** The LUT loop over `m` subspaces laid out m-major: slot j covers
+    * subspace j / K (K = slots / m), whose subvector starts at
+    * (j / K) · subDim. Throws unless the vector is exactly m·subDim
+    * long — a vector of another width would otherwise get a mis-laid
+    * table. An empty centroid (emptied Lloyd cluster) yields the
+    * declarative form's 0 slot. Public so generated code can call it.
     */
-  def lut(x: Array[Long], flatCents: Array[Array[Long]], subDim: Int): Array[Long] = {
+  def lut(x: Array[Long], flatCents: Array[Array[Long]], subDim: Int, m: Int): Array[Long] = {
+    if (x.length != m * subDim) throw new IllegalArgumentException(
+      s"graft_adc_lut: the ${x.length}-element vector is not M=$m subspaces " +
+        s"of $subDim (${m * subDim} elements)")
     val slots = flatCents.length
-    val m = x.length / subDim // subspace count from the vector itself
-    val perSub = if (m > 0) slots / m else slots
+    val perSub = slots / m
     val out = new Array[Long](slots)
     var j = 0
     while (j < slots) {
       val cent = flatCents(j)
       val off = (j / perSub) * subDim
-      if (cent.length == subDim && off + subDim <= x.length) {
+      if (cent.length == subDim) {
         var d = 0L
         var i = 0
         while (i < subDim) { val t = x(off + i) - cent(i); d += t * t; i += 1 }

@@ -367,129 +367,302 @@ object SimilarityQueries {
     graft.CacheLife.cached(s, s"sim.knn-exact:$dir")(
       knnRank(pairKernel(s, dir)))
 
-  // ---- Bucket-blocked kNN join: the form that RUNS at 100 TB ----
-  // The knnJoin scaladoc names ANN bucket blocking under the same rank
-  // stage as the scale path past MaxKernelPairs — this registers it as
-  // the corpus-wide form of the batched IVF probe: EVERY vector is a
-  // query, soft-assigned to its NProbeIvf nearest cells, candidates are
-  // the probed cells' members (equi-join on the cell key, shuffled —
-  // broadcasting a corpus-sized query set would be the scale killer),
-  // and the per-src top-k window is the same rank stage knnJoin runs.
-  // Cost model (round-14: MEASURED, not argued — the K knob): the
-  // candidate scan is n·nprobe·(n/K) and the per-row probe ranking is
-  // n·K ([[topCellsNative]] — an expression, never a corpus × K shuffle),
-  // so a FROZEN K turns the scan quadratic (round 13 measured 31–77×
-  // first-decade ratios on the fixed 8-cell fixture), while the
-  // [[NCellsKey]] knob lets each deployment scale K with its corpus:
-  // the balanced flat-IVF optimum K ≈ √(nprobe·n) equalizes the two
-  // terms at total Θ(n^1.5), and the bench's upward decades now RUN
-  // that contract (K=200 at 10×, 640 at 100× by default, recorded as
-  // sim_ncells_up/_up2) — per-decade ratios are the deployment
-  // measurement, not the fixture's n²/K term. True linearity needs a
-  // hierarchical probe over the centroid set (probe the centroids with
-  // their own coarse quantizer) — the documented next rung, not needed
-  // until the model itself outgrows a broadcast.
-  //
-  // IVF, not sign-LSH, chosen by MEASUREMENT: kNN neighbors in this
-  // near-isotropic corpus sit well below the cos≥0.4 near-dup band
-  // (the banded candidates gave 0.13 edge recall; the probe-cell form
-  // gives ~5× that — sim_ann_recall shows the same ordering for the
-  // single-query probes). Lossy by contract: a neighbor whose primary
-  // cell is outside the source's probe set is never proposed, so a
-  // source's list can hold fewer than k rows or rank a farther
-  // candidate — [[knnAnnRecall]] is the shipped eval, the
-  // sim_pairs_lsh/sim_pairs_recall discipline.
-  /** The shuffled candidate cell equi-join shared by every corpus-wide
-    * kNN variant — `corpus ⋈ probes ON cell = qcell`, both sides
-    * corpus-sized, broadcast structurally refused (the
-    * broadcastQueries=false rationale).
+  // ---- The corpus-wide kNN stack: probe → scan → rerank ----
+
+  /** Every corpus-wide approximate kNN — the registered session rows
+    * and the [[graft.sources.VectorLayout]] store reads alike — is one
+    * stack of per-source-independent stages. EVERY vector is a query;
+    * the stages are:
     *
-    * Parallelism fix (round 19, guide §2.5 "synthetic partitioning keys
-    * with too few distinct values" + §1.1 measured): the join key has
-    * only K distinct values, and the join EXPLODES — a few hundred KB
-    * of shuffle input generate ~n·nprobe·(n/K) candidate rows out — so
-    * at test scale (K=8 < cores) the post-shuffle stage holds ≤K
-    * populated partitions which AQE's byte-based coalescing then folds
-    * into ONE; the whole candidate scan + scoring ran single-task
-    * (profiled: 1.77 s of sim_knn_ann's 2.2 s at sf0.1). When K < the
-    * configured shuffle width, salt the key: the corpus side gets a
-    * deterministic per-row salt, the probe side replicates each probe
-    * row to every salt, and both sides are EXPLICITLY repartitioned by
-    * (cell, salt) — REPARTITION_BY_NUM shuffles, which AQE must not
-    * re-coalesce. Each candidate pair still meets exactly once (a
-    * corpus row has one salt; its probe row is present at that salt),
-    * so the result set is unchanged — only the partitioning is.
+    *   1. PROBE — each source finds its nprobe cells.
+    *      - Flat ([[flatProbe]]): the source row ranks the whole
+    *        codebook in place ([[topCellsNative]], a codegen'd
+    *        expression) and explodes its best cells — never n·K rows
+    *        through a window shuffle, quadratic once K grows with n.
+    *        Cost: n·K ranking against the n·nprobe·(n/K) scan, balanced
+    *        at K ≈ √(nprobe·n), the [[NCellsKey]] contract.
+    *      - Hier ([[hierProbe]]): K2 = ⌈√K⌉ super-centroids trained on
+    *        the driver over the K centroids ([[trainSuper]]); the row
+    *        ranks the supers in place, a broadcast join fetches the
+    *        probed supers' members, and a per-source window keeps the
+    *        best nprobe members. O(√K) per source instead of O(K), and
+    *        lossy one level deeper: a cell whose super is not probed is
+    *        never ranked. At the default K=8 the supers all get probed,
+    *        so Hier equals Flat (QueriesSpec pins the identity).
+    *   2. SCAN — candidates are the probed cells' members, found by an
+    *      equi-join on the cell key ([[cellCandidateJoin]]). Both sides
+    *      are corpus-sized, so the join shuffles and never broadcasts.
+    *      - Raw: the join reads the raw vectors.
+    *      - Pq(pqk, depth, residual): the join reads PQ CODES. Each
+    *        probe row carries its source's ADC lookup table
+    *        ([[withAdcLut]]; per (source, probed cell) when the codes
+    *        quantize residuals), so a candidate costs M array lookups.
+    *        [[adcShortlist]] then keeps the `depth` best per source.
+    *   3. RERANK — exact cosine, top-[[KnnK]] per source ([[rerankTopK]]);
+    *      a PQ shortlist joins back to the raw vectors for this stage
+    *      alone (corpus × depth rows, linear).
     *
-    * Scale-adaptive BY CONSTRUCTION: salts = ceil(P/K) resolves to 1
-    * wherever the deployment contract has already scaled K past the
-    * shuffle width (K=auto → 200 at 10×, 633 at 100× vs P=32), and the
-    * S=1 arm is the r18 plan verbatim — merge-hinted ENSURE_REQUIREMENTS
-    * shuffle join with AQE skew-splitting intact. The salt only exists
-    * where K is smaller than the machine.
+    * Plan choices per path: session rows spread the single-split source
+    * side before the per-row probe expressions ([[Tables.spread]]), and
+    * spread again between the hier window and the LUT (the window's
+    * tiny shuffle coalesces to one post-AQE partition); their candidate
+    * join salts the cell key while K is below the shuffle width. Store
+    * reads keep the unsalted merge-hinted join and no spread.
+    *
+    * Lossy by contract: a neighbor whose cell is outside the source's
+    * probe set is never proposed, so a source can hold fewer than k rows
+    * or rank a farther candidate — every stack ships an [[edgeRecall]]
+    * row. Per-source independence makes a source filter an EXACT
+    * restriction of the corpus-wide result: candidates stay corpus-wide,
+    * so the `*_sample` rows and the [[KnnBucketKey]] chunks are slices
+    * of the full graph (the decade-portable oracle rows).
+    *
+    * `Seeded(np)` is the stack over the SEEDED cells ([[probeQuerySet]],
+    * shared with `sim_ann_batch` and the streaming retrieval endpoint):
+    * IVF, not sign-LSH, because kNN neighbors in this near-isotropic
+    * corpus sit well below the cos ≥ 0.4 near-dup band (banded
+    * candidates gave 0.13 edge recall; the cell probe ~5× that).
     */
-  private def cellCandidateJoin(s: SparkSession, corpus: DataFrame,
-                                probes: DataFrame,
-                                corpusWideQueries: Boolean = true): DataFrame = {
-    val p = s.conf.get("spark.sql.shuffle.partitions",
-      s.sparkContext.defaultParallelism.toString).toInt
-    val salts =
-      if (corpusWideQueries) math.max(1, math.ceil(p.toDouble / nCellsOf(s)).toInt)
-      // sampled/bucketed query sides (the *_sample rows, the probe
-      // tradeoff): the candidate explosion is 1/KnnSampleBuckets of the
-      // corpus-wide row's, and the salt's extra exchanges cost more
-      // than the residual serial stage they would split (measured —
-      // the A/B read 1.2–1.45× on exactly these rows)
-      else 1
-    if (salts == 1)
-      corpus.join(probes.hint("merge"), col("cell") === col("qcell"))
-    else {
-      val c = corpus
-        .withColumn("__csalt", pmod(xxhash64(col("vec_id")), lit(salts.toLong)))
-        .repartition(p, col("cell"), col("__csalt"))
-      val q = probes
-        .withColumn("__qsalt",
-          explode(array((0 until salts).map(i => lit(i.toLong)): _*)))
-        .repartition(p, col("qcell"), col("__qsalt"))
-      // shuffled HASH join in the salted arm (guide §3.1): the probe
-      // side per partition is small (n·nprobe·S/P rows), the code/raw
-      // side streams against its hash table without SMJ's per-match
-      // buffered-row copies — and this arm only exists at K < P, so
-      // the build side is bounded by construction
-      c.join(q.hint("shuffle_hash"),
-          col("cell") === col("qcell") && col("__csalt") === col("__qsalt"))
-        .drop("__csalt", "__qsalt")
-    }
+  private[graft] sealed trait Probe
+  private[graft] case object Flat extends Probe
+  private[graft] case object Hier extends Probe
+  /** `np` ≤ 0 reads the live [[NProbeKey]]; the probe tradeoff pins it. */
+  private[graft] final case class Seeded(np: Int = -1) extends Probe
+
+  private[graft] sealed trait Scan
+  private[graft] case object Raw extends Scan
+  private[graft] final case class Pq(pqk: Int = PqK, depth: Int = PqShortlist,
+                                     residual: Boolean = false) extends Scan
+
+  /** The memoized corpus-wide kNN rows: registered name → (output memo
+    * variant, probe, scan). `Bench.KnnFull100x` derives from it.
+    */
+  private lazy val knnStacks: Map[String, (String, Probe, Scan)] = Map(
+    "sim_knn_ann" -> ("ivf", Seeded(), Raw),
+    "sim_knn_ann_kmeans" -> ("kmeans", Flat, Raw),
+    "sim_knn_ann_hier" -> ("hier", Hier, Raw),
+    "sim_knn_ann_pq" -> ("pq", Flat, Pq()),
+    "sim_knn_ann_pq_res" -> ("pqres", Flat, Pq(residual = true)),
+    "sim_knn_ann_hier_pq" -> ("hierpq", Hier, Pq()),
+    "sim_knn_ann_hier_pq_res" -> ("hierpqres", Hier, Pq(residual = true)))
+
+  private[graft] def knnMemoNames: Set[String] = knnStacks.keySet
+
+  /** A memoized stack by registered name. Only the trained raw rows
+    * (`sim_knn_ann_kmeans`/`_hier`) honour the [[KnnBucketKey]] chunks.
+    */
+  private def knnMemo(s: SparkSession, dir: String, name: String): DataFrame = {
+    val (variant, probe, scan) = knnStacks(name)
+    cachedKnn(s, dir, variant)((probe, scan) match {
+      case (Flat | Hier, Raw) =>
+        knnOver(s, dir, probe, scan, knnBucketFilter(s), knnBucketOf(s).isDefined)
+      case _ => knnOver(s, dir, probe, scan)
+    })
   }
 
-  def knnAnn(s: SparkSession, dir: String): DataFrame =
-    cachedKnn(s, dir, "ivf")(probeQuerySet(s, dir,
-      embs(s, dir).select(col("vec_id").as("qid"), col("v").as("qv")),
-      k = KnnK, broadcastQueries = false)
-      .select(col("qid").as("src"), col("vec_id").as("dst"), col("cos"), col("rn")))
+  /** The session builder: one stack over the sources `srcFilter` keeps
+    * (`sampled` = the query side is a slice, so the candidate join is
+    * not salted). Output (src, dst, cos, rn).
+    */
+  private def knnOver(s: SparkSession, dir: String, probe: Probe, scan: Scan,
+                      srcFilter: DataFrame => DataFrame = identity,
+                      sampled: Boolean = false): DataFrame = probe match {
+    case Seeded(np) =>
+      probeQuerySet(s, dir,
+        srcFilter(knnCorpus(s, dir)).select(col("vec_id").as("qid"), col("v").as("qv")),
+        k = KnnK, broadcastQueries = false, nprobe = np, sampledQueries = sampled)
+        .select(col("qid").as("src"), col("vec_id").as("dst"), col("cos"), col("rn"))
+    case _ =>
+      val (q, cents) = trainedModel(s, dir)
+      val srcs = Tables.spread(s, srcFilter(q)).select(col("vec_id").as("qid"), col("qv"))
+      val keep = if (scan == Raw) Nil else Seq("qv")
+      val probes =
+        if (probe == Flat) flatProbe(srcs, "qv", cents, nProbeOf(s), keep: _*)
+        else hierProbe(srcs, "qv", cents, nCellsOf(s), nProbeOf(s), keep: _*)
+      val raw = knnCorpus(s, dir).select(col("vec_id"), col("v"))
+      val cands = scan match {
+        case Raw =>
+          cellCandidateJoin(s, kmeansCells(s, dir).join(raw, Seq("vec_id")), probes, !sampled)
+        case Pq(pqk, depth, residual) =>
+          val lut = withAdcLut(s, dir,
+            if (probe == Hier) Tables.spread(s, probes) else probes, pqk, residual)
+          val idx = if (residual) pqResCodes(s, dir, pqk) else pqCodes(s, dir, pqk)
+          adcShortlist(cellCandidateJoin(s, idx, lut, !sampled), depth, pqk)
+            .join(raw, Seq("vec_id"))
+      }
+      rerankTopK(cands.join(raw.select(col("vec_id").as("qid"), col("v").as("qv")), Seq("qid")),
+        "v", "qv", KnnK)
+  }
 
-  /** A deterministic 1/[[KnnSampleBuckets]] SOURCE sample of [[knnAnn]]
-    * — the scale-decade oracle row (the dedup_substr_clean_sample
-    * idiom): the probe is per-source independent, so the sample is an
-    * EXACT restriction of the corpus-wide result, and the oracle's
-    * candidate set shrinks with the sample (the full kNN oracle at
-    * 100× would window over ~15G candidate rows, which DuckDB cannot
-    * sort; the 5% source slice keeps it at the 10×-full-pass cost).
-    * Candidates stay CORPUS-WIDE — only the query side samples, so
-    * every probed cell's members are still searched.
+  /** The raw corpus as the stacks read it: one parquet read per (session,
+    * dir), so rebuilding a stack's DataFrame runs no schema-inference job.
+    */
+  private def knnCorpus(s: SparkSession, dir: String): DataFrame = {
+    pinAutoNCells(s, dir)
+    graft.CacheLife.memo(s, s"sim.knn-corpus:$dir")(embs(s, dir))
+  }
+
+  /** Flat probe: (qid, `keep`…, qcell) — each source's `np` best cells
+    * of the codebook `cents`, ranked in place on its quantized `qv`.
+    */
+  private[graft] def flatProbe(srcs: DataFrame, qv: String,
+                               cents: Seq[(Long, Array[Long])], np: Int,
+                               keep: String*): DataFrame =
+    srcs.select(col("qid") +: keep.map(col) :+
+      explode(trainedTop(cents, col(qv), np)).as("qcell"): _*)
+
+  /** Hierarchical probe: (qid, `keep`…, qcell) — super ranking in place,
+    * broadcast member join, per-source window keeping `np` members. The
+    * supers train over `cents` at K2 = ⌈√`k`⌉ (`k` the configured K, not
+    * the surviving-centroid count, so store and session supers agree).
+    */
+  private[graft] def hierProbe(srcs: DataFrame, qv: String,
+                               cents: Seq[(Long, Array[Long])], k: Int, np: Int,
+                               keep: String*): DataFrame = {
+    val s = srcs.sparkSession
+    import s.implicits._
+    val (sup, members) = trainSuper(cents, hierK2(k))
+    val memberDf = cents.map { case (cid, v) =>
+      (members(cid), cid, v.toSeq.map(_.toDouble)) }.toDF("scell", "cid", "cv")
+    val wp = org.apache.spark.sql.expressions.Window
+      .partitionBy("qid").orderBy(col("ccos").desc, col("cid").asc)
+    srcs.withColumn("scell", explode(trainedTop(sup, col(qv), np)))
+      .join(broadcast(memberDf), Seq("scell"))
+      .select(col("qid") +: keep.map(col) :+ col("cid") :+
+        round(call_function("graft_cosine",
+          col(qv).cast("array<double>"), col("cv")), 6).as("ccos"): _*)
+      .withColumn("prn", row_number().over(wp))
+      .filter(col("prn") <= np)
+      .select(col("qid") +: keep.map(col) :+ col("cid").as("qcell"): _*)
+  }
+
+  /** Probe rows (qid, qv, qcell) → (qid, qcell, lut): the source's ADC
+    * table over the flat codebooks, or — for residual codes — over its
+    * residual against each probed cell's centroid.
+    */
+  private[graft] def withAdcLut(s: SparkSession, dir: String, probes: DataFrame,
+                                pqk: Int = PqK, residual: Boolean = false): DataFrame =
+    if (!residual)
+      probes.select(col("qid"), adcLut(s, dir, col("qv"), pqk).as("lut"), col("qcell"))
+    else
+      probes.join(broadcast(centDf(s, trainedModel(s, dir)._2)
+          .withColumnRenamed("cell", "qcell")), Seq("qcell"))
+        .select(col("qid"), col("qcell"),
+          adcResLut(zip_with(col("qv"), col("ccv"), (x, c) => x - c),
+            pqResModel(s, dir, pqk), pqk).as("lut"))
+
+  /** ADC shortlist: candidate code rows carrying their source's lut →
+    * (qid, vec_id), the `depth` best per source under (adist, vec_id) —
+    * a total order, so a depth-d shortlist is the prefix of any deeper one.
+    */
+  private[graft] def adcShortlist(cands: DataFrame, depth: Int,
+                                  pqk: Int = PqK): DataFrame = {
+    val ws = org.apache.spark.sql.expressions.Window
+      .partitionBy("qid").orderBy(col("adist").asc, col("vec_id").asc)
+    cands.select(col("qid"), col("vec_id"), adcFromLut(col("lut"), pqk).as("adist"))
+      .withColumn("srn", row_number().over(ws))
+      .filter(col("srn") <= depth)
+      .select(col("qid"), col("vec_id"))
+  }
+
+  /** Exact-cosine rerank: (qid, vec_id, `v`, `qv`) pairs → the top `k`
+    * per source as (`src`, `dst`, cos, rn), ties to the lower `dst`.
+    */
+  private[graft] def rerankTopK(pairs: DataFrame, v: String, qv: String, k: Int,
+                                src: String = "src", dst: String = "dst"): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(src).orderBy(col("cos").desc, col(dst).asc)
+    pairs.select(col("qid").as(src), col("vec_id").as(dst),
+        round(call_function("graft_cosine", col(v), col(qv)), 6).as("cos"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+  }
+
+  /** The candidate equi-join `corpus ⋈ probes ON cell = qcell`, minus
+    * each source's own row.
+    *
+    * Salting (guide §2.5, measured round 19): the key has only K
+    * distinct values and the join EXPLODES, so at K below the shuffle
+    * width the post-shuffle stage holds ≤ K populated partitions, which
+    * AQE folds into ONE — the whole candidate scan ran single-task
+    * (1.77 s of sim_knn_ann's 2.2 s at sf0.1). `salted` with K < P: the
+    * corpus side gets a deterministic per-row salt, each probe row is
+    * replicated to every salt, and both sides are EXPLICITLY
+    * repartitioned by (cell, salt), which AQE must not re-coalesce. A
+    * corpus row has one salt and its probe row is present there, so each
+    * pair still meets once. Otherwise (K ≥ P, sampled query sides, store
+    * reads): a merge-hinted shuffle join — at test scale the exact stats
+    * would elect the corpus-sized probe side as a broadcast build side,
+    * the plan that melts at 100 TB.
+    */
+  private[graft] def cellCandidateJoin(s: SparkSession, corpus: DataFrame,
+                                       probes: DataFrame, salted: Boolean): DataFrame = {
+    val p = s.conf.get("spark.sql.shuffle.partitions",
+      s.sparkContext.defaultParallelism.toString).toInt
+    val salts = if (salted) math.max(1, math.ceil(p.toDouble / nCellsOf(s)).toInt) else 1
+    val joined =
+      if (salts == 1) corpus.join(probes.hint("merge"), col("cell") === col("qcell"))
+      else {
+        val c = corpus
+          .withColumn("__csalt", pmod(xxhash64(col("vec_id")), lit(salts.toLong)))
+          .repartition(p, col("cell"), col("__csalt"))
+        val q = probes
+          .withColumn("__qsalt",
+            explode(array((0 until salts).map(i => lit(i.toLong)): _*)))
+          .repartition(p, col("qcell"), col("__qsalt"))
+        // shuffled HASH join (guide §3.1): the probe side per partition
+        // is small and bounded (this arm only exists at K < P)
+        c.join(q.hint("shuffle_hash"),
+            col("cell") === col("qcell") && col("__csalt") === col("__qsalt"))
+          .drop("__csalt", "__qsalt")
+      }
+    joined.filter(col("vec_id") =!= col("qid"))
+  }
+
+  /** Edge recall of an approximate graph against the exact kernel's:
+    * |approx ∩ exact| / |exact| on (src, dst), over the sources
+    * `srcFilter` keeps. Reads the memoized [[knnJoin]], so building it
+    * runs no job; rides the exact kernel, so every recall row is
+    * excluded from the up-decade passes by name.
+    */
+  private def edgeRecall(s: SparkSession, dir: String, approx: DataFrame,
+                         srcFilter: DataFrame => DataFrame = identity): DataFrame = {
+    val exact = srcFilter(knnJoin(s, dir)).select("src", "dst")
+    approx.select("src", "dst")
+      .join(exact, Seq("src", "dst"), "left_semi")
+      .agg(count(lit(1)).as("hits"))
+      .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
+      .select(col("hits"), col("n_exact"),
+        round(col("hits").cast("double") / col("n_exact"), 6).as("recall"))
+  }
+
+  /** Labelled [[edgeRecall]] rows, unioned — the tradeoff evals. */
+  private def recallTable(s: SparkSession, dir: String,
+                          srcFilter: DataFrame => DataFrame,
+                          rows: (String, DataFrame)*): DataFrame =
+    rows.map { case (name, df) =>
+      edgeRecall(s, dir, df, srcFilter).select(lit(name).as("variant"), col("*"))
+    }.reduce(_ unionAll _)
+
+  /** A deterministic 1/[[KnnSampleBuckets]] SOURCE sample — the
+    * scale-decade oracle rows (the 100× kNN oracle in one piece would
+    * window ~15G candidate rows, which DuckDB cannot sort).
     */
   val KnnSampleBuckets = 20
 
-  /** Which of the [[KnnSampleBuckets]] md5 source buckets the sample
-    * row restricts to — default 0 (every record to date). The buckets
-    * PARTITION the source ids, and the probe is per-source independent,
-    * so the union of the 20 bucket restrictions IS the full corpus-wide
-    * kNN: iterating this knob 0..19 upgrades the 100× kNN evidence
-    * from one sample to FULL-corpus oracle coverage in DuckDB-feasible
-    * chunks (round-15 judge stretch #8 — the full oracle in one piece
-    * would window ~15G candidate rows). Pure verification chunking: no
-    * cache key embeds it (the probe reads the same shared stores), and
-    * the oracle SQL regenerates the same bucket filter from the live
-    * conf.
+  /** The md5-bucket source restriction: `idCol` in buckets [b, b+w). */
+  private def srcBuckets(b: Int, w: Int = 1,
+                         idCol: String = "vec_id"): DataFrame => DataFrame = {
+    val bucket = graft.functions.Buckets.mdBucket(col(idCol).cast("string"), KnnSampleBuckets)
+    _.filter(if (w == 1) bucket === b else bucket.between(b, b + w - 1))
+  }
+
+  /** Which of the [[KnnSampleBuckets]] md5 source buckets the
+    * `sim_knn_ann_sample`/`sim_knn_ann_hier_pq_sample` rows restrict to —
+    * default 0. The buckets PARTITION the sources, so iterating 0..19
+    * gives FULL-corpus oracle coverage in DuckDB-feasible chunks. Pure
+    * verification chunking: no cache key embeds it, and the oracle SQL
+    * regenerates the same filter from the live conf.
     */
   val KnnSampleBucketKey = "spark.graft.sim.knnsamplebucket"
 
@@ -504,28 +677,17 @@ object SimilarityQueries {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(knnSampleBucketOf).getOrElse(0)
 
-  /** Verification-chunking knob for the CORPUS-WIDE trained-model kNN
-    * rows (`sim_knn_ann_kmeans`, `sim_knn_ann_hier`) and their
-    * store-served twins ([[graft.sources.VectorLayout.knn]] /
-    * `knnHier`) — the [[KnnSampleBucketKey]] idiom applied to the
-    * families whose ONE-PIECE 100× oracle is DuckDB-infeasible
-    * (round-16 stream record: the K=633 model chain + ~60M-row
-    * candidate window OOMs at the 64 GB cap). `-1` (default) leaves
-    * the rows corpus-wide; `b` (0..19) restricts the SOURCE side to
-    * one md5 bucket, and `b:w` to the RANGE of `w` buckets [b, b+w) —
-    * the chunk-width lever: the oracle's Lloyd-chain CTEs are
-    * bucket-independent and dominate each DuckDB run's TIME (~9 min at
-    * 100×) while the per-source candidate/window tail dominates its
-    * MEMORY, so wider chunks amortize the chain across buckets as long
-    * as the tail still fits the cap (w=5 → 4 chunks/query ≈ 55 GB tail
-    * vs the one-piece form's ~230 GB). The buckets PARTITION the
-    * source ids and the probe is per-source independent (candidates
-    * stay corpus-wide), so any disjoint cover of 0..19 unions to
-    * EXACTLY the full row — chunk-by-chunk hash equality IS
-    * full-corpus equality (partition laws pinned in QueriesSpec beside
-    * the sample knob's). Pure verification chunking: no cache key
-    * embeds it, the trained model is bucket-independent, and the
-    * oracle SQL regenerates the same source filter from the live conf.
+  /** Verification chunking for the CORPUS-WIDE trained raw rows
+    * (`sim_knn_ann_kmeans`, `sim_knn_ann_hier`) and their store-served
+    * twins, whose one-piece 100× oracle is DuckDB-infeasible. `-1`
+    * (default) leaves them corpus-wide; `b` restricts the SOURCE side to
+    * one md5 bucket, and `b:w` to the range [b, b+w). Width is the
+    * lever: the oracle's Lloyd chain is bucket-independent and dominates
+    * each run's TIME (~9 min at 100×), while the candidate tail
+    * dominates its MEMORY, so w=5 amortizes the chain and still fits.
+    * Any disjoint cover of 0..19 unions to EXACTLY the full row
+    * (partition laws in QueriesSpec). No cache key embeds it beyond the
+    * output memo's, and the oracle regenerates the filter from the live conf.
     */
   val KnnBucketKey = "spark.graft.sim.knnbucket"
 
@@ -549,15 +711,12 @@ object SimilarityQueries {
       .flatMap(knnBucketOf)
 
   /** Source-side restriction of the live [[KnnBucketKey]] — identity
-    * when the knob is off, the md5-bucket range filter on `idCol` when
-    * set.
+    * when the knob is off.
     */
   def knnBucketFilter(s: SparkSession,
                       idCol: String = "vec_id"): DataFrame => DataFrame =
-    knnBucketOf(s) match {
-      case None => identity
-      case Some((b, w)) => df => df.filter(graft.functions.Buckets.mdBucket(
-        col(idCol).cast("string"), KnnSampleBuckets).between(b, b + w - 1))
+    knnBucketOf(s).fold[DataFrame => DataFrame](identity) {
+      case (b, w) => srcBuckets(b, w, idCol)
     }
 
   /** The oracle spelling of the live [[KnnBucketKey]] restriction —
@@ -572,311 +731,68 @@ object SimilarityQueries {
           s"$qualId::VARCHAR", KnnSampleBuckets)} BETWEEN $b AND ${b + w - 1}"
     }
 
+  // ---- The registered stacks ----
+  // Flat probe over the seeded cells; trained flat (the session twin of
+  // the VectorLayout serving read — the layout partitions by these
+  // cells); two-level; and the PQ scans over each — the IVFADC shape
+  // (residual: codes quantize qv − centroid(cell), what production
+  // IVFADC stores). Recall rows price each rung.
+  def knnAnn(s: SparkSession, dir: String): DataFrame = knnMemo(s, dir, "sim_knn_ann")
+  def knnAnnKmeans(s: SparkSession, dir: String): DataFrame = knnMemo(s, dir, "sim_knn_ann_kmeans")
+  def knnAnnHier(s: SparkSession, dir: String): DataFrame = knnMemo(s, dir, "sim_knn_ann_hier")
+  def knnAnnPq(s: SparkSession, dir: String): DataFrame = knnMemo(s, dir, "sim_knn_ann_pq")
+  def knnAnnPqRes(s: SparkSession, dir: String): DataFrame = knnMemo(s, dir, "sim_knn_ann_pq_res")
+  def knnAnnHierPq(s: SparkSession, dir: String): DataFrame = knnMemo(s, dir, "sim_knn_ann_hier_pq")
+  def knnAnnHierPqRes(s: SparkSession, dir: String): DataFrame =
+    knnMemo(s, dir, "sim_knn_ann_hier_pq_res")
+
   def knnAnnSample(s: SparkSession, dir: String): DataFrame =
-    probeQuerySet(s, dir,
-      embs(s, dir)
-        .filter(graft.functions.Buckets.mdBucket(col("vec_id").cast("string"),
-          KnnSampleBuckets) === knnSampleBucketOf(s))
-        .select(col("vec_id").as("qid"), col("v").as("qv")),
-      k = KnnK, broadcastQueries = false, sampledQueries = true)
-      .select(col("qid").as("src"), col("vec_id").as("dst"), col("cos"), col("rn"))
+    knnOver(s, dir, Seeded(), Raw, srcBuckets(knnSampleBucketOf(s)), sampled = true)
+  def knnAnnPqSample(s: SparkSession, dir: String): DataFrame =
+    knnOver(s, dir, Flat, Pq(), srcBuckets(0), sampled = true)
+  def knnAnnHierSample(s: SparkSession, dir: String): DataFrame =
+    knnOver(s, dir, Hier, Raw, srcBuckets(0), sampled = true)
+  def knnAnnHierPqSample(s: SparkSession, dir: String): DataFrame =
+    knnOver(s, dir, Hier, Pq(), srcBuckets(knnSampleBucketOf(s)), sampled = true)
+
+  def knnAnnRecall(s: SparkSession, dir: String): DataFrame = edgeRecall(s, dir, knnAnn(s, dir))
+  def knnAnnPqRecall(s: SparkSession, dir: String): DataFrame = edgeRecall(s, dir, knnAnnPq(s, dir))
+  def knnAnnPqResRecall(s: SparkSession, dir: String): DataFrame =
+    edgeRecall(s, dir, knnAnnPqRes(s, dir))
+  def knnAnnHierRecall(s: SparkSession, dir: String): DataFrame =
+    edgeRecall(s, dir, knnAnnHier(s, dir))
+  def knnAnnHierPqRecall(s: SparkSession, dir: String): DataFrame =
+    edgeRecall(s, dir, knnAnnHierPq(s, dir))
+  def knnAnnHierPqResRecall(s: SparkSession, dir: String): DataFrame =
+    edgeRecall(s, dir, knnAnnHierPqRes(s, dir))
 
   // ---- Probe-width recall curve (round 14) ----
-  // The PQ lever table (sim_knn_ann_pq_tradeoff) measured that rerank
-  // depth saturates at 0.614 against the plain kNN's own 0.622: past
-  // ~0.62 the binding constraint is candidate GENERATION — a true
-  // neighbor whose primary cell is outside the probe set is never
-  // proposed, at any shortlist depth. This row measures the lever that
-  // moves THAT bound (the [[NProbeKey]] knob's production rationale):
-  // edge recall of the bucket-blocked kNN at pinned probe widths
-  // 1 / default / 6. Sources are the deterministic 1/KnnSampleBuckets
-  // sample — per-source independence makes the restriction exact
-  // (the knnAnnSample argument), and it keeps the three full kNN
-  // passes + the exact baseline at sample cost instead of three
-  // corpus-wide scans. Rides the exact kernel → excluded from the up
-  // passes by name like every recall row.
+  // Rerank depth saturates (sim_knn_ann_pq_tradeoff: 0.614 against the
+  // plain kNN's 0.622): past ~0.62 recall is bound by candidate
+  // GENERATION, and the probe width is the lever that moves it. Edge
+  // recall of the seeded stack at pinned widths 1 / default / 6, over
+  // the bucket-0 source sample (an exact restriction).
   val ProbeTradeoffWide = 6
 
-  def knnAnnProbeTradeoff(s: SparkSession, dir: String): DataFrame = {
-    val srcSampled = graft.functions.Buckets.mdBucket(
-      col("src").cast("string"), KnnSampleBuckets) === 0
-    val exact = knnJoin(s, dir).filter(srcSampled)
-      .select("src", "dst").localCheckpoint()
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    val sampledQ = embs(s, dir)
-      .filter(graft.functions.Buckets.mdBucket(col("vec_id").cast("string"),
-        KnnSampleBuckets) === 0)
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
-    def row(name: String, np: Int): DataFrame =
-      probeQuerySet(s, dir, sampledQ, k = KnnK,
-        broadcastQueries = false, nprobe = np, sampledQueries = true)
-        .select(col("qid").as("src"), col("vec_id").as("dst"))
-        .join(exact, Seq("src", "dst"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-        .crossJoin(nExact)
-        .select(lit(name).as("variant"), col("hits"), col("n_exact"),
-          round(col("hits").cast("double") / col("n_exact"), 6).as("recall"))
-    row("np1", 1)
-      .unionAll(row(s"np$NProbeIvf", NProbeIvf))
-      .unionAll(row(s"np$ProbeTradeoffWide", ProbeTradeoffWide))
-  }
+  def knnAnnProbeTradeoff(s: SparkSession, dir: String): DataFrame =
+    recallTable(s, dir, srcBuckets(0, idCol = "src"),
+      Seq(1, NProbeIvf, ProbeTradeoffWide).map(np =>
+        s"np$np" -> knnOver(s, dir, Seeded(np), Raw, srcBuckets(0), sampled = true)): _*)
 
-  /** Edge recall of the bucket-blocked kNN against the exact kernel's
-    * kNN: |approx edges ∩ exact edges| / |exact edges| on (src, dst).
-    * Rides the exact kernel, so — like [[pairsRecall]] — it is
-    * excluded from the up-decade passes by name while [[knnAnn]]
-    * itself runs there; at 100 TB this eval runs on a sampled source
-    * subset against a brute-force pass over just that sample.
-    */
-  def knnAnnRecall(s: SparkSession, dir: String): DataFrame = {
-    val exact = knnJoin(s, dir).select("src", "dst")
-    val hits = knnAnn(s, dir).select("src", "dst")
-      .join(exact, Seq("src", "dst"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    hits.crossJoin(nExact)
-      .select(col("hits"), col("n_exact"),
-        round(col("hits").cast("double") / col("n_exact"), 6).as("recall"))
-  }
+  // ---- PQ recall-vs-cost levers (round-13 verdict #6) ----
+  // `shortlist2x` doubles the rerank depth (the lever production PQ
+  // systems turn first: linear rerank cost, no retrain); `codebook2x`
+  // doubles every subspace codebook (finer ADC, at a retrain). `base` IS
+  // [[knnAnnPq]] and rides its output memo (QueriesSpec pins base ≡
+  // the standalone recall row).
+  val PqShortlist2x = 100
+  val PqK2x = 16
 
-  // ---- PQ-compressed kNN join: the corpus-wide form of the IVF-PQ
-  // retrieval stack ----
-  // [[knnAnn]] scans RAW vectors inside each probed cell; at 100 TB the
-  // candidate scan is the dominant term and the production fix is the
-  // same one the single-query stack already ships (annIvfPqMultiProbe):
-  // scan PQ CODES under ADC, then rerank a per-source shortlist with
-  // exact cosine over raw vectors. Stages, all per-source independent:
-  //   1. probe: every quantized vector ranks the trained coarse
-  //      centroids by the SAME integer cosine the assignment uses
-  //      (corpus × K rows through a qid-partitioned window — model-sized
-  //      per source, never corpus²) and keeps its NProbeIvf cells;
-  //   2. shortlist: one shuffle equi-join of the code table against the
-  //      (source, probe-cell) pairs on the cell key — the query side is
-  //      corpus-sized, so it shuffles, never broadcasts — with ADC
-  //      distances (M map-literal codebook lookups, integer L2²) and a
-  //      per-source [[PqShortlist]] window cut; compressed rows are the
-  //      only thing the candidate scan touches;
-  //   3. rerank: raw vectors join back for the shortlist ALONE
-  //      (corpus × PqShortlist rows, linear), exact cosine, per-source
-  //      top-[[KnnK]] — the same rerank discipline that measured
-  //      +0.2 recall on the single-query stack.
-  // The recall eval ([[knnAnnPqRecall]]) rides the exact kernel like
-  // every other recall row; the sample twin ([[knnAnnPqSample]]) is the
-  // decade-portable oracle row (exact restriction — the probe is
-  // per-source independent, the knnAnnSample argument verbatim).
-  private def knnPqOver(s: SparkSession, dir: String,
-                        srcFilter: DataFrame => DataFrame,
-                        pqk: Int = PqK,
-                        shortlist: Int = PqShortlist,
-                        sampledQueries: Boolean = false): DataFrame = {
-    val (q, cents) = trainedModel(s, dir)
-    val idx = pqCodes(s, dir, pqk)
-    // spread the (single-split) query side before the per-row probe
-    // ranking / ADC LUT expressions — they are model-sized per row but
-    // corpus-many, and one parquet file is one task (Tables.spread)
-    val srcs = Tables.spread(s, srcFilter(q))
-      .select(col("vec_id").as("qid"), col("qv").as("qqv"))
-    // per-row probe ranking + per-SOURCE ADC LUT ([[adcLut]]): both are
-    // model-sized expressions evaluated in place on the source rows —
-    // no corpus × K window shuffle (quadratic once K ∝ corpus), and the
-    // candidate scan below never evaluates an interpreted fold
-    val probes = srcs.select(col("qid"),
-      adcLut(s, dir, col("qqv"), pqk).as("lut"),
-      explode(trainedTop(cents, col("qqv"), nProbeOf(s))).as("qcell"))
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("adist").asc, col("vec_id").asc)
-    // the probe side is corpus-sized: pin the shuffle join (merge
-    // hint) — at test scale the cached code table's exact stats would
-    // elect it as a broadcast build side, the exact plan that melts at
-    // 100 TB (the broadcastQueries=false argument of probeQuerySet)
-    val shortlisted = cellCandidateJoin(s, idx, probes, !sampledQueries)
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), adcFromLut(col("lut"), pqk).as("adist"))
-      .withColumn("srn", row_number().over(ws))
-      .filter(col("srn") <= shortlist)
-    rerankShortlist(s, dir, shortlisted.select(col("qid"), col("vec_id")))
-  }
-
-  /** The flat-codebook shortlist WITH its ADC rank kept — the
-    * tradeoff eval's `shortlist2x` scan: the ranked top-`shortlist`
-    * under (adist ASC, vec_id ASC) is a total order, so the depth-d
-    * shortlist is exactly the `srn <= d` prefix of a deeper one —
-    * which is why the tradeoff's `base` variant needs no scan at all
-    * (it rides the [[knnAnnPq]] output memo; round 20).
-    */
-  private def pqShortlistRanked(s: SparkSession, dir: String,
-                                pqk: Int, shortlist: Int): DataFrame = {
-    val (q, cents) = trainedModel(s, dir)
-    val idx = pqCodes(s, dir, pqk)
-    val srcs = Tables.spread(s, q)
-      .select(col("vec_id").as("qid"), col("qv").as("qqv"))
-    val probes = srcs.select(col("qid"),
-      adcLut(s, dir, col("qqv"), pqk).as("lut"),
-      explode(trainedTop(cents, col("qqv"), nProbeOf(s))).as("qcell"))
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("adist").asc, col("vec_id").asc)
-    cellCandidateJoin(s, idx, probes)
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), adcFromLut(col("lut"), pqk).as("adist"))
-      .withColumn("srn", row_number().over(ws))
-      .filter(col("srn") <= shortlist)
-      .select(col("qid"), col("vec_id"), col("srn"))
-  }
-
-  /** Exact-cosine rerank of a (qid, vec_id) shortlist to per-source
-    * top-[[KnnK]] — the final stage shared by every compressed
-    * corpus-wide kNN variant (raw-codebook and residual). Touches the
-    * raw vectors for the shortlist alone: corpus × shortlist rows,
-    * linear in the corpus.
-    */
-  private def rerankShortlist(s: SparkSession, dir: String,
-                              shortlisted: DataFrame): DataFrame = {
-    val raw = embs(s, dir).select(col("vec_id"), col("v"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("src").orderBy(col("cos").desc, col("dst").asc)
-    shortlisted
-      .join(raw, Seq("vec_id"))
-      .join(raw.select(col("vec_id").as("qid"), col("v").as("qv")), Seq("qid"))
-      .select(col("qid").as("src"), col("vec_id").as("dst"),
-        round(call_function("graft_cosine", col("v"), col("qv")), 6).as("cos"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= KnnK)
-  }
-
-  def knnAnnPq(s: SparkSession, dir: String): DataFrame =
-    cachedKnn(s, dir, "pq")(knnPqOver(s, dir, identity))
-
-  /** Corpus-wide kNN over RESIDUAL-encoded codes — [[knnPqOver]] with
-    * IVFADC's residual quantization ([[pqResCodes]]) in place of the
-    * flat codebooks, at the SAME M/K/shortlist levers, so its recall
-    * row measures exactly what residual encoding buys. Two structural
-    * deltas, both model-sized: the probe rows join the broadcast
-    * centroid table (the query's residual depends on the probed cell),
-    * and the ADC table is computed per (source, probed-cell) row
-    * ([[adcResLut]] — source × nprobe rows, never the corpus). The
-    * candidate scan, shortlist window, and exact rerank are shared
-    * with the flat form verbatim.
-    */
-  private def knnPqResOver(s: SparkSession, dir: String,
-                           srcFilter: DataFrame => DataFrame,
-                           pqk: Int = PqK,
-                           shortlist: Int = PqShortlist,
-                           sampledQueries: Boolean = false): DataFrame = {
-    val (q, cents) = trainedModel(s, dir)
-    val model = pqResModel(s, dir, pqk)
-    val idx = pqResCodes(s, dir, pqk)
-    // spread the (single-split) query side before the per-row probe
-    // ranking / ADC LUT expressions — they are model-sized per row but
-    // corpus-many, and one parquet file is one task (Tables.spread)
-    val srcs = Tables.spread(s, srcFilter(q))
-      .select(col("vec_id").as("qid"), col("qv").as("qqv"))
-    val probes = srcs
-      .select(col("qid"), col("qqv"),
-        explode(trainedTop(cents, col("qqv"), nProbeOf(s))).as("qcell"))
-      .join(broadcast(centDf(s, cents).withColumnRenamed("cell", "qcell")),
-        Seq("qcell"))
-      .select(col("qid"), col("qcell"),
-        adcResLut(zip_with(col("qqv"), col("ccv"), (x, c) => x - c),
-          model, pqk).as("lut"))
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("adist").asc, col("vec_id").asc)
-    // merge-hinted shuffle join on the cell key — the knnPqOver
-    // rationale verbatim (the probe side is corpus-sized)
-    val shortlisted = cellCandidateJoin(s, idx, probes, !sampledQueries)
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), adcFromLut(col("lut"), pqk).as("adist"))
-      .withColumn("srn", row_number().over(ws))
-      .filter(col("srn") <= shortlist)
-      .select(col("qid"), col("vec_id"))
-    rerankShortlist(s, dir, shortlisted)
-  }
-
-  def knnAnnPqRes(s: SparkSession, dir: String): DataFrame =
-    cachedKnn(s, dir, "pqres")(knnPqResOver(s, dir, identity))
-
-  /** Edge recall of the RESIDUAL-encoded kNN against the exact kernel —
-    * the [[knnAnnPqRecall]] discipline at identical levers, so the pair
-    * of rows is a controlled measurement of residual vs flat encoding.
-    * Rides the exact kernel → excluded from the up-decade passes by
-    * name while [[knnAnnPqRes]] itself runs there.
-    */
-  def knnAnnPqResRecall(s: SparkSession, dir: String): DataFrame = {
-    val exact = knnJoin(s, dir).select("src", "dst")
-    val hits = knnAnnPqRes(s, dir).select("src", "dst")
-      .join(exact, Seq("src", "dst"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    hits.crossJoin(nExact)
-      .select(col("hits"), col("n_exact"),
-        round(col("hits").cast("double") / col("n_exact"), 6).as("recall"))
-  }
-
-  /** Corpus-wide kNN over the TRAINED coarse quantizer — the session
-    * twin of the serving path: [[graft.sources.VectorLayout]] partitions
-    * the on-disk corpus by exactly these trained cells, so THIS is the
-    * kNN graph a deployment computes by reading the versioned store
-    * (the streamed/drained form is dumped by VerifyStream under this
-    * name and hash-checked against the same oracle). Same stages as
-    * [[knnAnn]] — per-source probe ranking (corpus × K model-sized
-    * window), shuffled cell equi-join for candidates, exact cosine,
-    * per-source top-k — with the trained centroids in place of the
-    * seeded ones; probe scoring is the assignment arithmetic (quantized
-    * integer cosine), so the probed cells are consistent with the cells
-    * vectors actually live in.
-    */
-  def knnAnnKmeans(s: SparkSession, dir: String): DataFrame =
-    cachedKnn(s, dir, "kmeans")(knnAnnKmeansPlan(s, dir))
-
-  private def knnAnnKmeansPlan(s: SparkSession, dir: String): DataFrame = {
-    val sampledQueries = knnBucketOf(s).isDefined
-    val (q, cents) = trainedModel(s, dir)
-    // per-row probe ranking — see [[knnPqOver]]'s rationale; the query
-    // side honors the knnbucket verification-chunking knob (off by
-    // default), candidates stay corpus-wide
-    val probes = Tables.spread(s, knnBucketFilter(s)(q))
-      .select(col("vec_id").as("qid"),
-        explode(trainedTop(cents, col("qv"), nProbeOf(s))).as("qcell"))
-    val raw = embs(s, dir).select(col("vec_id"), col("v"))
-    val assigned = kmeansCells(s, dir).join(raw, Seq("vec_id"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("src").orderBy(col("cos").desc, col("dst").asc)
-    cellCandidateJoin(s, assigned, probes, !sampledQueries)
-      .filter(col("vec_id") =!= col("qid"))
-      .join(raw.select(col("vec_id").as("qid"), col("v").as("qv")), Seq("qid"))
-      .select(col("qid").as("src"), col("vec_id").as("dst"),
-        round(call_function("graft_cosine", col("v"), col("qv")), 6).as("cos"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= KnnK)
-  }
-
-  def knnAnnPqSample(s: SparkSession, dir: String): DataFrame =
-    knnPqOver(s, dir, q => q.filter(
-      graft.functions.Buckets.mdBucket(col("vec_id").cast("string"),
-        KnnSampleBuckets) === 0), sampledQueries = true)
-
-  // ---- Hierarchical (2-level) coarse probe: the documented next rung ----
-  // The flat probe ranks ALL K centroids per row. [[topCellsNative]]
-  // keeps that O(K) work inside whole-stage codegen at any K the knob
-  // has been measured at, but the model rides the EXPRESSION as
-  // constructor data — at K beyond ~10⁵ (the 100 TB regime under the
-  // K ∝ √n contract) a K×64-double reference object per task stops
-  // being a sane plan artifact, and the per-row FLOPs are n·K = n^1.5.
-  // The textbook fix (IMI / FAISS's two-level coarse quantizer) probes
-  // hierarchically: K2 = ⌈√K⌉ SUPER-centroids trained over the K
-  // centroids (model-over-model — K rows, trained on the DRIVER with
-  // the exact arithmetic contract of every other trainer), the query
-  // ranks K2 supers in place (per-row expression, O(√K)), and only the
-  // probed supers' member centroids are ranked — a broadcast join of
-  // source × nsuper rows against the (scell, cid, cv) member table and
-  // one per-source window over ~nsuper·K/K2 = O(√K) rows. Total probe
-  // work per source: O(√K) expression + O(√K) window rows, vs the flat
-  // form's O(K) — n^1.25 corpus-wide. LOSSY one level deeper by the
-  // same contract as the flat probe: a cell whose super is outside the
-  // probed supers is never ranked ([[knnAnnHierRecall]] measures it;
-  // at the compiled default K=8, K2=3 = nsuper, the hierarchy covers
-  // every super, so the output EQUALS [[knnAnnKmeans]] — the spec pins
-  // that identity, and the oracle hash proves the two-level chain).
-  // nsuper rides the same [[NProbeKey]] knob as nprobe.
+  def knnAnnPqTradeoff(s: SparkSession, dir: String): DataFrame =
+    recallTable(s, dir, identity,
+      "base" -> knnAnnPq(s, dir),
+      "shortlist2x" -> knnOver(s, dir, Flat, Pq(depth = PqShortlist2x)),
+      "codebook2x" -> knnOver(s, dir, Flat, Pq(pqk = PqK2x)))
 
   /** Driver-side Lloyd over the CENTROID set (model-over-model): seeds
     * are the K2 lowest-cid centroids, [[KmeansIters]] iterations, and
@@ -930,314 +846,6 @@ object SimilarityQueries {
   }
 
   private[graft] def hierK2(k: Int): Int = math.ceil(math.sqrt(k.toDouble)).toInt
-
-  /** Corpus-wide kNN over the trained quantizer with the TWO-LEVEL
-    * probe — [[knnAnnKmeans]] with the probe stage swapped for the
-    * hierarchical ranking above; candidate join and exact rerank are
-    * shared verbatim.
-    */
-  def knnAnnHier(s: SparkSession, dir: String): DataFrame =
-    cachedKnn(s, dir, "hier")(knnHierOver(s, dir, knnBucketFilter(s),
-      sampledQueries = knnBucketOf(s).isDefined))
-
-  /** The hierarchical kNN over an optionally-restricted query side
-    * (candidates always corpus-wide) — the [[knnPqOver]] shape, so the
-    * sample twin is an exact source restriction (per-source
-    * independence, the knnAnnSample argument verbatim).
-    */
-  private def knnHierOver(s: SparkSession, dir: String,
-                          srcFilter: DataFrame => DataFrame,
-                          sampledQueries: Boolean = false): DataFrame = {
-    import s.implicits._
-    val (q, cents) = trainedModel(s, dir)
-    val (sup, members) = trainSuper(cents, hierK2(nCellsOf(s)))
-    val np = nProbeOf(s)
-    val qsup = Tables.spread(s, srcFilter(q))
-      .select(col("vec_id").as("qid"), col("qv"),
-        explode(trainedTop(sup, col("qv"), np)).as("scell"))
-    val memberDf = cents.map { case (cid, v) =>
-      (members(cid), cid, v.toSeq.map(_.toDouble)) }.toDF("scell", "cid", "cv")
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("ccos").desc, col("cid").asc)
-    val probes = qsup.join(broadcast(memberDf), Seq("scell"))
-      .select(col("qid"), col("cid"),
-        round(call_function("graft_cosine",
-          col("qv").cast("array<double>"), col("cv")), 6).as("ccos"))
-      .withColumn("prn", row_number().over(wp))
-      .filter(col("prn") <= np)
-      .select(col("qid"), col("cid").as("qcell"))
-    val raw = embs(s, dir).select(col("vec_id"), col("v"))
-    val assigned = kmeansCells(s, dir).join(raw, Seq("vec_id"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("src").orderBy(col("cos").desc, col("dst").asc)
-    cellCandidateJoin(s, assigned, probes, !sampledQueries)
-      .filter(col("vec_id") =!= col("qid"))
-      .join(raw.select(col("vec_id").as("qid"), col("v").as("qv")), Seq("qid"))
-      .select(col("qid").as("src"), col("vec_id").as("dst"),
-        round(call_function("graft_cosine", col("v"), col("qv")), 6).as("cos"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= KnnK)
-  }
-
-  /** Deterministic 1/[[KnnSampleBuckets]] source sample of
-    * [[knnAnnHier]] — the decade-portable oracle row (the
-    * knnAnnSample/knnAnnPqSample idiom): the 100× oracle's super-chain
-    * stays model-sized but its probe/candidate CTEs scale with the
-    * query side, so the sample is what makes the second upward decade
-    * DuckDB-feasible for this family too.
-    */
-  def knnAnnHierSample(s: SparkSession, dir: String): DataFrame =
-    knnHierOver(s, dir, q => q.filter(
-      graft.functions.Buckets.mdBucket(col("vec_id").cast("string"),
-        KnnSampleBuckets) === 0), sampledQueries = true)
-
-  /** Edge recall of the two-level probe against the exact kernel — the
-    * [[knnAnnRecall]] discipline, so the flat ([[knnAnnKmeans]]-path)
-    * and hierarchical rows are directly comparable; rides the exact
-    * kernel → excluded from the up passes by name.
-    */
-  def knnAnnHierRecall(s: SparkSession, dir: String): DataFrame = {
-    val exact = knnJoin(s, dir).select("src", "dst")
-    val hits = knnAnnHier(s, dir).select("src", "dst")
-      .join(exact, Seq("src", "dst"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    hits.crossJoin(nExact)
-      .select(col("hits"), col("n_exact"),
-        round(col("hits").cast("double") / col("n_exact"), 6).as("recall"))
-  }
-
-  // ---- Hier + PQ: the composed production index (IMI + IVFADC) ----
-  // The shape a 10⁴⁺-cell deployment actually runs (FAISS's
-  // IMI2x…,PQ… index strings; round-15 verdict #1): the TWO-LEVEL
-  // coarse lookup finds the probe cells in O(√K) per source, the
-  // candidate scan reads PQ CODES under a per-source ADC LUT instead
-  // of raw vectors, and an exact-cosine rerank re-scores the
-  // per-source shortlist. All three rungs are the oracle-proven
-  // stages composed verbatim: probe = [[knnHierOver]]'s super→member
-  // chain, scan+shortlist = [[knnPqOver]]'s merge-hinted cell
-  // equi-join over [[pqCodes]], rerank = [[rerankShortlist]]. Lossy
-  // exactly where its parents are (super pruning one level, ADC
-  // ordering inside the shortlist) — [[knnAnnHierPqRecall]] prices the
-  // composition against the exact kernel beside the single-rung
-  // recalls, so the table shows what each rung costs.
-  private def knnHierPqOver(s: SparkSession, dir: String,
-                            srcFilter: DataFrame => DataFrame,
-                            pqk: Int = PqK,
-                            shortlist: Int = PqShortlist,
-                            sampledQueries: Boolean = false): DataFrame = {
-    import s.implicits._
-    val (q, cents) = trainedModel(s, dir)
-    val (sup, members) = trainSuper(cents, hierK2(nCellsOf(s)))
-    val np = nProbeOf(s)
-    val idx = pqCodes(s, dir, pqk)
-    val qsup = Tables.spread(s, srcFilter(q))
-      .select(col("vec_id").as("qid"), col("qv"),
-        explode(trainedTop(sup, col("qv"), np)).as("scell"))
-    val memberDf = cents.map { case (cid, v) =>
-      (members(cid), cid, v.toSeq.map(_.toDouble)) }.toDF("scell", "cid", "cv")
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("ccos").desc, col("cid").asc)
-    // member ranking keeps qv through the window so the ADC LUT (a
-    // model-sized expression) evaluates on the np surviving probe rows
-    // — never on the corpus-sized candidate scan below. Spread between
-    // the window and the LUT projection: the qid window's tiny shuffle
-    // coalesces to ~1 post-AQE partition, which would run the M×K-fold
-    // LUT evaluation single-task (round-19 profile)
-    val probes = Tables.spread(s, qsup.join(broadcast(memberDf), Seq("scell"))
-        .select(col("qid"), col("qv"), col("cid"),
-          round(call_function("graft_cosine",
-            col("qv").cast("array<double>"), col("cv")), 6).as("ccos"))
-        .withColumn("prn", row_number().over(wp))
-        .filter(col("prn") <= np)
-        .select(col("qid"), col("qv"), col("cid").as("qcell")))
-      .select(col("qid"), adcLut(s, dir, col("qv"), pqk).as("lut"),
-        col("qcell"))
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("adist").asc, col("vec_id").asc)
-    // merge-hinted shuffle join on the cell key — the knnPqOver
-    // rationale verbatim (the probe side is corpus-sized)
-    val shortlisted = cellCandidateJoin(s, idx, probes, !sampledQueries)
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), adcFromLut(col("lut"), pqk).as("adist"))
-      .withColumn("srn", row_number().over(ws))
-      .filter(col("srn") <= shortlist)
-      .select(col("qid"), col("vec_id"))
-    rerankShortlist(s, dir, shortlisted)
-  }
-
-  def knnAnnHierPq(s: SparkSession, dir: String): DataFrame =
-    cachedKnn(s, dir, "hierpq")(knnHierPqOver(s, dir, identity))
-
-  /** Deterministic 1/[[KnnSampleBuckets]] source sample of
-    * [[knnAnnHierPq]] — the decade-portable oracle row; rides the
-    * [[KnnSampleBucketKey]] chunking knob like [[knnAnnSample]], so the
-    * bucket union upgrades a decade's evidence to full-corpus coverage.
-    */
-  def knnAnnHierPqSample(s: SparkSession, dir: String): DataFrame =
-    knnHierPqOver(s, dir, q => q.filter(
-      graft.functions.Buckets.mdBucket(col("vec_id").cast("string"),
-        KnnSampleBuckets) === knnSampleBucketOf(s)), sampledQueries = true)
-
-  /** Edge recall of the composed hier+PQ stack against the exact
-    * kernel — beside [[knnAnnHierRecall]] (hier rung alone) and
-    * [[knnAnnPqRecall]] (PQ rung alone) the three rows price each rung
-    * of the composition; rides the exact kernel → excluded from the up
-    * passes by name while [[knnAnnHierPq]] itself runs there.
-    */
-  def knnAnnHierPqRecall(s: SparkSession, dir: String): DataFrame = {
-    val exact = knnJoin(s, dir).select("src", "dst")
-    val hits = knnAnnHierPq(s, dir).select("src", "dst")
-      .join(exact, Seq("src", "dst"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    hits.crossJoin(nExact)
-      .select(col("hits"), col("n_exact"),
-        round(col("hits").cast("double") / col("n_exact"), 6).as("recall"))
-  }
-
-  // ---- Hier + residual PQ: the full IVFADC under the IMI probe ----
-  // [[knnHierPqOver]] with residual quantization in the ADC rung — the
-  // last cell of the family matrix (flat probe has raw-codebook AND
-  // residual PQ; the two-level probe had only raw). Residual encoding
-  // is what production IVFADC actually stores (codes quantize
-  // qv − centroid(cell), concentrating the codebook's dynamic range
-  // near the origin), so this is the composed form a 10⁴⁺-cell
-  // deployment serves. Structure: the two-level probe chain verbatim,
-  // then [[knnPqResOver]]'s two model-sized deltas — probe rows join
-  // the broadcast centroid table (the query's residual depends on the
-  // probed cell) and the ADC LUT is per (source, probed-cell) — then
-  // the shared shortlist window and exact rerank. Each row of `probes`
-  // carries ITS OWN lut through the candidate join, so per-cell LUT
-  // correctness needs no extra key matching.
-  private def knnHierPqResOver(s: SparkSession, dir: String,
-                               srcFilter: DataFrame => DataFrame,
-                               pqk: Int = PqK,
-                               shortlist: Int = PqShortlist,
-                               sampledQueries: Boolean = false): DataFrame = {
-    import s.implicits._
-    val (q, cents) = trainedModel(s, dir)
-    val (sup, members) = trainSuper(cents, hierK2(nCellsOf(s)))
-    val np = nProbeOf(s)
-    val model = pqResModel(s, dir, pqk)
-    val idx = pqResCodes(s, dir, pqk)
-    val qsup = Tables.spread(s, srcFilter(q))
-      .select(col("vec_id").as("qid"), col("qv"),
-        explode(trainedTop(sup, col("qv"), np)).as("scell"))
-    val memberDf = cents.map { case (cid, v) =>
-      (members(cid), cid, v.toSeq.map(_.toDouble)) }.toDF("scell", "cid", "cv")
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("ccos").desc, col("cid").asc)
-    // spread between the window and the residual-LUT projection — the
-    // knnHierPqOver rationale (the qid window's tiny shuffle coalesces
-    // to ~1 post-AQE partition and would serialize the LUT evaluation)
-    val probes = Tables.spread(s, qsup.join(broadcast(memberDf), Seq("scell"))
-        .select(col("qid"), col("qv"), col("cid"),
-          round(call_function("graft_cosine",
-            col("qv").cast("array<double>"), col("cv")), 6).as("ccos"))
-        .withColumn("prn", row_number().over(wp))
-        .filter(col("prn") <= np)
-        .select(col("qid"), col("qv").as("qqv"), col("cid").as("qcell")))
-      .join(broadcast(centDf(s, cents).withColumnRenamed("cell", "qcell")),
-        Seq("qcell"))
-      .select(col("qid"), col("qcell"),
-        adcResLut(zip_with(col("qqv"), col("ccv"), (x, c) => x - c),
-          model, pqk).as("lut"))
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("adist").asc, col("vec_id").asc)
-    // merge-hinted shuffle join on the cell key — the knnPqOver
-    // rationale verbatim (the probe side is corpus-sized)
-    val shortlisted = cellCandidateJoin(s, idx, probes, !sampledQueries)
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), adcFromLut(col("lut"), pqk).as("adist"))
-      .withColumn("srn", row_number().over(ws))
-      .filter(col("srn") <= shortlist)
-      .select(col("qid"), col("vec_id"))
-    rerankShortlist(s, dir, shortlisted)
-  }
-
-  def knnAnnHierPqRes(s: SparkSession, dir: String): DataFrame =
-    cachedKnn(s, dir, "hierpqres")(knnHierPqResOver(s, dir, identity))
-
-  /** Edge recall of the composed hier + residual-PQ stack against the
-    * exact kernel — completes the rung-pricing table: beside
-    * [[knnAnnHierPqRecall]] it isolates what residual encoding buys
-    * UNDER the two-level probe, the same controlled measurement
-    * [[knnAnnPqResRecall]] makes under the flat probe. Rides the exact
-    * kernel → excluded from the up passes by name while
-    * [[knnAnnHierPqRes]] itself runs there.
-    */
-  def knnAnnHierPqResRecall(s: SparkSession, dir: String): DataFrame = {
-    val exact = knnJoin(s, dir).select("src", "dst")
-    val hits = knnAnnHierPqRes(s, dir).select("src", "dst")
-      .join(exact, Seq("src", "dst"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    hits.crossJoin(nExact)
-      .select(col("hits"), col("n_exact"),
-        round(col("hits").cast("double") / col("n_exact"), 6).as("recall"))
-  }
-
-  /** Edge recall of the PQ-compressed kNN against the exact kernel's
-    * kNN — the [[knnAnnRecall]] discipline; rides the exact kernel, so
-    * excluded from the up-decade passes by name while [[knnAnnPq]]
-    * itself runs there.
-    */
-  def knnAnnPqRecall(s: SparkSession, dir: String): DataFrame = {
-    val exact = knnJoin(s, dir).select("src", "dst")
-    val hits = knnAnnPq(s, dir).select("src", "dst")
-      .join(exact, Seq("src", "dst"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    hits.crossJoin(nExact)
-      .select(col("hits"), col("n_exact"),
-        round(col("hits").cast("double") / col("n_exact"), 6).as("recall"))
-  }
-
-  // ---- PQ recall-vs-cost levers (round-13 verdict #6) ----
-  // The 0.459 base recall needed an accept/reject measurement against
-  // the documented levers, so both ship as registered variants of the
-  // SAME eval: `shortlist2x` doubles the rerank depth (candidates the
-  // exact-cosine stage re-scores — the lever production PQ systems
-  // turn first, because it buys recall at linear rerank cost without
-  // touching the index), `codebook2x` doubles every subspace codebook
-  // (finer ADC quantization — buys shortlist FIDELITY but costs a
-  // retrain and a bigger model). Cost note for the bench record: this
-  // eval runs the full PQ-kNN three times plus the exact kernel by
-  // construction — its bench line is intrinsic, not a plan smell; it
-  // rides the exact kernel, so it is excluded from the up passes by
-  // name like every recall row.
-  val PqShortlist2x = 100
-  val PqK2x = 16
-
-  def knnAnnPqTradeoff(s: SparkSession, dir: String): DataFrame = {
-    // knnJoin is CacheLife-persisted (build:sim.knn_exact), so the four
-    // consumers below share its materialization without an eager
-    // localCheckpoint copy (round-19 advice: the eager checkpoint made
-    // plan-only consumers execute the query)
-    val exact = knnJoin(s, dir).select("src", "dst")
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    def row(name: String, df: DataFrame): DataFrame =
-      df.select("src", "dst")
-        .join(exact, Seq("src", "dst"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-        .crossJoin(nExact)
-        .select(lit(name).as("variant"), col("hits"), col("n_exact"),
-          round(col("hits").cast("double") / col("n_exact"), 6).as("recall"))
-    // the base variant IS [[knnAnnPq]] (the srn ≤ PqShortlist prefix of
-    // any deeper shortlist is identical to an independent
-    // depth-PqShortlist pass — the window's total order; QueriesSpec
-    // pins base == the standalone recall row), so it rides the
-    // round-17 kNN output memo the standalone row already built instead
-    // of paying a second candidate scan + rerank (round 20, guide §1.2).
-    // shortlist2x keeps its own depth-2× scan, codebook2x its own
-    // retrained model — those ARE the levers the eval measures.
-    row("base", knnAnnPq(s, dir))
-      .unionAll(row("shortlist2x", rerankShortlist(s, dir,
-        pqShortlistRanked(s, dir, PqK, PqShortlist2x)
-          .select("qid", "vec_id"))))
-      .unionAll(row("codebook2x", knnPqOver(s, dir, identity, pqk = PqK2x)))
-  }
 
   // The previous registered form, kept as a cross-check kernel (and as
   // the right tool when one side genuinely fits in memory — it is a
@@ -1863,50 +1471,29 @@ object SimilarityQueries {
 
   /** The query-set probe over an ARBITRARY `(qid, qv)` set — shared by
     * the registered batch query, the streaming retrieval endpoint
-    * ([[graft.streaming.VectorStream]]), and the corpus-wide kNN twin
-    * ([[knnAnn]]), so every consumer runs the exact plan the batch
-    * query is oracle-checked on. `k` is the per-query cut;
-    * `broadcastQueries` is the documented escalation switch — a
-    * model-sized query set broadcasts its (query, probe-cell) pairs,
-    * while a corpus-sized one (the kNN join) shuffle-joins on the cell
-    * key instead (broadcasting the corpus would be the scale killer).
+    * ([[graft.streaming.VectorStream]]), and the `Seeded` kNN stack, so
+    * every consumer runs the exact plan the batch query is oracle-checked
+    * on. `k` is the per-query cut; `nprobe` ≤ 0 reads the session knob.
+    * `broadcastQueries` is the escalation switch: a model-sized query set
+    * broadcasts its (query, probe-cell) pairs, while a corpus-sized one is
+    * spread before the per-row probe ranking and shuffle-joins on the
+    * cell key ([[cellCandidateJoin]]; PlanQualitySpec asserts the shape).
     */
   private[graft] def probeQuerySet(s: SparkSession, dir: String,
                                    qvs: DataFrame, k: Int = RecallK,
                                    broadcastQueries: Boolean = true,
                                    nprobe: Int = -1,
                                    sampledQueries: Boolean = false): DataFrame = {
-    // per-row probe ranking ([[seedTop]]): each query
-    // row scores the K literal centroids and keeps its nprobe best in
-    // place — the old corpus × K crossJoin + window materialized n·K
-    // rows through a qid shuffle, which is n²/c once K scales with the
-    // corpus (the deployment contract the knob exists for). `nprobe`
-    // ≤ 0 resolves the session knob; the probe-tradeoff eval pins
-    // explicit widths.
     val np = if (nprobe > 0) nprobe else nProbeOf(s)
-    // corpus-sized query sets (the kNN join) spread before the per-row
-    // probe ranking — a parquet-backed set is one input split, so the
-    // O(K)-per-row ranking otherwise runs single-task (the broadcast
-    // arm's sets are model-sized; no shuffle added there)
     val qspread = if (broadcastQueries) qvs else Tables.spread(s, qvs)
     val qcells = qspread.select(col("qid"), col("qv"),
       explode(seedTop(s, dir, col("qv"), np)).as("qcell"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id").asc)
-    // the non-broadcast arm PINS the shuffle join (merge hint inside
-    // cellCandidateJoin): with the per-row probe the query side is a
-    // plain projection whose test-scale stats would elect it as a
-    // broadcast build side — a corpus-sized broadcast, the exact plan
-    // that melts at 100 TB (knnPqOver's argument; PlanQualitySpec
-    // asserts the shape)
-    (if (broadcastQueries)
-       cells(s, dir).join(broadcast(qcells), col("cell") === col("qcell"))
-     else cellCandidateJoin(s, cells(s, dir), qcells, !sampledQueries))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(call_function("graft_cosine", col("v"), col("qv")), 6).as("cos"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= k)
+    val cands =
+      if (broadcastQueries)
+        cells(s, dir).join(broadcast(qcells), col("cell") === col("qcell"))
+          .filter(col("vec_id") =!= col("qid"))
+      else cellCandidateJoin(s, cells(s, dir), qcells, !sampledQueries)
+    rerankTopK(cands, "v", "qv", k, "qid", "vec_id")
   }
 
   // ---- Trained IVF: deterministic k-means (Lloyd) coarse quantizer ----
@@ -1924,9 +1511,13 @@ object SimilarityQueries {
   val KmeansIters = 2
   val QuantScale = 1000000L
 
+  /** The integer quantization floor(x·1e6) — every trained model, probe
+    * and stored-vector encoding reads vectors through it. */
+  private[graft] def quantize(v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    transform(V.vecD(v), x => floor(x * QuantScale).cast("long"))
+
   private def quantized(s: SparkSession, dir: String): DataFrame =
-    embs(s, dir).select(col("vec_id"),
-      transform(V.vecD(col("v")), x => floor(x * QuantScale).cast("long")).as("qv"))
+    embs(s, dir).select(col("vec_id"), quantize(col("v")).as("qv"))
 
   /** Assignment column: argmax over centroids, ties to lowest cid —
     * [[trainedTop]] at nprobe=1 (the native ranking loop; same score,
@@ -2085,8 +1676,7 @@ object SimilarityQueries {
   private[graft] def assignVectorsWith(cents: Seq[(Long, Array[Long])],
                                        vecs: DataFrame, trainedK: Int,
                                        mode: String): DataFrame =
-    vecs.withColumn("qv",
-        transform(V.vecD(col("embedding")), x => floor(x * QuantScale).cast("long")))
+    vecs.withColumn("qv", quantize(col("embedding")))
       .withColumn("cell",
         if (mode == "hier") hierAssignExpr(cents, hierK2(trainedK))
         else assignExpr(cents))
@@ -2101,9 +1691,8 @@ object SimilarityQueries {
     * an explicit job, never an accidental cache fill.
     */
   private[graft] def trainCentroidsOver(vecs: DataFrame): Seq[(Long, Array[Long])] =
-    trainCentroids(vecs.select(col("vec_id"),
-      transform(V.vecD(col("embedding")),
-        x => floor(x * QuantScale).cast("long")).as("qv")).localCheckpoint(),
+    trainCentroids(vecs.select(col("vec_id"), quantize(col("embedding")).as("qv"))
+        .localCheckpoint(),
       activeNCells, activeTrainBuckets)
 
   /** The trained coarse codebook, exposed model-sized (K rows of
@@ -2150,7 +1739,7 @@ object SimilarityQueries {
     // #1): the inline `assignExprOf` projection this used to carry
     // re-paid the n·K argmax scan on every run — the suite's worst
     // per-decade bend (8.05× at 100×) — while every sibling family
-    // (knnAnnKmeans :554, knnHierOver :672, the PQ paths) already reads
+    // (the kNN stacks, the PQ paths) already reads
     // the shared materialization. Same assignment values, so the result
     // is hash-identical; only the redundant scan is gone.
     val assigned = kmeansCells(s, dir)
@@ -2344,17 +1933,6 @@ object SimilarityQueries {
       pqAssignExpr(subSlice(col("qv"), m), model(m)).as(s"c$m")): _*)
   }
 
-  /** [[adcLut]] / [[adcFromLut]] exposed for the serving layer — the
-    * store twin shares the exact ADC arithmetic, not a re-spelling. */
-  private[graft] def adcLutFor(s: SparkSession, sfDir: String,
-                               qqv: org.apache.spark.sql.Column,
-                               pqk: Int = PqK): org.apache.spark.sql.Column =
-    adcLut(s, sfDir, qqv, pqk)
-
-  private[graft] def adcDistFromLut(lut: org.apache.spark.sql.Column,
-                                    pqk: Int = PqK): org.apache.spark.sql.Column =
-    adcFromLut(lut, pqk)
-
   /** Codebook occupancy histogram — the index-health view (a starved
     * subspace code means the codebook under-fits that coordinate
     * range). Long form via one posexplode of the M code columns.
@@ -2403,7 +1981,7 @@ object SimilarityQueries {
       val byCid = model(m).toMap
       (1 to pqk).map(cid => byCid.get(cid.toLong).fold(Seq.empty[Long])(_.toSeq))
     }
-    call_function("graft_adc_lut", v, typedLit(flat), lit(PqSubDim))
+    call_function("graft_adc_lut", v, typedLit(flat), lit(PqSubDim), lit(PqM))
   }
 
   /** ADC distance of a codes row against a carried [[adcLut]] column:
@@ -2703,8 +2281,7 @@ object SimilarityQueries {
   def labelCentroids(s: SparkSession, dir: String): DataFrame =
     embs(s, dir)
       .select(col("label"),
-        posexplode(transform(V.vecD(col("v")),
-          x => floor(x * QuantScale).cast("long"))).as(Seq("dim", "qx")))
+        posexplode(quantize(col("v"))).as(Seq("dim", "qx")))
       .groupBy("label", "dim")
       .agg(count("*").as("n_vecs"),
         floor(sum("qx").cast("double") / count("*")).cast("long").as("centroid_q"))

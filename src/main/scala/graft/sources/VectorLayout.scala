@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.SimilarityQueries
+import graft.operators.SimilarityQueries.{adcShortlist, cellCandidateJoin, flatProbe,
+  hierProbe, quantize, rerankTopK, withAdcLut}
 
 /** Cell-partitioned materialization of the embedding corpus — the IVF
   * storage layout every ANN scaladoc in [[graft.operators.SimilarityQueries]]
@@ -665,8 +667,7 @@ object VectorLayout {
     // without the checkpoint the ranking crossJoin + window would run
     // twice per probe (round-7 review finding)
     val qcells = qvs
-      .withColumn("qqv", transform(col("qv").cast("array<double>"),
-        x => floor(x * SimilarityQueries.QuantScale)))
+      .withColumn("qqv", quantize(col("qv")))
       .crossJoin(broadcast(cents))
       .select(col("qid"), col("qv"), col("cid"),
         round(call_function("graft_cosine",
@@ -676,132 +677,70 @@ object VectorLayout {
       .select(col("qid"), col("qv"), col("cid").as("qcell"))
       .localCheckpoint()
     val probed = qcells.select("qcell").distinct().collect().map(_.getLong(0))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id").asc)
-    vectors(spark, dir, upToBatch)
+    rerankTopK(vectors(spark, dir, upToBatch)
       .filter(col("cell").isin(probed: _*))
       .join(broadcast(qcells), col("cell").cast("long") === col("qcell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(call_function("graft_cosine", col("embedding"), col("qv")), 6).as("cos"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= k)
+      .filter(col("vec_id") =!= col("qid")), "embedding", "qv", k, "qid", "vec_id")
   }
 
   /** Corpus-wide kNN read from the layout — the serving twin of
-    * [[SimilarityQueries.knnAnnKmeans]]: every stored vector is a
-    * query, ranks the layout's codebook centroids by the assignment's
-    * integer cosine (rows × K, model-sized per source), and candidates
-    * come from an equi-join against the stored `cell` partition column
-    * — the cells were WRITTEN by the same assignment, so the join is
-    * co-located with the layout's partitioning at scale. Unlike
-    * [[probeQuerySet]], the query side is corpus-sized: nothing is
-    * broadcast, checkpointed, or collected (a corpus-wide probe touches
-    * every cell, so the literal `isin` partition filter would list all
-    * of them anyway), and the planner picks the join strategy from the
-    * real sizes. Output matches the registered query: (qid, vec_id,
-    * cos, rn) per source with rn ≤ k.
+    * [[SimilarityQueries.knnAnnKmeans]], and the store-read form of the
+    * kNN stack (see the stack scaladoc in SimilarityQueries): every
+    * stored vector is a query, the flat probe ranks the layout's stored
+    * codebook in place, and candidates come from an equi-join against
+    * the stored `cell` partition column — written by the same
+    * assignment, so the join is co-located with the layout at scale.
+    * The query side is corpus-sized: nothing is broadcast, checkpointed
+    * or collected. Output: (qid, vec_id, cos, rn) with rn ≤ k.
     */
   def knn(spark: SparkSession, sfDir: String, outDir: String,
           nprobe: Int = SimilarityQueries.NProbeIvf,
           k: Int = SimilarityQueries.KnnK,
           upToBatch: Option[Long] = None): DataFrame = {
-    import spark.implicits._
     val dir = resolve(spark, outDir)
     requireLayout(spark, dir)
     val rows = vectors(spark, dir, upToBatch)
-    // per-row probe ranking over the LITERAL stored codebook — the
-    // serving twin of SimilarityQueries' native [[graft_cell_topk]]
-    // ranking (round-14; same argmax + tie-break, bit-identical
-    // scores, O(1) expression size in K): the old corpus × K crossJoin
-    // + window materialized n·K rows through a qid shuffle, quadratic
-    // once the codebook K scales with the corpus
-    val storedCents = centroidsFor(spark, sfDir, dir)
-    // query side honors the knnbucket verification-chunking knob (off
-    // by default) — candidates stay corpus-wide, so the restriction is
-    // exact per-source (the registered twin's law)
-    val qcells = SimilarityQueries.knnBucketFilter(spark)(rows)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      .withColumn("qqv", transform(col("qv").cast("array<double>"),
-        x => floor(x * SimilarityQueries.QuantScale)))
-      .select(col("qid"), col("qv"),
-        explode(SimilarityQueries.topCellsNative(
-          storedCents.map(_._1), storedCents.map(_._2.map(_.toDouble)),
-          col("qqv"), nprobe)).as("qcell"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id").asc)
-    rows
-      .join(qcells.hint("merge"), col("cell").cast("long") === col("qcell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(call_function("graft_cosine", col("embedding"), col("qv")), 6).as("cos"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= k)
+    storeRerank(spark, rows, flatProbe(storeSources(spark, rows), "qqv",
+      centroidsFor(spark, sfDir, dir), nprobe, "qv"), k)
   }
 
-  /** Corpus-wide kNN read from the layout through the HIERARCHICAL
-    * (two-level) probe — the serving twin of
-    * [[SimilarityQueries.knnAnnHier]], and the serving layer is where
-    * the hierarchy actually earns its keep: the flat [[knn]] ships the
-    * whole K-row codebook into a per-row ranking expression, sane while
-    * the model is expression-sized, while here the per-row expression
-    * ranks only the K2=⌈√K⌉ super-centroids (trained on the DRIVER over
-    * the stored codebook — model-over-model, engine-exact arithmetic)
-    * and the member ranking is a broadcast join against the model-sized
-    * (super, cid, centroid) table + a per-query window over
-    * ~nprobe·√K rows. Candidate join and rerank are [[knn]] verbatim
-    * (the stored `cell` partition column is the same flat assignment,
-    * so the hierarchy changes WHICH cells are probed, never where
-    * vectors live).
+  /** [[knn]] through the HIERARCHICAL probe — the serving twin of
+    * [[SimilarityQueries.knnAnnHier]]. The serving layer is where the
+    * hierarchy earns its keep: the flat probe ships the whole K-row
+    * codebook into a per-row expression, while here the row ranks only
+    * the K2=⌈√K⌉ supers, trained on the driver over the stored codebook
+    * at the layout's PINNED trained K (the session twin's K2). The
+    * stored `cell` column is the same flat assignment, so the hierarchy
+    * changes WHICH cells are probed, never where vectors live.
     */
   def knnHier(spark: SparkSession, sfDir: String, outDir: String,
               nprobe: Int = -1,
               k: Int = SimilarityQueries.KnnK,
               upToBatch: Option[Long] = None): DataFrame = {
-    import spark.implicits._
     val dir = resolve(spark, outDir)
     requireLayout(spark, dir)
     val rows = vectors(spark, dir, upToBatch)
-    // K2 derives from the layout's pinned trained K — the same single
-    // source the session probe path uses (hierK2 of the CONFIGURED K;
-    // round-15 advice: the surviving-centroid count undercounts K when
-    // trained cells die, silently training a different super-quantizer
-    // than the session twin)
     val (storedCents, trainedK, _) = modelFor(spark, sfDir, dir)
     val np = if (nprobe > 0) nprobe else SimilarityQueries.nProbeOf(spark)
-    val (sup, members) = SimilarityQueries.trainSuper(
-      storedCents, SimilarityQueries.hierK2(trainedK))
-    // query side honors the knnbucket verification-chunking knob (off
-    // by default) — candidates stay corpus-wide (exact per-source law)
-    val qsup = SimilarityQueries.knnBucketFilter(spark)(rows)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      .withColumn("qqv", transform(col("qv").cast("array<double>"),
-        x => floor(x * SimilarityQueries.QuantScale)))
-      .select(col("qid"), col("qv"), col("qqv"),
-        explode(SimilarityQueries.topCellsNative(
-          sup.map(_._1), sup.map(_._2.map(_.toDouble)),
-          col("qqv"), np)).as("scell"))
-    val memberDf = storedCents.map { case (cid, v) =>
-      (members(cid), cid, v.toSeq.map(_.toDouble)) }.toDF("scell", "cid", "cv")
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("ccos").desc, col("cid").asc)
-    val probes = qsup.join(broadcast(memberDf), Seq("scell"))
-      .select(col("qid"), col("qv"), col("cid"),
-        round(call_function("graft_cosine",
-          col("qqv").cast("array<double>"), col("cv")), 6).as("ccos"))
-      .withColumn("prn", row_number().over(wp))
-      .filter(col("prn") <= np)
-      .select(col("qid"), col("qv"), col("cid").as("qcell"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id").asc)
-    rows
-      .join(probes.hint("merge"), col("cell").cast("long") === col("qcell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(call_function("graft_cosine", col("embedding"), col("qv")), 6).as("cos"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= k)
+    storeRerank(spark, rows, hierProbe(storeSources(spark, rows), "qqv",
+      storedCents, trainedK, np, "qv"), k)
   }
+
+  /** Every stored vector as a query: (qid, qv = the raw vector, qqv =
+    * its quantization), restricted by the live knnbucket chunk.
+    */
+  private def storeSources(spark: SparkSession, rows: DataFrame): DataFrame =
+    SimilarityQueries.knnBucketFilter(spark)(rows)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
+        quantize(col("embedding")).as("qqv"))
+
+  /** Raw scan + rerank over the stored rows: the unsalted merge-hinted
+    * cell join, exact cosine against the query vector the probe carries.
+    */
+  private def storeRerank(spark: SparkSession, rows: DataFrame,
+                          probes: DataFrame, k: Int): DataFrame =
+    rerankTopK(cellCandidateJoin(spark, rows.withColumn("cell", col("cell").cast("long")),
+      probes, salted = false), "embedding", "qv", k, "qid", "vec_id")
 
   /** The probe-mode-dispatched serving read — [[knn]] (flat,
     * whole-codebook per-row ranking) or [[knnHier]] (two-level) per
@@ -866,82 +805,34 @@ object VectorLayout {
 
   /** Corpus-wide kNN read from the layout through the COMPOSED
     * two-level probe + PQ/ADC shortlist + exact rerank — the serving
-    * twin of [[SimilarityQueries.knnAnnHierPq]], i.e. the IMI+IVFADC
-    * index shape a 10⁴⁺-cell deployment actually serves: the per-row
-    * expression ranks only the K2=⌈√K⌉ supers (trained on the DRIVER
-    * over the stored codebook, [[knnHier]] verbatim), the candidate
-    * scan touches PQ CODES computed for the stored vectors with the
-    * session-trained subspace codebooks ([[SimilarityQueries
-    * .pqEncodeWith]] — same argmin, same model, so store and session
-    * shortlists are identical), and only the per-query shortlist joins
-    * back to the stored raw vectors for the exact rerank. The stored
-    * `cell` partition column is the same flat assignment, so the
-    * composition changes WHICH cells are probed and WHAT the scan
-    * reads (codes, not floats) — never where vectors live.
+    * twin of [[SimilarityQueries.knnAnnHierPq]] (IMI+IVFADC). The
+    * stored vectors are PQ-encoded with the session-trained subspace
+    * codebooks ([[SimilarityQueries.pqEncodeWith]] — same argmin, same
+    * model), so store and session shortlists are identical; only the
+    * shortlist joins back to the stored raw vectors for the rerank.
     */
   def knnHierPq(spark: SparkSession, sfDir: String, outDir: String,
                 nprobe: Int = -1,
                 k: Int = SimilarityQueries.KnnK,
                 upToBatch: Option[Long] = None): DataFrame = {
-    import spark.implicits._
     val dir = resolve(spark, outDir)
     requireLayout(spark, dir)
     val rows = vectors(spark, dir, upToBatch)
     val (storedCents, trainedK, _) = modelFor(spark, sfDir, dir)
     val np = if (nprobe > 0) nprobe else SimilarityQueries.nProbeOf(spark)
-    val (sup, members) = SimilarityQueries.trainSuper(
-      storedCents, SimilarityQueries.hierK2(trainedK))
-    // quantize stored floats exactly like the session corpus (floor to
-    // LONG — the ADC arithmetic is integer L2², exact on both engines)
-    val quantize = (c: org.apache.spark.sql.Column) =>
-      transform(c.cast("array<double>"),
-        x => floor(x * SimilarityQueries.QuantScale).cast("long"))
-    val qsup = rows
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      .withColumn("qqv", quantize(col("qv")))
-      .select(col("qid"), col("qqv"),
-        explode(SimilarityQueries.topCellsNative(
-          sup.map(_._1), sup.map(_._2.map(_.toDouble)),
-          col("qqv"), np)).as("scell"))
-    val memberDf = storedCents.map { case (cid, v) =>
-      (members(cid), cid, v.toSeq.map(_.toDouble)) }.toDF("scell", "cid", "cv")
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("ccos").desc, col("cid").asc)
-    val probes = qsup.join(broadcast(memberDf), Seq("scell"))
-      .select(col("qid"), col("qqv"), col("cid"),
-        round(call_function("graft_cosine",
-          col("qqv").cast("array<double>"), col("cv")), 6).as("ccos"))
-      .withColumn("prn", row_number().over(wp))
-      .filter(col("prn") <= np)
-      .select(col("qid"),
-        SimilarityQueries.adcLutFor(spark, sfDir, col("qqv")).as("lut"),
-        col("cid").as("qcell"))
-    // the stored rows' PQ code table — cell from the layout's partition
-    // column, codes from the session-trained subspace codebooks
+    val probes = withAdcLut(spark, sfDir, hierProbe(
+      rows.select(col("vec_id").as("qid"), quantize(col("embedding")).as("qv")),
+      "qv", storedCents, trainedK, np, "qv"))
     val idx = SimilarityQueries.pqEncodeWith(spark, sfDir,
       rows.select(col("vec_id"), col("cell").cast("long").as("cell"),
         quantize(col("embedding")).as("qv"))).drop("qv")
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("adist").asc, col("vec_id").asc)
-    val shortlisted = idx
-      .join(probes.hint("merge"), col("cell") === col("qcell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        SimilarityQueries.adcDistFromLut(col("lut")).as("adist"))
-      .withColumn("srn", row_number().over(ws))
-      .filter(col("srn") <= SimilarityQueries.PqShortlist)
-      .select(col("qid"), col("vec_id"))
     val raw = rows.select(col("vec_id"), col("embedding"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id").asc)
-    shortlisted
-      .join(raw, Seq("vec_id"))
-      .join(raw.select(col("vec_id").as("qid"), col("embedding").as("qemb")),
-        Seq("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(call_function("graft_cosine", col("embedding"), col("qemb")), 6).as("cos"))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= k)
+    rerankTopK(
+      adcShortlist(cellCandidateJoin(spark, idx, probes, salted = false),
+        SimilarityQueries.PqShortlist)
+        .join(raw, Seq("vec_id"))
+        .join(raw.select(col("vec_id").as("qid"), col("embedding").as("qemb")), Seq("qid")),
+      "embedding", "qemb", k, "qid", "vec_id")
   }
 
   /** Read-only integrity report of the vector layout — the

@@ -100,4 +100,12 @@ class BenchSpec extends AnyFunSuite {
     assert(names.subsetOf(registered),
       s"stream queries not in the registry: ${names -- registered}")
   }
+
+  test("KnnFull100x derives the memoized corpus-wide kNN rows plus the dispatcher") {
+    assert(Bench.KnnFull100x === Set("sim_knn_ann", "sim_knn_ann_auto",
+      "sim_knn_ann_kmeans", "sim_knn_ann_hier", "sim_knn_ann_pq",
+      "sim_knn_ann_pq_res", "sim_knn_ann_hier_pq", "sim_knn_ann_hier_pq_res"))
+    assert(Bench.KnnFull100x === graft.operators.SimilarityQueries.knnMemoNames + "sim_knn_ann_auto")
+    assert(Bench.KnnFull100x.subsetOf(SparkEntry.queries.keySet))
+  }
 }

@@ -83,7 +83,7 @@ class PqArgminSpec extends SparkSpec {
         val byCid = model(m).toMap
         (1 to pqk).map(cid => byCid.get(cid.toLong).fold(Seq.empty[Long])(_.toSeq))
       }
-      call_function("graft_adc_lut", v, typedLit(flat), lit(SubDim))
+      call_function("graft_adc_lut", v, typedLit(flat), lit(SubDim), lit(M))
     }
     val rows = (1L to 300L).map(i =>
       (i, Seq.fill(D)(math.floor(rnd.nextGaussian() * 1e6).toLong)))
@@ -113,6 +113,31 @@ class PqArgminSpec extends SparkSpec {
       messages(t).mkString(" | "))
   }
 
+  test("an ADC LUT over a vector that is not M subvectors wide fails loudly, naming both widths") {
+    val s = spark
+    import s.implicits._
+    val pqk = 8
+    val flat: Seq[Seq[Long]] = Seq.tabulate(M * pqk)(j => Seq.fill(SubDim)(j.toLong))
+    // 48 = 3·16 elements: divisible by the sub-width, so a LUT that
+    // derived M from the vector would lay out 3 subspaces, not 4
+    val short = Seq.fill(3 * SubDim)(1L)
+    val e = intercept[IllegalArgumentException] {
+      graft.functions.expressions.AdcLut.lut(short.toArray, flat.map(_.toArray).toArray, SubDim, M)
+    }
+    assert(e.getMessage.contains(s"${3 * SubDim}-element") && e.getMessage.contains(s"($D elements)"),
+      e.getMessage)
+    val df = Seq(Tuple1(short)).toDF("qv")
+    val t = intercept[Exception](df.select(
+      call_function("graft_adc_lut", col("qv"), typedLit(flat), lit(SubDim), lit(M))).collect())
+    def messages(x: Throwable): Seq[String] =
+      Option(x).toSeq.flatMap(y => Option(y.getMessage).toSeq ++ messages(y.getCause))
+    assert(messages(t).exists(m => m.contains(s"${3 * SubDim}-element") && m.contains(s"($D elements)")),
+      messages(t).mkString(" | "))
+    // the full-width vector still builds its M·K-slot table
+    assert(graft.functions.expressions.AdcLut.lut(Array.fill(D)(1L),
+      flat.map(_.toArray).toArray, SubDim, M).length === M * pqk)
+  }
+
   test("null elements null the row in both native loops") {
     val s = spark
     import s.implicits._
@@ -124,7 +149,7 @@ class PqArgminSpec extends SparkSpec {
     val got = df.select(
       argminNative(col("sq"), cents).as("a"),
       call_function("graft_adc_lut", col("sq"),
-        typedLit(cents.map(_._2)), lit(SubDim)).as("l")).head()
+        typedLit(cents.map(_._2)), lit(SubDim), lit(1)).as("l")).head()
     assert(got.isNullAt(0) && got.isNullAt(1),
       "null-element input must null the row (the CellTopK rule)")
   }
