@@ -326,11 +326,11 @@ object Bench {
           (System.nanoTime() - t0) / 1e9
         }
         val cold = once()
-        // the kNN outputs are memoized (round 17): drop them so the
-        // steady leg re-EXECUTES with warm models — the state the
-        // bench medians correspond to — instead of reading the cold
-        // leg's own output cache
-        CacheLife.drop(spark, "sim.knn-out")
+        // the kNN outputs and ANN probes are memoized (rounds 17 and
+        // 20): drop them so the steady leg re-EXECUTES with warm models
+        // — the state the bench medians correspond to — instead of
+        // reading the cold leg's own output cache
+        SimilarityQueries.dropOutputMemos(spark)
         val steady = once()
         Seq(s"$n:cold" -> cold, s"$n:steady" -> steady)
       }

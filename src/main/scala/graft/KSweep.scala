@@ -134,11 +134,11 @@ object KSweep {
           // the same record schema as warmed rows, distinguishable
           // only by inference from the reps field). The kNN OUTPUTS
           // are memoized since round 17, so every timed body drops
-          // the sim.knn-out frames first — the rep must re-EXECUTE
-          // the probe, not read its own cache — while the trained
-          // model caches keep riding (or the rep measures training).
+          // the output memos first — the rep must re-EXECUTE the
+          // probe, not read its own cache — while the trained model
+          // caches keep riding (or the rep measures training).
           def probeRun(q: => Long): Double = {
-            CacheLife.drop(spark, "sim.knn-out")
+            SimilarityQueries.dropOutputMemos(spark)
             timed(q)
           }
           probeRun(SimilarityQueries.knnAnnKmeans(spark, dir).count()) // warm

@@ -72,10 +72,11 @@ object ProfileQuery {
           // one untimed warm run (JIT/codegen), like the bench warmup
           fn(s, dir).count()
           (1 to iters).foreach { i =>
-            // re-EXECUTE the memoized kNN outputs each rep (the bench
-            // releases all caches between iterations, so its medians
-            // time the build) — the coldProfile steady-leg discipline
-            CacheLife.drop(s, "sim.knn-out")
+            // re-EXECUTE the memoized kNN outputs and ANN probes each
+            // rep (the bench releases all caches between iterations, so
+            // its medians time the build) — the coldProfile steady-leg
+            // discipline
+            operators.SimilarityQueries.dropOutputMemos(s)
             stages = Nil
             s.sparkContext.setJobDescription(s"$name#$i")
             val t0 = System.nanoTime()

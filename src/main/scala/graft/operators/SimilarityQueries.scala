@@ -1092,6 +1092,16 @@ object SimilarityQueries {
       s"sim.ann-out:$variant:$dir:k${nCellsOf(s, dir)}:np${nProbeOf(s)}" +
         s"${tbTag(s)}${haTag(s)}")(build)
 
+  /** Drop every session output memo: the corpus-wide kNN outputs
+    * ([[cachedKnn]], `sim.knn-out`) and the single-query ANN probes
+    * ([[cachedProbe]], `sim.ann-out`). The trained models stay, so the
+    * next derivation of any `sim_knn_*` or `sim_ann_*` row re-EXECUTES
+    * its probe with warm models instead of reading its own earlier
+    * output — the state a timed steady leg must measure.
+    */
+  def dropOutputMemos(s: SparkSession): Unit =
+    Seq("sim.knn-out", "sim.ann-out").foreach(graft.CacheLife.drop(s, _))
+
   /** Assignment mode — the OTHER n·K term. [[TrainBucketsKey]] bounds
     * the Lloyd iterations; the one n·K scan left is the final
     * corpus-wide ASSIGNMENT (argmax over all K centroids per vector —

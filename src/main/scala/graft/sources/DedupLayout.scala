@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField,
+  StructType}
 
 import graft.Tables
 import graft.functions.{TextFunctions => T}
@@ -81,22 +82,33 @@ object DedupLayout {
 
   private def srcBucket = pmod(hash(col("src")), lit(EdgeBuckets))
 
-  /** Declared schemas for the two stores whose row set can be EMPTY —
-    * a dup-free corpus (or any clean arrival batch) mines zero pairs,
-    * and Spark cannot infer a schema from a fileless parquet dir, so
-    * every pair/edge read declares its schema instead of inferring.
-    * (Shingles/bands always carry one row per document, so their reads
-    * can only hit a fileless dir on a zero-document root — refused
-    * upstream.) Partition columns included: `__batch_id` (and the edge
+  /** Declared schemas for every store read. Inferring a parquet schema
+    * reads file footers in a Spark job, so a declared schema keeps
+    * building a store's DataFrame job-free. The pair and edge stores
+    * also NEED one: a dup-free corpus (or any clean arrival batch) mines
+    * zero pairs, and Spark cannot infer a schema from a fileless parquet
+    * dir. Partition columns included: `__batch_id` (and the edge
     * store's `src_bucket`) must be declared for partition discovery to
     * type them when declared-schema reads meet a populated store.
+    * DedupConstructionSpec checks each against the inferred schema of a
+    * materialized root.
     */
-  private val PairsSchema = StructType(Seq(
+  private[graft] val PairsSchema = StructType(Seq(
     StructField("doc_a", LongType), StructField("doc_b", LongType),
     StructField(BatchCol, LongType)))
-  private val EdgesSchema = StructType(Seq(
+  private[graft] val EdgesSchema = StructType(Seq(
     StructField("src", LongType), StructField("dst", LongType),
     StructField("src_bucket", IntegerType), StructField(BatchCol, LongType)))
+  private[graft] val ShinglesSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("sh", ArrayType(StringType)),
+    StructField(BatchCol, LongType)))
+  private[graft] val BandsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("band", IntegerType),
+    StructField("key", StringType), StructField(BatchCol, LongType)))
+  private[graft] val LabelsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("cluster_id", LongType)))
+  private[graft] val LabelsMetaSchema = StructType(Seq(
+    StructField("covered_batch", LongType)))
 
   /** The edge store's partition spec, in directory order. */
   private val EdgeParts = Seq(BatchCol, "src_bucket")
@@ -212,7 +224,8 @@ object DedupLayout {
     IdAuthority.guardAndRecord(spark, root, batchId,
       arrivals.select(col("doc_id")),
       priorIds = if (storeExists(spark, shinglesDir(root)))
-        readStore(spark, shinglesDir(root), mk, beforeBatch = Some(batchId))
+        readStore(spark, shinglesDir(root), ShinglesSchema, mk,
+          beforeBatch = Some(batchId))
           .select(col("doc_id")).distinct()
       else arrivals.limit(0).select(col("doc_id")),
       who = "DedupLayout.append", what = "index prefix")
@@ -222,7 +235,8 @@ object DedupLayout {
         .localCheckpoint() // the rectangle join + store write both read it
       val existing =
         if (storeExists(spark, bandsDir(root)))
-          readStore(spark, bandsDir(root), mk, beforeBatch = Some(batchId))
+          readStore(spark, bandsDir(root), BandsSchema, mk,
+            beforeBatch = Some(batchId))
         else newBands.limit(0)
       val newPairs = newBands.as("n")
         .join(existing.unionByName(newBands).as("u"), Seq("band", "key"))
@@ -321,11 +335,11 @@ object DedupLayout {
       coldLabels(spark, root, coveredBatch = maxBatch)
       return
     }
-    val covered = spark.read.parquet(labelsMetaDir(root)).head.getLong(0)
+    val covered = coveredBatch(spark, root)
     if (maxBatch <= covered) return
-    val newPairs = readStore(spark, pairsDir(root), mk,
+    val newPairs = readStore(spark, pairsDir(root), PairsSchema, mk,
       beforeBatch = Some(maxBatch + 1),
-      afterBatch = Some(covered), schema = Some(PairsSchema)).localCheckpoint()
+      afterBatch = Some(covered)).localCheckpoint()
     val edges = edgesView(spark, root,
       buckets = Some(frontierBuckets(spark, root, newPairs))).localCheckpoint()
     val old = labels(spark, root)
@@ -387,22 +401,25 @@ object DedupLayout {
     LogCompaction.vacuum(spark, root, compactStores(root).map(_.dir))
 
   private def compactStores(root: String): Seq[LogCompaction.StoreSpec] = Seq(
-    LogCompaction.StoreSpec(shinglesDir(root)),
-    LogCompaction.StoreSpec(bandsDir(root)),
+    LogCompaction.StoreSpec(shinglesDir(root), schema = Some(ShinglesSchema)),
+    LogCompaction.StoreSpec(bandsDir(root), schema = Some(BandsSchema)),
     LogCompaction.StoreSpec(pairsDir(root), schema = Some(PairsSchema)),
     LogCompaction.StoreSpec(edgesDir(root), EdgeParts,
       _.repartition(col("src_bucket")), schema = Some(EdgesSchema)))
 
   def labels(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(labelsDir(root))
+    spark.read.schema(LabelsSchema).parquet(labelsDir(root))
 
-  private def readStore(spark: SparkSession, dir: String,
+  /** The highest pair batch the stored labels cover (see [[writeLabels]]). */
+  private def coveredBatch(spark: SparkSession, root: String): Long =
+    spark.read.schema(LabelsMetaSchema).parquet(labelsMetaDir(root))
+      .head.getLong(0)
+
+  private def readStore(spark: SparkSession, dir: String, schema: StructType,
                         mk: Option[LogCompaction.Marker],
                         beforeBatch: Option[Long],
-                        afterBatch: Option[Long] = None,
-                        schema: Option[StructType] = None): DataFrame = {
-    val t = LogCompaction.view(
-      schema.fold(spark.read)(spark.read.schema).parquet(dir), mk)
+                        afterBatch: Option[Long] = None): DataFrame = {
+    val t = LogCompaction.view(spark.read.schema(schema).parquet(dir), mk)
     // batch filters ride the partition column: metadata pruning, the
     // excluded partitions' files are never listed into the scan. They
     // compose with the compaction view literally: the folded partition's
@@ -415,16 +432,17 @@ object DedupLayout {
   }
 
   def pairs(spark: SparkSession, root: String): DataFrame =
-    readStore(spark, pairsDir(root), LogCompaction.marker(spark, root), None,
-      schema = Some(PairsSchema))
+    readStore(spark, pairsDir(root), PairsSchema,
+      LogCompaction.marker(spark, root), None)
 
   def bands(spark: SparkSession, root: String,
             beforeBatch: Option[Long] = None): DataFrame =
-    readStore(spark, bandsDir(root), LogCompaction.marker(spark, root),
-      beforeBatch)
+    readStore(spark, bandsDir(root), BandsSchema,
+      LogCompaction.marker(spark, root), beforeBatch)
 
   def shingles(spark: SparkSession, root: String): DataFrame =
-    readStore(spark, shinglesDir(root), LogCompaction.marker(spark, root), None)
+    readStore(spark, shinglesDir(root), ShinglesSchema,
+      LogCompaction.marker(spark, root), None)
 
   /** Read-only integrity report of the whole dedup layout — the
     * [[graft.Doctor]] leg: the four batch logs via the shared
@@ -452,8 +470,7 @@ object DedupLayout {
         Seq(("labels", "fail",
           "label store without its covered-batch meta — the next refresh " +
             "cannot tell what the labels cover; rebuild via refreshLabels"))
-      else scala.util.Try(
-        spark.read.parquet(labelsMetaDir(root)).head.getLong(0)) match {
+      else scala.util.Try(coveredBatch(spark, root)) match {
         // a torn meta write must read as a diagnosis, not crash the
         // diagnostic tool
         case scala.util.Failure(e) =>

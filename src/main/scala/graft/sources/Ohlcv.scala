@@ -107,10 +107,13 @@ object Ohlcv {
     * the event-time ordering, offset by the destination's current max id.
     *
     * Scale warning (documented anti-pattern): the window has no
-    * PARTITION BY → single-partition global sort. Correct for the
-    * reference's ≤288 rows/day; at 100 TB use the natural key
-    * (symbol, time_period_start) or zipWithIndex-style per-partition
-    * offsets instead.
+    * PARTITION BY, so it is one global sort in one task. The input is
+    * brought to that one partition EXPLICITLY with `coalesce(1)`: no
+    * shuffle and no extra job, which is what a one-row ingest tick
+    * wants, but it also pulls the upstream parse into the same single
+    * task. Correct and cheap for the reference's ≤288 rows/day; at
+    * 100 TB use the natural key (symbol, time_period_start) or
+    * zipWithIndex-style per-partition offsets instead.
     */
   def assignIds(df: DataFrame, startId: Long): DataFrame = {
     // Order by EVERY column, not just the two time keys: ties under a
@@ -122,7 +125,8 @@ object Ohlcv {
     val w = Window.orderBy(
       (Seq("time_period_start", "time_close") ++
         columns.filterNot(Set("id", "time_period_start", "time_close"))).map(col): _*)
-    df.withColumn("id", row_number().over(w).cast("long") + startId)
+    df.coalesce(1)
+      .withColumn("id", row_number().over(w).cast("long") + startId)
       .select(columns.map(col): _*)
   }
 }

@@ -101,6 +101,26 @@ class KnnMemoSpec extends SparkSpec {
     CacheLife.release(spark)
   }
 
+  test("dropOutputMemos makes a warmed sim_ann_* row re-execute its probe") {
+    // a steady leg (Bench.coldProfile, ProfileQuery) that dropped only
+    // the kNN outputs re-read the ANN probe memo instead of re-running
+    // it. Collecting a memoized row still runs the one job that reads
+    // the memo; a re-executed probe runs its broadcast and scan jobs too
+    val row = SparkEntry.queries("sim_ann_ivf")
+    CacheLife.release(spark)
+    try {
+      row(spark, Sf).collect()
+      val memoRead = jobsDuring(row(spark, Sf).collect())
+      CacheLife.drop(spark, "sim.knn-out")
+      assert(jobsDuring(row(spark, Sf).collect()) === memoRead,
+        "dropping the kNN outputs alone must leave the probe memo in place")
+      SimilarityQueries.dropOutputMemos(spark)
+      val rebuilt = jobsDuring(row(spark, Sf).collect())
+      assert(rebuilt > memoRead,
+        s"after dropOutputMemos the row ran $rebuilt jobs, a memo read runs $memoRead")
+    } finally CacheLife.release(spark)
+  }
+
   test("KSweep's probe_auto adjudication is the engine's own crossover function") {
     // round-17 advice: the formula lived twice; now one definition
     val n = 20000L

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -278,27 +276,6 @@ class LogCompactionSpec extends SparkSpec {
       "vacuum must reclaim the shadowed dirs")
     assert(pairSet(root) === before, "vacuum must not change the view")
     CacheLife.release(spark)
-  }
-
-  /** Spark jobs `body` starts on this thread (its job group). */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = "lc-jobs-" + java.util.UUID.randomUUID()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "LogCompactionSpec job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
   }
 
   test("a fold is one write job per store, plus schema inference when no schema is declared") {

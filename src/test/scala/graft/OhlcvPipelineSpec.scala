@@ -65,6 +65,34 @@ class OhlcvPipelineSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("a tick into an existing table runs 3 jobs and re-stamps no _SUCCESS marker") {
+    val root = Files.createTempDirectory("graft-tick").toString
+    val ds = "2023-04-26"
+    def closeout(): Unit =
+      Pipeline.dailyCloseout(spark, root, "Bitcoin", ds, "20230427T000000")
+    // both tables exist before anything is measured
+    Pipeline.ingestTick(spark, root, "Bitcoin", Seq(payload))
+    closeout()
+    val markers = Seq("ingest", "warehouse")
+      .map(t => java.nio.file.Paths.get(root, t, "Bitcoin", "_SUCCESS"))
+    def stamps() = markers.map(Files.getLastModifiedTime(_))
+    val before = stamps()
+
+    // the high-water-mark scan (2 jobs) and the write (1 job); the id
+    // window sorts its one partition in place, with no shuffle job
+    val tickJobs = jobsDuring(
+      Pipeline.ingestTick(spark, root, "Bitcoin", Seq(payloadAt("04:35:00", 28361.2))))
+    assert(tickJobs === 3)
+    Pipeline.ingestTick(spark, root, "Bitcoin", Seq(payloadAt("04:40:00", 28362.2)))
+    closeout()
+    assert(stamps() === before,
+      "an append must leave the _SUCCESS marker createIfNotExists wrote")
+
+    val ids = Warehouse.table(spark, s"$root/ingest/Bitcoin")
+      .select("id").collect().map(_.getLong(0)).sorted
+    assert(ids.sameElements(Array(1L, 2L, 3L)))
+  }
+
   test("interchange CSV is headerless with id first (positional contract)") {
     val root = Files.createTempDirectory("graft-csv").toString
     val df = Ohlcv.assignIds(Ohlcv.fromJson(spark, Seq(payload)), 0L)
