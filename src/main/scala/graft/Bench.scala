@@ -4,7 +4,7 @@ import java.util.Locale
 
 import org.apache.spark.sql.SparkSession
 
-import graft.operators.{DedupQueries, SimilarityQueries, SubstrDedup, TextQueries}
+import graft.operators.SimilarityQueries
 
 object Bench {
 
@@ -64,10 +64,7 @@ object Bench {
                       builderFilter: String => Boolean = _ => true,
                       queryFilter: String => Boolean = _ => true)
       : PassResult = {
-    val builders = (DedupQueries.indexBuilders(spark, sfDir) ++
-      SubstrDedup.indexBuilders(spark, sfDir) ++
-      SimilarityQueries.indexBuilders(spark, sfDir) ++
-      TextQueries.indexBuilders(spark, sfDir))
+    val builders = SparkEntry.indexBuilders(spark, sfDir)
       .filter { case (name, _) => builderFilter(name) }
     CacheLife.release(spark)
     val errors = scala.collection.mutable.LinkedHashSet[String]()
@@ -191,6 +188,13 @@ object Bench {
         .getOperatingSystemMXBean.getSystemLoadAverage
     }
 
+  /** The record's `host_quiet` gate: the start load average is at most a
+    * tenth of the CPUs. Half the CPUs admitted a record that started at
+    * loadavg 10.9 as quiet.
+    */
+  private[graft] def hostQuiet(startLoad: Double, cpus: Int): Boolean =
+    startLoad <= 0.1 * cpus
+
   /** Fixed-work CPU canary: wall seconds for a deterministic
     * single-thread integer-mix loop. Complements loadavg — measuring
     * the r12 record exposed a ~2× UNIFORM slowdown across 117
@@ -307,8 +311,8 @@ object Bench {
       }
 
   /** Cold/steady adjudication pair (round-13 verdict #2) for the
-    * cache-riding kNN family: release everything, run twice in place —
-    * the cold line is what a fresh session pays INCLUDING the model/
+    * cache-riding kNN family: [[Profile.coldSteady]] with one steady leg
+    * — the cold line is what a fresh session pays INCLUDING the model/
     * index builds the query rides, the steady line is what the bench
     * medians correspond to. Published so a cross-round cost claim about
     * these queries never again rests on an unprofiled median (the r13
@@ -317,24 +321,8 @@ object Bench {
   private def coldProfile(spark: SparkSession, sfDir: String,
                           coldNames: String): Seq[(String, Double)] =
     if (coldNames == "none") Seq.empty
-    else coldNames.split(',').toSeq.flatMap { n =>
-      SparkEntry.queries.get(n).toSeq.flatMap { fn =>
-        CacheLife.release(spark)
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val cold = once()
-        // the kNN outputs and ANN probes are memoized (rounds 17 and
-        // 20): drop them so the steady leg re-EXECUTES with warm models
-        // — the state the bench medians correspond to — instead of
-        // reading the cold leg's own output cache
-        SimilarityQueries.dropOutputMemos(spark)
-        val steady = once()
-        Seq(s"$n:cold" -> cold, s"$n:steady" -> steady)
-      }
-    }
+    else coldNames.split(',').toSeq.filter(SparkEntry.queries.contains)
+      .flatMap(Profile.coldSteady(spark, sfDir, _, steady = 1))
 
   private def filtersOf(spec: String): (String => Boolean, String => Boolean) =
     spec match {
@@ -554,8 +542,8 @@ object Bench {
       canarySamples(label) = cpuCanary()
     }
     sampleLoad("start")
-    val hostQuiet = loadSamples("start") <= 0.5 * cpus
-    if (!hostQuiet)
+    val quiet = hostQuiet(loadSamples("start"), cpus)
+    if (!quiet)
       println(f"[bench] WARNING: loadavg ${loadSamples("start")}%.2f at start " +
         s"with $cpus CPUs — host is NOT quiet; treat cross-round deltas as " +
         s"possible contention, not plan changes")
@@ -801,7 +789,7 @@ object Bench {
       s""","timed_100x_count":$timed100Count,"never_timed_up2":${jarr(neverTimed100)}"""
     val json =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","iters":$iters,""" +
-        s""""cpus":$cpus,"loadavg":${jmap(loadSamples)},"host_quiet":$hostQuiet,""" +
+        s""""cpus":$cpus,"loadavg":${jmap(loadSamples)},"host_quiet":$quiet,""" +
         s""""cpu_canary":${jmap(canarySamples)},"canary_steady":$canarySteady,""" +
         s""""scale_warmed":true,"per_scale_jvm":${!sparkUsed},"errors":${jarr(mainRes.errors)},"errors_detail":${jmapStr(mainRes.errorsDetail)},""" +
         s""""index_build_total":${fmt(buildTotal)},"index_build":${jmap(mainRes.builds)},""" +
@@ -867,7 +855,7 @@ object Bench {
     val summary =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","summary":true,""" +
         s""""iters":$iters,"sf":"$sfDir","canary_steady":$canarySteady,""" +
-        s""""host_quiet":$hostQuiet,"per_scale_jvm":${!sparkUsed},""" +
+        s""""host_quiet":$quiet,"per_scale_jvm":${!sparkUsed},""" +
         s""""errors_all_scales":$errTotal,"n_queries":${mainRes.queries.size},""" +
         s""""never_timed_100x":${neverTimed100.size},""" +
         s""""sim_ncells_resolved":{"up":"${up.map(_.resolvedNCells).getOrElse("-")}"},""" +

@@ -90,10 +90,7 @@ object DumpPlans {
       val outDir = Paths.get(argv(0))
       Files.createDirectories(outDir)
       if (args.lift(1).contains("warm"))
-        (operators.DedupQueries.indexBuilders(s, d) ++
-          operators.SubstrDedup.indexBuilders(s, d) ++
-          operators.SimilarityQueries.indexBuilders(s, d) ++
-          operators.TextQueries.indexBuilders(s, d)).foreach(_._2())
+        SparkEntry.indexBuilders(s, d).foreach(_._2())
       argv(2).split(',').foreach { name =>
         if (!SparkEntry.queries.contains(name)) println(s"[plans] UNKNOWN query: $name")
         else {

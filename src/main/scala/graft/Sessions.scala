@@ -25,6 +25,18 @@ object Sessions {
       // native engine functions (graft_minhash, graft_cosine)
       .config("spark.sql.extensions", "graft.GraftExtensions")
 
+  /** Session confs from a `conf:k=v,k=v` main argument (comma, not
+    * semicolon: sbt's batch mode splits its command string on `;`). A
+    * malformed token refuses rather than silently running the defaults.
+    */
+  def confPairs(arg: String): Seq[(String, String)] =
+    arg.stripPrefix("conf:").split(',').toSeq.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => (k, v)
+        case _ => sys.error(s"malformed conf token '$kv' — expected key=value")
+      }
+    }
+
   def local(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = builder(cpus).getOrCreate()

@@ -33,6 +33,13 @@ object SparkEntry {
       DedupQueries.queries ++ SubstrDedup.queries ++ SimilarityQueries.queries ++
       SqlQueries.queries ++ MultimodalQueries.queries ++ TemporalQueries.queries
 
+  /** The shared index builders the bench charges to `build:` lines, in
+    * build order: dedup, substring, similarity, then text.
+    */
+  def indexBuilders(s: SparkSession, dir: String): Seq[(String, () => Unit)] =
+    DedupQueries.indexBuilders(s, dir) ++ SubstrDedup.indexBuilders(s, dir) ++
+      SimilarityQueries.indexBuilders(s, dir) ++ TextQueries.indexBuilders(s, dir)
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check.
     */

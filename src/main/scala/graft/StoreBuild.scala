@@ -48,10 +48,7 @@ object StoreBuild {
       .select(org.apache.spark.sql.functions.col("doc_id"),
         org.apache.spark.sql.functions.col("text"))
     val builders =
-      operators.DedupQueries.indexBuilders(spark, sfDir) ++
-      operators.SubstrDedup.indexBuilders(spark, sfDir) ++
-      operators.SimilarityQueries.indexBuilders(spark, sfDir) ++
-      operators.TextQueries.indexBuilders(spark, sfDir) ++
+      SparkEntry.indexBuilders(spark, sfDir) ++
       Seq(
         "sim.vector_layout" -> (() =>
           sources.VectorLayout.materialize(spark, sfDir, vectorLayoutDir(root))),

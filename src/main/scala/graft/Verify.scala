@@ -36,8 +36,7 @@ object Verify {
     // dump — the operational knobs (spark.graft.dsir.target,
     // spark.graft.shuffle.seed) verified through the same DuckDB gate
     // as the defaults: the oracle strings resolve the live conf, so a
-    // knobbed Verify run dumps two-engine-consistent SQL. (Comma, not
-    // semicolon: sbt's batch mode splits its command string on `;`.)
+    // knobbed Verify run dumps two-engine-consistent SQL.
     require(!arg2.startsWith("conf:"),
       "conf:k=v,k=v is the 4TH arg — pass a prefix filter (or '') as the " +
         "3rd, else the conf string would silently match zero query names")
@@ -48,14 +47,7 @@ object Verify {
     require(args.lift(3).forall(_.startsWith("conf:")),
       s"the 4th arg must be conf:k=v,k=v — got '${args.lift(3).getOrElse("")}', " +
         "which would silently verify the DEFAULT configuration instead")
-    val confs: Seq[(String, String)] = args.lift(3).toSeq
-      .flatMap(_.stripPrefix("conf:").split(',').toSeq)
-      .map { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => (k, v)
-          case _ => sys.error(s"malformed conf token '$kv' — expected key=value")
-        }
-      }
+    val confs = args.lift(3).toSeq.flatMap(Sessions.confPairs)
     val excluded: Set[String] =
       if (arg2.startsWith("exclude:"))
         arg2.stripPrefix("exclude:").split(',').toSet

@@ -107,14 +107,8 @@ object VerifyStream {
       a.startsWith("conf:") || a.startsWith("only:"),
       s"tail args must be conf:k=v,k=v or only:prefix — got '$a', " +
         "which would silently verify the DEFAULT configuration instead"))
-    val confs: Seq[(String, String)] = args.drop(4).filter(_.startsWith("conf:"))
-      .flatMap(_.stripPrefix("conf:").split(',').toSeq)
-      .map { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => (k, v)
-          case _ => sys.error(s"malformed conf token '$kv' — expected key=value")
-        }
-      }.toSeq
+    val confs = args.drop(4).filter(_.startsWith("conf:")).toSeq
+      .flatMap(Sessions.confPairs)
     // comma-list of prefixes (round 18: `only:sim_knn_ann` would now
     // also match the sim_knn_ann_auto dispatcher row, so the chunk
     // sweeps name their two rows exactly)

@@ -1150,14 +1150,7 @@ object SimilarityQueries {
     */
   val DefaultAssignMode = "auto"
 
-  def assignModeOf(s: SparkSession): String = {
-    val m = s.conf.getOption(AssignKey).getOrElse(DefaultAssignMode)
-    require(m == "flat" || m == "hier" || m == "auto",
-      s"$AssignKey must be 'flat', 'hier', or 'auto' (hier iff the " +
-        s"resolved K >= $HierAssignMinK), got '$m'")
-    if (m == "auto") { if (nCellsOf(s) >= HierAssignMinK) "hier" else "flat" }
-    else m
-  }
+  def assignModeOf(s: SparkSession): String = assignModeFor(s, nCellsOf(s))
 
   /** [[assignModeOf]] resolved against an EXPLICIT trained K instead of
     * the session's ncells knob — for codebook dirs whose own K is
@@ -1165,9 +1158,10 @@ object SimilarityQueries {
     * must ride the session MODE, not hard-default to flat — mixing two
     * assignment regimes in one store is the silent mismatch the pin
     * discipline refuses — and resolving `auto` there must not demand a
-    * session-K pin the caller may not have).
+    * session-K pin the caller may not have). `trainedK` is read only
+    * when the mode is `auto`, so an explicit mode never needs a K.
     */
-  def assignModeFor(s: SparkSession, trainedK: Int): String = {
+  def assignModeFor(s: SparkSession, trainedK: => Int): String = {
     val m = s.conf.getOption(AssignKey).getOrElse(DefaultAssignMode)
     require(m == "flat" || m == "hier" || m == "auto",
       s"$AssignKey must be 'flat', 'hier', or 'auto' (hier iff the " +
@@ -1221,13 +1215,11 @@ object SimilarityQueries {
 
   def probeModeOf(s: SparkSession): String = {
     val m = s.conf.getOption(ProbeKey).getOrElse(DefaultProbeMode)
-    require(m == "flat" || m == "hier" || m == AutoProbe,
-      s"$ProbeKey must be 'flat', 'hier', or '$AutoProbe', got '$m'")
     require(m != AutoProbe,
       s"$ProbeKey=$AutoProbe is unresolved — the session crossover needs " +
         "the corpus row count: any sim query / Verify / Bench pass pins " +
         "it on first corpus touch (pinProbeMode)")
-    m
+    probeModeForStore(m, trainedK = 0) // validates; an explicit mode needs no K
   }
 
   /** Resolve [[AutoProbe]] against `dir`'s corpus and PIN the result —

@@ -343,10 +343,9 @@ object SubstrDedup {
       winnowFpOver(posGrams(s, dir)))
 
   /** The SELECTION stage of winnowing alone — (doc_id, pos) of the
-    * chosen anchors, before the md5-recovery join. Split out so the
-    * scale profiler ([[graft.ProfileSubstr]]) can attribute the
-    * builder's cost between the per-token window map and the anchor
-    * join.
+    * chosen anchors, before the md5-recovery join. Its sort and window
+    * are their own stages in [[graft.Profile]]'s `substr.winnow_fp`
+    * stage table, between the per-token window map and the anchor join.
     */
   private[graft] def winnowSelected(g: DataFrame): DataFrame = {
     val selKey = conv(substring(col("h"), 1, 7), 16, 10).cast("long")

@@ -2,14 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** Bench harness contracts that need no SparkSession: the up-corpus
-  * default resolution (round-11 verdict stretch #6 — a stray
-  * `testdata_up` in an arbitrary CWD must not silently win) and the
-  * contention-telemetry sampler (round-11 item #3).
+/** Bench harness contracts: the up-corpus default resolution (round-11
+  * verdict stretch #6 — a stray `testdata_up` in an arbitrary CWD must
+  * not silently win), the contention-telemetry sampler and its
+  * `host_quiet` gate (round-11 item #3), and the cold/steady legs the
+  * record's `cold` section and graft.Profile share. Only the last needs
+  * the (lazy) SparkSession.
   */
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends SparkSpec {
 
   test("a CWD that is not a repo root offers ONLY the canonical absolute corpus") {
     val cwd = Files.createTempDirectory("graft-bench-cwd")
@@ -35,6 +35,14 @@ class BenchSpec extends AnyFunSuite {
   test("loadAvg returns a finite non-negative sample on this host") {
     val l = Bench.loadAvg()
     assert(!l.isNaN && l >= 0.0 && l < 100000.0, s"implausible loadavg $l")
+  }
+
+  test("host_quiet admits a start load up to a tenth of the CPUs, and no more") {
+    assert(Bench.hostQuiet(0.0, 10))
+    assert(Bench.hostQuiet(1.0, 10))
+    assert(!Bench.hostQuiet(1.01, 10))
+    // the former half-the-CPUs bound called this host quiet
+    assert(!Bench.hostQuiet(5.0, 10))
   }
 
   test("cpuCanary measures positive fixed work and is roughly stable on an idle host") {
@@ -107,5 +115,18 @@ class BenchSpec extends AnyFunSuite {
       "sim_knn_ann_pq_res", "sim_knn_ann_hier_pq", "sim_knn_ann_hier_pq_res"))
     assert(Bench.KnnFull100x === graft.operators.SimilarityQueries.knnMemoNames + "sim_knn_ann_auto")
     assert(Bench.KnnFull100x.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  test("coldSteady's steady leg re-executes sim_knn_ann instead of counting its memo") {
+    // each leg is a count(); the steady leg's jobs are the difference
+    // between one steady leg and none (both start from a release)
+    def legJobs(steady: Int) =
+      jobsDuring(Profile.coldSteady(spark, Sf, "sim_knn_ann", steady))
+    try {
+      val steadyLeg = legJobs(1) - legJobs(0)
+      val memoRead = jobsDuring(SparkEntry.queries("sim_knn_ann")(spark, Sf).count())
+      assert(steadyLeg > memoRead,
+        s"the steady leg ran $steadyLeg jobs, counting the memo runs $memoRead")
+    } finally CacheLife.release(spark)
   }
 }

@@ -62,6 +62,16 @@ class CurationStoreSpec extends SparkSpec {
     // CacheLife store. (dedup.jaccard-pairs is memoized but not a
     // named builder: its first consumer is its own registered query.)
     assert(built.size === 30, s"expected 30 builders, got: ${built.map(_._1)}")
+    // in build order: SparkEntry.indexBuilders, then the layouts
+    assert(built.map(_._1) === Seq(
+      "dedup.lsh_bands", "dedup.cand_pairs", "dedup.chargram_bands",
+      "dedup.chargram_pairs", "dedup.shingles", "dedup.clusters",
+      "substr.grams", "substr.spans", "substr.winnow_fp", "substr.winnow_spans",
+      "sim.ivf_cells", "sim.kmeans_model", "sim.kmeans_cells", "sim.pair_kernel",
+      "sim.knn_exact", "sim.sign_bands", "sim.lsh_scored", "sim.pq_codes",
+      "text.docs_tok", "text.tokens", "text.vocab", "text.tf",
+      "text.funnel_flags", "text.dsir_feats", "text.dsir_weights", "text.curriculum",
+      "sim.vector_layout", "dedup.incr_layout", "text.incr_layout", "substr.incr_layout"))
     // every store is a _SUCCESS-gated parquet layout under the root; the
     // incremental stores (dedup.layout, text.layout) are ROOTS OF
     // layouts — each of their sub-stores carries its own _SUCCESS

@@ -102,9 +102,9 @@ class KnnMemoSpec extends SparkSpec {
   }
 
   test("dropOutputMemos makes a warmed sim_ann_* row re-execute its probe") {
-    // a steady leg (Bench.coldProfile, ProfileQuery) that dropped only
-    // the kNN outputs re-read the ANN probe memo instead of re-running
-    // it. Collecting a memoized row still runs the one job that reads
+    // a steady leg (Profile.coldSteady) that dropped only the kNN
+    // outputs re-read the ANN probe memo instead of re-running it.
+    // Collecting a memoized row still runs the one job that reads
     // the memo; a re-executed probe runs its broadcast and scan jobs too
     val row = SparkEntry.queries("sim_ann_ivf")
     CacheLife.release(spark)

@@ -680,6 +680,16 @@ class QueriesSpec extends SparkSpec {
     CacheLife.release(spark)
   }
 
+  test("sim.assign reads the resolved K only under auto") {
+    withConf(SimilarityQueries.NCellsKey -> SimilarityQueries.AutoNCells) {
+      withConf(SimilarityQueries.AssignKey -> "flat") {
+        assert(SimilarityQueries.assignModeOf(spark) == "flat")
+      }
+      // the default mode is auto, which needs the pinned K
+      intercept[IllegalArgumentException](SimilarityQueries.assignModeOf(spark))
+    }
+  }
+
   test("sign-band geometry: auto thresholds, wider-rows monotonicity, knobbed subset") {
     // rows(n) resolution boundaries: occupancy n/2^rows ≤ 64
     assert(SimilarityQueries.signRowsFor(64L << 8) === 8)

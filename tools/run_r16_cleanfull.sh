@@ -17,7 +17,7 @@
 # process per bucket (the string_agg is the memory hog — fresh
 # processes keep each chunk's allocation honest). Restartable: phase A
 # re-dumps only buckets with no rec file; phase B skips checked ones.
-# Run from /root/repo after run_r16_passes.sh's bench stage (phase A is
+# Run from /root/repo after run_passes.sh's bench stage (phase A is
 # correctness-only but CPU-heavy — never beside a timing run).
 cd /root/repo || exit 1
 LOG=/tmp/r16_cleanfull.log
