@@ -2,12 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Bench harness contracts: the up-corpus default resolution (round-11
-  * verdict stretch #6 — a stray `testdata_up` in an arbitrary CWD must
-  * not silently win), the contention-telemetry sampler and its
-  * `host_quiet` gate (round-11 item #3), and the cold/steady legs the
-  * record's `cold` section and graft.Profile share. Only the last needs
-  * the (lazy) SparkSession.
+/** Bench harness contracts: the up-corpus default resolution (a stray
+  * `testdata_up` in an arbitrary CWD must not silently win), the
+  * contention-telemetry sampler and its `host_quiet` gate, and the
+  * cold/steady legs the record's `cold` section and graft.Profile share.
+  * Only the last needs the (lazy) SparkSession.
   */
 class BenchSpec extends SparkSpec {
 
@@ -41,7 +40,7 @@ class BenchSpec extends SparkSpec {
     assert(Bench.hostQuiet(0.0, 10))
     assert(Bench.hostQuiet(1.0, 10))
     assert(!Bench.hostQuiet(1.01, 10))
-    // the former half-the-CPUs bound called this host quiet
+    // the former half-the-CPUs bound called a 10-CPU host at load 5 quiet
     assert(!Bench.hostQuiet(5.0, 10))
   }
 

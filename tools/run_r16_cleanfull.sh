@@ -17,9 +17,9 @@
 # process per bucket (the string_agg is the memory hog — fresh
 # processes keep each chunk's allocation honest). Restartable: phase A
 # re-dumps only buckets with no rec file; phase B skips checked ones.
-# Run from /root/repo after run_passes.sh's bench stage (phase A is
-# correctness-only but CPU-heavy — never beside a timing run).
-cd /root/repo || exit 1
+# Runs from the repository root after run_passes.sh's bench stage (phase
+# A is correctness-only but CPU-heavy — never beside a timing run).
+cd "$(dirname "$0")/.." || exit 1
 LOG=/tmp/r16_cleanfull.log
 exec >>"$LOG" 2>&1
 echo "==== run_r16_cleanfull $(date -u +%FT%TZ) ===="
