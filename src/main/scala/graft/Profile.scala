@@ -2,9 +2,14 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.collection.mutable
+
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.operators.SimilarityQueries
 
@@ -19,9 +24,10 @@ import graft.operators.SimilarityQueries
   *   - a QUERY runs its [[coldSteady]] legs with `iters` steady legs.
   *
   * Every leg prints its wall seconds and a stage table (stage, wall,
-  * executor run and CPU ms), the local stand-in for the Spark UI's stage
-  * page: `substr.grams,substr.winnow_fp` splits the winnowing builder
-  * into its per-token window map, window selection and anchor join.
+  * executor run and CPU ms; each stage named by [[stageLabel]]), the
+  * local stand-in for the Spark UI's stage page:
+  * `substr.grams,substr.winnow_fp` splits the winnowing builder into its
+  * per-token window map, window selection and anchor join.
   * Unknown names refuse; the optional conf applies before anything runs.
   */
 object Profile {
@@ -51,6 +57,16 @@ object Profile {
     }
   }
 
+  /** A stage's name in the stage table: the call site of the SQL
+    * execution its job belongs to (the action, e.g. `count at
+    * Profile.scala:42`), else the stage's own name. Spark names every
+    * adaptive query stage and broadcast after the future that submits
+    * it (`$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java`),
+    * which says nothing about the query.
+    */
+  def stageLabel(stageName: String, execSite: Option[String]): String =
+    execSite.getOrElse(stageName).takeWhile(_ != '(').trim
+
   def main(args: Array[String]): Unit = {
     val (dir, names) = (args(0), args(1).split(',').toSeq)
     val iters = args.lift(2).map(_.toInt).getOrElse(1)
@@ -68,10 +84,21 @@ object Profile {
     def row(stage: String, wall: Any, run: Any, cpu: Any): String =
       f"[profile]   $stage%-44s $wall%7s $run%7s $cpu%7s"
     s.sparkContext.addSparkListener(new SparkListener {
+      // the bus delivers events to this listener on one thread, in order
+      private val execSite = mutable.Map.empty[Long, String]
+      private val stageSite = mutable.Map.empty[Int, String]
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => execSite(x.executionId) = x.description
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(id => execSite.get(id.toLong))
+          .foreach(site => e.stageIds.foreach(stageSite(_) = site))
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
         val wall = (for (a <- si.completionTime; b <- si.submissionTime) yield a - b)
-        stages.add(row(s"${si.stageId}:${si.name.takeWhile(_ != '(').trim}",
+        stages.add(row(s"${si.stageId}:${stageLabel(si.name, stageSite.remove(si.stageId))}",
           wall.getOrElse(-1L), si.taskMetrics.executorRunTime,
           si.taskMetrics.executorCpuTime / 1000000L))
       }

@@ -105,6 +105,11 @@ object Ohlcv {
 
   /** SERIAL-key emulation (SURVEY §7.5.1): deterministic row_number over
     * the event-time ordering, offset by the destination's current max id.
+    * The batch tick takes that mark from the table's stored sequence
+    * ([[Warehouse.serialAppend]]), which the append observes and rewrites
+    * after it commits; a [[Warehouse.maxId]] scan only recovers a missing
+    * sequence. The streaming sink takes it from
+    * [[Warehouse.streamMaxId]].
     *
     * Scale warning (documented anti-pattern): the window has no
     * PARTITION BY, so it is one global sort in one task. The input is

@@ -1,8 +1,11 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table layer replacing the reference's Postgres + Redshift pair with
@@ -15,17 +18,65 @@ import org.apache.spark.sql.functions._
   * Append semantics mirror the reference exactly: no dedup, duplicate
   * rows on re-run are EXPECTED (T3; screenshot evidence ids 1/2, 9/10) —
   * [[dedupCandles]] is the opt-in fix, not the default.
+  *
+  * SERIAL ids: Postgres keeps a `SERIAL` column's high-water mark as a
+  * stored sequence, O(1) per insert. A table here keeps its mark in
+  * `<table>/_sequence`, hidden from Spark's file listing by its leading
+  * `_` like `_SUCCESS`. The file exists only while it is exact: the id
+  * append ([[serialAppend]]) rewrites it after every commit, and every
+  * other writer ([[append]], [[idempotentAppend]]) deletes it before it
+  * writes. A missing or unreadable sequence costs one [[maxId]] scan,
+  * the recovery path, after which the next append rewrites it.
   */
 object Warehouse {
 
-  /** D1/D2: CREATE TABLE IF NOT EXISTS — idempotent, run before loads. */
-  def createIfNotExists(spark: SparkSession, path: String): Unit = {
+  /** D1/D2: CREATE TABLE IF NOT EXISTS — idempotent, run before loads.
+    * Runs no Spark job: an empty table is its directory, an empty
+    * `_SUCCESS` marker (what writing an empty partitioned frame would
+    * leave, with no data file) and the sequence `0`.
+    */
+  def createIfNotExists(path: String): Unit = {
     val dir = Paths.get(path)
     if (!Files.exists(dir)) {
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Ohlcv.tableSchema)
-        .write.partitionBy("period_date").parquet(path)
+      Files.createDirectories(dir)
+      Files.createFile(dir.resolve("_SUCCESS"))
+      writeSequence(path, 0L)
     }
+  }
+
+  private def sequenceFile(path: String): Path = Paths.get(path, "_sequence")
+
+  /** The table's committed high-water mark; `None` when the sequence is
+    * missing or does not parse as a mark.
+    */
+  private def readSequence(path: String): Option[Long] =
+    Try(new String(Files.readAllBytes(sequenceFile(path)), UTF_8).trim.toLong)
+      .toOption.filter(_ >= 0)
+
+  /** Publish `mark` with an atomic rename, so a reader sees the old file,
+    * no file or the new one, never a torn write.
+    */
+  private def writeSequence(path: String, mark: Long): Unit = {
+    val tmp = Paths.get(path, "_sequence.tmp")
+    Files.write(tmp, mark.toString.getBytes(UTF_8))
+    Files.move(tmp, sequenceFile(path),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** K1 with SERIAL ids: the reference's 5-minute insert into a table
+    * with a `SERIAL` key (airflow_dags.py:93-109). Ids continue from the
+    * table's sequence, or from one [[maxId]] scan when the sequence is
+    * missing or unreadable (a crash between the commit and the rewrite,
+    * a table written before sequences existed, another writer since).
+    * The append itself is the only Spark job: it deletes the sequence
+    * before it writes and observes `max(id)` as it goes, and the mark is
+    * rewritten once the append has committed.
+    */
+  def serialAppend(spark: SparkSession, candles: DataFrame, path: String): Unit = {
+    val start = readSequence(path).getOrElse(maxId(spark, path))
+    val mark = Observation()
+    append(Ohlcv.assignIds(candles, start).observe(mark, max("id").as("id")), path)
+    writeSequence(path, Option(mark.get("id")).fold(start)(_.asInstanceOf[Long]))
   }
 
   /** K1/K4: append into the partitioned table (JDBC append ≅ COPY).
@@ -40,12 +91,17 @@ object Warehouse {
     * re-stamp and 73 ms without (40 alternating appends each, 4-core
     * host, local filesystem). Only this writer turns the marker off;
     * every other write still leaves one.
+    *
+    * Deletes the table's sequence first: rows written here carry ids
+    * the sequence does not know of.
     */
-  def append(df: DataFrame, path: String): Unit =
+  def append(df: DataFrame, path: String): Unit = {
+    Files.deleteIfExists(sequenceFile(path))
     df.select(Ohlcv.columns.map(df.col): _*)
       .write.mode("append")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .partitionBy("period_date").parquet(path)
+  }
 
   /** The streamed batches' section of a warehouse directory. The name
     * is underscore-prefixed ON PURPOSE: Spark's file listing hides
@@ -70,15 +126,18 @@ object Warehouse {
     * parquet analog of the reference's transactional COPY
     * (airflow_dags.py:279-310). The plain [[append]] stays
     * duplicate-tolerant (T3) — idempotence here is opt-in per sink,
-    * not a change to batch semantics.
+    * not a change to batch semantics. Like [[append]], it deletes the
+    * table's sequence before it writes.
     */
-  def idempotentAppend(df: DataFrame, path: String, batchId: Long): Unit =
+  def idempotentAppend(df: DataFrame, path: String, batchId: Long): Unit = {
+    Files.deleteIfExists(sequenceFile(path))
     df.select(Ohlcv.columns.map(df.col): _*)
       .withColumn("__batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("__batch_id", "period_date")
       .parquet(streamSection(path))
+  }
 
   /** Streaming-table schema: the declared columns plus the batch
     * bookkeeping partition column. Reads go through an EXPLICIT schema —
@@ -154,8 +213,10 @@ object Warehouse {
     df.select(Ohlcv.columns.map(df.col): _*)
   }
 
-  /** Current max id, the SERIAL high-water mark for [[Ohlcv.assignIds]].
-    * An inherently serial point (SURVEY §7.5.1) — fine at reference
+  /** Current max id, the SERIAL high-water mark for [[Ohlcv.assignIds]],
+    * by a scan of the whole table (two Spark jobs). [[serialAppend]]
+    * runs it only to recover a missing or unreadable sequence. An
+    * inherently serial point (SURVEY §7.5.1) — fine at reference
     * cadence, replaced by natural keys at scale.
     */
   def maxId(spark: SparkSession, path: String): Long = {

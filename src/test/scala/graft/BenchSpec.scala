@@ -128,4 +128,12 @@ class BenchSpec extends SparkSpec {
         s"the steady leg ran $steadyLeg jobs, counting the memo runs $memoRead")
     } finally CacheLife.release(spark)
   }
+
+  test("Profile names a stage after its SQL execution's call site") {
+    val future = "$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:1768"
+    assert(Profile.stageLabel(future, Some("count at Profile.scala:42")) ===
+      "count at Profile.scala:42")
+    assert(Profile.stageLabel("parquet at LogCompaction.scala:88", None) ===
+      "parquet at LogCompaction.scala:88")
+  }
 }

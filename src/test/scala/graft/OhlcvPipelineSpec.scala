@@ -1,7 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Interchange, Ohlcv, Warehouse}
@@ -65,7 +68,7 @@ class OhlcvPipelineSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("a tick into an existing table runs 3 jobs and re-stamps no _SUCCESS marker") {
+  test("a tick into an existing table runs 1 job and re-stamps no _SUCCESS marker") {
     val root = Files.createTempDirectory("graft-tick").toString
     val ds = "2023-04-26"
     def closeout(): Unit =
@@ -78,11 +81,11 @@ class OhlcvPipelineSpec extends SparkSpec {
     def stamps() = markers.map(Files.getLastModifiedTime(_))
     val before = stamps()
 
-    // the high-water-mark scan (2 jobs) and the write (1 job); the id
-    // window sorts its one partition in place, with no shuffle job
+    // only the write: the ids continue from the table's sequence, and
+    // the id window sorts its one partition in place, with no shuffle job
     val tickJobs = jobsDuring(
       Pipeline.ingestTick(spark, root, "Bitcoin", Seq(payloadAt("04:35:00", 28361.2))))
-    assert(tickJobs === 3)
+    assert(tickJobs === 1)
     Pipeline.ingestTick(spark, root, "Bitcoin", Seq(payloadAt("04:40:00", 28362.2)))
     closeout()
     assert(stamps() === before,
@@ -91,6 +94,95 @@ class OhlcvPipelineSpec extends SparkSpec {
     val ids = Warehouse.table(spark, s"$root/ingest/Bitcoin")
       .select("id").collect().map(_.getLong(0)).sorted
     assert(ids.sameElements(Array(1L, 2L, 3L)))
+  }
+
+  test("table creation runs no job; a first tick into an empty root runs 1") {
+    val tbl = Paths.get(Files.createTempDirectory("graft-create").toString, "t").toString
+    assert(jobsDuring(Warehouse.createIfNotExists(tbl)) === 0)
+    val made = Files.list(Paths.get(tbl)).iterator().asScala.map(_.getFileName.toString).toSet
+    assert(made === Set("_SUCCESS", "_sequence"), "creation leaves no data file")
+    assert(Warehouse.table(spark, tbl).count() === 0)
+
+    val root = Files.createTempDirectory("graft-first").toString
+    assert(jobsDuring(Pipeline.ingestTick(spark, root, "Bitcoin", Seq(payload))) === 1)
+    assert(ingestIds(root) === Seq(1L))
+  }
+
+  private def ingestIds(root: String): Seq[Long] =
+    Warehouse.table(spark, s"$root/ingest/Bitcoin")
+      .select("id").collect().map(_.getLong(0)).sorted.toSeq
+
+  private def candle(t: String) = Ohlcv.fromJson(spark, Seq(payloadAt(t, 28361.2)))
+
+  private def tickAt(root: String, t: String): Unit =
+    Pipeline.ingestTick(spark, root, "Bitcoin", Seq(payloadAt(t, 28361.2)))
+
+  /** Four ticks with `between` run after the second; the ids must read
+    * 1..n and the sequence must hold n again.
+    */
+  private def ticksAround(between: String => Unit): Unit = {
+    val root = Files.createTempDirectory("graft-seq").toString
+    val tbl = s"$root/ingest/Bitcoin"
+    Seq("04:30:00", "04:35:00").foreach(tickAt(root, _))
+    between(tbl)
+    Seq("04:40:00", "04:45:00").foreach(tickAt(root, _))
+    val ids = ingestIds(root)
+    assert(ids === (1L to ids.size.toLong), "ids must stay exactly 1..n")
+    assert(new String(Files.readAllBytes(Paths.get(tbl, "_sequence"))) === ids.size.toString)
+  }
+
+  Seq[(String, String => Unit)](
+    "deleting _sequence (a crash between commit and rewrite)" ->
+      (tbl => Files.delete(Paths.get(tbl, "_sequence"))),
+    "garbage in _sequence" ->
+      (tbl => Files.write(Paths.get(tbl, "_sequence"), "12x".getBytes)),
+    "a plain Warehouse.append" ->
+      (tbl => Warehouse.append(
+        Ohlcv.assignIds(candle("04:37:00"), Warehouse.maxId(spark, tbl)), tbl)),
+    "an idempotentAppend batch" ->
+      (tbl => Warehouse.idempotentAppend(
+        Ohlcv.assignIds(candle("04:37:00"), Warehouse.maxId(spark, tbl)), tbl, 0L))
+  ).foreach { case (what, between) =>
+    test(s"ids stay 1..n after $what between ticks")(ticksAround(between))
+  }
+
+  test("an empty tick appends nothing and keeps the sequence") {
+    val root = Files.createTempDirectory("graft-empty").toString
+    Pipeline.ingestTick(spark, root, "Bitcoin", Seq(payload))
+    Pipeline.ingestTick(spark, root, "Bitcoin", Seq("[]"))
+    val sequence = Paths.get(root, "ingest", "Bitcoin", "_sequence")
+    assert(new String(Files.readAllBytes(sequence)) === "1")
+    tickAt(root, "04:35:00")
+    assert(ingestIds(root) === Seq(1L, 2L))
+  }
+
+  test("ids stay 1..n on a root built without a sequence") {
+    // the earlier creation (an empty partitioned frame) and tick (a maxId
+    // scan, then the append): neither leaves a _sequence
+    val root = Files.createTempDirectory("graft-legacy").toString
+    val tbl = s"$root/ingest/Bitcoin"
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Ohlcv.tableSchema)
+      .write.partitionBy("period_date").parquet(tbl)
+    Seq("04:30:00", "04:35:00").foreach(t =>
+      Warehouse.append(Ohlcv.assignIds(candle(t), Warehouse.maxId(spark, tbl)), tbl))
+    assert(!Files.exists(Paths.get(tbl, "_sequence")))
+    Seq("04:40:00", "04:45:00").foreach(tickAt(root, _))
+    assert(ingestIds(root) === Seq(1L, 2L, 3L, 4L))
+  }
+
+  test("a close-out stages one CSV file and adds one warehouse file per coin-day") {
+    val root = Files.createTempDirectory("graft-closeout").toString
+    Seq("04:30:00", "04:35:00", "04:40:00").foreach(tickAt(root, _))
+    val stage = Pipeline.dailyCloseout(spark, root, "Bitcoin", "2023-04-26", "20230427T000000")
+    def files(dir: String, ext: String) = Files.walk(Paths.get(dir)).iterator().asScala
+      .filter(p => p.getFileName.toString.endsWith(ext) && !p.getFileName.toString.startsWith("."))
+      .toSeq
+    assert(files(s"$root/ingest/Bitcoin", ".parquet").size === 3)
+    assert(files(stage, ".csv").size === 1)
+    val wh = files(s"$root/warehouse/Bitcoin", ".parquet")
+    assert(wh.size === 1)
+    assert(wh.head.getParent.getFileName.toString === "period_date=2023-04-26")
+    assert(Warehouse.table(spark, s"$root/warehouse/Bitcoin").count() === 3)
   }
 
   test("interchange CSV is headerless with id first (positional contract)") {

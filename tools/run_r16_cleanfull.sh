@@ -25,7 +25,12 @@ exec >>"$LOG" 2>&1
 echo "==== run_r16_cleanfull $(date -u +%FT%TZ) ===="
 set -o pipefail
 
-JAVA_LAUNCH=${GRAFT_JAVA:-/tmp/graft_java.sh}
+# GRAFT_JAVA, when set, names a launcher taking `<main> <args...>`;
+# otherwise phase A runs through sbt as run_passes.sh's stages do.
+launch() {
+  if [ -n "$GRAFT_JAVA" ]; then "$GRAFT_JAVA" "$@"
+  else sbt -batch "runMain $*"; fi
+}
 
 # phase A: buckets still needing a Spark dump
 missing=""
@@ -38,7 +43,7 @@ done
 missing=${missing#,}
 if [ -n "$missing" ]; then
   echo; echo "---- phase A: dump buckets [$missing] $(date -u +%T) ----"
-  "$JAVA_LAUNCH" graft.VerifyCleanChunks testdata_up/sf10 \
+  launch graft.VerifyCleanChunks testdata_up/sf10 \
     /tmp/verify_r16_clean "$missing" 2>&1 | grep -E "\[cleanchunks\]|Exception" || exit 1
 fi
 
