@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.collection.mutable
 
-import org.apache.spark.ListenerBusDrain
+import org.apache.spark.{ListenerBusDrain, StageScope}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
   SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
@@ -62,10 +62,15 @@ object Profile {
     * Profile.scala:42`), else the stage's own name. Spark names every
     * adaptive query stage and broadcast after the future that submits
     * it (`$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java`),
-    * which says nothing about the query.
+    * which says nothing about the query. The plan operators that built
+    * the stage's RDDs follow in brackets, last first
+    * ([[org.apache.spark.StageScope]]: `[Exchange < WholeStageCodegen
+    * (2)]`), so the stages of one query tell apart.
     */
-  def stageLabel(stageName: String, execSite: Option[String]): String =
-    execSite.getOrElse(stageName).takeWhile(_ != '(').trim
+  def stageLabel(stageName: String, execSite: Option[String],
+                 scopes: Seq[String] = Nil): String =
+    execSite.getOrElse(stageName).takeWhile(_ != '(').trim +
+      (if (scopes.isEmpty) "" else scopes.mkString(" [", " < ", "]"))
 
   def main(args: Array[String]): Unit = {
     val (dir, names) = (args(0), args(1).split(',').toSeq)
@@ -98,7 +103,8 @@ object Profile {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
         val wall = (for (a <- si.completionTime; b <- si.submissionTime) yield a - b)
-        stages.add(row(s"${si.stageId}:${stageLabel(si.name, stageSite.remove(si.stageId))}",
+        val label = stageLabel(si.name, stageSite.remove(si.stageId), StageScope(si))
+        stages.add(row(s"${si.stageId}:$label",
           wall.getOrElse(-1L), si.taskMetrics.executorRunTime,
           si.taskMetrics.executorCpuTime / 1000000L))
       }

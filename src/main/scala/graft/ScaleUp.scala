@@ -135,10 +135,6 @@ object ScaleUp {
       affine(Lower, aL, bL) + affine(Upper, aL, bL) + affine(Digits, aD, bD))
   }
 
-  /** Circular shift of the embedding components by k (mod dim). */
-  def rotateVec(c: Column, k: Int): Column =
-    transform(c, (_, i) => element_at(c, pmod(i + lit(k), size(c)) + 1))
-
   /** Deck multipliers for the affine component permutation: copy k uses
     * `p(i) = (M(k/dim)·i + k mod dim) mod dim`. The set {1,3,5,7} is
     * optimal for power-of-two dims: any two decks' composed map has

@@ -12,9 +12,11 @@ import graft.sources.{DedupLayout, SubstrLayout, TextLayout, VectorLayout}
   * healthy, in dependency order per store family:
   *
   *   - dedup: advance the cluster labels over every complete appended
-  *     batch ([[DedupLayout.refreshLabels]]), then fold the batch log
+  *     batch ([[DedupLayout.refreshLabels]], which reads only the new
+  *     pairs and the stored labels), then fold the batch log
   *     ([[DedupLayout.compact]] — which re-bounds the refresh to its
-  *     own watermark, so running both is safe and idempotent);
+  *     own watermark, so running both is safe and idempotent, and
+  *     deletes the `edges` store a root from an earlier layout holds);
   *   - text: fold the token/partials logs ([[TextLayout.compact]]);
   *   - substr: fold the fingerprint/count logs ([[SubstrLayout.compact]];
   *     roots built before the substr family report a skip);

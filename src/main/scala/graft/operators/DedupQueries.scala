@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -206,94 +206,91 @@ object DedupQueries {
 
   // ---- Duplicate clusters: connected components over the pair graph ----
   // Pairs alone don't dedup a corpus — transitive near-dups (A~B, B~C)
-  // must collapse into one cluster with one kept representative. This is
-  // label propagation to a fixpoint: every node takes the min doc_id
-  // reachable through candidate edges — run as a DELTA ITERATION
-  // (Pregel's active-vertex set / Flink's delta iterate): only nodes
-  // whose label CHANGED last round propagate, so per-iteration join
-  // I/O scales with the frontier, not the graph. Near-dup clusters are
-  // quasi-cliques (LSH links most pairs directly), so the frontier
-  // collapses after the first hop and later iterations are
-  // near-empty — under the old full-relabel form every iteration
-  // re-joined ALL labels against ALL edges regardless.
+  // must collapse into one cluster with one kept representative: every
+  // node takes the min doc_id reachable through candidate pairs
+  // ([[components]]).
   def clusters(s: SparkSession, dir: String): DataFrame =
     // The converged labels are CacheLife-memoized: the fixpoint runs
     // once per (session, dir) and survivors/corpusFunnel read the same
     // label store instead of re-running the iterative job — the
     // "dedup once, reuse the verdicts" contract a real pipeline has.
-    graft.CacheLife.cached(s, s"dedup.clusters:$dir")(clustersUncached(s, dir))
+    graft.CacheLife.cached(s, s"dedup.clusters:$dir")(components(minhashPairs(s, dir)))
 
-  private def clustersUncached(s: SparkSession, dir: String): DataFrame = {
-    // Iteration state goes through EAGER localCheckpoint, not persist():
-    // it truncates the lineage (iteration k's plan would otherwise nest
-    // all k-1 predecessors) and sidesteps CacheManager's canonical-plan
-    // aliasing across repeated invocations, which made the loop's cost
-    // wildly non-deterministic. On a cluster with HA requirements this
-    // would be reliable checkpointing to the DFS instead.
-    // checkpoint the pairs BEFORE the symmetric union: the band
-    // self-join + distinct subtree would otherwise execute twice
-    val pairs = minhashPairs(s, dir).localCheckpoint()
-    val edges = pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
-    val init = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    // round 0: every node is its own frontier (its label just "changed"
-    // from nothing); afterwards the frontier is the changed subset
-    propagateLabels(edges, init, init)
-      .select(col("node").as("doc_id"), col("label").as("cluster_id"))
-  }
-
-  /** The delta-iteration label-propagation fixpoint over a symmetric
-    * edge set, from an ARBITRARY warm-start state — factored out so the
-    * incremental index ([[graft.sources.DedupLayout.refreshLabels]])
-    * can resume from stored labels with only the new edges' endpoints
-    * as the frontier. Min-label propagation is monotone from any state
-    * ≥ the fixpoint, so a warm start whose frontier contains every node
-    * that COULD change (the new edges' endpoints) converges to the same
-    * components as a cold run — including cross-cluster merges, where
-    * the smaller cluster-min flows across the bridge and the changed
-    * nodes re-enter the frontier hop by hop (DedupLayoutSpec unit-tests
-    * exactly that shape).
+  /** Connected components of the undirected graph whose edges are the
+    * `(doc_a, doc_b)` rows of `pairs`: one `(doc_id, cluster_id)` row
+    * per node with at least one edge, labelled by the minimum node id of
+    * its component. The one label routine — the registered `dedup_clusters`,
+    * the base build ([[graft.sources.DedupLayout.materialize]]) and the
+    * warm refresh ([[graft.sources.DedupLayout.refreshLabels]], over the
+    * label graph) all call it. Pairs may come in either order; a
+    * self-loop is harmless.
     *
-    * `edges` and `init` must be eagerly checkpointed by the caller;
-    * `frontier0` rows must carry each node's CURRENT label.
+    * Min-label propagation run as a DELTA ITERATION (Pregel's
+    * active-vertex set): only nodes whose label changed last round send
+    * it on, so per-round join work scales with the frontier, not the
+    * graph. Near-dup clusters are quasi-cliques (LSH links most pairs
+    * directly), so the frontier collapses after the first hop.
+    *
+    *   - The pairs are symmetrised in one pass (`explode` of both
+    *     directions) and checkpointed: every round reads them.
+    *   - Round 0 is one aggregate: each node's label is the min of
+    *     itself and its neighbours.
+    *   - Each later round is ONE action: the round's eager
+    *     `localCheckpoint` carries the changed-label count as an
+    *     [[org.apache.spark.sql.Observation]] (the
+    *     [[graft.sources.Warehouse.serialAppend]] pattern), so no round
+    *     pays a separate `count()`.
+    *
+    * Iteration state goes through eager `localCheckpoint`, not
+    * persist(): it truncates the lineage (round k's plan would otherwise
+    * nest all k-1 predecessors) and sidesteps CacheManager's
+    * canonical-plan aliasing across repeated invocations. On a cluster
+    * with HA requirements this would be reliable checkpointing to the
+    * DFS instead. One round per hop of the longest chain: after 50
+    * rounds it refuses loudly rather than return labels that split one
+    * cluster into several.
     */
-  private[graft] def propagateLabels(edges: DataFrame, init: DataFrame,
-                                     frontier0: DataFrame): DataFrame = {
-    var labels = init
-    var frontier = frontier0
-    var changed = 1L
-    var iter = 0
-    val MaxIters = 50
-    while (changed > 0 && iter < MaxIters) {
+  private[graft] def components(pairs: DataFrame): DataFrame = {
+    val edges = pairs
+      .select(explode(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .localCheckpoint()
+    // one checkpointed round: (node, label, chg), plus its changed count
+    def round(state: DataFrame): (DataFrame, Long) = {
+      val changed = Observation()
+      val next = state.observe(changed, count(when(col("chg"), lit(1))).as("n"))
+        .localCheckpoint()
+      (next, changed.get("n").asInstanceOf[Long])
+    }
+    // round 0: every node starts as its own label and sends it to every
+    // neighbour; a node changed iff some neighbour is smaller
+    var (state, changed) = round(edges.groupBy("src").agg(min("dst").as("m"))
+      .select(col("src").as("node"), least(col("src"), col("m")).as("label"),
+        (col("m") < col("src")).as("chg")))
+    var rounds = 1
+    val MaxRounds = 50
+    while (changed > 0 && rounds < MaxRounds) {
       // proposals flow only OUT OF the frontier: a node whose label
       // didn't change last round already sent this label before.
       // Labels only decrease, so min over proposals is monotone and the
       // delta form reaches the same fixpoint as full relabeling.
-      val prop = frontier.join(edges, col("node") === col("src"))
-        .select(col("dst"), col("label"))
-        .groupBy("dst").agg(min("label").as("prop"))
-        .withColumnRenamed("dst", "node")
+      val prop = state.filter(col("chg")).join(edges, col("node") === col("src"))
+        .groupBy(col("dst").as("node")).agg(min("label").as("prop"))
       // the merge joins full labels against the (frontier-sized,
       // AQE-broadcastable once the frontier collapses) proposal table
-      val merged = labels.join(prop, Seq("node"), "left_outer")
+      val (next, n) = round(state.join(prop, Seq("node"), "left_outer")
         .select(col("node"),
           least(col("label"), coalesce(col("prop"), col("label"))).as("label"),
-          (col("prop") < col("label")).as("chg"))
-        .localCheckpoint()
-      frontier = merged.filter(col("chg")).select("node", "label")
-      changed = frontier.count()
-      labels = merged.select("node", "label")
-      iter += 1
+          coalesce(col("prop") < col("label"), lit(false)).as("chg")))
+      state = next
+      changed = n
+      rounds += 1
     }
-    // fail LOUDLY rather than return silently-unconverged labels (a
-    // >50-hop duplicate chain would split one cluster into several)
     if (changed > 0) throw new IllegalStateException(
-      s"connected components did not converge in $MaxIters iterations ($changed labels still changing)")
-    labels
+      s"connected components did not converge in $MaxRounds rounds ($changed labels still changing)")
+    state.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 
   // ---- Corpus after dedup: what a curator actually ships ----

@@ -1655,19 +1655,11 @@ object SimilarityQueries {
   }
 
   /** Trained-cell assignment for ARBITRARY arriving `(vec_id, embedding)`
-    * rows — the incremental-index path: a new vector joins the layout in
-    * the cell the ALREADY-TRAINED codebook puts it in (same quantization,
-    * same argmax-with-id-tie-break as the corpus assignment), no retrain.
-    * [[graft.sources.VectorLayout.append]] rides this.
-    */
-  private[graft] def assignVectors(s: SparkSession, dir: String,
-                                   vecs: DataFrame): DataFrame =
-    assignVectorsWith(trainedModel(s, dir)._2, vecs,
-      nCellsOf(s), assignModeOf(s))
-
-  /** The same assignment against an EXPLICIT codebook — the entry the
-    * versioned layout uses once a retrain has replaced the session-
-    * memoized model with the codebook stored beside the layout.
+    * rows against an EXPLICIT codebook — the incremental-index path
+    * ([[graft.sources.VectorLayout.append]]): a new vector joins the
+    * layout in the cell the ALREADY-TRAINED codebook (the one stored
+    * beside the layout) puts it in, with the same quantization and
+    * argmax-with-id-tie-break as the corpus assignment, no retrain.
     *
     * `trainedK` and `mode` come from the CALLER'S pinned context (the
     * layout's `_meta`, or the live conf for a fresh retrain) — round-15

@@ -740,8 +740,11 @@ object TextQueries {
     // doc_id — so the store holds bucket multiplicities instead of one
     // row per token (~3× fewer rows through both passes and the
     // broadcast join). Integer sums reorder exactly; every downstream
-    // number is bit-identical (n·llr ≤ 2^50, sums < 2^62).
-    graft.CacheLife.cached(s, s"text.dsir-feats:$dir:$target")(
+    // number is bit-identical (n·llr ≤ 2^50, sums < 2^62). The `.agg`
+    // in the key versions that layout: a store root still holding the
+    // per-occurrence (doc_id, is_target, b) rows under the old key
+    // rebuilds instead of failing to resolve `n`.
+    graft.CacheLife.cached(s, s"text.dsir-feats.agg:$dir:$target")(
       Tables.spread(s, Tables.documents(s, dir))
         .select(col("doc_id"), (col("source") === target).as("is_target"),
           explode(toks).as("gram"))

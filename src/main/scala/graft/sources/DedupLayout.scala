@@ -15,17 +15,16 @@ import LogCompaction.{storeExists, writeBase, writeBatch}
   * [[VectorLayout.append]] (corpora GROW; a 100 TB pipeline cannot
   * re-mine candidate pairs from scratch per crawl batch).
   *
-  * Five parquet stores under one root: the band-signature store
+  * Four parquet stores under one root: the band-signature store
   * (doc_id, band, key), the exact-shingle store (doc_id, sh), the
-  * candidate-pair store (doc_a, doc_b), the SYMMETRIC EDGE VIEW of the
-  * pairs partitioned by a hash bucket of `src` (the label-refresh scan
-  * path — see below), and the converged cluster labels
-  * (doc_id, cluster_id). [[materialize]] builds all five from a
+  * candidate-pair store (doc_a, doc_b), and the converged cluster
+  * labels (doc_id, cluster_id). [[materialize]] builds all four from a
   * document set with the SAME machinery the registered queries use
-  * (native minhash → banded keys → capped self-join → delta-iteration
-  * fixpoint), so the from-scratch pair store is set-identical to the
-  * oracle-checked `dedup_minhash_pairs`. [[append]] then grows the
-  * index per arrival batch at RECTANGLE cost, never re-mining:
+  * (native minhash → banded keys → capped self-join →
+  * [[DedupQueries.components]]), so the from-scratch pair store is
+  * set-identical to the oracle-checked `dedup_minhash_pairs` and the
+  * labels to `dedup_clusters`. [[append]] then grows the index per
+  * arrival batch at RECTANGLE cost, never re-mining:
   *
   *   - arrivals shingle + band once (one pass over the batch);
   *   - new candidates come from ONE equi-join of the arrival bands
@@ -35,12 +34,10 @@ import LogCompaction.{storeExists, writeBase, writeBatch}
   *     self-join cap exists for;
   *   - all stores extend by parquet append, touching no existing file.
   *
-  * After an append, [[refreshLabels]] resumes the cluster fixpoint
-  * WARM — stored labels as the start state, only the new edges'
-  * endpoints as the frontier — and reads the edge store PRUNED to the
-  * hash buckets of the affected components (round-7 judge top ask: the
-  * refresh used to rebuild the symmetric view from the FULL pair
-  * store, the one corpus-sized artifact, every refresh). Arrival
+  * After an append, [[refreshLabels]] brings the labels up to date on
+  * the LABEL GRAPH: the new pairs mapped through the stored labels, so
+  * it reads only the delta pairs and the labels, never the
+  * corpus-sized pair store. Arrival
   * doc_ids must be NEW: [[append]] refuses an id already present in
   * the shingle-store prefix (a re-appended id would silently duplicate
   * its shingle/band rows and corrupt pair mining) while a replay of
@@ -52,7 +49,6 @@ object DedupLayout {
   private def bandsDir(root: String) = root.stripSuffix("/") + "/bands"
   private def shinglesDir(root: String) = root.stripSuffix("/") + "/shingles"
   private def pairsDir(root: String) = root.stripSuffix("/") + "/pairs"
-  private def edgesDir(root: String) = root.stripSuffix("/") + "/edges"
   private def labelsDir(root: String) = root.stripSuffix("/") + "/labels"
   private def labelsMetaDir(root: String) =
     root.stripSuffix("/") + "/labels__covered"
@@ -68,37 +64,30 @@ object DedupLayout {
   private val BatchCol = LogCompaction.BatchCol
   private val BaseBatch = LogCompaction.BaseBatch
 
-  /** Second partition level of the edge store: `pmod(hash(src), N)`.
-    * A warm [[refreshLabels]] collects the bucket ids of the affected
-    * components (≤ [[EdgeBuckets]] ints — model-sized, the
-    * [[VectorLayout.probeQuerySet]] collect contract) and reads the
-    * store with a literal `isin` — partition pruning lists only those
-    * directories, so a refresh whose frontier touches a few components
-    * scans a few buckets, not the corpus-sized pair artifact. At 100 TB
-    * the bucket count scales up with the corpus (more, smaller
-    * partitions); 32 keeps local[32] file counts sane.
+  /** Delete the `edges` store a root written by an earlier layout still
+    * holds: a symmetric copy of the pair store that the label refresh
+    * used to scan. Nothing reads it; [[materialize]] and [[compact]]
+    * delete it.
     */
-  private[graft] val EdgeBuckets = 32
-
-  private def srcBucket = pmod(hash(col("src")), lit(EdgeBuckets))
+  private def dropEdges(spark: SparkSession, root: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(root.stripSuffix("/") + "/edges")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
 
   /** Declared schemas for every store read. Inferring a parquet schema
     * reads file footers in a Spark job, so a declared schema keeps
-    * building a store's DataFrame job-free. The pair and edge stores
-    * also NEED one: a dup-free corpus (or any clean arrival batch) mines
-    * zero pairs, and Spark cannot infer a schema from a fileless parquet
-    * dir. Partition columns included: `__batch_id` (and the edge
-    * store's `src_bucket`) must be declared for partition discovery to
-    * type them when declared-schema reads meet a populated store.
+    * building a store's DataFrame job-free. The pair store also NEEDS
+    * one: a dup-free corpus (or any clean arrival batch) mines zero
+    * pairs, and Spark cannot infer a schema from a fileless parquet dir.
+    * Partition columns included: `__batch_id` must be declared for
+    * partition discovery to type it when declared-schema reads meet a
+    * populated store.
     * DedupConstructionSpec checks each against the inferred schema of a
     * materialized root.
     */
   private[graft] val PairsSchema = StructType(Seq(
     StructField("doc_a", LongType), StructField("doc_b", LongType),
     StructField(BatchCol, LongType)))
-  private[graft] val EdgesSchema = StructType(Seq(
-    StructField("src", LongType), StructField("dst", LongType),
-    StructField("src_bucket", IntegerType), StructField(BatchCol, LongType)))
   private[graft] val ShinglesSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("sh", ArrayType(StringType)),
     StructField(BatchCol, LongType)))
@@ -110,53 +99,28 @@ object DedupLayout {
   private[graft] val LabelsMetaSchema = StructType(Seq(
     StructField("covered_batch", LongType)))
 
-  /** The edge store's partition spec, in directory order. */
-  private val EdgeParts = Seq(BatchCol, "src_bucket")
-
   private def shingled(spark: SparkSession, docs: DataFrame): DataFrame =
     Tables.spread(spark, docs).select(col("doc_id"),
       call_function("graft_shingles", T.tokens(col("text")),
         lit(DedupQueries.ShingleN)).as("sh"))
 
-  /** Both directions of a pair set, stamped with the src hash bucket —
-    * the rows the edge store persists.
-    */
-  private def symmetrized(pairs: DataFrame): DataFrame =
-    pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .withColumn("src_bucket", srcBucket)
-
   /** One-time build over `docs` (doc_id, text): bands, shingles, the
-    * capped self-join candidate pairs, the bucketed edge view, and the
-    * converged cluster labels.
+    * capped self-join candidate pairs, and the converged cluster labels.
     */
   def materialize(spark: SparkSession, docs: DataFrame, root: String): Unit = {
     // a fresh rebuild writes real base batches: a surviving compaction
     // marker from the root's previous life would filter them out (and
     // the next compact's resweep would DELETE them) — wipe it first
     LogCompaction.reset(spark, root)
+    dropEdges(spark, root)
     // seed the id-authority so the FIRST append is already bloom-guarded
     IdAuthority.recordBase(spark, root, docs.select(col("doc_id")), BaseBatch)
     writeBase(shingled(spark, docs), shinglesDir(root))
     writeBase(DedupQueries.lshBandsOver(shingles(spark, root)), bandsDir(root))
     writeBase(DedupQueries.bandPairsCapped(bands(spark, root),
       DedupQueries.MaxBucket), pairsDir(root))
-    writeBase(symmetrized(pairs(spark, root)), edgesDir(root), EdgeParts)
-    coldLabels(spark, root, coveredBatch = BaseBatch)
-  }
-
-  /** The cold fixpoint over the full edge store — the base build's label
-    * pass, and the label bootstrap of a pure-streaming root that never
-    * ran [[materialize]].
-    */
-  private def coldLabels(spark: SparkSession, root: String,
-                         coveredBatch: Long): Unit = {
-    val edges = edgesView(spark, root, buckets = None).localCheckpoint()
-    val init = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    writeLabels(DedupQueries.propagateLabels(edges, init, init),
-      coveredBatch, root)
+    writeLabels(DedupQueries.components(pairs(spark, root)),
+      coveredBatch = BaseBatch, root)
   }
 
   /** Labels land with a WATERMARK: the highest pair batch they cover.
@@ -166,10 +130,9 @@ object DedupLayout {
     */
   private def writeLabels(labels: DataFrame, coveredBatch: Long,
                           root: String): Unit = {
-    // the propagation result is eagerly checkpointed, so overwriting the
-    // store it was warm-started from cannot read-while-write
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
-      .write.mode("overwrite").parquet(labelsDir(root))
+    // (doc_id, cluster_id), eagerly checkpointed by every caller that
+    // read the label store, so overwriting it cannot read-while-write
+    labels.write.mode("overwrite").parquet(labelsDir(root))
     val s = labels.sparkSession
     import s.implicits._
     Seq(coveredBatch).toDF("covered_batch").coalesce(1)
@@ -179,9 +142,8 @@ object DedupLayout {
   /** Grow the index with an arrival batch (doc_id, text): new
     * candidates are every (arrival, existing-or-arrival) pair sharing a
     * band key, emitted id-ordered and deduplicated — exactly the pairs
-    * a from-scratch rebuild would add. Returns the new pairs (eagerly
-    * materialized) for observability; [[refreshLabels]] derives its own
-    * frontier from the store's batch watermark.
+    * a from-scratch rebuild would add. [[refreshLabels]] later reads the
+    * new pairs back by the store's batch watermark.
     *
     * `batchId` must be MONOTONICALLY increasing across appends (a
     * streaming sink passes the micro-batch id, which is; a batch
@@ -207,7 +169,7 @@ object DedupLayout {
     * batches join.
     */
   def append(spark: SparkSession, arrivals: DataFrame, root: String,
-             batchId: Long): DataFrame = {
+             batchId: Long): Unit = {
     // compaction finalizes the log below its watermark: a batch id at or
     // below it has no per-batch partition left to rewrite idempotently.
     // ONE marker fetch threads through every store read below — one
@@ -244,126 +206,104 @@ object DedupLayout {
         .select(least(col("n.doc_id"), col("u.doc_id")).as("doc_a"),
           greatest(col("n.doc_id"), col("u.doc_id")).as("doc_b"))
         .distinct()
-        .localCheckpoint()
       writeBatch(newSh, batchId, shinglesDir(root))
       writeBatch(newPairs, batchId, pairsDir(root))
-      writeBatch(symmetrized(newPairs), batchId, edgesDir(root), EdgeParts)
       writeBatch(newBands, batchId, bandsDir(root))
-      newPairs
     } finally IdAuthority.completeAppend(spark, root)
     // ^ the writer lease guardAndRecord left held spans every log
     // write above — released here (or kept by a process crash, which
     // is the two-records-ahead protection; see IdAuthority.LeaseName)
   }
 
-  /** The edge-store hash buckets a warm refresh must read: every node
-    * of every stored cluster that a new pair touches, plus the new
-    * endpoints themselves. Propagation can only change labels inside
-    * components connected to a new edge (min-label propagation is a
-    * no-op on a component whose edges and labels are already at the
-    * fixpoint), and any old cluster merged by this delta contains an
-    * endpoint of some new pair — so edges outside these buckets can
-    * never carry a changed label. Returns ≤ [[EdgeBuckets]] ints: the
-    * collect is bucket-count-sized, never data-sized.
-    */
-  private[graft] def frontierBuckets(spark: SparkSession, root: String,
-                                     newPairs: DataFrame): Seq[Int] = {
-    val touched = newPairs.select(col("doc_a").as("node"))
-      .unionByName(newPairs.select(col("doc_b").as("node"))).distinct()
-    val old = labels(spark, root)
-      .select(col("doc_id").as("node"), col("cluster_id").as("label"))
-    val affectedClusters = old.join(touched, Seq("node"), "left_semi")
-      .select(col("label")).distinct()
-    val affected = old.join(affectedClusters, Seq("label"), "left_semi")
-      .select(col("node"))
-      .unionByName(touched)
-    affected
-      .select(pmod(hash(col("node")), lit(EdgeBuckets)).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-  }
-
-  /** The symmetric edge view, optionally PRUNED to a literal bucket
-    * list — `src_bucket` is a partition directory, so the filter is
-    * metadata pruning (`PartitionFilters` in the plan, asserted by
-    * DedupLayoutSpec): unprobed buckets' files are never listed.
-    */
-  private[graft] def edgesView(spark: SparkSession, root: String,
-                               buckets: Option[Seq[Int]]): DataFrame = {
-    val t = LogCompaction.view(
-      spark.read.schema(EdgesSchema).parquet(edgesDir(root)),
-      LogCompaction.marker(spark, root))
-    buckets.fold(t)(bs => t.filter(col("src_bucket").isin(bs: _*)))
-      .drop(BatchCol, "src_bucket")
-  }
-
-  /** Warm-start incremental clustering: resume the label-propagation
-    * fixpoint from the STORED labels. The frontier is derived
-    * STRUCTURALLY — every pair batch after the labels' covered
-    * watermark contributes its endpoints — so correctness never
-    * depends on a caller assembling the right delta (round-7 review
-    * finding: a caller passing only the LAST append's pairs after two
-    * appends would get silently wrong clusters). Per-iteration JOIN
-    * work scales with the changed neighborhood, not the graph (the
-    * cold fixpoint's round 0 is every node), and the edge scan reads
-    * ONLY the affected components' hash-bucket partitions of the edge
-    * store ([[frontierBuckets]] — the round-7 judge top ask; the
-    * refresh no longer touches the full pair artifact). Handles
-    * cluster MERGES: a bridge pair lets the smaller cluster-min flow
-    * across, and each changed node re-enters the frontier until the
-    * old cluster interior is relabeled (monotone min-propagation from
-    * any state ≥ the fixpoint converges to the same components as a
-    * cold run). A refresh with nothing new is a no-op; a root that
-    * never ran [[materialize]] (pure-streaming bootstrap) gets the
-    * cold fixpoint.
+  /** Bring the labels up to date with every pair batch after their
+    * covered watermark, working on the LABEL GRAPH instead of the pair
+    * graph. The delta is derived STRUCTURALLY — every pair batch in
+    * (`covered`, `maxBatch`] — so correctness never depends on a caller
+    * assembling the right delta (a caller passing only the LAST append's
+    * pairs after two appends would get silently wrong clusters).
+    *
+    *   1. Map both endpoints of each delta pair through the stored
+    *      labels; an unlabelled endpoint stands for itself. Drop the
+    *      self-loops (pairs inside one stored cluster).
+    *   2. [[DedupQueries.components]] over what is left: its nodes are
+    *      stored cluster ids and new endpoints, and each gets the
+    *      minimum of its merged component.
+    *   3. Relabel: a stored document takes its cluster's new minimum;
+    *      a new endpoint takes its own component label.
+    *
+    * A stored cluster's id IS its minimum doc id, so the merged
+    * minimum over cluster ids and new endpoints is the minimum over
+    * every document the merge joins: the result equals a cold
+    * [[DedupQueries.components]] over the whole pair store
+    * (DedupLayoutSpec checks bridges, lower-id joiners and chains
+    * across batches). The refresh reads only the delta's partitions of
+    * the pair store and the labels. A refresh with nothing new is a
+    * no-op; a root that never ran [[materialize]] (pure-streaming
+    * bootstrap) gets the cold build.
     */
   def refreshLabels(spark: SparkSession, root: String,
                     upToBatch: Option[Long] = None): Unit = {
     if (!storeExists(spark, pairsDir(root))) return // empty root: nothing to label
     val mk = LogCompaction.marker(spark, root)
     // the covered watermark anchors on the BAND store — the store
-    // [[append]] writes LAST, so a listed batch has its pairs AND edges
-    // fully on disk. Anchoring on the pair store could advance `covered`
-    // past a torn concurrent append (pairs landed, edges not yet) and
-    // the skipped merges would never re-enter a delta. The listing is a
-    // metadata op, not a Spark job, and marker-aware: a fully folded
-    // store reports the compaction watermark, never a generation id.
+    // [[append]] writes LAST, so a listed batch has its pairs fully on
+    // disk. Anchoring on the pair store could advance `covered` past a
+    // torn concurrent append and the skipped merges would never
+    // re-enter a delta. The listing is a metadata op, not a Spark job,
+    // and marker-aware: a fully folded store reports the compaction
+    // watermark, never a generation id.
     val complete = LogCompaction.effectiveMaxBatch(spark, bandsDir(root), mk)
       .getOrElse(return)
     // a bounded refresh (compact's beforeFold) covers exactly the fold
     val maxBatch = upToBatch.fold(complete)(math.min(_, complete))
     if (!storeExists(spark, labelsMetaDir(root))) {
-      coldLabels(spark, root, coveredBatch = maxBatch)
+      writeLabels(DedupQueries.components(readStore(spark, pairsDir(root),
+        PairsSchema, mk, beforeBatch = Some(maxBatch + 1))),
+        coveredBatch = maxBatch, root)
       return
     }
     val covered = coveredBatch(spark, root)
     if (maxBatch <= covered) return
-    val newPairs = readStore(spark, pairsDir(root), PairsSchema, mk,
-      beforeBatch = Some(maxBatch + 1),
-      afterBatch = Some(covered)).localCheckpoint()
-    val edges = edgesView(spark, root,
-      buckets = Some(frontierBuckets(spark, root, newPairs))).localCheckpoint()
-    val old = labels(spark, root)
-      .select(col("doc_id").as("node"), col("cluster_id").as("label"))
-    val fresh = edges.select(col("src").as("node")).distinct()
-      .join(old.select("node"), Seq("node"), "left_anti")
-      .select(col("node"), col("node").as("label"))
-    val init = old.unionByName(fresh).localCheckpoint()
-    val touched = newPairs.select(col("doc_a").as("node"))
-      .union(newPairs.select(col("doc_b").as("node"))).distinct()
-    val frontier0 = init.join(touched, Seq("node"))
-    writeLabels(DedupQueries.propagateLabels(edges, init, frontier0),
+    val delta = readStore(spark, pairsDir(root), PairsSchema, mk,
+      beforeBatch = Some(maxBatch + 1), afterBatch = Some(covered))
+    writeLabels(relabel(labels(spark, root), delta).localCheckpoint(),
       coveredBatch = maxBatch, root)
   }
 
+  /** Steps 1–3 of [[refreshLabels]]: the stored labels `old`
+    * (doc_id, cluster_id) brought up to date with the `delta` pairs
+    * (doc_a, doc_b), as (doc_id, cluster_id).
+    */
+  private[graft] def relabel(old: DataFrame, delta: DataFrame): DataFrame = {
+    def end(c: String) = old.select(col("doc_id").as(s"${c}_id"),
+      col("cluster_id").as(s"${c}_c"))
+    val graph = delta
+      .join(end("a"), col("doc_a") === col("a_id"), "left_outer")
+      .join(end("b"), col("doc_b") === col("b_id"), "left_outer")
+      .select(coalesce(col("a_c"), col("doc_a")).as("doc_a"),
+        coalesce(col("b_c"), col("doc_b")).as("doc_b"))
+      .filter(col("doc_a") =!= col("doc_b"))
+    // a stored cluster id is a stored doc whose own label is itself, so
+    // the right-only rows of this outer join are exactly the new
+    // endpoints
+    val merged = DedupQueries.components(graph)
+      .select(col("doc_id").as("node"), col("cluster_id").as("label"))
+    old.join(merged, col("cluster_id") === col("node"), "full_outer")
+      .select(coalesce(col("doc_id"), col("node")).as("doc_id"),
+        coalesce(col("label"), col("cluster_id")).as("cluster_id"))
+  }
+
   /** Fold the finalized log prefix into one generation partition per
-    * store — the [[LogCompaction]] protocol over all four
-    * batch-partitioned stores (shingles, bands, pairs, edges; labels
-    * are a plain overwrite store and need no folding). A long-lived
+    * store — the [[LogCompaction]] protocol over all three
+    * batch-partitioned stores (shingles, bands, pairs; labels are a
+    * plain overwrite store and need no folding). A long-lived
     * [[graft.streaming.DedupStream]] ingest accretes one partition per
     * micro-batch per store; compaction restores big-file scans while
     * keeping every read entry — including [[append]]'s prefix mining
-    * and [[refreshLabels]]'s bucket-pruned edge scan — byte-equivalent
+    * and [[refreshLabels]]'s delta read — byte-equivalent
     * (LogCompactionSpec proves pairs/labels/future-appends identical).
+    * It also deletes the `edges` store a root from an earlier layout
+    * still holds.
     *
     * Labels are refreshed BOUNDED TO THE FOLD before it runs: the
     * covered watermark must reach every folded pair ([[refreshLabels]]
@@ -371,10 +311,9 @@ object DedupLayout {
     * would vanish from it) but must NOT overtake it — an unbounded
     * refresh racing a live ingest could cover tail batches this fold
     * leaves as per-batch partitions, which is fine, but bounding keeps
-    * the two watermarks in lockstep and the reasoning local. Flat
-    * stores fold with a shuffle-free coalesce; the edge store
-    * re-buckets by `src_bucket` (one file per bucket dir — the shape
-    * its pruned reads want). Returns the new watermark.
+    * the two watermarks in lockstep and the reasoning local. Every
+    * store folds with a shuffle-free coalesce. Returns the new
+    * watermark.
     *
     * Under a live ingest: bound `upToBatch` below the tail AND pass
     * `sweepNow = false` — the marker flip is reader-safe, deleting the
@@ -384,6 +323,7 @@ object DedupLayout {
   def compact(spark: SparkSession, root: String,
               upToBatch: Option[Long] = None,
               sweepNow: Boolean = true): Long = {
+    dropEdges(spark, root)
     val w = LogCompaction.run(spark, root, watermarkDir = bandsDir(root),
       stores = compactStores(root), upToBatch = upToBatch,
       sweepNow = sweepNow,
@@ -403,9 +343,7 @@ object DedupLayout {
   private def compactStores(root: String): Seq[LogCompaction.StoreSpec] = Seq(
     LogCompaction.StoreSpec(shinglesDir(root), schema = Some(ShinglesSchema)),
     LogCompaction.StoreSpec(bandsDir(root), schema = Some(BandsSchema)),
-    LogCompaction.StoreSpec(pairsDir(root), schema = Some(PairsSchema)),
-    LogCompaction.StoreSpec(edgesDir(root), EdgeParts,
-      _.repartition(col("src_bucket")), schema = Some(EdgesSchema)))
+    LogCompaction.StoreSpec(pairsDir(root), schema = Some(PairsSchema)))
 
   def labels(spark: SparkSession, root: String): DataFrame =
     spark.read.schema(LabelsSchema).parquet(labelsDir(root))
@@ -445,11 +383,11 @@ object DedupLayout {
       LogCompaction.marker(spark, root), None)
 
   /** Read-only integrity report of the whole dedup layout — the
-    * [[graft.Doctor]] leg: the four batch logs via the shared
+    * [[graft.Doctor]] leg: the three batch logs via the shared
     * [[LogCompaction.fsckLog]], the id-authority sidecar cross-checked
     * against the shingle log (the prefix [[append]] guards on), and
     * the label store's covered-batch invariant. Labels may TRAIL the
-    * edge log (a pending [[refreshLabels]] is the normal state between
+    * pair log (a pending [[refreshLabels]] is the normal state between
     * maintenance runs) but can never LEAD it — labels claiming a batch
     * the store does not hold are from another root's life.
     */
@@ -457,7 +395,7 @@ object DedupLayout {
     val mk = LogCompaction.marker(spark, root)
     val logRows = Seq(
       "shingles" -> shinglesDir(root), "bands" -> bandsDir(root),
-      "pairs" -> pairsDir(root), "edges" -> edgesDir(root)).flatMap {
+      "pairs" -> pairsDir(root)).flatMap {
       case (n, d) => LogCompaction.fsckLog(spark, d, mk)
         .map { case (c, s, det) => (s"$n.$c", s, det) }
     }
@@ -480,10 +418,10 @@ object DedupLayout {
         case scala.util.Success(covered) =>
           // compare against the BAND store — the same anchor
           // refreshLabels advances `covered` from (the store append
-          // writes LAST). The edge store is the WRONG yardstick: a
-          // batch that mines zero pairs writes no edges partition
+          // writes LAST). The pair store is the WRONG yardstick: a
+          // batch that mines zero pairs writes no pairs partition
           // (dynamic overwrite of zero rows), so a healthy dup-free
-          // root routinely has covered > edges-max
+          // root routinely has covered > pairs-max
           LogCompaction.effectiveMaxBatch(spark, bandsDir(root), mk) match {
             case Some(mb) if covered > mb =>
               Seq(("labels", "fail",

@@ -46,7 +46,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * hundreds of millions to tens of billions of ids, where one task
   * and one broadcast would each hold gigabytes — the record is a
   * parquet DIRECTORY of per-shard blooms keyed by
-  * `pmod(hash(id), nshards)` (the [[DedupLayout]] EdgeBuckets idiom):
+  * `pmod(hash(id), nshards)`:
   * each shard builds in its own task (`groupByKey` over the shard
   * key), probes `cogroup` arrivals against bloom rows so a task
   * deserializes only its own shard, and merges are per-shard jobs —

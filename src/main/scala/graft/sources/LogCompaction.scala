@@ -407,7 +407,7 @@ object LogCompaction {
         val expect = compactedId(mk.gen)
         // A store whose foldable set was EMPTY writes no generation
         // partition (dynamic overwrite of zero rows — e.g. a dup-free
-        // corpus mines no pairs/edges under the dedup root's shared
+        // corpus mines no pairs under the dedup root's shared
         // marker), which from the partition listing alone is
         // indistinguishable from a fold whose output was LOST. The
         // protocol therefore leaves evidence: [[foldStore]] writes the

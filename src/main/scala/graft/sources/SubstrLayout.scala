@@ -62,7 +62,7 @@ object SubstrLayout {
     * materialize writes only _SUCCESS; presence/marker rows cover the
     * all-SHORT-doc case but not the no-doc one) and Spark cannot infer
     * a schema from a fileless parquet dir; every read declares instead
-    * of inferring (the DedupLayout pairs/edges precedent).
+    * of inferring (the DedupLayout pairs precedent).
     */
   private val FpSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("pos", LongType),

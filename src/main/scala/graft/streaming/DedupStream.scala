@@ -27,9 +27,10 @@ import graft.sources.DedupLayout
   * (or on a schedule) via [[DedupLayout.refreshLabels]] —
   * [[graft.StoreMaintain]] is the scheduled job that runs it, then
   * folds this stream's accreted batch partitions
-  * ([[DedupLayout.compact]]). It reads the
-  * labels' covered-batch watermark and warm-starts from every pair
-  * batch after it, so the call needs no delta from the stream.
+  * ([[DedupLayout.compact]]). The refresh reads the labels'
+  * covered-batch watermark, maps every pair batch after it through the
+  * stored labels and solves only that label graph, so the call needs
+  * no delta from the stream and never rescans the whole pair store.
   * Per-batch label refresh would serialize the fixpoint into the hot
   * ingest path for no freshness a curator needs.
   */

@@ -136,4 +136,16 @@ class BenchSpec extends SparkSpec {
     assert(Profile.stageLabel("parquet at LogCompaction.scala:88", None) ===
       "parquet at LogCompaction.scala:88")
   }
+
+  test("Profile appends the stage's operation scopes, so one query's stages differ") {
+    val site = Some("count at Profile.scala:48")
+    val labels = Seq(Seq("Exchange", "WholeStageCodegen (3)", "Scan parquet"),
+      Seq("BroadcastExchange"), Seq("WholeStageCodegen (5)"))
+      .map(Profile.stageLabel("ignored", site, _))
+    assert(labels === Seq(
+      "count at Profile.scala:48 [Exchange < WholeStageCodegen (3) < Scan parquet]",
+      "count at Profile.scala:48 [BroadcastExchange]",
+      "count at Profile.scala:48 [WholeStageCodegen (5)]"))
+    assert(Profile.stageLabel("ignored", site, Nil) === "count at Profile.scala:48")
+  }
 }

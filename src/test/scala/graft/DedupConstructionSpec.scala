@@ -29,7 +29,7 @@ class DedupConstructionSpec extends SparkSpec {
     // read drops it
     def dataColumns(df: org.apache.spark.sql.DataFrame) = df.drop("__batch_id").schema
     Seq("shingles" -> DedupLayout.ShinglesSchema, "bands" -> DedupLayout.BandsSchema,
-      "pairs" -> DedupLayout.PairsSchema, "edges" -> DedupLayout.EdgesSchema,
+      "pairs" -> DedupLayout.PairsSchema,
       "labels" -> DedupLayout.LabelsSchema,
       "labels__covered" -> DedupLayout.LabelsMetaSchema).foreach { case (store, declared) =>
       val dir = s"$root/$store"

@@ -146,7 +146,7 @@ class DoctorSpec extends SparkSpec {
   test("a legitimately EMPTY fold under a live tail is receipted ok, not a loss") {
     import spark.implicits._
     // the round-10 advice false-positive: a dup-free corpus mines no
-    // pairs/edges, so their folds cover zero rows and write no
+    // pairs, so its fold covers zero rows and writes no
     // generation partition; when LATER batches mine pairs (live tail
     // above the watermark), the missing generation used to read as
     // "history unreadable" — Doctor exiting non-zero on a healthy
@@ -163,7 +163,7 @@ class DoctorSpec extends SparkSpec {
     DedupLayout.append(spark, docs(
       4L -> "five six seven eight nine ten eleven twelve thirteen fourteen"),
       dedupRoot, batchId = 1L)
-    DedupLayout.compact(spark, dedupRoot) // pairs/edges folds are empty
+    DedupLayout.compact(spark, dedupRoot) // the pairs fold is empty
     // a later arrival DUPLICATES batch 1's text: pairs gains a live
     // partition above the watermark — the exact ambiguous shape
     DedupLayout.append(spark, docs(
@@ -215,5 +215,35 @@ class DoctorSpec extends SparkSpec {
     assert(rows.exists(r => r._1 == "dedup" && r._2 == "pairs.generation" &&
       r._3 == "fail" && r._4.contains("unreadable")),
       s"lost fold must fail: ${rows.filter(_._1 == "dedup")}")
+  }
+
+  test("an earlier layout's edges store is ignored, then deleted by compact") {
+    import spark.implicits._
+    val r4 = Files.createTempDirectory("graft-doctor4").toString
+    val dedupRoot = StoreBuild.dedupLayoutDir(r4)
+    val docs = Tables.documents(spark, Sf).select(col("doc_id"), col("text"))
+    DedupLayout.materialize(spark, docs.filter(col("doc_id") % 4 =!= 0), dedupRoot)
+    DedupLayout.append(spark, docs.filter(col("doc_id") % 4 === 0), dedupRoot, batchId = 0L)
+    // the symmetric, src-bucketed pair copy an earlier layout kept,
+    // partitioned by batch and bucket
+    val edges = dedupRoot + "/edges"
+    DedupLayout.pairs(spark, dedupRoot)
+      .select(explode(array(struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .withColumn("src_bucket", pmod(hash(col("src")), lit(32)))
+      .withColumn("__batch_id", lit(-1L))
+      .write.partitionBy("__batch_id", "src_bucket").parquet(edges)
+    val scratch = Files.createTempDirectory("graft-doctor4-full").toString
+    DedupLayout.materialize(spark, docs, scratch)
+    def labelSet(r: String) = DedupLayout.labels(spark, r).as[(Long, Long)].collect().toSet
+
+    DedupLayout.refreshLabels(spark, dedupRoot)
+    assert(labelSet(dedupRoot) === labelSet(scratch),
+      "labels over a root with an edges store drifted from the cold build")
+    DedupLayout.compact(spark, dedupRoot)
+    assert(!new java.io.File(edges).exists(), "compact must delete the edges store")
+    assert(Doctor.run(spark, Seq(r4), _ => ()) === 0)
+    assert(labelSet(dedupRoot) === labelSet(scratch))
   }
 }

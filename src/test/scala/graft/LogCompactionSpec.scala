@@ -70,7 +70,7 @@ class LogCompactionSpec extends SparkSpec {
 
     // disk parity: every store is ONE generation partition, the planted
     // garbage and crashed stage are swept
-    for (store <- Seq("shingles", "bands", "pairs", "edges")) {
+    for (store <- Seq("shingles", "bands", "pairs")) {
       assert(batchDirs(s"$root/$store") === Seq("__batch_id=-2"),
         s"$store not folded to the single generation partition: " +
           batchDirs(s"$root/$store").mkString(","))

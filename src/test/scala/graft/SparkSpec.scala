@@ -1,6 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -17,14 +19,20 @@ trait SparkSpec extends AnyFunSuite {
   /** Spark jobs `body` starts on this thread (its own job group), counted
     * once the listener bus has delivered every event.
     */
-  def jobsDuring(body: => Unit): Int = {
+  def jobsDuring(body: => Unit): Int = jobSitesDuring(body).size
+
+  /** The call site of each job `body` starts (its result stage's name,
+    * e.g. `count at DedupQueries.scala:288`), in start order —
+    * [[jobsDuring]] with the jobs named.
+    */
+  def jobSitesDuring(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
     val group = "spec-jobs-" + java.util.UUID.randomUUID()
-    val jobs = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+          jobs.add(e.stageInfos.maxByOption(_.stageId).fold("")(_.name)) // the result stage
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, s"${getClass.getSimpleName} job count")
@@ -34,7 +42,7 @@ trait SparkSpec extends AnyFunSuite {
       ListenerBusDrain(sc)
       sc.removeSparkListener(listener)
     }
-    jobs.get
+    jobs.asScala.toSeq
   }
 
   /** Run `body` under temporary session confs, restoring the previous
