@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.sources.{DedupLayout, SubstrLayout, TextLayout, VectorLayout}
-
 /** Store fsck — the read-only third leg of the store lifecycle
   * tooling: [[StoreBuild]] lays the artifacts down, [[StoreMaintain]]
   * keeps them healthy between ingests, and this job tells an operator
@@ -42,7 +40,8 @@ object Doctor {
 
   /** (family, check, status, detail) for every check of every store
     * family under `root` (the same root [[StoreBuild]]/[[StoreMaintain]]
-    * take).
+    * take): each [[Families.registry]] entry's `fsck`, tagged with the
+    * family's name, in registry order.
     */
   def check(spark: SparkSession, root: String): Seq[(String, String, String, String)] = {
     // per-family isolation: a diagnostic tool is run precisely when a
@@ -57,10 +56,7 @@ object Doctor {
             s"fsck itself crashed (${e.getClass.getSimpleName}: ${e.getMessage}) — " +
               "the store is damaged in a shape the checks could not read"))
       }
-    tag("dedup", DedupLayout.fsck(spark, StoreBuild.dedupLayoutDir(root))) ++
-      tag("text", TextLayout.fsck(spark, StoreBuild.textLayoutDir(root))) ++
-      tag("substr", SubstrLayout.fsck(spark, StoreBuild.substrLayoutDir(root))) ++
-      tag("vectors", VectorLayout.fsck(spark, StoreBuild.vectorLayoutDir(root)))
+    Families.registry.flatMap(f => tag(f.name, f.fsck(spark, f.dir(root))))
   }
 
   /** The one leg [[check]] cannot reach from the root: a streaming

@@ -40,26 +40,19 @@ object StoreBuild {
   def substrLayoutDir(root: String): String =
     root.stripSuffix("/") + "/substr.layout"
 
-  /** Run every builder against `root`; returns (name, seconds) lines. */
+  /** Run every builder against `root`; returns (name, seconds) lines.
+    * The store families' bases ([[Families.registry]]) run last, each
+    * over its whole corpus (read once per corpus), the vector layout
+    * first as it always has (CurationStoreSpec pins the order).
+    */
   def buildAll(spark: SparkSession, sfDir: String,
                root: String): Seq[(String, Double)] = {
     spark.conf.set(CacheLife.RootKey, root)
-    val docs = Tables.documents(spark, sfDir)
-      .select(org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.col("text"))
+    lazy val corpus = Families.corpora.map(c => c -> c.read(spark, sfDir)).toMap
     val builders =
       SparkEntry.indexBuilders(spark, sfDir) ++
-      Seq(
-        "sim.vector_layout" -> (() =>
-          sources.VectorLayout.materialize(spark, sfDir, vectorLayoutDir(root))),
-        // the incremental stores' BASES: streaming ingest appends to
-        // these roots (DedupStream/TextStream), compaction folds them
-        "dedup.incr_layout" -> (() =>
-          sources.DedupLayout.materialize(spark, docs, dedupLayoutDir(root))),
-        "text.incr_layout" -> (() =>
-          sources.TextLayout.materialize(spark, docs, textLayoutDir(root))),
-        "substr.incr_layout" -> (() =>
-          sources.SubstrLayout.materialize(spark, docs, substrLayoutDir(root))))
+      Families.registry.sortBy(_.corpus != Families.Vecs).map(f =>
+        f.buildName -> (() => f.base(spark, sfDir, corpus(f.corpus), f.dir(root))))
     builders.map { case (name, run) =>
       val t0 = System.nanoTime()
       run()

@@ -6,43 +6,39 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.SimilarityQueries
-import graft.sources.{DedupLayout, SubstrLayout, TextLayout, VectorLayout}
-import graft.streaming.{DedupStream, SubstrStream, TextStream, VectorStream}
 
 /** End-to-end streaming drain at a NAMED corpus scale — the scripted
   * run that backs the design prose in [[sources.LogCompaction]] ("a
   * long-lived ingest accretes one partition per micro-batch; compaction
   * restores big-file scans") with an actual run at the scale it talks
-  * about, instead of only the small-fixture specs:
+  * about, instead of only the small-fixture specs. It walks every
+  * family of [[Families.registry]] through its lifecycle:
   *
-  *   1. bases: each incremental store materializes on 80% of the
-  *      corpus ([[VectorLayout.materializeWhere]] /
-  *      [[DedupLayout.materialize]] / [[TextLayout.materialize]] /
-  *      [[SubstrLayout.materialize]]), and the held-out 20% lands in a
-  *      file landing zone split into N files;
-  *   2. all four ingest streams drain the landing zone, N micro-batches
-  *      each (`maxFilesPerTrigger=1`) ([[DedupStream.ingestSink]],
-  *      [[TextStream.ingestSink]], [[SubstrStream.ingestSink]],
-  *      [[VectorStream.ingestSink]]);
+  *   1. bases: each family's `base` builds its store from 80% of its
+  *      corpus (each corpus is read once), and the held-out 20% of
+  *      each corpus lands in a file landing zone split into N files;
+  *   2. every family's `ingest` stream drains its landing zone, N
+  *      micro-batches each (`maxFilesPerTrigger=1`);
   *   3. [[StoreMaintain.maintainAll]] runs the between-drains
   *      maintenance (label refresh, log compaction, drift read);
   *   4. [[Doctor.run]] fscks the root — the process exit code is the
   *      Doctor's, so a drain that leaves ANY view-breaking state fails
   *      loudly.
   *
-  * The four store families (dedup, text, substr, vectors) share no
-  * directory and no mutable engine state, so each phase overlaps them
-  * through [[Families.all]]: the four bases and the landing write run
-  * side by side; the four streams start together (in family order,
-  * from the calling thread) and drain side by side; maintenance runs
-  * its family blocks side by side. Each phase waits for all of its
-  * families, stops every stream it started, and then rethrows the
-  * first family failure. The Doctor gate stays last and serial.
-  * Thread-safety rules for a family step: it writes only under its own
-  * store root, and it writes no session conf — the one corpus-derived
-  * knob on this path (`ncells=auto`) is pinned before the first fork.
-  * Each `[drain] <step>` line prints when that family's step finishes,
-  * timed from the start of its phase.
+  * The families share no directory and no mutable engine state, so
+  * each phase overlaps them through [[Families.all]]: the bases and the
+  * landing write run side by side; the streams start together (in
+  * registry order, from the calling thread) and drain side by side;
+  * maintenance runs its family blocks side by side. Each phase waits
+  * for all of its families, stops every stream it started, and then
+  * rethrows the first family failure. The Doctor gate stays last and
+  * serial. Thread-safety rules for a family step: it writes only under
+  * its own store root, and it writes no session conf — the one
+  * corpus-derived knob on this path (`ncells=auto`) is pinned before
+  * the first fork. Each `[drain] <step>` line prints when that
+  * family's step finishes, timed from the start of its phase; the
+  * benchmark parses the step names, so they stay fixed (StreamDrainSpec
+  * pins all ten).
   *
   * Usage: `runMain graft.StreamDrain <sfDir> <workRoot> [nBatches]`
   * — the round-10 judge ask is `<sfDir> = testdata_up/sf1` (the 10×
@@ -59,52 +55,30 @@ object StreamDrain {
       println(f"[drain] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
       r
     }
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val vecs = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
-    val holdDocs = pmod(col("doc_id"), lit(5)) === 4
-    val holdVecs = pmod(col("vec_id"), lit(5)) === 4
-    val dedupRoot = StoreBuild.dedupLayoutDir(root)
-    val textRoot = StoreBuild.textLayoutDir(root)
-    val substrRoot = StoreBuild.substrLayoutDir(root)
-    val vecRoot = StoreBuild.vectorLayoutDir(root)
-    val docLanding = root.stripSuffix("/") + "/_landing/docs"
-    val vecLanding = root.stripSuffix("/") + "/_landing/vecs"
+    val corpus = Families.corpora.map(c => c -> c.read(spark, sfDir)).toMap
+    def held(c: Corpus) = pmod(col(c.idCol), lit(5)) === 4
+    def landing(c: Corpus) = root.stripSuffix("/") + s"/_landing/${c.name}"
     // the one session write on the vector path (ncells=auto → K), made
     // before the families fork so none of them writes session conf
     SimilarityQueries.pinAutoNCells(spark, sfDir)
 
-    // 1. bases on the 80% slice, and the held-out slice landed in
-    //    nBatches files each — five independent writers
-    Families.all(Seq(
-      () => timed("base: dedup.materialize")(
-        DedupLayout.materialize(spark, docs.filter(!holdDocs), dedupRoot)),
-      () => timed("base: text.materialize")(
-        TextLayout.materialize(spark, docs.filter(!holdDocs), textRoot)),
-      () => timed("base: substr.materialize")(
-        SubstrLayout.materialize(spark, docs.filter(!holdDocs), substrRoot)),
-      () => timed("base: vectors.materialize")(
-        VectorLayout.materializeWhere(spark, sfDir, vecRoot, !holdVecs)),
-      () => timed("land: held-out slices") {
-        docs.filter(holdDocs).repartition(nBatches)
-          .write.mode("overwrite").parquet(docLanding)
-        vecs.filter(holdVecs).repartition(nBatches)
-          .write.mode("overwrite").parquet(vecLanding)
-      }))
+    // 1. bases on the 80% slices, and the held-out slices landed in
+    //    nBatches files each — independent writers
+    Families.all(Families.registry.map { f => () =>
+      timed(s"base: ${f.name}.materialize")(
+        f.base(spark, sfDir, corpus(f.corpus).filter(!held(f.corpus)), f.dir(root)))
+    } :+ (() => timed("land: held-out slices")(Families.corpora.foreach { c =>
+      corpus(c).filter(held(c)).repartition(nBatches)
+        .write.mode("overwrite").parquet(landing(c))
+    })))
 
-    // 2. the four ingest streams: started in family order from this
-    //    thread (each query runs on its own stream thread), then drained
-    //    side by side; a family whose start failed fails its own drain
+    // 2. the ingest streams: started in registry order from this thread
+    //    (each query runs on its own stream thread), then drained side
+    //    by side; a family whose start failed fails its own drain
     val ckpt = root.stripSuffix("/") + "/_ckpt"
     val t0 = System.nanoTime()
-    val started = Seq(
-      "dedup" -> Try(DedupStream.ingestSink(
-        DedupStream.read(spark, docLanding), dedupRoot, s"$ckpt/dedup")),
-      "text" -> Try(TextStream.ingestSink(
-        TextStream.read(spark, docLanding), textRoot, s"$ckpt/text")),
-      "substr" -> Try(SubstrStream.ingestSink(
-        SubstrStream.read(spark, docLanding), substrRoot, s"$ckpt/substr")),
-      "vector" -> Try(VectorStream.ingestSink(
-        VectorStream.read(spark, vecLanding), sfDir, vecRoot, s"$ckpt/vecs")))
+    val started = Families.registry.map(f => f.stream -> Try(
+      f.ingest(spark, sfDir, landing(f.corpus), f.dir(root), s"$ckpt/${f.checkpoint}")))
     try
       Families.all(started.map { case (name, q) =>
         () => timed(s"drain: $name ingest", t0) {

@@ -3,9 +3,10 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Compaction protocol for the batch-partitioned store logs
-  * ([[DedupLayout]], [[TextLayout]], [[VectorLayout]]).
+  * ([[DocumentLog]]'s three document layouts and [[VectorLayout]]).
   *
   * THE PROBLEM AT SCALE: each streaming micro-batch owns a
   * `__batch_id=<id>` partition — the idempotence device that makes
@@ -266,16 +267,17 @@ object LogCompaction {
   private[sources] val flat: DataFrame => DataFrame =
     df => df.coalesce(df.sparkSession.sessionState.conf.numShufflePartitions)
 
-  /** One store to fold: its dir, its FULL partition spec in directory
-    * order and the file-count shaper ([[foldStore]]), both defaulting
-    * to a flat batch log, and — for stores whose row set can be empty
-    * (a fileless dir defeats schema inference) — the declared read
-    * schema.
+  /** One store to fold: its dir, its declared read schema (partition
+    * columns included), and its FULL partition spec in directory order
+    * and file-count shaper ([[foldStore]]), both defaulting to a flat
+    * batch log. The schema is required: inferring one reads parquet
+    * footers in a Spark job, and a fileless dir (a store whose row set
+    * is empty) cannot be inferred at all.
     */
   final case class StoreSpec(dir: String,
+                             schema: StructType,
                              partitionCols: Seq[String] = Seq(BatchCol),
-                             distribute: DataFrame => DataFrame = flat,
-                             schema: Option[org.apache.spark.sql.types.StructType] = None)
+                             distribute: DataFrame => DataFrame = flat)
 
   /** The whole protocol, once — resolve marker, derive the watermark
     * from `watermarkDir` (the store written LAST per batch, so a listed
@@ -318,8 +320,7 @@ object LogCompaction {
     stores.foreach { s =>
       if (storeExists(spark, s.dir))
         foldStore(spark, s.dir,
-          foldable(s.schema.fold(spark.read)(spark.read.schema)
-            .parquet(s.dir), mk, w).drop(BatchCol),
+          foldable(spark.read.schema(s.schema).parquet(s.dir), mk, w).drop(BatchCol),
           gen, s.partitionCols, s.distribute)
     }
     publish(spark, markerRoot, gen, w)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import graft.Tables
 import graft.operators.SubstrDedup
 
-import LogCompaction.{storeExists, writeBase, writeBatch}
+import LogCompaction.{Marker, StoreSpec, storeExists, writeBase, writeBatch}
 
 /** Incremental WINNOWED-FINGERPRINT store on disk — the substring-dedup
   * twin of [[TextLayout]] (tokens), [[DedupLayout]] (minhash bands),
@@ -40,17 +40,21 @@ import LogCompaction.{storeExists, writeBase, writeBatch}
   * SubstrLayoutSpec plants that shape (base doc unique until a later
   * batch duplicates its passage) and holds append ≡ rebuild.
   *
-  * Idempotence and guards are the family contract verbatim:
+  * Idempotence and guards are the [[DocumentLog]] contract verbatim:
   * fingerprinting is pure per-document, each append dynamic-overwrites
   * its own `__batch_id` partition (redelivery and wiped-checkpoint
-  * replay rewrite byte-identical files), an arrival doc_id already in
-  * the log prefix refuses via the [[IdAuthority]] bloom sidecar (a
-  * re-appended doc would double its hash counts and self-duplicate),
-  * and the [[LogCompaction]] protocol folds the finalized prefix —
-  * count partials are batch-order-invariant sums, so folding changes
-  * bytes on disk and nothing above them.
+  * replay rewrite byte-identical files; SubstrLayoutSpec proves it
+  * with COUNTS), an arrival doc_id already in the log prefix refuses
+  * via the [[IdAuthority]] bloom sidecar (a re-appended doc would
+  * double its hash counts and self-duplicate), and the
+  * [[LogCompaction]] protocol folds the finalized prefix — count
+  * partials are batch-order-invariant sums, so folding changes bytes on
+  * disk and nothing above them.
   */
-object SubstrLayout {
+object SubstrLayout extends DocumentLog("SubstrLayout", "fingerprint-log prefix",
+  // the id prefix is the FINGERPRINT log — the store carrying doc ids,
+  // so a torn append still guards; counts land LAST (the watermark)
+  idLog = "fingerprints", watermarkLog = "counts") {
 
   private val BatchCol = LogCompaction.BatchCol
   private val BaseBatch = LogCompaction.BaseBatch
@@ -71,6 +75,10 @@ object SubstrLayout {
     StructField("h", StringType), StructField("n", LongType),
     StructField(BatchCol, LongType)))
 
+  protected def logs(root: String): Seq[(String, StoreSpec)] = Seq(
+    "fingerprints" -> StoreSpec(fpDir(root), FpSchema),
+    "counts" -> StoreSpec(countsDir(root), CountsSchema))
+
   private def winnowed(spark: SparkSession, docs: DataFrame, w: Int): DataFrame =
     SubstrDedup.winnowFpOver(SubstrDedup.gramsOver(
       Tables.spread(spark, docs.select(col("doc_id"), col("text"))), w))
@@ -84,23 +92,45 @@ object SubstrLayout {
   private def wPinPath(root: String) =
     new org.apache.hadoop.fs.Path(root.stripSuffix("/") + "/_substr_w")
 
-  private[graft] def pinnedW(spark: SparkSession, root: String): Option[Int] = {
+  /** The pin's raw state: None without a pin file, else its parsed
+    * width or — for an empty, garbled or unreadable (torn) file — the
+    * refusal naming it.
+    */
+  private def readPin(spark: SparkSession, root: String): Option[Either[String, Int]] = {
     val f = fs(spark, root)
     val p = wPinPath(root)
     if (!f.exists(p)) None
-    else {
+    else Some(scala.util.Try {
       val in = f.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
       finally in.close()
-    }
+    }.toOption.flatMap(_.toIntOption).filter(_ > 0).toRight(
+      s"SubstrLayout: the window-width pin $p is empty, garbled or unreadable — " +
+        "rewrite it with the width the logs were built at, or rebuild the store"))
   }
 
+  private def orRefuse(pin: Either[String, Int]): Int =
+    pin.fold(e => throw new IllegalStateException(e), identity)
+
+  /** The pinned width; an unparsable pin refuses, naming the file. */
+  private[graft] def pinnedW(spark: SparkSession, root: String): Option[Int] =
+    readPin(spark, root).map(orRefuse)
+
+  /** Replace the pin the [[IdAuthority]] way: write a temp file, delete
+    * the old pin, rename — never an in-place overwrite a crash can tear.
+    */
   private def writeWPin(spark: SparkSession, root: String, w: Int): Unit = {
     val f = fs(spark, root)
-    val out = f.create(wPinPath(root), true)
+    val p = wPinPath(root)
+    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
+      s"._substr_w.tmp-${java.util.UUID.randomUUID()}")
+    val out = f.create(tmp, true)
     try out.write(w.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    if ((f.exists(p) && !f.delete(p, false)) || !f.rename(tmp, p)) {
+      f.delete(tmp, false)
+      throw new java.io.IOException(s"SubstrLayout: failed to publish width pin $p")
+    }
   }
 
   private def fs(spark: SparkSession, path: String) =
@@ -150,10 +180,10 @@ object SubstrLayout {
     */
   private[graft] def leasedW(spark: SparkSession, root: String): Int = {
     val sessionW = SubstrDedup.wOf(spark)
-    (pinnedW(spark, root), storeExists(spark, fpDir(root))) match {
-      case (Some(p), true) => requireW(root, p, sessionW); p
-      case (Some(p), false) =>
-        if (p != sessionW) writeWPin(spark, root, sessionW)
+    (readPin(spark, root), storeExists(spark, fpDir(root))) match {
+      case (Some(p), true) => val w = orRefuse(p); requireW(root, w, sessionW); w
+      case (Some(p), false) => // a garbled pin over no logs re-pins too
+        if (!p.contains(sessionW)) writeWPin(spark, root, sessionW)
         sessionW
       case (None, true) => requireW(root, SubstrDedup.W, sessionW); SubstrDedup.W
       case (None, false) => writeWPin(spark, root, sessionW); sessionW
@@ -172,8 +202,8 @@ object SubstrLayout {
     */
   private def requireLeasedW(spark: SparkSession, root: String): Unit = {
     val sessionW = SubstrDedup.wOf(spark)
-    (pinnedW(spark, root), storeExists(spark, fpDir(root))) match {
-      case (Some(p), true) => requireW(root, p, sessionW)
+    (readPin(spark, root), storeExists(spark, fpDir(root))) match {
+      case (Some(p), true) => requireW(root, orRefuse(p), sessionW)
       case (None, true)    => requireW(root, SubstrDedup.W, sessionW)
       case _               => ()
     }
@@ -224,76 +254,40 @@ object SubstrLayout {
     writeBase(partialsWithMarker(spark, fp), countsDir(root))
   }
 
+  /** A ZERO-doc batch is a no-op recorded NOWHERE: letting it through
+    * would publish a sidecar record (and a counts marker) with no fp
+    * partition, re-creating the records-ahead asymmetry the presence
+    * rows exist to prevent; an empty redelivery is equally empty, so
+    * skipping preserves idempotence.
+    */
+  override protected def admit(arrivals: DataFrame): Option[DataFrame] =
+    Some(arrivals.select(col("doc_id"), col("text")).localCheckpoint()).filterNot(_.isEmpty)
+
+  /** Width refusal runs leased but PRE-record ([[requireLeasedW]]): a
+    * mismatched session must not publish a sidecar record for a batch
+    * whose fp partition will never land.
+    */
+  override protected def preRecord(spark: SparkSession, root: String): Unit =
+    requireLeasedW(spark, root)
+
   /** Fingerprint ONLY the arrival batch into its own partitions of both
-    * logs. Guard contract as [[TextLayout.append]]: a finalized batch id
-    * refuses ([[LogCompaction.guardAppend]]); an arrival doc_id already
-    * in the prefix refuses (bloom sidecar, exact probe on hits; the
-    * prefix is the FINGERPRINT log — the store carrying doc ids — so a
-    * torn append still guards); same-batch-id redelivery passes and
-    * overwrites byte-identically. Works on an EMPTY root: the first
-    * append is the base.
+    * logs (the guarded [[DocumentLog.append]]).
     */
-  def append(spark: SparkSession, arrivals: DataFrame, root: String,
-             batchId: Long): Unit = {
-    val mk = LogCompaction.marker(spark, root)
-    LogCompaction.guardAppend(mk, batchId, "SubstrLayout.append")
-    // a ZERO-doc batch is a no-op recorded NOWHERE: letting it through
-    // would publish a sidecar record (and a counts marker) with no fp
-    // partition, re-creating the records-ahead asymmetry the presence
-    // rows exist to prevent (round-12 review); an empty redelivery is
-    // equally empty, so skipping preserves idempotence
-    val arr = arrivals.select(col("doc_id"), col("text")).localCheckpoint()
-    if (arr.isEmpty) return
-    IdAuthority.guardAndRecord(spark, root, batchId,
-      arr.select(col("doc_id")),
-      priorIds = if (storeExists(spark, fpDir(root)))
-        prefixIds(spark, root, mk, batchId)
-      else arr.limit(0).select(col("doc_id")),
-      who = "SubstrLayout.append", what = "fingerprint-log prefix",
-      // width refusal runs leased but PRE-record ([[requireLeasedW]]):
-      // a mismatched session must not publish a sidecar record for a
-      // batch whose fp partition will never land
-      preRecord = () => requireLeasedW(spark, root))
-    try {
-      // first-append pin (and the crashed-pin re-pin) run HERE, under
-      // the lease the guard left held — the refusal states already
-      // passed pre-record, so this cannot throw for a width mismatch,
-      // and a racing appender can no longer overwrite the winner's pin
-      val w = leasedW(spark, root)
-      val fp = winnowed(spark, arr, w).localCheckpoint()
-      writeBatch(withPresence(fp, arr).sortWithinPartitions(col("pos")),
-        batchId, fpDir(root))
-      // counts land LAST: a batch visible here is complete in both
-      // logs — the compaction watermark anchor (the marker row keeps
-      // that true even when the batch winnowed to zero anchors)
-      writeBatch(partialsWithMarker(spark, fp), batchId, countsDir(root))
-    } finally IdAuthority.completeAppend(spark, root)
-    // ^ the writer lease guardAndRecord left held spans both log
-    // writes — released here (or kept by a process crash, which is the
-    // two-records-ahead protection; see IdAuthority.LeaseName)
+  protected def write(spark: SparkSession, arr: DataFrame, root: String,
+                      batchId: Long, mk: Option[Marker]): Unit = {
+    // first-append pin (and the crashed-pin re-pin) run HERE, under
+    // the lease the guard left held — the refusal states already
+    // passed pre-record, so this cannot throw for a width mismatch,
+    // and a racing appender can no longer overwrite the winner's pin
+    val w = leasedW(spark, root)
+    val fp = winnowed(spark, arr, w).localCheckpoint()
+    writeBatch(withPresence(fp, arr).sortWithinPartitions(col("pos")),
+      batchId, fpDir(root))
+    // counts land LAST: a batch visible here is complete in both
+    // logs — the compaction watermark anchor (the marker row keeps
+    // that true even when the batch winnowed to zero anchors)
+    writeBatch(partialsWithMarker(spark, fp), batchId, countsDir(root))
   }
-
-  /** Fold both logs' finalized prefix into one generation partition
-    * ([[LogCompaction]] protocol; the derived views are batch-order-
-    * invariant, so only bytes on disk change). Returns the watermark.
-    */
-  def compact(spark: SparkSession, root: String,
-              upToBatch: Option[Long] = None,
-              sweepNow: Boolean = true): Long = {
-    val w = LogCompaction.run(spark, root, watermarkDir = countsDir(root),
-      stores = compactStores(root), upToBatch = upToBatch,
-      sweepNow = sweepNow)
-    IdAuthority.prune(spark, root, w)
-    w
-  }
-
-  /** Deferred-sweep reclamation (see [[TextLayout.vacuum]]). */
-  def vacuum(spark: SparkSession, root: String): Unit =
-    LogCompaction.vacuum(spark, root, compactStores(root).map(_.dir))
-
-  private def compactStores(root: String): Seq[LogCompaction.StoreSpec] = Seq(
-    LogCompaction.StoreSpec(fpDir(root), schema = Some(FpSchema)),
-    LogCompaction.StoreSpec(countsDir(root), schema = Some(CountsSchema)))
 
   def exists(spark: SparkSession, root: String): Boolean =
     storeExists(spark, fpDir(root))
@@ -307,27 +301,13 @@ object SubstrLayout {
     * every row group spanned −1..max).
     */
   def fingerprints(spark: SparkSession, root: String): DataFrame =
-    LogCompaction.view(spark.read.schema(FpSchema).parquet(fpDir(root)),
-      LogCompaction.marker(spark, root)).drop(BatchCol)
-      .filter(col("pos") >= 0)
-
-  /** Every doc_id ever ingested — the append-guard prefix: presence
-    * rows mean this covers short docs the winnow never fingerprints.
-    */
-  private def prefixIds(spark: SparkSession, root: String,
-                        mk: Option[LogCompaction.Marker],
-                        batchId: Long): DataFrame =
-    LogCompaction.view(spark.read.schema(FpSchema).parquet(fpDir(root)), mk)
-      .filter(col(BatchCol) < batchId)
-      .select(col("doc_id")).distinct()
+    read(spark, root, "fingerprints").filter(col("pos") >= 0)
 
   /** The per-batch (h, n) hash-count partials — batch-marker rows
     * (h = null) filtered out.
     */
   def hashCounts(spark: SparkSession, root: String): DataFrame =
-    LogCompaction.view(spark.read.schema(CountsSchema).parquet(countsDir(root)),
-      LogCompaction.marker(spark, root)).drop(BatchCol)
-      .filter(col("h").isNotNull)
+    read(spark, root, "counts").filter(col("h").isNotNull)
 
   /** Duplicate-passage spans over the CURRENT store state — the same
     * merge the registered `dedup_substr_winnow_spans` runs
@@ -344,19 +324,19 @@ object SubstrLayout {
       storeW(spark, root)) // reads trust the pin
   }
 
-  /** Read-only integrity report — the [[graft.Doctor]] leg: both batch
-    * logs via [[LogCompaction.fsckLog]] plus the id-authority sidecar
-    * cross-checked against the fingerprint log (the prefix [[append]]
-    * guards on).
+  /** Read-only integrity report — the [[graft.Doctor]] leg: the width
+    * pin's row, then the [[DocumentLog.fsck]] rows (both logs and the
+    * id-authority sidecar cross-checked against the fingerprint log).
+    * An unparsable pin is one `fail` row; the log rows still print.
     */
-  def fsck(spark: SparkSession, root: String): Seq[(String, String, String)] = {
-    val mk = LogCompaction.marker(spark, root)
+  override def fsck(spark: SparkSession, root: String): Seq[(String, String, String)] = {
     val sessionW = SubstrDedup.wOf(spark)
-    val wRow = (pinnedW(spark, root), storeExists(spark, fpDir(root))) match {
-      case (Some(w), _) if w != sessionW => Seq(("w_pin", "warn",
+    val wRow = (readPin(spark, root), storeExists(spark, fpDir(root))) match {
+      case (Some(Left(e)), _) => Seq(("w_pin", "fail", e))
+      case (Some(Right(w)), _) if w != sessionW => Seq(("w_pin", "warn",
         s"store pinned to W=$w but the session resolves W=$sessionW — " +
           "reads use the pin; appends from this session will refuse"))
-      case (Some(w), _) => Seq(("w_pin", "ok", s"window width W=$w (pinned)"))
+      case (Some(Right(w)), _) => Seq(("w_pin", "ok", s"window width W=$w (pinned)"))
       case (None, true) if SubstrDedup.W != sessionW => Seq(("w_pin", "warn",
         s"pre-knob root (no pin) built at the compiled default W=${SubstrDedup.W}; " +
           s"the session resolves W=$sessionW — reads use the default; appends refuse"))
@@ -364,12 +344,6 @@ object SubstrLayout {
         s"no width pin (pre-knob root) — compiled default W=${SubstrDedup.W} applies"))
       case _ => Seq.empty
     }
-    val logRows = Seq(
-      "fingerprints" -> fpDir(root), "counts" -> countsDir(root)).flatMap {
-      case (n, d) => LogCompaction.fsckLog(spark, d, mk)
-        .map { case (c, s, det) => (s"$n.$c", s, det) }
-    }
-    wRow ++ logRows ++ IdAuthority.fsck(spark, root,
-      LogCompaction.effectiveMaxBatch(spark, fpDir(root), mk))
+    wRow ++ super.fsck(spark, root)
   }
 }

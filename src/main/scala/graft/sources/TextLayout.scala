@@ -2,11 +2,12 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.Tables
 import graft.functions.{TextFunctions => T}
 
-import LogCompaction.{storeExists, writeBase, writeBatch}
+import LogCompaction.{Marker, StoreSpec, writeBase, writeBatch}
 
 /** Incremental token store on disk — the text twin of [[DedupLayout]] /
   * [[VectorLayout.append]]. Tokenize-and-explode is the dominant cost
@@ -31,23 +32,46 @@ import LogCompaction.{storeExists, writeBase, writeBatch}
   * over (token, tf) partials is the cheap term, map-side-combined on
   * the high-entropy token key.
   *
-  * Idempotence: tokenization is a pure per-document function, so a
-  * batch recomputes byte-identically and each append
-  * dynamic-overwrites its own `__batch_id` partition — redelivery and
-  * wiped-checkpoint replay add nothing (TextLayoutSpec checks counts,
-  * not just sets). The per-doc partials additionally require each
-  * doc_id to live in ONE batch: [[append]] refuses an arrival id
-  * already present in the log prefix (a re-appended id would silently
-  * double its counts), while a replay of the SAME batch id passes —
-  * the prefix excludes the batch's own partition.
+  * Idempotence and guards are the [[DocumentLog]] contract:
+  * tokenization is a pure per-document function, so a batch
+  * recomputes byte-identically and each append dynamic-overwrites its
+  * own `__batch_id` partition — redelivery and wiped-checkpoint replay
+  * add nothing (TextLayoutSpec and TextStreamSpec check counts, not
+  * just sets: a duplicate-appending replay would pass a set compare and
+  * still double the vocabulary counts). The per-doc partials require
+  * each doc_id to live in ONE batch, which [[append]]'s prefix guard
+  * enforces (a re-appended id would silently double its counts). The
+  * global views ([[vocab]], [[termFreq]]) are re-derived after a drain,
+  * never per batch: per-batch derivation would put a corpus-global
+  * aggregate on the hot ingest path for no freshness a curator needs.
   */
-object TextLayout {
+object TextLayout extends DocumentLog("TextLayout", "token-log prefix",
+  // counts are written LAST per batch, and the id guard's exact
+  // fallback rides the count partials too: the same doc_id set as the
+  // raw log (both are written per batch), fewer rows by the within-doc
+  // repetition factor
+  idLog = "counts", watermarkLog = "counts") {
 
   private val BatchCol = LogCompaction.BatchCol
   private val BaseBatch = LogCompaction.BaseBatch
 
   private def tokensDir(root: String) = root.stripSuffix("/") + "/tokens"
   private def countsDir(root: String) = root.stripSuffix("/") + "/token_counts"
+
+  /** Declared schemas of the two logs, partition column included, so
+    * no read infers one in a Spark job (DedupConstructionSpec checks
+    * them against inference).
+    */
+  private[graft] val TokensSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("token", StringType),
+    StructField(BatchCol, LongType)))
+  private[graft] val CountsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("token", StringType),
+    StructField("tf", LongType), StructField(BatchCol, LongType)))
+
+  protected def logs(root: String): Seq[(String, StoreSpec)] = Seq(
+    "tokens" -> StoreSpec(tokensDir(root), TokensSchema),
+    "counts" -> StoreSpec(countsDir(root), CountsSchema))
 
   private def exploded(spark: SparkSession, docs: DataFrame): DataFrame =
     Tables.spread(spark, docs)
@@ -69,87 +93,21 @@ object TextLayout {
   }
 
   /** Tokenize ONLY the arrival batch into its own partitions of both
-    * logs. Guarded like [[DedupLayout.append]]: an arrival doc_id
-    * already in the log PREFIX refuses — via the [[IdAuthority]] bloom
-    * sidecar (index-sized, batch-cost; exact probe only on bloom hits;
-    * [[IdAuthority.TrustKey]] skips it for T3 upstream-deduped
-    * ingest) — since a re-appended doc would double its partial
-    * counts; same-batch-id redelivery passes (its own sidecar record
-    * is not in its prefix) and overwrites byte-identically. Works on
-    * an EMPTY root: the first append is the base.
+    * logs (the guarded [[DocumentLog.append]]).
     */
-  def append(spark: SparkSession, arrivals: DataFrame, root: String,
-             batchId: Long): Unit = {
-    val mk = LogCompaction.marker(spark, root)
-    LogCompaction.guardAppend(mk, batchId, "TextLayout.append")
-    // id-authority: the [[IdAuthority]] bloom sidecar — index-sized,
-    // batch-cost per append (round-8 advice closed the per-append
-    // corpus scan). Its exact fallback rides the COUNT-PARTIALS
-    // prefix, not the raw log: same doc_id set (the two stores are
-    // written together per batch), fewer rows by the within-doc
-    // repetition factor.
-    IdAuthority.guardAndRecord(spark, root, batchId,
-      arrivals.select(col("doc_id")),
-      priorIds = if (storeExists(spark, countsDir(root)))
-        LogCompaction.view(spark.read.parquet(countsDir(root)), mk)
-          .filter(col(BatchCol) < batchId)
-          .select(col("doc_id")).distinct()
-      else arrivals.limit(0).select(col("doc_id")),
-      who = "TextLayout.append", what = "token-log prefix")
-    try {
-      val log = exploded(spark, arrivals).localCheckpoint()
-      writeBatch(log, batchId, tokensDir(root))
-      writeBatch(partials(log), batchId, countsDir(root))
-    } finally IdAuthority.completeAppend(spark, root)
-    // ^ the writer lease guardAndRecord left held spans both log
-    // writes — released here (or kept by a process crash, which is the
-    // two-records-ahead protection; see IdAuthority.LeaseName)
+  protected def write(spark: SparkSession, arrivals: DataFrame, root: String,
+                      batchId: Long, mk: Option[Marker]): Unit = {
+    val log = exploded(spark, arrivals).localCheckpoint()
+    writeBatch(log, batchId, tokensDir(root))
+    writeBatch(partials(log), batchId, countsDir(root))
   }
 
-  /** Fold both logs' finalized prefix into one generation partition —
-    * the [[LogCompaction]] protocol (see [[DedupLayout.compact]]; the
-    * token store is the simplest instance: two flat stores, no
-    * downstream watermark to order against). All derived views — raw
-    * log, partials, [[vocab]], [[termFreq]] — are batch-order-invariant
-    * aggregates, so folding changes bytes on disk and nothing above
-    * them (LogCompactionSpec). Returns the new watermark. Under a live
-    * ingest, pass `sweepNow = false` and [[vacuum]] after in-flight
-    * scans drain (see [[LogCompaction.run]]).
-    */
-  def compact(spark: SparkSession, root: String,
-              upToBatch: Option[Long] = None,
-              sweepNow: Boolean = true): Long = {
-    // counts are written LAST per batch: a batch listed there is fully
-    // present in both logs — the watermark anchor
-    val w = LogCompaction.run(spark, root, watermarkDir = countsDir(root),
-      stores = compactStores(root), upToBatch = upToBatch,
-      sweepNow = sweepNow)
-    // finalized batches can never replay, so their id-authority records
-    // serve nobody — same small-files lever as the fold itself
-    IdAuthority.prune(spark, root, w)
-    w
-  }
-
-  /** Reclaim the partitions the current compaction shadows — the
-    * deferred sweep of a `sweepNow = false` [[compact]].
-    */
-  def vacuum(spark: SparkSession, root: String): Unit =
-    LogCompaction.vacuum(spark, root, compactStores(root).map(_.dir))
-
-  private def compactStores(root: String): Seq[LogCompaction.StoreSpec] = Seq(
-    LogCompaction.StoreSpec(tokensDir(root)),
-    LogCompaction.StoreSpec(countsDir(root)))
-
-  def tokens(spark: SparkSession, root: String): DataFrame =
-    LogCompaction.view(spark.read.parquet(tokensDir(root)),
-      LogCompaction.marker(spark, root)).drop(BatchCol)
+  def tokens(spark: SparkSession, root: String): DataFrame = read(spark, root, "tokens")
 
   /** The per-doc (doc_id, token, tf) count partials across all batches —
     * globally correct because each doc lives in exactly one batch.
     */
-  def tokenCounts(spark: SparkSession, root: String): DataFrame =
-    LogCompaction.view(spark.read.parquet(countsDir(root)),
-      LogCompaction.marker(spark, root)).drop(BatchCol)
+  def tokenCounts(spark: SparkSession, root: String): DataFrame = read(spark, root, "counts")
 
   /** The top-100 vocabulary re-derived from the COUNT PARTIALS — the
     * SAME cutoff/tie-break code as the registered `text_token_freq`
@@ -170,21 +128,4 @@ object TextLayout {
     tokenCounts(spark, root)
       .join(broadcast(vocab(spark, root).select(col("token"))), Seq("token"))
       .select(col("doc_id"), col("token"), col("tf"))
-
-  /** Read-only integrity report of the text layout — the
-    * [[graft.Doctor]] leg: both batch logs via the shared
-    * [[LogCompaction.fsckLog]], plus the id-authority sidecar
-    * cross-checked against the count log (the prefix [[append]]
-    * guards on).
-    */
-  def fsck(spark: SparkSession, root: String): Seq[(String, String, String)] = {
-    val mk = LogCompaction.marker(spark, root)
-    val logRows = Seq(
-      "tokens" -> tokensDir(root), "counts" -> countsDir(root)).flatMap {
-      case (n, d) => LogCompaction.fsckLog(spark, d, mk)
-        .map { case (c, s, det) => (s"$n.$c", s, det) }
-    }
-    logRows ++ IdAuthority.fsck(spark, root,
-      LogCompaction.effectiveMaxBatch(spark, countsDir(root), mk))
-  }
 }

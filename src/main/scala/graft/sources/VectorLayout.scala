@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField,
+  StructType}
 
 import graft.Tables
 import graft.operators.SimilarityQueries
@@ -68,6 +70,17 @@ object VectorLayout {
     * so probes prune on level one.
     */
   private val CellParts = Seq("cell", BatchCol)
+
+  /** Declared schema of the layout log, partition columns included, so
+    * no read infers one in a Spark job (DedupConstructionSpec checks it
+    * against inference).
+    */
+  private[graft] val LayoutSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)),
+    StructField("cell", IntegerType), StructField(BatchCol, LongType)))
+
+  private def readLayout(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(LayoutSchema).parquet(dir)
 
   // ---- Versioned lifecycle ----------------------------------------
 
@@ -253,10 +266,16 @@ object VectorLayout {
     * occupancy histogram lands beside the layout as the drift baseline.
     */
   def materializeWhere(spark: SparkSession, sfDir: String, outDir: String,
-                       pred: Column): Unit = {
+                       pred: Column): Unit =
+    materializeFrom(spark, sfDir, Tables.embeddings(spark, sfDir).filter(pred), outDir)
+
+  /** Materialize the (vec_id, embedding) rows of `vecs`, a slice of the
+    * corpus at `sfDir` (the cells come from the corpus' trained model).
+    */
+  def materializeFrom(spark: SparkSession, sfDir: String, vecs: DataFrame,
+                      outDir: String): Unit = {
     writeLayout(
-      Tables.embeddings(spark, sfDir).filter(pred)
-        .join(SimilarityQueries.kmeansCells(spark, sfDir), Seq("vec_id"))
+      vecs.join(SimilarityQueries.kmeansCells(spark, sfDir), Seq("vec_id"))
         .select(col("vec_id"), col("embedding"), col("cell")),
       outDir)
     writeHist(spark, outDir)
@@ -271,7 +290,7 @@ object VectorLayout {
       .repartition(col("cell")), dir, CellParts)
 
   private def writeHist(spark: SparkSession, dir: String): Unit =
-    spark.read.parquet(dir).drop(BatchCol)
+    readLayout(spark, dir).drop(BatchCol)
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("n_trained"))
       .coalesce(1).write.mode("overwrite").parquet(histPath(dir))
@@ -374,7 +393,7 @@ object VectorLayout {
               sweepNow: Boolean = true): Long = {
     val dir = resolve(spark, outDir)
     LogCompaction.run(spark, dir, watermarkDir = dir,
-      stores = Seq(LogCompaction.StoreSpec(dir, CellParts,
+      stores = Seq(LogCompaction.StoreSpec(dir, LayoutSchema, CellParts,
         // one shuffle keyed like writeLayout's: one file per cell dir
         _.repartition(col("cell")))),
       nested = true, upToBatch = upToBatch, sweepNow = sweepNow)
@@ -537,7 +556,7 @@ object VectorLayout {
             "snapshot a replayer may still pin")
       }
     }
-    val t = LogCompaction.view(spark.read.parquet(dir), mk)
+    val t = LogCompaction.view(readLayout(spark, dir), mk)
     // the generation partition's id sits below every real batch, so the
     // literal `<= w` keeps it (its content is `<= watermark <= w`)
     upToBatch.fold(t)(w => t.filter(col(BatchCol) <= w)).drop(BatchCol)
@@ -591,7 +610,7 @@ object VectorLayout {
     */
   def occupancyDrift(spark: SparkSession, outDir: String): DataFrame = {
     val dir = resolve(spark, outDir)
-    val now = LogCompaction.view(spark.read.parquet(dir),
+    val now = LogCompaction.view(readLayout(spark, dir),
       LogCompaction.marker(spark, dir)).drop(BatchCol)
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("n_now"))

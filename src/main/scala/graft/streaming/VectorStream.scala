@@ -38,10 +38,7 @@ object VectorStream {
     StructField("embedding", ArrayType(FloatType))))
 
   def read(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
+    IngestSink.read(spark, dir, schema, maxFilesPerTrigger)
 
   /** Results of every processed micro-batch (bookkeeping partition
     * dropped).
@@ -79,18 +76,13 @@ object VectorStream {
     * signal — [[graft.StoreMaintain]] is the scheduled job that reads
     * it, acts on it (retrain-and-swap + version GC on a versioned
     * root), and folds this stream's accreted batch partitions
-    * ([[VectorLayout.compact]]).
+    * ([[VectorLayout.compact]]). The stream itself is the shared
+    * [[IngestSink]].
     */
   def ingestSink(vectors: DataFrame, sfDir: String, layoutDir: String,
                  checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        VectorLayout.append(batch.sparkSession, sfDir, layoutDir,
-          batch, batchId)
-        ()
-      }
-      .start()
+    IngestSink.start(vectors, checkpoint)(
+      VectorLayout.append(_, sfDir, layoutDir, _, _))
 
   private def watermarkDir(outDir: String) =
     new org.apache.hadoop.fs.Path(outDir.stripSuffix("/") + "__watermarks")

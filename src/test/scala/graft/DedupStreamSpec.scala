@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.DedupLayout
-import graft.streaming.DedupStream
+import graft.streaming.IngestSink
 
 /** Streaming ingest into the near-dup index: micro-batched arrivals
   * must grow the stores to EXACTLY the batch-built index, a
@@ -42,8 +42,8 @@ class DedupStreamSpec extends SparkSpec {
     writeOneFile(docs.filter(m === 4), qdir, "arrivals2.parquet")
 
     def drain(checkpoint: String): Unit = {
-      val q = DedupStream.ingestSink(
-        DedupStream.read(spark, qdir.toString), inc, checkpoint)
+      val q = IngestSink.start(IngestSink.read(spark, qdir.toString), checkpoint)(
+        DedupLayout.append(_, _, inc, _))
       try q.processAllAvailable() finally q.stop()
     }
     drain(Files.createTempDirectory("graft-ds-ck").toString + "/ck")

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.sources.{DedupLayout, LogCompaction, TextLayout, VectorLayout}
 
@@ -278,17 +278,17 @@ class LogCompactionSpec extends SparkSpec {
     CacheLife.release(spark)
   }
 
-  test("a fold is one write job per store, plus schema inference when no schema is declared") {
+  test("a fold on its declared schema is one write job per store") {
     val s = spark
     import s.implicits._
-    def foldJobs(schema: Option[StructType]): Int = {
+    def foldJobs(schema: StructType): Int = {
       val root = Files.createTempDirectory("graft-lc-jobs").toString
       val dir = root + "/log"
       for (batch <- Seq(-1L, 0L))
         (0L until 20L).map(_ + 20 * (batch + 1)).toDF("id")
           .withColumn("__batch_id", lit(batch))
           .write.mode("append").partitionBy("__batch_id").parquet(dir)
-      val spec = LogCompaction.StoreSpec(dir, Seq("__batch_id"), _.coalesce(2), schema)
+      val spec = LogCompaction.StoreSpec(dir, schema, Seq("__batch_id"), _.coalesce(2))
       val jobs = jobsDuring(
         assert(LogCompaction.run(spark, root, dir, Seq(spec)) === 0L))
       assert(batchDirs(dir) === Seq("__batch_id=-2"))
@@ -296,10 +296,8 @@ class LogCompactionSpec extends SparkSpec {
         .select("id").as[Long].collect().sorted.toSeq === (0L until 40L))
       jobs
     }
-    val inferred = foldJobs(None)
-    assert(inferred <= 2, s"an undeclared-schema fold ran $inferred jobs (inference + write)")
-    val declared = foldJobs(Some(StructType(Seq(
-      StructField("id", LongType), StructField("__batch_id", LongType)))))
+    val declared = foldJobs(StructType(Seq(
+      StructField("id", LongType), StructField("__batch_id", LongType))))
     assert(declared <= 1, s"a declared-schema fold ran $declared jobs (the write alone)")
   }
 
@@ -314,8 +312,9 @@ class LogCompactionSpec extends SparkSpec {
         .withColumn("b", (col("id") / 10).cast("int"))
         .withColumn("__batch_id", lit(batch))
         .write.mode("append").partitionBy("__batch_id", "b").parquet(dir)
-    val spec = LogCompaction.StoreSpec(dir, Seq("__batch_id", "b"),
-      _.repartition(col("b")))
+    val spec = LogCompaction.StoreSpec(dir, StructType(Seq(StructField("id", LongType),
+      StructField("__batch_id", LongType), StructField("b", IntegerType))),
+      Seq("__batch_id", "b"), _.repartition(col("b")))
     // a fold through batch 1 that crashed before publishing generation 1…
     LogCompaction.foldStore(spark, dir,
       LogCompaction.foldable(spark.read.parquet(dir), None, 1L).drop("__batch_id"),

@@ -4,8 +4,7 @@ import graft.operators._
 
 /** Physical-plan assertions: the scale properties SURVEY §4 promises
   * must be visible in `executedPlan`, not just claimed in scaladoc.
-  * (BucketedLayoutSpec and PartitionedLayoutSpec assert the layout-
-  * dependent ones; MultimodalSpec asserts payload pruning.)
+  * (MultimodalSpec asserts payload pruning.)
   */
 class PlanQualitySpec extends SparkSpec {
 

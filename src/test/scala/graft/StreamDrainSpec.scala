@@ -78,6 +78,24 @@ class StreamDrainSpec extends SparkSpec {
     CacheLife.release(spark)
   }
 
+  test("a drain prints each of the ten [drain] step names the benchmark parses exactly once") {
+    // the lifecycle benchmark matches these names verbatim; a registry
+    // change must not rename one
+    val expected = Set("base: dedup.materialize", "base: text.materialize",
+      "base: substr.materialize", "base: vectors.materialize", "land: held-out slices",
+      "drain: dedup ingest", "drain: text ingest", "drain: substr ingest",
+      "drain: vector ingest", "maintain: all families")
+    val root = Files.createTempDirectory("graft-drain-steps").toString
+    val out = new java.io.ByteArrayOutputStream
+    assert(Console.withOut(out)(StreamDrain.run(spark, Sf, root, nBatches = 1)) === 0)
+    val Step = """\[drain\] (.+?)\s+([0-9.]+) s""".r
+    val steps = out.toString("UTF-8").linesIterator.map(_.trim).collect {
+      case Step(name, _) => name.trim }.toSeq
+    assert(steps.sorted === expected.toSeq.sorted, steps.toString)
+    assertNothingLeft()
+    CacheLife.release(spark)
+  }
+
   test("a family failing in the base phase is rethrown after its siblings finish, leaving nothing running") {
     // the FIRST family fails at once, while its siblings still have
     // seconds of work ahead

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.SubstrDedup
 import graft.sources.SubstrLayout
-import graft.streaming.SubstrStream
+import graft.streaming.IngestSink
 
 /** The incremental winnowed-fingerprint store: appended batches must
   * re-derive EXACTLY the registered corpus-wide winnow spans (including
@@ -244,6 +244,41 @@ class SubstrLayoutSpec extends SparkSpec {
     assert(spanSet(SubstrLayout.spans(spark, root)).map(_._1) === Set(1L, 2L))
   }
 
+  test("an empty or garbled width pin refuses naming the file; fsck fails only its w_pin row") {
+    import spark.implicits._
+    val shared = (1 to 16).map(i => s"g$i").mkString(" ")
+    def plant(root: String, content: String): Unit = {
+      Files.write(java.nio.file.Paths.get(root, "_substr_w"),
+        content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      new java.io.File(root, "._substr_w.crc").delete() // no stale checksum
+    }
+    Seq("", "8x#garbled").foreach { content =>
+      val root = Files.createTempDirectory("graft-sl-badpin").toString
+      SubstrLayout.materialize(spark,
+        Seq((1L, s"x1 x2 $shared x3")).toDF("doc_id", "text"), root)
+      val healthy = SubstrLayout.fsck(spark, root).map(_._1)
+      plant(root, content)
+      val refusals = Seq(
+        intercept[IllegalStateException](SubstrLayout.append(spark,
+          Seq((2L, s"$shared y1")).toDF("doc_id", "text"), root, batchId = 0L)),
+        intercept[IllegalStateException](SubstrLayout.spans(spark, root)))
+      refusals.foreach(e => assert(e.getMessage.contains(s"$root/_substr_w"), e.getMessage))
+      val rows = SubstrLayout.fsck(spark, root)
+      assert(rows.filter(_._1 == "w_pin").map(_._2) === Seq("fail"), rows.toString)
+      assert(rows.map(_._1) === healthy, "every other substr row must still print")
+      assert(rows.filter(_._1 != "w_pin").forall(_._2 == "ok"), rows.toString)
+    }
+    // pin but no logs (a crashed first append): a garbled pin re-pins
+    val root = Files.createTempDirectory("graft-sl-badpin-nolog").toString
+    plant(root, "garbled")
+    SubstrLayout.append(spark,
+      Seq((1L, s"x1 $shared x2"), (2L, s"$shared y1")).toDF("doc_id", "text"), root,
+      batchId = 0L)
+    assert(SubstrLayout.pinnedW(spark, root) === Some(SubstrDedup.W))
+    assert(spanSet(SubstrLayout.spans(spark, root)).map(_._1) === Set(1L, 2L))
+    CacheLife.release(spark)
+  }
+
   test("a zero-doc append is a no-op recorded nowhere") {
     import spark.implicits._
     val docs = Tables.documents(spark, Sf).select(col("doc_id"), col("text"))
@@ -281,8 +316,8 @@ class SubstrLayoutSpec extends SparkSpec {
     writeOneFile(docs.filter(m === 2), qdir, "arrivals3.parquet")
 
     def drain(checkpoint: String): Unit = {
-      val q = SubstrStream.ingestSink(
-        SubstrStream.read(spark, qdir.toString), root, checkpoint)
+      val q = IngestSink.start(IngestSink.read(spark, qdir.toString), checkpoint)(
+        SubstrLayout.append(_, _, root, _))
       try q.processAllAvailable() finally q.stop()
     }
     drain(Files.createTempDirectory("graft-ss-ck").toString + "/ck")

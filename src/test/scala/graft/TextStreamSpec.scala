@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.TextQueries
 import graft.sources.TextLayout
-import graft.streaming.TextStream
+import graft.streaming.IngestSink
 
 /** Streaming ingest into the token store: micro-batched arrivals must
   * grow both logs to EXACTLY the batch-built store, the re-derived
@@ -39,8 +39,8 @@ class TextStreamSpec extends SparkSpec {
     writeOneFile(docs.filter(m === 2), qdir, "arrivals3.parquet")
 
     def drain(checkpoint: String): Unit = {
-      val q = TextStream.ingestSink(
-        TextStream.read(spark, qdir.toString), root, checkpoint)
+      val q = IngestSink.start(IngestSink.read(spark, qdir.toString), checkpoint)(
+        TextLayout.append(_, _, root, _))
       try q.processAllAvailable() finally q.stop()
     }
     drain(Files.createTempDirectory("graft-ts-ck").toString + "/ck")
