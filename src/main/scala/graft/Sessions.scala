@@ -8,6 +8,19 @@ import org.apache.spark.sql.SparkSession
   * local runs (the driver exports SPARK_GRAFT_CPUS); on a real cluster
   * this would be executors×cores×2-3 with AQE coalescing
   * (`spark.sql.adaptive.coalescePartitions`) handling the tail.
+  *
+  * Local file I/O: the two `fs.*file.impl` keys give the session's
+  * Hadoop `file:` FileSystem and its FileContext twin the engine's
+  * [[graft.sources.NioLocalFileSystem]] / [[graft.sources.NioLocalFs]].
+  * Without the native `libhadoop`, the stock classes start a `chmod`
+  * process for every file and directory they create and a `readlink`
+  * for every checkpoint-file rename: about 1,000 processes in one store
+  * drain, each costing more than the small write it follows. The
+  * key also pins the `file:` class, which otherwise depends on classpath
+  * order (hive-exec registers its own). Hadoop caches one FileSystem per
+  * scheme for the whole JVM, so the key takes effect only when no
+  * `file:` FileSystem was created before the session (LocalFsSpec
+  * checks the test JVM). Other schemes are untouched.
   */
 object Sessions {
   def builder(cpus: String): SparkSession.Builder =
@@ -24,6 +37,9 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // native engine functions (graft_minhash, graft_cosine)
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      // fork-free local file system (see the scaladoc above)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
 
   /** Session confs from a `conf:k=v,k=v` main argument (comma, not
     * semicolon: sbt's batch mode splits its command string on `;`). A

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Parquet table loaders over a driver-provided scale-factor directory
   * (`/root/testdata/sf*`, see TESTDATA.md). All engine queries resolve
@@ -14,8 +15,12 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** `schema` declares the table's columns; without it the read infers
+    * them from the parquet footers.
+    */
+  def load(spark: SparkSession, sfDir: String, name: String,
+      schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(s"$sfDir/$name.parquet")
 
   /** Spread a small single-file scan across all cores before heavy
     * per-row compute (minhash/simhash/unrolled dots): one parquet file =
@@ -71,6 +76,23 @@ object Tables {
     }
     normalized.withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
   }
-  def documents(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "documents")
-  def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
+
+  /** The corpus tables the store drain reads, on declared schemas: an
+    * inferred read runs a footer-reading Spark job every time a
+    * DataFrame is built. `events` keeps inference, because [[deriveTs]]
+    * branches on its physical `ts` type. TablesSpec checks both against
+    * inference on sf0.001.
+    */
+  val DocumentsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType), StructField("source", StringType),
+    StructField("n_chars", LongType)))
+  val EmbeddingsSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)),
+    StructField("label", IntegerType)))
+
+  def documents(spark: SparkSession, sfDir: String): DataFrame =
+    load(spark, sfDir, "documents", Some(DocumentsSchema))
+  def embeddings(spark: SparkSession, sfDir: String): DataFrame =
+    load(spark, sfDir, "embeddings", Some(EmbeddingsSchema))
 }

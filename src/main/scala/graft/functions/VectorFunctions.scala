@@ -53,18 +53,10 @@ object VectorFunctions {
 
   def l2(a: Column): Column = sqrt(dot(a, a))
 
-  def l2N(a: Column, dim: Int): Column = sqrt(dotN(a, a, dim))
-
   /** Cosine similarity, written as one fixed expression shape:
     * dot / (sqrt(dot_aa) * sqrt(dot_bb)).
     */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2(a) * l2(b))
-
-  /** Cosine over pre-computed norms (norms are per-ROW values — compute
-    * them once before a pair join, not n² times inside it).
-    */
-  def cosinePre(dotAB: Column, normA: Column, normB: Column): Column =
-    dotAB / (normA * normB)
 
   /** Random-hyperplane-style LSH bucket using coordinate signs of the
     * first `bits` dimensions: Σ (v[d] > 0) << d. Deterministic, exact,

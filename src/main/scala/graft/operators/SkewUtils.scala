@@ -32,29 +32,4 @@ object SkewUtils {
       .groupBy(col("k"))
       .agg(sum(col("ps")).cast("double").as("sum_v"), sum(col("pc")).as("cnt"))
   }
-
-  /** Salted equi-JOIN for a hot probe key meeting a build side too large
-    * (or forbidden) to broadcast: probe rows take a per-row salt, the
-    * build side replicates into all `salts` buckets, and the join key
-    * becomes (key, salt) — so the hot key's probe rows spread over
-    * `salts` merge tasks instead of grinding through one. Build-side
-    * cost is the classic trade: ×salts replication of the SMALLER side.
-    * AQE's skew-join reaches the same end WITHOUT replication when the
-    * skewed partition is splittable (SkewJoinSpec demonstrates both);
-    * the manual form remains the lever when it isn't — a skewed side
-    * feeding a window, or a required partitioning downstream.
-    *
-    * The salt mixes partition id and a per-row id — deterministic under
-    * task retry (both are recomputed identically), no RNG — and the
-    * RESULT is salt-independent: every probe row meets each matching
-    * build row exactly once, in exactly one salt bucket.
-    */
-  def saltedJoin(probe: DataFrame, build: DataFrame, key: String,
-                 salts: Int = 32): DataFrame = {
-    val p = probe.withColumn("__salt",
-      pmod(hash(spark_partition_id(), monotonically_increasing_id()), lit(salts)))
-    val b = build.withColumn("__salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    p.join(b.hint("merge"), Seq(key, "__salt")).drop("__salt")
-  }
 }

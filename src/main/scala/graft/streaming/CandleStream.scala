@@ -152,14 +152,4 @@ object CandleStream {
       }
       .start()
   }
-
-  /** A6 as a stream: 5-minute resample of close prices (the dashboard
-    * line chart fed incrementally).
-    */
-  def resample5Min(candles: DataFrame, delay: String = "10 minutes"): DataFrame =
-    candles
-      .withWatermark("time_period_start", delay)
-      .groupBy(window(col("time_period_start"), "5 minutes").as("w"))
-      .agg(avg("price_close").as("avg_close"), count("*").as("n"))
-      .select(col("w.start").as("bucket_start"), col("avg_close"), col("n"))
 }

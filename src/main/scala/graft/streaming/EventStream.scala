@@ -100,69 +100,6 @@ object EventStream {
       .select(col("user_id"), col("n_events"),
         col("session_start_us"), col("session_end_us"))
 
-  /** The range join as a stream-stream interval join — the watermarked
-    * twin of [[graft.operators.TemporalQueries.rangeJoinCounts]],
-    * completing batch/stream parity for the temporal trio (as-of ✓,
-    * sessionize ✓, range ✓). Errors and clicks are two watermarked
-    * streams off the same source; the join condition is the same
-    * half-open 5-minute lookahead, and left-outer keeps zero-click
-    * errors (emitted with a NULL click once the watermark proves no
-    * match can still arrive).
-    *
-    * State stance: the time constraint bounds BOTH buffers — a click
-    * can be dropped once the watermark passes `click_ts` (no future
-    * error's window can reach back past it), an error once the
-    * watermark passes `err_ts + window`. O(arrival rate × (delay +
-    * window)) state, not O(stream). This emits the matched PAIRS; the
-    * per-error count is one aggregate the consumer (or the batch twin)
-    * takes — chaining the aggregate stream-side is the documented
-    * multiple-stateful-operator escalation, kept out to hold the state
-    * story simple. EventStreamSpec aggregates after drain and proves
-    * count parity, zero-click errors included.
-    *
-    * Holdback contract (standard outer-join watermark semantics, pinned
-    * by the spec): the global watermark is the MIN across the two side
-    * watermarks, each advancing only to its own side's max event time
-    * minus `delay` — so null-padding for errors past
-    * `min(max_err_ts, max_click_ts) - delay - window` is withheld until
-    * later data closes them (the last error of a quiet error stream
-    * stays pending even while clicks keep flowing). Matched pairs emit
-    * immediately regardless.
-    */
-  def rangeJoin(events: DataFrame,
-                windowUs: Long = graft.operators.TemporalQueries.RangeWindowUs,
-                delay: String = "1 hour"): DataFrame = {
-    // Same interval-bucket idiom as the batch twin — and stream-side it
-    // is load-bearing twice: Spark REQUIRES an equality predicate in a
-    // stream-stream join (the bucket key provides it), and the bucket
-    // hash-partitions both join-state stores so no task buffers the
-    // whole horizon. Unlike the batch twin, the CLICK side carries the
-    // two bucket copies (b, b-1) and each error stays a SINGLE left
-    // row — an exploded left side would null-pad each error's unmatched
-    // copy, emitting spurious (err, NULL) rows next to its matches;
-    // with single-row errors a NULL click means exactly "zero clicks
-    // in the window", emitted once (the spec asserts the exact shape)
-    val bkt = (c: org.apache.spark.sql.Column) => floor(c / windowUs)
-    val errors = events.filter(col("event_type") === "error")
-      .withWatermark("ts", delay)
-      .select(col("event_id").as("err_id"), col("ts").as("err_ts"),
-        expr("ts_ns div 1000").as("err_ts_us"))
-      .withColumn("bkt", bkt(col("err_ts_us")))
-    val clicks = events.filter(col("event_type") === "click")
-      .withWatermark("ts", delay)
-      .select(col("ts").as("click_ts"),
-        expr("ts_ns div 1000").as("click_ts_us"))
-      .withColumn("bkt", explode(array(bkt(col("click_ts_us")),
-        bkt(col("click_ts_us")) - 1)))
-    errors.as("e").join(clicks.as("c"),
-        expr(s"""e.bkt = c.bkt
-                | AND c.click_ts > e.err_ts
-                | AND c.click_ts <= e.err_ts + INTERVAL $windowUs MICROSECOND
-                |""".stripMargin.replace("\n", " ")),
-        "leftOuter")
-      .select(col("err_id"), col("err_ts_us"), col("click_ts_us"))
-  }
-
   /** Watermarked ingest dedup — the streaming twin of the batch
     * exact-dedup family (T3's duplicate-tolerant append, made exact at
     * the stream boundary): redelivered events are dropped by key while

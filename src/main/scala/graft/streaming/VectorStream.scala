@@ -12,8 +12,8 @@ import graft.sources.VectorLayout
   * each micro-batch probes the static IVF cell index — the serving
   * shape of the similarity family (batch inference emits embeddings
   * continuously; retrieval answers against a fixed corpus snapshot),
-  * closing batch/stream parity for ANN the way EventStream closes the
-  * temporal trio.
+  * closing batch/stream parity for ANN the way EventStream pairs its
+  * as-of join and sessionization with their batch queries.
   *
   * Mechanics: `foreachBatch` (the documented escape hatch for reusing
   * a batch plan under a stream) runs the SAME

@@ -78,21 +78,4 @@ class CandleStreamSpec extends SparkSpec {
       assert(last("2023-04-27").getLong(3) == 1L)
     } finally q.stop()
   }
-
-  test("5-minute resample buckets by candle start") {
-    val in = MemoryStream[TestCandle](spark)
-    val q = CandleStream.resample5Min(in.toDF(), delay = "10 minutes").writeStream
-      .format("memory").queryName("resample_out").outputMode(OutputMode.Append).start()
-    try {
-      in.addData(candle("2023-04-26 04:30:00"), candle("2023-04-26 04:31:00"),
-        candle("2023-04-26 04:36:00"))
-      q.processAllAvailable()
-      in.addData(candle("2023-04-26 05:00:00")) // advances watermark
-      q.processAllAvailable()
-      val rows = spark.table("resample_out").collect()
-        .map(r => r.getTimestamp(0).toString -> r.getLong(2)).toMap
-      assert(rows("2023-04-26 04:30:00.0") == 2L)
-      assert(rows("2023-04-26 04:35:00.0") == 1L)
-    } finally q.stop()
-  }
 }

@@ -65,68 +65,6 @@ class EventStreamSpec extends SparkSpec {
       s"stream sessions (${streamed.length}) != batch sessions (${batch.length})")
   }
 
-  test("stream-stream interval range join matches the batch bucketed range join") {
-    val dir = Files.createTempDirectory("graft-range")
-    Files.copy(Paths.get(s"$Sf/events.parquet"),
-      dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-
-    val q = EventStream.rangeJoin(EventStream.read(spark, dir.toString))
-      .writeStream
-      .format("memory").queryName("stream_range")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    val streamedPairs =
-      try {
-        assert(q.awaitTermination(120000), "stream did not drain in 120s")
-        spark.table("stream_range").collect()
-          .map(r => (r.getLong(0), Option(r.get(2)).map(_.asInstanceOf[Long])))
-      } finally q.stop()
-
-    // the stream emits pairs (left-outer: unmatched errors carry NULL);
-    // counting per error reproduces the batch query — exactly, for every
-    // error the final watermark CLOSED. Errors in the stream's tail
-    // (err_ts + window past max_ts - delay) may still be held in join
-    // state awaiting their null-padding proof: standard outer-join
-    // watermark semantics, they'd emit when later data advances the
-    // watermark. Matched pairs emit immediately either way.
-    val streamed = streamedPairs.groupBy(_._1)
-      .map { case (err, ps) => err -> ps.count(_._2.isDefined).toLong }
-    val batchAll = graft.operators.TemporalQueries.rangeJoinCounts(spark, Sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    // null-padding shape: a NULL click identifies a zero-click error,
-    // emitted exactly once — matched errors never carry a null row
-    streamedPairs.groupBy(_._1).foreach { case (err, ps) =>
-      val nulls = ps.count(_._2.isEmpty)
-      assert(nulls == 0 || (nulls == 1 && ps.length == 1),
-        s"err $err emitted ${ps.length} rows with $nulls nulls")
-    }
-
-    val delayUs = 3600L * 1000000
-    val windowUs = graft.operators.TemporalQueries.RangeWindowUs
-    // the global watermark is the MIN across the two side watermarks —
-    // each side only advances to ITS OWN max event time minus delay, so
-    // the last error in the fixture can never self-close (its side's
-    // watermark stops delay behind it)
-    val maxSideTs = (t: String) => Tables.events(spark, Sf)
-      .filter(org.apache.spark.sql.functions.col("event_type") === t)
-      .agg(org.apache.spark.sql.functions.max(
-        org.apache.spark.sql.functions.expr("ts_ns div 1000"))).head().getLong(0)
-    val wmUs = math.min(maxSideTs("error"), maxSideTs("click")) - delayUs
-    val horizon = wmUs - windowUs - 60L * 1000000
-    val closed = batchAll.filter(_._2 < horizon).map(t => t._1 -> t._3).toMap
-    assert(closed.nonEmpty, "fixture leaves no watermark-closed errors")
-    val bad = closed.filter { case (e, n) => !streamed.get(e).contains(n) }
-    assert(bad.isEmpty,
-      s"closed-horizon mismatch: ${bad.map { case (e, n) =>
-        s"err=$e batch=$n stream=${streamed.get(e)} ts=${batchAll.find(_._1 == e).map(_._2)} horizon=$horizon"
-      }.mkString("; ")}")
-    // tail errors: anything the stream DID emit must agree with batch
-    val batchMap = batchAll.map(t => t._1 -> t._3).toMap
-    assert(streamed.forall { case (err, n) => batchMap.get(err).contains(n) },
-      "stream emitted a count batch disagrees with")
-  }
-
   test("watermarked stream dedup yields each event once under full redelivery") {
     val dir = Files.createTempDirectory("graft-dedup")
     // the same file landed TWICE = two micro-batches (maxFilesPerTrigger=1),

@@ -1,16 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-import graft.operators.SkewUtils
-
-/** Adversarial JOIN skew (round-6 judge stretch item, completing the
-  * skew story beyond aggregation): one key holds most of the probe
-  * side. Two levers must both work —
-  *   - the manual salted two-stage join: identical results, hot key
-  *     spread across salt buckets (the lever when AQE can't split);
-  *   - AQE's skew-join on the plain unsalted join: the runtime splits
-  *     the oversized partition, visible as skew=true in the final plan.
+/** Adversarial JOIN skew (completing the skew story beyond
+  * aggregation): one key holds most of the probe side, and AQE's
+  * skew-join on the plain join splits the oversized partition, visible
+  * as skew=true in the final plan.
   */
 class SkewJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -24,31 +17,6 @@ class SkewJoinSpec extends SparkSpec {
 
   private lazy val build = (Seq("hot") ++ (1 to 500).map(k => s"k$k"))
     .map(k => (k, s"label-$k")).toDF("key", "label")
-
-  test("salted join equals the plain join and spreads the hot key over salt buckets") {
-    val expected = probe.join(build, Seq("key"))
-      .groupBy("key").agg(count(lit(1)).as("n"), sum("v").as("sv"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val salted = SkewUtils.saltedJoin(probe, build, "key")
-      .groupBy("key").agg(count(lit(1)).as("n"), sum("v").as("sv"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(salted === expected, "salting must not change the join result")
-
-    // the spread that makes it work: the hot key's probe rows must land
-    // in many salt buckets, not one
-    val buckets = probe.filter(col("key") === "hot")
-      .withColumn("__salt",
-        pmod(hash(spark_partition_id(), monotonically_increasing_id()), lit(32)))
-      .select("__salt").distinct().count()
-    assert(buckets >= 16, s"hot key spread over only $buckets of 32 salt buckets")
-
-    // and the plan is a (key, salt) equi-join — never a broadcast of the
-    // replicated build side back into a single hot task
-    val p = SkewUtils.saltedJoin(probe, build, "key")
-      .queryExecution.executedPlan.toString
-    assert(p.contains("SortMergeJoin") && p.contains("__salt"),
-      s"expected a (key, salt) sort-merge join:\n$p")
-  }
 
   test("AQE skew-join splits the hot partition of the unsalted join") {
     withConf(
