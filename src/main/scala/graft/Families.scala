@@ -62,13 +62,7 @@ final case class StoreFamily(
   *
   * Thread-safety rule for a task: it writes only under its own family's
   * root and sets no session conf (a sibling would read it mid-flight).
-  * Callers resolve shared session state before they fork. One sharing
-  * is left to Spark: its CacheManager is keyed by plan, so families
-  * that persist the same plan at once (the base id set the three
-  * document families record through [[graft.sources.IdAuthority]])
-  * share one cache entry. The data is identical by construction; the
-  * first `unpersist` drops the entry and a sibling still reading it
-  * recomputes the missing partitions from lineage.
+  * Callers resolve shared session state before they fork.
   */
 object Families {
 

@@ -4,11 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Embedding-vector primitives over `array<float>` columns, as pure
-  * Catalyst higher-order expressions (codegen'd; no UDF, no ML-lib
-  * dependency, no driver collect).
+  * Catalyst expressions (codegen'd; no UDF, no ML-lib dependency, no
+  * driver collect).
   *
-  * Scale stance: dot/cosine are narrow per-row maps. Search strategies
-  * layered on top (SimilarityQueries):
+  * Scoring is the native `graft_cosine` ([[graft.functions.expressions
+  * .CosineSim]]). Search strategies layered on top (SimilarityQueries):
   *   - brute-force top-k = broadcast the query vector + TakeOrderedAndProject
   *     (per-partition heaps, no global sort) — the exact baseline, linear
   *     scan, still the right answer below ~10⁸ vectors per query batch;
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *     buckets for recall).
   *
   * Cross-engine determinism: sums fold LEFT over the array in double on
-  * both engines (Spark `aggregate`, DuckDB `list_dot_product`) — IEEE
+  * both engines (the `graft_cosine` loop, DuckDB `list_dot_product`) — IEEE
   * addition in identical order gives bit-identical results; outputs are
   * additionally rounded to 6 dp before any ordering or thresholding.
   */
@@ -25,38 +25,6 @@ object VectorFunctions {
 
   /** float[] → double[] (exact widening). */
   def vecD(c: Column): Column = c.cast("array<double>")
-
-  /** Σ aᵢ·bᵢ as a left fold in double (generic, any dimension).
-    * Higher-order functions are interpreted (no whole-stage codegen) —
-    * fine for per-row use, too slow inside an O(n²) pair join; use
-    * [[dotN]] there.
-    */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  /** Σ aᵢ·bᵢ unrolled for a KNOWN dimension: a left-associated chain of
-    * scalar multiply-adds — identical IEEE summation order to [[dot]] and
-    * DuckDB's list_dot_product, but fully whole-stage-codegen'd.
-    * 0.0 + x₁ leads the chain so the result is bit-identical to the fold
-    * with init 0.0 (adding 0.0 is exact).
-    *
-    * Operates on the RAW float arrays with per-element double casts
-    * (float→double widening is exact, so values equal the cast-the-array
-    * form) — an `array<double>` cast alias would be re-inlined by
-    * CollapseProject into every one of the 64 element_at references,
-    * re-casting the whole array 128× per pair.
-    */
-  def dotN(a: Column, b: Column, dim: Int): Column =
-    (0 until dim).map(i =>
-      element_at(a, i + 1).cast("double") * element_at(b, i + 1).cast("double"))
-      .foldLeft(lit(0.0))(_ + _)
-
-  def l2(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity, written as one fixed expression shape:
-    * dot / (sqrt(dot_aa) * sqrt(dot_bb)).
-    */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (l2(a) * l2(b))
 
   /** Random-hyperplane-style LSH bucket using coordinate signs of the
     * first `bits` dimensions: Σ (v[d] > 0) << d. Deterministic, exact,

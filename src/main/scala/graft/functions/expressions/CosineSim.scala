@@ -8,9 +8,10 @@ import org.apache.spark.sql.types._
 
 /** Native cosine similarity between two float/double array columns:
   * `dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b)))`, all three sums as
-  * left folds in double over element index — the exact value the
-  * declarative fold (VectorFunctions.dot) and DuckDB's
-  * list_dot_product produce, so oracle comparisons stay bit-identical.
+  * left folds in double over element index — the exact value a
+  * declarative `aggregate(zip_with(...))` fold (ExpressionsSpec checks
+  * it bit for bit) and DuckDB's list_dot_product produce, so oracle
+  * comparisons stay bit-identical.
   *
   * Why custom: the declarative fold is an interpreted higher-order
   * function (disastrous inside O(n²) pair joins), and the unrolled

@@ -32,7 +32,7 @@ object SimilarityQueries {
 
   // v stays the RAW array<float>; graft_cosine (native CosineSim loop)
   // casts per element, so no array-level cast alias exists for
-  // CollapseProject to re-inline (VectorFunctions.dotN scaladoc).
+  // CollapseProject to re-inline into every use.
   private def embs(s: SparkSession, dir: String): DataFrame = {
     // every sim query reads the corpus through here, so this is where
     // NCellsKey=auto meets a corpus dir for the first time — resolve and

@@ -62,7 +62,15 @@ object DedupLayout extends DocumentLog("DedupLayout", "index prefix",
   private def shinglesDir(root: String) = root.stripSuffix("/") + "/shingles"
   private def pairsDir(root: String) = root.stripSuffix("/") + "/pairs"
   private def labelsDir(root: String) = root.stripSuffix("/") + "/labels"
-  private def labelsMetaDir(root: String) =
+  /** The labels' covered-batch watermark, a [[Sidecar]] file. */
+  private def coveredPath(root: String) =
+    root.stripSuffix("/") + "/_labels_covered"
+  /** Where an earlier layout kept the watermark, as a one-row parquet
+    * store. A root that still has it reads as having no watermark, so
+    * its next [[refreshLabels]] rebuilds the labels cold and writes the
+    * sidecar; [[writeLabels]] then deletes it.
+    */
+  private def legacyCoveredDir(root: String) =
     root.stripSuffix("/") + "/labels__covered"
 
   /** Every growing store is partitioned by the batch that wrote it, and
@@ -108,8 +116,6 @@ object DedupLayout extends DocumentLog("DedupLayout", "index prefix",
     StructField("key", StringType), StructField(BatchCol, LongType)))
   private[graft] val LabelsSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("cluster_id", LongType)))
-  private[graft] val LabelsMetaSchema = StructType(Seq(
-    StructField("covered_batch", LongType)))
 
   protected def logs(root: String): Seq[(String, StoreSpec)] = Seq(
     "shingles" -> StoreSpec(shinglesDir(root), ShinglesSchema),
@@ -150,10 +156,10 @@ object DedupLayout extends DocumentLog("DedupLayout", "index prefix",
     // (doc_id, cluster_id), eagerly checkpointed by every caller that
     // read the label store, so overwriting it cannot read-while-write
     labels.write.mode("overwrite").parquet(labelsDir(root))
-    val s = labels.sparkSession
-    import s.implicits._
-    Seq(coveredBatch).toDF("covered_batch").coalesce(1)
-      .write.mode("overwrite").parquet(labelsMetaDir(root))
+    val spark = labels.sparkSession
+    Sidecar.write(spark, coveredPath(root), coveredBatch.toString)
+    val legacy = new org.apache.hadoop.fs.Path(legacyCoveredDir(root))
+    legacy.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(legacy, true)
   }
 
   /** Grow the index with an arrival batch (doc_id, text) — the write
@@ -237,13 +243,14 @@ object DedupLayout extends DocumentLog("DedupLayout", "index prefix",
       .getOrElse(return)
     // a bounded refresh (compact's beforeFold) covers exactly the fold
     val maxBatch = upToBatch.fold(complete)(math.min(_, complete))
-    if (!storeExists(spark, labelsMetaDir(root))) {
+    // no readable watermark (a cold root, a torn sidecar, an earlier
+    // layout's parquet form): the cold build over the pair store
+    val covered = coveredBatch(spark, root).getOrElse {
       writeLabels(DedupQueries.components(readStore(spark, pairsDir(root),
         PairsSchema, mk, beforeBatch = Some(maxBatch + 1))),
         coveredBatch = maxBatch, root)
       return
     }
-    val covered = coveredBatch(spark, root)
     if (maxBatch <= covered) return
     val delta = readStore(spark, pairsDir(root), PairsSchema, mk,
       beforeBatch = Some(maxBatch + 1), afterBatch = Some(covered))
@@ -303,10 +310,11 @@ object DedupLayout extends DocumentLog("DedupLayout", "index prefix",
   def labels(spark: SparkSession, root: String): DataFrame =
     spark.read.schema(LabelsSchema).parquet(labelsDir(root))
 
-  /** The highest pair batch the stored labels cover (see [[writeLabels]]). */
-  private def coveredBatch(spark: SparkSession, root: String): Long =
-    spark.read.schema(LabelsMetaSchema).parquet(labelsMetaDir(root))
-      .head.getLong(0)
+  /** The highest pair batch the stored labels cover (see
+    * [[writeLabels]]); None when the sidecar is missing or unreadable.
+    */
+  private def coveredBatch(spark: SparkSession, root: String): Option[Long] =
+    Sidecar.read(spark, coveredPath(root))(_.toLong)
 
   private def readStore(spark: SparkSession, dir: String, schema: StructType,
                         mk: Option[LogCompaction.Marker],
@@ -348,18 +356,23 @@ object DedupLayout extends DocumentLog("DedupLayout", "index prefix",
                                    mk: Option[Marker]): Seq[(String, String, String)] =
     if (!storeExists(spark, labelsDir(root)))
       Seq(("labels", "skip", "no label store (refreshLabels cold-builds)"))
-    else if (!storeExists(spark, labelsMetaDir(root)))
-      Seq(("labels", "fail",
-        "label store without its covered-batch meta — the next refresh " +
-          "cannot tell what the labels cover; rebuild via refreshLabels"))
-    else scala.util.Try(coveredBatch(spark, root)) match {
-      // a torn meta write must read as a diagnosis, not crash the
-      // diagnostic tool
-      case scala.util.Failure(e) =>
+    else coveredBatch(spark, root) match {
+      // a torn watermark must read as a diagnosis, not crash the
+      // diagnostic tool; the next refresh rebuilds cold either way
+      case None if Sidecar.exists(spark, coveredPath(root)) =>
         Seq(("labels", "fail",
-          s"covered-batch meta unreadable (${e.getClass.getSimpleName}) — " +
-            "torn writeLabels; rebuild via a cold refreshLabels"))
-      case scala.util.Success(covered) =>
+          s"covered-batch watermark ${coveredPath(root)} is torn or unparsable — " +
+            "the next refreshLabels rebuilds the labels cold"))
+      case None if storeExists(spark, legacyCoveredDir(root)) =>
+        Seq(("labels", "warn",
+          "covered-batch watermark in the earlier parquet form " +
+            s"(${legacyCoveredDir(root)}) — the next refreshLabels rebuilds " +
+            "the labels cold and writes the sidecar"))
+      case None =>
+        Seq(("labels", "fail",
+          "label store without its covered-batch watermark — the next " +
+            "refreshLabels rebuilds the labels cold"))
+      case Some(covered) =>
         // compare against the BAND store — the same anchor
         // refreshLabels advances `covered` from (the store append
         // writes LAST). The pair store is the WRONG yardstick: a

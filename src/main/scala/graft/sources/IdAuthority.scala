@@ -18,9 +18,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * with a corpus-wide distinct over the store prefix — correct, but
   * O(corpus rows) on the hot ingest path of EVERY micro-batch (round-8
   * advice). This sidecar moves the answer into a CUMULATIVE BLOOM
-  * FILTER, so a clean batch pays two batch-sized jobs and zero prefix
-  * scans; the exact store is consulted only for the bloom's false
-  * positives (fpp-bounded, usually none).
+  * FILTER, so a clean batch pays one pass over its own ids (an
+  * exchange and one action that probes, counts and builds the batch's
+  * filter together) and zero prefix scans; the exact store is
+  * consulted only for the bloom's false positives (fpp-bounded,
+  * usually none). The same pass refuses an id the batch carries twice.
   *
   * Layout: `<root>/_id_bloom/bloom-<batchId>` — one file per append,
   * each holding the ids of EVERY batch `<= batchId` (underscore dir:
@@ -40,9 +42,9 @@ import org.apache.spark.util.sketch.BloomFilter
   * At [[Fpp]]=1% the authority costs ~1.2 bytes/id.
   *
   * Two record formats, switched on capacity. Up to
-  * [[ShardCapacityKey]] ids the record is ONE file and the build
-  * streams ids through a single task (one allocation, no per-task
-  * zero copies) with the filter broadcast for probes. Past it —
+  * [[ShardCapacityKey]] ids the record is ONE [[Sidecar]] file and
+  * the build streams ids through a single task (one allocation, no
+  * per-task zero copies) with the filter broadcast for probes. Past it —
   * hundreds of millions to tens of billions of ids, where one task
   * and one broadcast would each hold gigabytes — the record is a
   * parquet DIRECTORY of per-shard blooms keyed by
@@ -132,8 +134,8 @@ object IdAuthority {
   private sealed trait Authority { def capacity: Long; def count: Long }
 
   /** Single-file record: the whole filter, driver-resident. */
-  private case class Sidecar(capacity: Long, count: Long,
-                             bloom: BloomFilter) extends Authority
+  private case class Single(capacity: Long, count: Long,
+                            bloom: BloomFilter) extends Authority
 
   /** Sharded record: a parquet dir of (shard, n, capacity, nshards,
     * bytes) rows; the blooms stay ON DISK, deserialized one shard per
@@ -250,17 +252,14 @@ object IdAuthority {
       .maxByOption(_._1)
       .flatMap { case (_, st) =>
         if (st.isDirectory) parseSharded(spark, st.getPath)
-        else try {
-          val in = new DataInputStream(f.open(st.getPath))
-          try {
-            val cap = in.readLong(); val n = in.readLong()
-            Some(Sidecar(cap, n, BloomFilter.readFrom(in)))
-          } finally in.close()
-        } catch { case _: java.io.IOException => None }
+        else Sidecar.readBytes(spark, st.getPath.toString) { b =>
+          val in = new DataInputStream(new ByteArrayInputStream(b))
+          Single(in.readLong(), in.readLong(), BloomFilter.readFrom(in))
+        }
       }
   }
 
-  private def serialize(s: Sidecar): Array[Byte] = {
+  private def serialize(s: Single): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
     out.writeLong(s.capacity); out.writeLong(s.count)
@@ -289,27 +288,15 @@ object IdAuthority {
     }
   }
 
+  /** Publish a single-file record through [[Sidecar]] (temp, delete,
+    * rename), after clearing the other format's name for the batch.
+    */
   private def write(spark: SparkSession, root: String, batchId: Long,
-                    s: Sidecar): Unit = {
-    val f = fs(spark, root)
+                    s: Single): Unit = {
     val d = new org.apache.hadoop.fs.Path(dir(root))
-    val p = new org.apache.hadoop.fs.Path(d, s"bloom-${encodeId(batchId)}")
-    val tmp = new org.apache.hadoop.fs.Path(d,
-      s".bloom-${encodeId(batchId)}.tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(serialize(s)) finally out.close()
-    // FILE renames replace atomically on POSIX, but HDFS-like stores
-    // REFUSE a rename onto an existing destination (returning false,
-    // not throwing) — delete the old record first. The empty window is
-    // safe ([[latestBefore]] finding nothing falls back to the exact
-    // store); a swallowed false is NOT (the stale record would stay
-    // authoritative), so a failed publish raises.
-    clearRecord(f, d, batchId)
-    if (!f.rename(tmp, p)) {
-      if (f.exists(tmp)) f.delete(tmp, false)
-      throw new java.io.IOException(
-        s"IdAuthority: failed to publish sidecar record $p")
-    }
+    clearRecord(fs(spark, root), d, batchId)
+    Sidecar.writeBytes(spark,
+      new org.apache.hadoop.fs.Path(d, s"bloom-${encodeId(batchId)}").toString, serialize(s))
   }
 
   /** Publish a sharded record: stage the rows as parquet under a
@@ -339,11 +326,14 @@ object IdAuthority {
     }
   }
 
+  private def asLong(ids: DataFrame): DataFrame =
+    ids.toDF("id").select(col("id").cast("long").as("id"))
+
   /** Distinct arrival ids keyed by their shard. */
   private def keyedIds(spark: SparkSession, ids: DataFrame,
                        ns: Int): Dataset[(Int, Long)] = {
     import spark.implicits._
-    ids.toDF("id").select(col("id").cast("long").as("id")).distinct()
+    asLong(ids).distinct()
       .select(pmod(hash(col("id")), lit(ns)).cast("int").as("shard"),
         col("id"))
       .as[(Int, Long)]
@@ -370,48 +360,89 @@ object IdAuthority {
       }
   }
 
-  /** Build a filter of `capacity` over a column of ids with ONE
-    * allocation: the distinct ids stream through a single task. The
-    * returned count is exact (distinct), so capacity accounting never
-    * drifts.
+  /** The distinct ids of a batch with their arrival row counts:
+    * (id, n, prior = false). The aggregate is the one exchange of a
+    * [[pass]]; an `n > 1` is an id the batch carries twice.
     */
-  private def build(ids: DataFrame, capacity: Long): (Long, BloomFilter) = {
-    val one = ids.toDF("id").select(col("id").cast("long")).distinct()
-      .coalesce(1)
-      .mapPartitions { it =>
-        val b = BloomFilter.create(capacity, Fpp)
-        var n = 0L
-        it.foreach { r => b.putLong(r.getLong(0)); n += 1 }
-        val bos = new ByteArrayOutputStream()
-        val out = new DataOutputStream(bos)
-        out.writeLong(n); b.writeTo(out); out.close()
-        Iterator(bos.toByteArray)
-      }(Encoders.BINARY)
-      .collect()
-    if (one.isEmpty) (0L, BloomFilter.create(capacity, Fpp))
-    else {
-      val in = new DataInputStream(new ByteArrayInputStream(one.head))
-      try (in.readLong(), BloomFilter.readFrom(in)) finally in.close()
-    }
-  }
+  private def tally(arrivalIds: DataFrame): DataFrame =
+    asLong(arrivalIds).groupBy("id").agg(count(lit(1)).as("n"))
+      .withColumn("prior", lit(false))
 
-  /** The arrival ids the cumulative filter flags as possibly-seen —
-    * capped at `cap + 1` so the driver collect is bounded.
+  /** The distinct ids of the log prefix and a batch: (id, n = arrival
+    * rows, prior = the prefix holds it).
     */
-  private def suspects(spark: SparkSession, ids: DataFrame,
-                       bloom: BloomFilter, cap: Int): Seq[Long] = {
-    val bc = spark.sparkContext.broadcast(bloom)
-    try ids.toDF("id").select(col("id").cast("long")).distinct()
-      .mapPartitions { it =>
-        val b = bc.value
-        it.filter(r => b.mightContainLong(r.getLong(0))).map(_.getLong(0))
-      }(Encoders.scalaLong)
-      .limit(cap + 1)
-      .collect().toSeq
+  private def tallyWith(prior: DataFrame, arrivalIds: DataFrame): DataFrame =
+    asLong(prior).withColumn("a", lit(0L))
+      .unionByName(asLong(arrivalIds).withColumn("a", lit(1L)))
+      .groupBy("id").agg(sum("a").as("n"), (min("a") === 0L).as("prior"))
+
+  private def union(prior: DataFrame, arrivalIds: DataFrame): DataFrame =
+    asLong(prior).unionByName(asLong(arrivalIds))
+
+  /** What one [[pass]] over a tally yields: the exact distinct count, a
+    * filter of the requested capacity over those ids, the ids the probe
+    * filter flags (at most `SuspectCap + 1`), and the first arrival id seen
+    * twice in the batch and the first one the prefix already holds.
+    */
+  private case class Pass(count: Long, bloom: BloomFilter, suspects: Seq[Long],
+                          repeated: Option[Long], known: Option[Long])
+
+  /** Build, probe and count in ONE task: the tally's distinct ids
+    * stream through a single partition (one filter allocation, no
+    * per-task copies to merge), each probed against the broadcast
+    * `probe` filter and inserted into a fresh filter of `capacity`.
+    * The tally's exchange and this action are the pass's only jobs.
+    * Insertion is bitwise OR, so the filter equals a sequential build
+    * over the same ids at the same (capacity, fpp).
+    */
+  private def pass(spark: SparkSession, rows: DataFrame, capacity: Long,
+                   probe: Option[BloomFilter]): Pass = {
+    val bc = probe.map(spark.sparkContext.broadcast(_))
+    def opt(in: DataInputStream) = {
+      val has = in.readBoolean(); val v = in.readLong()
+      if (has) Some(v) else None
+    }
+    try {
+      val one = rows.select("id", "n", "prior").coalesce(1)
+        .mapPartitions { it =>
+          val b = BloomFilter.create(capacity, Fpp)
+          val p = bc.map(_.value)
+          val sus = scala.collection.mutable.ArrayBuffer.empty[Long]
+          var n = 0L
+          var repeated, known: Option[Long] = None
+          it.foreach { r =>
+            val id = r.getLong(0)
+            b.putLong(id); n += 1
+            if (repeated.isEmpty && r.getLong(1) > 1) repeated = Some(id)
+            if (known.isEmpty && r.getBoolean(2) && r.getLong(1) > 0) known = Some(id)
+            if (sus.size <= SuspectCap && p.exists(_.mightContainLong(id))) sus += id
+          }
+          val bos = new ByteArrayOutputStream()
+          val out = new DataOutputStream(bos)
+          out.writeLong(n)
+          Seq(repeated, known).foreach { o =>
+            out.writeBoolean(o.isDefined); out.writeLong(o.getOrElse(0L))
+          }
+          out.writeInt(sus.size); sus.foreach(out.writeLong)
+          b.writeTo(out); out.close()
+          Iterator(bos.toByteArray)
+        }(Encoders.BINARY)
+        .collect()
+      if (one.isEmpty) Pass(0L, BloomFilter.create(capacity, Fpp), Nil, None, None)
+      else {
+        val in = new DataInputStream(new ByteArrayInputStream(one.head))
+        try {
+          val n = in.readLong()
+          val (repeated, known) = (opt(in), opt(in))
+          val sus = Seq.fill(in.readInt())(in.readLong())
+          Pass(n, BloomFilter.readFrom(in), sus, repeated, known)
+        } finally in.close()
+      }
+    }
     // destroy, not unpersist: the filter is rebuilt per append, and a
     // long-running streaming driver would otherwise accumulate one
     // index-sized broadcast per micro-batch
-    finally bc.destroy()
+    finally bc.foreach(_.destroy())
   }
 
   /** Sharded probe: cogroup arrivals with the on-disk bloom rows on the
@@ -438,20 +469,13 @@ object IdAuthority {
       .collect().toSeq
   }
 
-  /** Format-dispatching probe. */
-  private def suspectsOf(spark: SparkSession, ids: DataFrame,
-                         side: Authority, cap: Int): Seq[Long] = side match {
-    case s: Sidecar => suspects(spark, ids, s.bloom, cap)
-    case s: Sharded => suspectsSharded(spark, ids, s, cap)
-  }
-
-  private def refuse(who: String, batchId: Long, id: String,
-                     what: String): Nothing =
+  private def refuse(who: String, batchId: Long, id: Long,
+                     where: String): Nothing =
     throw new IllegalStateException(
-      s"$who(batch $batchId): arrival doc_id $id already exists in the " +
-        s"$what — a re-appended id would corrupt the per-batch stores; " +
-        "redeliver with the ORIGINAL batch id, dedup ids upstream (T3), " +
-        s"or set $TrustKey=true for an upstream that guarantees it")
+      s"$who(batch $batchId): arrival doc_id $id $where — a re-appended id " +
+        "would corrupt the per-batch stores; redeliver with the ORIGINAL " +
+        s"batch id, dedup ids upstream (T3), or set $TrustKey=true for an " +
+        "upstream that guarantees it")
 
   /** One exact probe of the store prefix for the given candidate ids —
     * a pushed `isin` predicate over the pruned id column, row-group
@@ -462,35 +486,36 @@ object IdAuthority {
       .limit(1).collect().headOption.map(_.getLong(0))
 
   /** One exact semi-join of the arrivals against the store prefix — the
-    * no-sidecar bootstrap check, and the refuge for a saturated or
-    * unreadable record.
+    * refuge for a saturated or unprobeable sharded record.
     */
   private def exactDup(priorIds: DataFrame,
                        arrivalIds: DataFrame): Option[Long] =
     priorIds.toDF("id")
-      .join(arrivalIds.toDF("id").select(col("id").cast("long")),
-        Seq("id"), "left_semi")
+      .join(asLong(arrivalIds), Seq("id"), "left_semi")
       .limit(1).collect().headOption.map(_.getLong(0))
 
   /** The whole guard-and-record protocol for one append:
     *
-    *  1. unless [[TrustKey]], CHECK the arrivals against the newest
-    *     sidecar `< batchId` (bloom pass over the batch; exact probe
-    *     only for bloom hits) — or, when no sidecar exists yet
-    *     (pre-upgrade root, pruned history), one exact semi-join
-    *     against `priorIds`, after which the record below bootstraps
+    *  1. unless [[TrustKey]], CHECK the arrivals: an id the batch
+    *     carries twice refuses, and so does an id already in the prefix
+    *     — probed against the newest sidecar `< batchId` (exact probe
+    *     only for bloom hits), or, when no sidecar exists yet
+    *     (pre-upgrade root, pruned history), found by one pass over
+    *     `priorIds` ∪ arrivals, after which the record below bootstraps
     *     the sidecar so the next append is bloom-guarded;
     *  2. RECORD `bloom-<batchId>` = prefix ∪ arrivals — a same-capacity
     *     merge when the inherited capacity holds, else the doubling
     *     rebuild from `priorIds` ∪ arrivals.
     *
-    * `priorIds` is by-name: a bloom-guarded clean batch never evaluates
-    * it. `what` names the store in the refusal ("index prefix",
-    * "token-log prefix"). `preRecord` is the caller's leased refusal
-    * hook — run after the lease is held but BEFORE the sidecar record
-    * publishes, so a caller-side refusal (e.g. SubstrLayout's width
-    * mismatch) never leaves a bloom record ahead of the log; a throw
-    * here releases the lease like any other refusal.
+    * Against a single-file record, the check and the arrivals' filter
+    * come from ONE [[pass]]: a clean batch costs one exchange and one
+    * action. `priorIds` is by-name: a bloom-guarded clean batch never
+    * evaluates it. `what` names the store in the refusal ("index
+    * prefix", "token-log prefix"). `preRecord` is the caller's leased
+    * refusal hook — run after the lease is held but BEFORE the sidecar
+    * record publishes, so a caller-side refusal (e.g. SubstrLayout's
+    * width mismatch) never leaves a bloom record ahead of the log; a
+    * throw here releases the lease like any other refusal.
     */
   def guardAndRecord(spark: SparkSession, root: String, batchId: Long,
                      arrivalIds: DataFrame, priorIds: => DataFrame,
@@ -523,81 +548,65 @@ object IdAuthority {
                                    who: String, what: String): Unit = {
     val trust = spark.conf.getOption(TrustKey).contains("true")
     lazy val prior = priorIds
-    val side = latestBefore(spark, root, batchId)
-    if (!trust) side match {
-      case Some(s) =>
-        Try(suspectsOf(spark, arrivalIds, s, SuspectCap)) match {
-          case Success(hits) if hits.size > SuspectCap =>
-            // saturated filter or a mass-duplicated batch: one exact check
-            exactDup(prior, arrivalIds)
-              .foreach(id => refuse(who, batchId, id.toString, what))
-          case Success(hits) if hits.nonEmpty =>
-            confirmed(prior, hits)
-              .foreach(id => refuse(who, batchId, id.toString, what))
-          case Success(_) => ()
-          case Failure(e) =>
-            // a record that parsed but won't probe (lost shard file,
-            // torn bytes — but also any transient executor/FS error):
-            // the exact store is always right, so degrade to it — but
-            // LOUDLY, because every degraded append pays the
-            // O(corpus) semi-join the sidecar exists to avoid, and a
-            // silent fallback would hide both a corrupt record and a
-            // flapping filesystem behind a slow-but-green pipeline
-            System.err.println(
-              s"[id-authority] $root: bloom probe failed " +
-                s"(${e.getClass.getSimpleName}: ${e.getMessage}); " +
-                s"degrading batch $batchId to the exact prefix check")
-            exactDup(prior, arrivalIds)
-              .foreach(id => refuse(who, batchId, id.toString, what))
-        }
-      case None =>
-        exactDup(prior, arrivalIds)
-          .foreach(id => refuse(who, batchId, id.toString, what))
-    }
-    record(spark, root, batchId, arrivalIds, prior, side)
-  }
-
-  /** Record without checking — [[DedupLayout.materialize]]'s base
-    * batch, and every append under [[TrustKey]].
-    */
-  private def record(spark: SparkSession, root: String, batchId: Long,
-                     arrivalIds: DataFrame, priorIds: => DataFrame,
-                     side: Option[Authority]): Unit = {
     val shardCap = shardCapacity(spark)
-    def rebuild(occupied: Long): Unit = {
+    val known = s"already exists in the $what"
+    val repeated = "appears more than once in the batch"
+    def refuseIf(id: Option[Long], where: String): Unit =
+      if (!trust) id.foreach(refuse(who, batchId, _, where))
+    def checkHits(hits: Seq[Long]): Unit =
+      // more hits than the cap: a saturated filter or a mass-duplicated
+      // batch, settled by one exact check
+      if (hits.size > SuspectCap) refuseIf(exactDup(prior, arrivalIds), known)
+      else if (hits.nonEmpty) refuseIf(confirmed(prior, hits), known)
+    def degrade(e: Throwable): Unit =
+      // a record that parsed but won't probe (lost shard file, torn
+      // bytes — but also any transient executor/FS error): the exact
+      // store is always right, so degrade to it — but LOUDLY, because
+      // every degraded append pays the O(corpus) check the sidecar
+      // exists to avoid, and a silent fallback would hide both a
+      // corrupt record and a flapping filesystem behind a
+      // slow-but-green pipeline
+      System.err.println(
+        s"[id-authority] $root: bloom probe failed " +
+          s"(${e.getClass.getSimpleName}: ${e.getMessage}); " +
+          s"degrading batch $batchId to the exact prefix check")
+    def rebuild(occupied: Long): Unit =
       // amortized doubling: the one remaining corpus-id scan — and the
       // moment the target outgrows one task's worth, the format flips
       // to sharded
-      val all = priorIds.toDF("id")
-        .unionByName(arrivalIds.toDF("id").select(col("id").cast("long")))
-      publish(spark, root, batchId, all,
+      publish(spark, root, batchId, union(prior, arrivalIds),
         math.max(2 * occupied, MinCapacity), shardCap)
+    def bootstrap(): Unit = {
+      val first = pass(spark, tallyWith(prior, arrivalIds), MinCapacity, None)
+      refuseIf(first.repeated, repeated)
+      refuseIf(first.known, known)
+      recordSized(spark, root, batchId, union(prior, arrivalIds), first)
     }
-    side match {
-      case Some(s: Sidecar) =>
-        val (n, add) = build(arrivalIds, s.capacity)
-        if (s.count + n <= s.capacity) {
-          s.bloom.mergeInPlace(add) // same (capacity, fpp) => compatible
-          write(spark, root, batchId, Sidecar(s.capacity, s.count + n, s.bloom))
-        } else rebuild(s.count + n)
+    latestBefore(spark, root, batchId) match {
+      case Some(s: Single) =>
+        Try(pass(spark, tally(arrivalIds), s.capacity, Some(s.bloom))) match {
+          case Success(r) =>
+            refuseIf(r.repeated, repeated)
+            if (!trust) checkHits(r.suspects)
+            if (s.count + r.count <= s.capacity) {
+              s.bloom.mergeInPlace(r.bloom) // same (capacity, fpp) => compatible
+              write(spark, root, batchId, Single(s.capacity, s.count + r.count, s.bloom))
+            } else rebuild(s.count + r.count)
+          case Failure(e) => degrade(e); bootstrap()
+        }
       case Some(s: Sharded) =>
-        val n = arrivalIds.toDF("id").select(col("id").cast("long"))
-          .distinct().count()
+        val t = tally(arrivalIds)
+          .agg(count(lit(1)), max(when(col("n") > 1, col("id")))).head()
+        refuseIf(Option(t.get(1)).map(_.asInstanceOf[Long]), repeated)
+        if (!trust) Try(suspectsSharded(spark, arrivalIds, s, SuspectCap)) match {
+          case Success(hits) => checkHits(hits)
+          case Failure(e) => degrade(e); refuseIf(exactDup(prior, arrivalIds), known)
+        }
+        val n = t.getLong(0)
         if (s.count + n > s.capacity ||
           Try(mergeSharded(spark, root, batchId, s, arrivalIds)).isFailure)
           rebuild(s.count + n)
-      case None =>
-        // same single-scan discipline as recordBase: persist the
-        // distinct prefix∪arrival set across the count and the build
-        val all = priorIds.toDF("id")
-          .unionByName(arrivalIds.toDF("id").select(col("id").cast("long")))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val n = all.count()
-          publish(spark, root, batchId, all,
-            math.max(2 * n, MinCapacity), shardCap)
-        } finally { all.unpersist(); () }
+      case None => bootstrap()
     }
   }
 
@@ -642,16 +651,31 @@ object IdAuthority {
   private def publish(spark: SparkSession, root: String, batchId: Long,
                       ids: DataFrame, target: Long, shardCap: Long): Unit =
     if (target <= shardCap) {
-      val (n, b) = build(ids, target)
-      write(spark, root, batchId, Sidecar(target, n, b))
+      val r = pass(spark, tally(ids), target, None)
+      write(spark, root, batchId, Single(target, r.count, r.bloom))
     } else {
       val ns = shardsFor(target, shardCap)
       writeSharded(spark, root, batchId, target, ns,
         shardRows(spark, ids, ns, perShard(target, ns)))
     }
 
+  /** Record `ids` at capacity max(2n, [[MinCapacity]]), given `first`,
+    * a [[pass]] over them at MinCapacity: when n fits, that pass's
+    * filter IS the record; otherwise a second pass builds it at 2n.
+    */
+  private def recordSized(spark: SparkSession, root: String, batchId: Long,
+                          ids: DataFrame, first: Pass): Unit = {
+    val target = math.max(2 * first.count, MinCapacity)
+    val shardCap = shardCapacity(spark)
+    if (target == MinCapacity && target <= shardCap)
+      write(spark, root, batchId, Single(target, first.count, first.bloom))
+    else publish(spark, root, batchId, ids, target, shardCap)
+  }
+
   /** Record the BASE build's ids (batch -1) so the first append is
-    * already bloom-guarded. A base build REPLACES the root's previous
+    * already bloom-guarded: one [[pass]] at [[MinCapacity]], and a
+    * second at 2n only for a base of more than MinCapacity/2 ids. A
+    * base build REPLACES the root's previous
     * life (materialize explicitly supports rebuilding over a used
     * root — it wipes the compaction marker for the same reason), so
     * the whole sidecar is wiped first: a surviving `bloom-<b>` record
@@ -664,16 +688,8 @@ object IdAuthority {
     val f = fs(spark, root)
     val d = new org.apache.hadoop.fs.Path(dir(root))
     if (f.exists(d)) f.delete(d, true)
-    // ONE corpus scan: the distinct id set is persisted (spilling past
-    // memory), so the capacity-sizing count and the filter build both
-    // read the cached set instead of re-scanning the store
-    val distinctIds = ids.toDF("id").select(col("id").cast("long")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = distinctIds.count()
-      publish(spark, root, baseBatch, distinctIds,
-        math.max(2 * n, MinCapacity), shardCapacity(spark))
-    } finally { distinctIds.unpersist(); () }
+    recordSized(spark, root, baseBatch, ids,
+      pass(spark, tally(ids), MinCapacity, None))
   }
 
   /** Drop sidecar records below the compaction watermark — the batches

@@ -89,22 +89,19 @@ object SubstrLayout extends DocumentLog("SubstrLayout", "fingerprint-log prefix"
   // appending W=50 windows into a W=8 log would silently corrupt every
   // count. Reads use the pin (the store knows its own width); a
   // pre-knob root without a pin behaves as the compiled default.
-  private def wPinPath(root: String) =
-    new org.apache.hadoop.fs.Path(root.stripSuffix("/") + "/_substr_w")
+  private def wPinPath(root: String) = root.stripSuffix("/") + "/_substr_w"
 
   /** The pin's raw state: None without a pin file, else its parsed
     * width or — for an empty, garbled or unreadable (torn) file — the
     * refusal naming it.
     */
   private def readPin(spark: SparkSession, root: String): Option[Either[String, Int]] = {
-    val f = fs(spark, root)
     val p = wPinPath(root)
-    if (!f.exists(p)) None
-    else Some(scala.util.Try {
-      val in = f.open(p)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-    }.toOption.flatMap(_.toIntOption).filter(_ > 0).toRight(
+    if (!Sidecar.exists(spark, p)) None
+    // trimmed bytes, not a newline-terminated Sidecar.read: pins written
+    // before the Sidecar protocol carry no trailing newline
+    else Some(Sidecar.readBytes(spark, p)(b =>
+      new String(b, java.nio.charset.StandardCharsets.UTF_8).trim.toInt).filter(_ > 0).toRight(
       s"SubstrLayout: the window-width pin $p is empty, garbled or unreadable — " +
         "rewrite it with the width the logs were built at, or rebuild the store"))
   }
@@ -116,26 +113,8 @@ object SubstrLayout extends DocumentLog("SubstrLayout", "fingerprint-log prefix"
   private[graft] def pinnedW(spark: SparkSession, root: String): Option[Int] =
     readPin(spark, root).map(orRefuse)
 
-  /** Replace the pin the [[IdAuthority]] way: write a temp file, delete
-    * the old pin, rename — never an in-place overwrite a crash can tear.
-    */
-  private def writeWPin(spark: SparkSession, root: String, w: Int): Unit = {
-    val f = fs(spark, root)
-    val p = wPinPath(root)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      s"._substr_w.tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(w.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if ((f.exists(p) && !f.delete(p, false)) || !f.rename(tmp, p)) {
-      f.delete(tmp, false)
-      throw new java.io.IOException(s"SubstrLayout: failed to publish width pin $p")
-    }
-  }
-
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def writeWPin(spark: SparkSession, root: String, w: Int): Unit =
+    Sidecar.write(spark, wPinPath(root), w.toString)
 
   /** The width this root's logs are built at, READ-side: the pin; for
     * a pinless root whose logs EXIST (a pre-knob store), the compiled

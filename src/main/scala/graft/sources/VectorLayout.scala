@@ -169,28 +169,47 @@ object VectorLayout {
   // was written under; the session-model fallback path REFUSES a
   // mismatch (SubstrLayout.scala:243-260 discipline), while
   // codebook-carrying dirs are self-describing (the stored model is
-  // authoritative) and use the pin to derive K2 consistently.
+  // authoritative) and use the pin to derive K2 consistently. The pin
+  // is a [[Sidecar]] file (`ncells=<K>` and `assign=<mode>` lines), so
+  // reading it on every append and probe costs no Spark job.
 
-  private def metaPath(dir: String): String =
+  private def pinPath(dir: String): String =
+    dir.stripSuffix("/") + "/_pin"
+
+  /** Where layouts written before the sidecar kept the pin: a one-row
+    * parquet store (ncells, assign), still read so their pin holds.
+    */
+  private def legacyMetaPath(dir: String): String =
     dir.stripSuffix("/") + "/_meta"
 
   private def writeMeta(spark: SparkSession, dir: String,
-                        k: Int, mode: String): Unit = {
-    import spark.implicits._
-    Seq((k, mode)).toDF("ncells", "assign")
-      .coalesce(1).write.mode("overwrite").parquet(metaPath(dir))
+                        k: Int, mode: String): Unit =
+    Sidecar.write(spark, pinPath(dir), s"ncells=$k\nassign=$mode")
+
+  private def parsePin(text: String): (Int, String) = {
+    val kv = text.split('\n').map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
+    (kv("ncells").toInt, kv("assign"))
   }
 
   /** The (K, assign-mode) pin of a layout dir, when it carries one
     * (every layout written from round 15 on; older dirs fall back to
-    * the pre-pin behavior). */
+    * the pre-pin behavior). A torn or unparsable pin refuses, naming
+    * the file: serving the layout without its pin could prune the
+    * wrong partitions.
+    */
   private[graft] def readMeta(spark: SparkSession,
                               dir: String): Option[(Int, String)] =
-    if (fs(spark, dir).exists(new org.apache.hadoop.fs.Path(metaPath(dir))))
-      Some(spark.read.parquet(metaPath(dir))
-        .select("ncells", "assign").collect().head)
-        .map(r => (r.getInt(0), r.getString(1)))
-    else None
+    Sidecar.read(spark, pinPath(dir))(parsePin).orElse {
+      if (Sidecar.exists(spark, pinPath(dir)))
+        throw new IllegalStateException(
+          s"VectorLayout: the model pin ${pinPath(dir)} is torn or unparsable — " +
+            "rewrite it with the layout's ncells/assign, or rebuild the layout")
+      else if (fs(spark, dir).exists(new org.apache.hadoop.fs.Path(legacyMetaPath(dir))))
+        Some(spark.read.parquet(legacyMetaPath(dir))
+          .select("ncells", "assign").collect().head)
+          .map(r => (r.getInt(0), r.getString(1)))
+      else None
+    }
 
   private def writeCodebook(spark: SparkSession,
                             cents: Seq[(Long, Array[Long])], dir: String): Unit = {
@@ -596,6 +615,12 @@ object VectorLayout {
   private def histPath(outDir: String): String =
     outDir.stripSuffix("/") + "/_trained_hist"
 
+  /** Declared schema of the trained histogram ([[writeHist]]), so the
+    * drift report infers none in a Spark job.
+    */
+  private[graft] val HistSchema = StructType(Seq(
+    StructField("cell", LongType), StructField("n_trained", LongType)))
+
   /** Retrain threshold: live skew (max/mean cell occupancy) or a single
     * cell growing past this factor × the trained baseline flips the
     * drift report's `retrain` flag.
@@ -614,7 +639,7 @@ object VectorLayout {
       LogCompaction.marker(spark, dir)).drop(BatchCol)
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("n_now"))
-    val base = spark.read.parquet(histPath(dir))
+    val base = spark.read.schema(HistSchema).parquet(histPath(dir))
     now.join(base, Seq("cell"), "full_outer")
       .na.fill(0L, Seq("n_now", "n_trained"))
       .agg(max("n_trained").as("max_trained"),

@@ -45,7 +45,8 @@ class DedupConstructionSpec extends SparkSpec {
   test("the declared text and vector log schemas read each log exactly as inference does") {
     Seq(s"$textRoot/tokens" -> TextLayout.TokensSchema,
       s"$textRoot/token_counts" -> TextLayout.CountsSchema,
-      vecRoot -> VectorLayout.LayoutSchema).foreach { case (dir, declared) =>
+      vecRoot -> VectorLayout.LayoutSchema,
+      s"$vecRoot/_trained_hist" -> VectorLayout.HistSchema).foreach { case (dir, declared) =>
       assert(dataColumns(spark.read.schema(declared).parquet(dir)) ===
         dataColumns(spark.read.parquet(dir)), s"$dir: declared schema drifted")
     }
@@ -69,8 +70,7 @@ class DedupConstructionSpec extends SparkSpec {
     def dataColumns(df: org.apache.spark.sql.DataFrame) = df.drop("__batch_id").schema
     Seq("shingles" -> DedupLayout.ShinglesSchema, "bands" -> DedupLayout.BandsSchema,
       "pairs" -> DedupLayout.PairsSchema,
-      "labels" -> DedupLayout.LabelsSchema,
-      "labels__covered" -> DedupLayout.LabelsMetaSchema).foreach { case (store, declared) =>
+      "labels" -> DedupLayout.LabelsSchema).foreach { case (store, declared) =>
       val dir = s"$root/$store"
       assert(dataColumns(spark.read.schema(declared).parquet(dir)) ===
         dataColumns(spark.read.parquet(dir)), s"$store: declared schema drifted")
@@ -87,20 +87,21 @@ class DedupConstructionSpec extends SparkSpec {
   }
 
   test("fsck reads a torn covered-batch meta as fail, not a crash") {
-    val meta = Paths.get(root, "labels__covered")
+    val meta = Paths.get(root, "_labels_covered")
     def labelRow() = DedupLayout.fsck(spark, root).filter(_._1 == "labels")
     assert(labelRow().map(_._2) === Seq("ok"))
-    val parts = meta.toFile.listFiles().filter(f => f.getName.startsWith("part-"))
-    assert(parts.nonEmpty)
-    val saved = parts.map(f => f -> Files.readAllBytes(f.toPath))
+    val saved = Files.readAllBytes(meta)
+    val crc = meta.resolveSibling("._labels_covered.crc")
     try {
-      // a corrupt data file, then no data file at all
-      parts.foreach(f => Files.write(f.toPath, "torn".getBytes))
-      meta.toFile.listFiles().filter(_.getName.endsWith(".crc")).foreach(_.delete())
+      // garbled text, a value torn short of its newline, then no file
+      Files.deleteIfExists(crc)
+      Seq("torn\n", saved.init.map(_.toChar).mkString).foreach { t =>
+        Files.write(meta, t.getBytes)
+        assert(labelRow().map(_._2) === Seq("fail"), labelRow().toString)
+      }
+      Files.delete(meta)
       assert(labelRow().map(_._2) === Seq("fail"), labelRow().toString)
-      parts.foreach(_.delete())
-      assert(labelRow().map(_._2) === Seq("fail"), labelRow().toString)
-    } finally saved.foreach { case (f, b) => Files.write(f.toPath, b) }
+    } finally Files.write(meta, saved)
     assert(labelRow().map(_._2) === Seq("ok"))
   }
 }

@@ -113,7 +113,7 @@ class DedupLayoutSpec extends SparkSpec {
       spark.listenerManager.unregister(listener)
     }
     val read = scans.asScala.toSeq
-    assert(read.map(_._1).toSet === Set("pairs", "labels", "labels__covered"),
+    assert(read.map(_._1).toSet === Set("pairs", "labels"),
       s"the refresh must read the pairs and the labels only: $read")
     val pairScans = read.filter(_._1 == "pairs")
     assert(pairScans.forall(_._3), s"pair scans without __batch_id PartitionFilters: $read")

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{IdAuthority, TextLayout}
+import graft.sources.{DedupLayout, IdAuthority, SubstrLayout, TextLayout}
 
 /** The index-sized id-authority behind the append guards (round-8
   * advice: the first guard form ran a corpus-wide distinct on every
@@ -56,6 +56,36 @@ class IdAuthoritySpec extends SparkSpec {
       arrivalIds = ids(999, 1010), priorIds = ids(0, 999),
       who = "spec", what = "spec prefix")
     IdAuthority.completeAppend(spark, root)
+  }
+
+  test("a batch that repeats a doc_id refuses in every document layout, naming the id") {
+    val docs = Tables.documents(spark, Sf).select(col("doc_id"), col("text"))
+    val m = col("doc_id") % 4
+    val batch = docs.filter(m === 2)
+    val id = batch.agg(min("doc_id")).head.getLong(0)
+    val twice = batch.unionByName(batch.filter(col("doc_id") === id))
+    for (layout <- Seq(DedupLayout, TextLayout, SubstrLayout)) {
+      val root = Files.createTempDirectory("graft-ida-repeat").toString
+      layout.materialize(spark, docs.filter(m < 2), root)
+      val e = intercept[IllegalStateException] {
+        layout.append(spark, twice, root, batchId = 0L)
+      }
+      assert(e.getMessage.contains(s"doc_id $id appears more than once in the batch"),
+        s"$layout: ${e.getMessage}")
+      assert(!bloomFiles(root).contains("bloom-0"), s"$layout: a refused batch was recorded")
+      layout.append(spark, batch, root, batchId = 0L) // the clean batch still appends
+    }
+    // a trusted upstream's batch is accepted as it comes
+    val root = Files.createTempDirectory("graft-ida-repeat-trust").toString
+    IdAuthority.recordBase(spark, root, ids(0, 1000), baseBatch = -1L)
+    withConf(IdAuthority.TrustKey -> "true") {
+      IdAuthority.guardAndRecord(spark, root, batchId = 0L,
+        arrivalIds = ids(5000, 5100).union(ids(5000, 5001)), priorIds = ids(0, 1000),
+        who = "spec", what = "spec prefix")
+      IdAuthority.completeAppend(spark, root)
+    }
+    assert(bloomFiles(root).contains("bloom-0"))
+    CacheLife.release(spark)
   }
 
   test("trust key skips the check; recording continues") {
