@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import graft.sources.Sidecar
 import scala.collection.concurrent.TrieMap
 
 /** Session-scoped cache registry: every `.persist()` the query registry
@@ -126,42 +127,23 @@ object CacheLife {
 
   /** `_SUCCESS`-gated existence: a half-written store (killed job) is
     * rebuilt, never half-read. */
-  private def ready(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private def ready(s: SparkSession, path: String): Boolean =
+    Sidecar.exists(s, s"$path/_SUCCESS")
 
   /** Publish a store ATOMICALLY: build into a builder-private temp dir,
-    * then one filesystem `rename` makes it visible (round-7 judge watch
-    * item: two drivers pointed at one store root could both see
-    * `!ready` and interleave writes INTO the same directory). Each
-    * builder owns its temp; the first rename publishes. CAUTION on the
-    * loser path (round-8 review, verified against the shipped Hadoop):
-    * `FileSystem.rename` onto an EXISTING directory does NOT fail —
-    * HDFS moves src INTO dst, and RawLocalFileSystem's FileUtil.copy
-    * fallback nests src inside dst and returns true — so the loser
-    * cannot detect the race from the return value. Self-heal instead:
-    * the temp's name is UUID-unique, so after the rename we sweep it
-    * from wherever it ended up — nested inside the winner's store, or
-    * still at its own path. A half-written leftover at the destination
-    * (killed job — no `_SUCCESS`) is swept before the rename so it
-    * can't block publication forever, and a build that THROWS sweeps
-    * its temp on the way out (no orphan accumulation under the root).
+    * then one rename makes it visible ([[graft.sources.Sidecar.publish]]:
+    * two drivers pointed at one store root could both see `!ready`; the
+    * first rename wins and the loser's temp is swept from wherever it
+    * landed). A half-written leftover at the destination (killed job —
+    * no `_SUCCESS`) is swept first so it can't block publication
+    * forever, and a build that THROWS sweeps its temp on the way out
+    * (no orphan accumulation under the root).
     */
   private def publish(s: SparkSession, path: String)(
       write: String => Unit): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(
-      path + ".build-" + java.util.UUID.randomUUID().toString)
-    try write(tmp.toString)
-    catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    if (fs.exists(dst) && !ready(s, path)) fs.delete(dst, true)
-    fs.rename(tmp, dst)
-    val nested = new org.apache.hadoop.fs.Path(dst, tmp.getName)
-    if (fs.exists(nested)) fs.delete(nested, true) // lost the race: reader wins
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    if (!ready(s, path)) Sidecar.delete(s, path)
+    Sidecar.publishStaged(s, path,
+      path + ".build-" + java.util.UUID.randomUUID().toString)(write)
   }
 
   private[graft] def loadOrBuild(s: SparkSession, key: String)(build: => DataFrame): DataFrame =

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * tooling: [[StoreBuild]] lays the artifacts down, [[StoreMaintain]]
   * keeps them healthy between ingests, and this job tells an operator
   * whether a root is healthy WITHOUT touching it. Every check is
-  * directory-metadata-sized or record-sized (a sharded id sidecar and
-  * the one-row label meta cost a few tiny parquet reads), so it can
+  * directory-metadata-sized or record-sized (a sharded id record costs
+  * a few tiny parquet reads; every other record is a
+  * [[sources.Sidecar]] file read on the driver), so it can
   * run against a store whose data is petabytes, on a schedule or
   * before a risky operation.
   *

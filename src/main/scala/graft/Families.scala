@@ -13,9 +13,9 @@ import graft.sources.{DedupLayout, DocumentLog, SubstrLayout, TextLayout, Vector
 import graft.streaming.{IngestSink, VectorStream}
 
 /** The corpus a store family is built from: the name of its landing
-  * dir under `<root>/_landing`, its id column, and its read (one
-  * schema-inferring scan of the scale-factor dir — callers read each
-  * corpus ONCE and slice it per family).
+  * dir under `<root>/_landing`, its id column, and its read (on the
+  * declared corpus schema, so building it runs no job — callers read
+  * each corpus ONCE and slice it per family).
   */
 final case class Corpus(name: String, idCol: String,
                         read: (SparkSession, String) => DataFrame)

@@ -28,7 +28,7 @@ object Pipeline {
   def ingestTick(spark: SparkSession, root: String, coin: String,
                  payloads: Seq[String]): Unit = {
     val tbl = s"$root/ingest/$coin"
-    Warehouse.createIfNotExists(tbl)
+    Warehouse.createIfNotExists(spark, tbl)
     Warehouse.serialAppend(spark, Ohlcv.fromJson(spark, payloads), tbl)
   }
 
@@ -51,7 +51,7 @@ object Pipeline {
     Interchange.writeCsv(
       Warehouse.dailyExport(spark, s"$root/ingest/$coin", ds).coalesce(1), stage)
     val wh = s"$root/warehouse/$coin"
-    Warehouse.createIfNotExists(wh)
+    Warehouse.createIfNotExists(spark, wh)
     Warehouse.append(Interchange.readCsv(spark, stage), wh)
     stage
   }

@@ -89,10 +89,8 @@ object DedupLayout extends DocumentLog("DedupLayout", "index prefix",
     * used to scan. Nothing reads it; [[materialize]] and [[compact]]
     * delete it.
     */
-  private def dropEdges(spark: SparkSession, root: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root.stripSuffix("/") + "/edges")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+  private def dropEdges(spark: SparkSession, root: String): Unit =
+    Sidecar.delete(spark, root.stripSuffix("/") + "/edges")
 
   /** Declared schemas for every store read. Inferring a parquet schema
     * reads file footers in a Spark job, so a declared schema keeps
@@ -158,8 +156,7 @@ object DedupLayout extends DocumentLog("DedupLayout", "index prefix",
     labels.write.mode("overwrite").parquet(labelsDir(root))
     val spark = labels.sparkSession
     Sidecar.write(spark, coveredPath(root), coveredBatch.toString)
-    val legacy = new org.apache.hadoop.fs.Path(legacyCoveredDir(root))
-    legacy.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(legacy, true)
+    Sidecar.delete(spark, legacyCoveredDir(root))
   }
 
   /** Grow the index with an arrival batch (doc_id, text) — the write

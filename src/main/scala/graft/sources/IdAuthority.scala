@@ -99,9 +99,7 @@ object IdAuthority {
   val DefaultShardCapacity: Long = 1L << 25
 
   private def shardCapacity(spark: SparkSession): Long =
-    spark.conf.getOption(ShardCapacityKey)
-      .filter(v => v.nonEmpty && v.length <= 18 && v.forall(_.isDigit))
-      .map(_.toLong).filter(_ > 0)
+    spark.conf.getOption(ShardCapacityKey).flatMap(Sidecar.number).filter(_ > 0)
       .getOrElse(DefaultShardCapacity)
 
   /** Per-shard capacity: both sides of a merge derive it with the same
@@ -115,21 +113,14 @@ object IdAuthority {
 
   private def dir(root: String) = root.stripSuffix("/") + "/_id_bloom"
 
-  private def encodeId(id: Long): String =
-    if (id < 0) s"m${-id}" else id.toString
+  private def encodeId(id: Long): String = Sidecar.encodeSigned(id)
 
-  private def decodeId(name: String): Option[Long] = {
-    val s0 = name.stripPrefix("bloom-")
-    val s = if (s0.endsWith(".d")) s0.dropRight(2) else s0
-    if (s.startsWith("m") && s.drop(1).nonEmpty && s.drop(1).forall(_.isDigit))
-      Some(-s.drop(1).toLong)
-    else if (s.nonEmpty && s.forall(_.isDigit)) Some(s.toLong)
-    else None
-  }
-
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The batch id of a record name, single-file `bloom-<b>` or sharded
+    * `bloom-<b>.d`; None for any other name.
+    */
+  private def decodeId(name: String): Option[Long] =
+    if (!name.startsWith("bloom-")) None
+    else Sidecar.signed(name.stripPrefix("bloom-").stripSuffix(".d"))
 
   private sealed trait Authority { def capacity: Long; def count: Long }
 
@@ -177,7 +168,7 @@ object IdAuthority {
     * (a refused append is not in flight); an exception in the caller's
     * writes releases via its try/finally; a PROCESS crash leaves the
     * lease, which is exactly the protection — the next appender waits
-    * out the liveness grace ([[VectorLayout.StageGraceMs]], the
+    * out the liveness grace ([[Sidecar.StageGraceMs]], the
     * stage-dir convention) before breaking it. The break
     * itself is delete-then-create — two breakers racing inside that
     * window is a double-crash-overlap pathology the lease narrows but
@@ -185,42 +176,19 @@ object IdAuthority {
     * lacks; [[fsck]] still detects the two-ahead aftermath either way.
     */
   private[sources] val LeaseName = "_writer-lease"
-  private def leasePath(root: String) =
-    new org.apache.hadoop.fs.Path(dir(root), LeaseName)
+  private def leasePath(root: String) = s"${dir(root)}/$LeaseName"
 
   private[sources] def acquireLease(spark: SparkSession, root: String,
                                     who: String, batchId: Long): Unit = {
-    val f = fs(spark, root)
     val p = leasePath(root)
-    f.mkdirs(p.getParent)
-    // only "already exists" means held — any other IOException is a
-    // real FS fault and must surface as itself, not as a phantom
-    // concurrent appender (round-11 review). Local FS raw-throws a
-    // plain IOException for an existing path, HDFS the typed subclass.
-    // Message-sniffing alone is NOT enough: "Parent directory does not
-    // exist" / "File does not exist" (sidecar dir pruned concurrently)
-    // also contain 'exist' — so a matching message is only believed
-    // when the lease file is ACTUALLY present; otherwise retry ONCE
-    // (the holder may have released between our create and the exists
-    // probe — a benign race, not a fault) and only a repeat failure
-    // rethrows as the real FS fault it is (round-12 advice + review).
-    def tryCreate(attemptsLeft: Int = 1): Boolean =
-      try { f.create(p, false).close(); true }
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case e: java.io.IOException
-          if e.getMessage != null && e.getMessage.toLowerCase.contains("exist") =>
-            if (f.exists(p)) false
-            else if (attemptsLeft > 0) tryCreate(attemptsLeft - 1)
-            else throw e
-      }
-    if (tryCreate()) return
-    val st = Try(f.getFileStatus(p)).toOption
+    // only "already exists" means held — any other FS fault surfaces as
+    // itself, not as a phantom concurrent appender (Sidecar.createOnce)
+    if (Sidecar.createOnce(spark, p)) return
+    val st = Sidecar.status(spark, p)
     val age = st.map(s => System.currentTimeMillis() - s.getModificationTime)
-    val breakable = st.isEmpty || age.exists(_ > VectorLayout.StageGraceMs)
-    if (breakable) {
-      st.foreach(_ => f.delete(p, false))
-      if (tryCreate()) return
+    if (st.forall(Sidecar.stale)) {
+      st.foreach(_ => Sidecar.delete(spark, p))
+      if (Sidecar.createOnce(spark, p)) return
     }
     throw new IllegalStateException(
       s"$who(batch $batchId): another appender holds the id-authority " +
@@ -229,12 +197,11 @@ object IdAuthority {
         "double-append would leave sidecar records AHEAD of the log " +
         "(the corruption Doctor fails). Retry after the in-flight " +
         "append finishes; a crashed holder's lease breaks itself after " +
-        s"the ${VectorLayout.StageGraceMs} ms liveness grace.")
+        s"the ${Sidecar.StageGraceMs} ms liveness grace.")
   }
 
-  private[sources] def releaseLease(spark: SparkSession, root: String): Unit = {
-    fs(spark, root).delete(leasePath(root), false); ()
-  }
+  private[sources] def releaseLease(spark: SparkSession, root: String): Unit =
+    Sidecar.delete(spark, leasePath(root))
 
   /** The newest record strictly below `batchId` — the prefix authority
     * a guard or a merge consults. A malformed record (crash-truncated)
@@ -242,11 +209,8 @@ object IdAuthority {
     * is always right.
     */
   private def latestBefore(spark: SparkSession, root: String,
-                           batchId: Long): Option[Authority] = {
-    val d = new org.apache.hadoop.fs.Path(dir(root))
-    val f = fs(spark, root)
-    if (!f.exists(d)) return None
-    f.listStatus(d).iterator
+                           batchId: Long): Option[Authority] =
+    Sidecar.list(spark, dir(root))
       .flatMap(s => decodeId(s.getPath.getName).map(_ -> s))
       .filter(_._1 < batchId)
       .maxByOption(_._1)
@@ -257,7 +221,6 @@ object IdAuthority {
           Single(in.readLong(), in.readLong(), BloomFilter.readFrom(in))
         }
       }
-  }
 
   private def serialize(s: Single): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
@@ -267,63 +230,41 @@ object IdAuthority {
     bos.toByteArray
   }
 
-  /** Clear BOTH name forms of a record destination: a replay under a
-    * changed [[ShardCapacityKey]] may publish batch b in the other
-    * format, and two coexisting records for one batch would make
-    * [[latestBefore]]'s pick arbitrary.
+  /** Where batch `batchId`'s record goes in the single-file
+    * (`bloom-<b>`) or sharded (`bloom-<b>.d`) form, once the OTHER
+    * form's name is cleared: a replay under a changed
+    * [[ShardCapacityKey]] may publish batch b in the other format, and
+    * two coexisting records for one batch would make [[latestBefore]]'s
+    * pick arbitrary. Delete signals failure by RETURNING FALSE, so a
+    * failed clear raises. Both forms are then written through
+    * [[Sidecar.replace]] (stage, delete, rename).
     */
-  private def clearRecord(f: org.apache.hadoop.fs.FileSystem,
-                          d: org.apache.hadoop.fs.Path,
-                          batchId: Long): Unit = {
-    val single = new org.apache.hadoop.fs.Path(d, s"bloom-${encodeId(batchId)}")
-    val sharded = new org.apache.hadoop.fs.Path(d, s"bloom-${encodeId(batchId)}.d")
-    // delete signals failure by RETURNING FALSE, like rename — a
-    // swallowed failure here would leave two same-batch records whose
-    // tie latestBefore breaks arbitrarily, possibly electing the stale
-    // one as the guard authority
-    Seq(single -> false, sharded -> true).foreach { case (p, rec) =>
-      if (f.exists(p) && !f.delete(p, rec) && f.exists(p))
-        throw new java.io.IOException(
-          s"IdAuthority: failed to clear stale sidecar record $p")
-    }
+  private def recordPath(spark: SparkSession, root: String, batchId: Long,
+                         sharded: Boolean): String = {
+    def name(sh: Boolean) = s"${dir(root)}/bloom-${encodeId(batchId)}${if (sh) ".d" else ""}"
+    val other = name(!sharded)
+    if (!Sidecar.delete(spark, other) && Sidecar.exists(spark, other))
+      throw new java.io.IOException(s"IdAuthority: failed to clear stale sidecar record $other")
+    name(sharded)
   }
 
-  /** Publish a single-file record through [[Sidecar]] (temp, delete,
-    * rename), after clearing the other format's name for the batch.
-    */
   private def write(spark: SparkSession, root: String, batchId: Long,
-                    s: Single): Unit = {
-    val d = new org.apache.hadoop.fs.Path(dir(root))
-    clearRecord(fs(spark, root), d, batchId)
-    Sidecar.writeBytes(spark,
-      new org.apache.hadoop.fs.Path(d, s"bloom-${encodeId(batchId)}").toString, serialize(s))
-  }
+                    s: Single): Unit =
+    Sidecar.replace(spark, recordPath(spark, root, batchId, sharded = false), serialize(s))
 
-  /** Publish a sharded record: stage the rows as parquet under a
-    * UUID-named dot-dir (invisible to [[decodeId]]), then clear the
-    * destination and rename — the [[write]] discipline, directory form.
-    * The `shard` column is materialized ahead of the implicit groupBy
-    * shuffle, so each bloom is BUILT in its own task and written from
-    * it; nothing record-sized ever gathers in one place.
+  /** Publish a sharded record: the rows staged as parquet, then swapped
+    * in. The `shard` column is materialized ahead of the implicit
+    * groupBy shuffle, so each bloom is BUILT in its own task and written
+    * from it; nothing record-sized ever gathers in one place.
     */
   private def writeSharded(spark: SparkSession, root: String, batchId: Long,
                            capacity: Long, nshards: Int,
                            rows: Dataset[(Int, Long, Array[Byte])]): Unit = {
     import spark.implicits._
-    val f = fs(spark, root)
-    val d = new org.apache.hadoop.fs.Path(dir(root))
-    val tmp = new org.apache.hadoop.fs.Path(d,
-      s".bloom-${encodeId(batchId)}.d.tmp-${java.util.UUID.randomUUID()}")
-    rows.map { case (s, n, b) => (s, n, capacity, nshards, b) }
-      .toDF("shard", "n", "capacity", "nshards", "bytes")
-      .write.mode("overwrite").parquet(tmp.toString)
-    val p = new org.apache.hadoop.fs.Path(d, s"bloom-${encodeId(batchId)}.d")
-    clearRecord(f, d, batchId)
-    if (!f.rename(tmp, p)) {
-      if (f.exists(tmp)) f.delete(tmp, true)
-      throw new java.io.IOException(
-        s"IdAuthority: failed to publish sidecar record $p")
-    }
+    Sidecar.replaceStaged(spark, recordPath(spark, root, batchId, sharded = true))(t =>
+      rows.map { case (s, n, b) => (s, n, capacity, nshards, b) }
+        .toDF("shard", "n", "capacity", "nshards", "bytes")
+        .write.mode("overwrite").parquet(t))
   }
 
   private def asLong(ids: DataFrame): DataFrame =
@@ -685,9 +626,7 @@ object IdAuthority {
     */
   def recordBase(spark: SparkSession, root: String, ids: DataFrame,
                  baseBatch: Long): Unit = {
-    val f = fs(spark, root)
-    val d = new org.apache.hadoop.fs.Path(dir(root))
-    if (f.exists(d)) f.delete(d, true)
+    Sidecar.delete(spark, dir(root))
     recordSized(spark, root, baseBatch, ids,
       pass(spark, tally(ids), MinCapacity, None))
   }
@@ -699,21 +638,13 @@ object IdAuthority {
     * (the guard falls back to one exact check and re-bootstraps).
     */
   def prune(spark: SparkSession, root: String, watermark: Long): Seq[Long] = {
-    val d = new org.apache.hadoop.fs.Path(dir(root))
-    val f = fs(spark, root)
-    if (!f.exists(d)) return Nil
-    val victims = f.listStatus(d).iterator
+    val victims = Sidecar.list(spark, dir(root))
       .flatMap(s => decodeId(s.getPath.getName).map(_ -> s.getPath))
-      .filter(_._1 < watermark).toSeq.sortBy(_._1)
-    victims.foreach { case (_, p) => f.delete(p, true) }
-    // crashed sharded publishes leave `.bloom-*` staging dirs; sweep
-    // the ones old enough to be dead (the VectorLayout.StageGraceMs
-    // liveness convention — a younger temp may be a live writer's)
-    val now = System.currentTimeMillis()
-    f.listStatus(d).iterator
-      .filter(s => s.getPath.getName.startsWith(".bloom-") &&
-        s.getModificationTime < now - VectorLayout.StageGraceMs)
-      .foreach(s => f.delete(s.getPath, true))
+      .filter(_._1 < watermark).sortBy(_._1)
+    victims.foreach { case (_, p) => Sidecar.delete(spark, p.toString) }
+    // crashed publishes leave `.bloom-*.tmp-*` stages; sweep the ones
+    // old enough to be dead (a younger temp may be a live writer's)
+    Sidecar.sweepStale(spark, dir(root))(Sidecar.isTemp)
     victims.map(_._1)
   }
 
@@ -732,24 +663,19 @@ object IdAuthority {
     */
   def fsck(spark: SparkSession, root: String,
            maxLogBatch: Option[Long]): Seq[(String, String, String)] = {
-    val d = new org.apache.hadoop.fs.Path(dir(root))
-    val f = fs(spark, root)
-    if (!f.exists(d))
+    if (!Sidecar.exists(spark, dir(root)))
       return Seq(("authority", "skip",
         "no _id_bloom sidecar (pre-upgrade root; the first append bootstraps one)"))
     val out = Seq.newBuilder[(String, String, String)]
-    val entries = f.listStatus(d).toSeq
-    // the liveness-grace convention: only an AGED staging dir is
-    // crashed debris; a young one may be a live sharded publish
-    val now = System.currentTimeMillis()
-    val stages = entries.count(s =>
-      s.getPath.getName.startsWith(".bloom-") &&
-        s.getModificationTime < now - VectorLayout.StageGraceMs)
+    val entries = Sidecar.list(spark, dir(root))
+    // the liveness-grace convention: only an AGED stage is crashed
+    // debris; a young one may be a live publish
+    val stages = entries.count(s => Sidecar.isTemp(s.getPath.getName) && Sidecar.stale(s))
     if (stages > 0)
       out += (("authority.stage", "warn",
         s"$stages crashed .bloom-* staging dir(s); prune reclaims them"))
     entries.find(_.getPath.getName == LeaseName).foreach { l =>
-      if (l.getModificationTime < now - VectorLayout.StageGraceMs)
+      if (Sidecar.stale(l))
         out += (("authority.lease", "warn",
           "writer lease outlived the liveness grace (crashed appender); " +
             "the next append breaks it"))

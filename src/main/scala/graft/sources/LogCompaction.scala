@@ -86,39 +86,30 @@ object LogCompaction {
 
   private def markerDir(root: String) = root.stripSuffix("/") + "/_compaction"
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs(spark: SparkSession, path: String) = Sidecar.fs(spark, path)
 
   // watermarks can be -1 (a base-only fold); file names encode the sign
   // as a leading 'm' — marker names must stay create-once immutable, so
   // the value rides the name, not writable content
-  private def encodeW(w: Long): String = if (w < 0) s"m${-w}" else w.toString
-  private val MarkerRe = "^gen-([0-9]+)-wm-(m?)([0-9]+)$".r
+  private val MarkerRe = "^gen-(.*)-wm-(.*)$".r
 
   /** The highest published compaction generation of a store root, or
     * None if never compacted. Non-matching siblings are ignored, never
-    * a parse crash (the `_CURRENT_v` digits-guard lesson).
+    * a parse crash ([[Sidecar.number]]).
     */
-  def marker(spark: SparkSession, root: String): Option[Marker] = {
-    val md = new Path(markerDir(root))
-    val f = fs(spark, root)
-    if (!f.exists(md)) None
-    else f.listStatus(md).iterator
-      .map(_.getPath.getName)
-      .collect { case MarkerRe(g, sign, w) =>
-        Marker(g.toInt, (if (sign == "m") -1 else 1) * w.toLong) }
-      .maxByOption(_.gen)
-  }
+  def marker(spark: SparkSession, root: String): Option[Marker] =
+    Sidecar.list(spark, markerDir(root)).flatMap(s => s.getPath.getName match {
+      case MarkerRe(g, w) =>
+        for (gen <- Sidecar.number(g).filter(_.isValidInt); wm <- Sidecar.signed(w))
+          yield Marker(gen.toInt, wm)
+      case _ => None
+    }).maxByOption(_.gen)
 
   /** Publish generation `gen` covering batches `<= w`: one atomic
     * file-create, idempotent on retry.
     */
-  def publish(spark: SparkSession, root: String, gen: Int, w: Long): Unit = {
-    val f = fs(spark, root)
-    f.mkdirs(new Path(markerDir(root)))
-    val m = new Path(markerDir(root), s"gen-$gen-wm-${encodeW(w)}")
-    if (!f.exists(m)) f.create(m, false).close()
-  }
+  def publish(spark: SparkSession, root: String, gen: Int, w: Long): Unit =
+    Sidecar.createOnce(spark, s"${markerDir(root)}/gen-$gen-wm-${Sidecar.encodeSigned(w)}")
 
   /** The reader's view of a batch-partitioned store: the published
     * generation's folded partition plus the live tail — and NEVER an
@@ -138,7 +129,7 @@ object LogCompaction {
     view(df, m).filter(col(BatchCol) <= w || col(BatchCol) < BaseBatch)
 
   private[sources] def storeExists(spark: SparkSession, dir: String): Boolean =
-    fs(spark, dir).exists(new Path(dir))
+    Sidecar.exists(spark, dir)
 
   /** Dynamic overwrite of batch `batchId`: replaces ONLY the partitions
     * `df` writes, so a redelivered batch rewrites its own partitions
@@ -200,7 +191,7 @@ object LogCompaction {
     // stale receipt
     val receipt = new Path(dir.stripSuffix("/"), emptyFoldReceipt(gen))
     if (generationDirs(spark, dir, partitionCols, gen).nonEmpty) f.delete(receipt, false)
-    else if (!f.exists(receipt)) f.create(receipt, false).close()
+    else Sidecar.createOnce(spark, receipt.toString)
   }
 
   /** The store's effective max batch — real partition ids from a
@@ -347,7 +338,7 @@ object LogCompaction {
     * them), never a double-count.
     */
   def reset(spark: SparkSession, markerRoot: String): Unit =
-    fs(spark, markerRoot).delete(new Path(markerDir(markerRoot)), true)
+    Sidecar.delete(spark, markerDir(markerRoot))
 
   /** The append-side guard every layout shares: a batch at or below the
     * compaction watermark has no per-batch partition left to rewrite —

@@ -100,8 +100,7 @@ object SubstrLayout extends DocumentLog("SubstrLayout", "fingerprint-log prefix"
     if (!Sidecar.exists(spark, p)) None
     // trimmed bytes, not a newline-terminated Sidecar.read: pins written
     // before the Sidecar protocol carry no trailing newline
-    else Some(Sidecar.readBytes(spark, p)(b =>
-      new String(b, java.nio.charset.StandardCharsets.UTF_8).trim.toInt).filter(_ > 0).toRight(
+    else Some(Sidecar.readTrimmed(spark, p)(_.toInt).filter(_ > 0).toRight(
       s"SubstrLayout: the window-width pin $p is empty, garbled or unreadable — " +
         "rewrite it with the width the logs were built at, or rebuild the store"))
   }

@@ -89,36 +89,21 @@ object VectorLayout {
 
   private val PointerPrefix = "_CURRENT_v"
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The version `name` carries after `prefix` (`v` for a version dir,
+    * [[PointerPrefix]] for its pointer); a stray sibling (editor temp,
+    * `.bak` copy, an out-of-range number) is None, so every reader
+    * ignores it.
+    */
+  private def versionOf(name: String, prefix: String): Option[Int] =
+    Sidecar.numbered(name, prefix).filter(_.isValidInt).map(_.toInt)
 
   /** The highest published version, from the append-only pointer
     * markers. Marker files are immutable creates — no delete+rename
     * window in which a concurrent reader would see NO pointer.
     */
-  def currentVersion(spark: SparkSession, root: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val f = fs(spark, root)
-    if (!f.exists(p)) None
-    else f.listStatus(p).iterator
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith(PointerPrefix) &&
-          isVersionNum(n.drop(PointerPrefix.length)) =>
-        // digits-only guard: a stray sibling (editor temp, `.bak` copy)
-        // must be IGNORED, not throw NumberFormatException inside every
-        // read path (round-8 review)
-        n.stripPrefix(PointerPrefix).toInt }
+  def currentVersion(spark: SparkSession, root: String): Option[Int] =
+    Sidecar.list(spark, root).flatMap(s => versionOf(s.getPath.getName, PointerPrefix))
       .maxOption
-  }
-
-  /** ASCII digits, bounded length — `_.isDigit` alone admits Unicode
-    * digits and 10+-digit strings whose `toInt` throws; a stray dir
-    * must be ignored, never a crash in a read path (the round-8
-    * digits-only lesson, applied strictly).
-    */
-  private def isVersionNum(s: String): Boolean =
-    s.nonEmpty && s.length <= 9 && s.forall(c => c >= '0' && c <= '9')
 
   /** A path is either a PLAIN layout dir (every pre-versioning caller,
     * StoreBuild, the specs) or a VERSIONED root carrying pointer
@@ -128,29 +113,24 @@ object VectorLayout {
   private[graft] def resolve(spark: SparkSession, path: String): String =
     currentVersion(spark, path).fold(path)(n => versionDir(path, n))
 
-  private def writePointer(spark: SparkSession, root: String, n: Int): Unit = {
-    val f = fs(spark, root)
-    // create-new (no overwrite): atomic publication, idempotent retry
-    val marker = new org.apache.hadoop.fs.Path(root, s"$PointerPrefix$n")
-    if (!f.exists(marker)) f.create(marker, false).close()
-  }
+  /** Create-once pointer: atomic publication, idempotent retry. */
+  private def writePointer(spark: SparkSession, root: String, n: Int): Unit =
+    Sidecar.createOnce(spark, root.stripSuffix("/") + s"/$PointerPrefix$n")
 
-  /** Publish a staged layout dir with ONE rename. The same self-healing
-    * discipline as CacheLife.publish (round-8 review): Hadoop rename
-    * onto an existing directory NESTS the source inside it instead of
-    * failing, so a race loser sweeps its uniquely-named stage from
-    * wherever it landed — inside the winner's published version, or
-    * still at its own path.
+  /** Publish version `n` of `root` from a builder-private hidden stage
+    * (`.<kind>-<uuid>`) with ONE rename ([[Sidecar.publishStaged]]): two
+    * concurrent builders of one version each own a stage, exactly one
+    * becomes the version dir, and the loser's stage is swept; a build
+    * that throws sweeps its own.
     */
-  private def publishDir(spark: SparkSession, stage: String, dst: String): Unit = {
-    val f = fs(spark, dst)
-    val sp = new org.apache.hadoop.fs.Path(stage)
-    val dp = new org.apache.hadoop.fs.Path(dst)
-    f.rename(sp, dp)
-    val nested = new org.apache.hadoop.fs.Path(dp, sp.getName)
-    if (f.exists(nested)) f.delete(nested, true)
-    if (f.exists(sp)) f.delete(sp, true)
-  }
+  private def publishVersion(spark: SparkSession, root: String, n: Int, kind: String)(
+      build: String => Unit): Unit =
+    Sidecar.publishStaged(spark, versionDir(root, n),
+      root.stripSuffix("/") + s"/.$kind-${java.util.UUID.randomUUID()}")(build)
+
+  /** A builder's stage dir under a versioned root. */
+  private def isStage(name: String): Boolean =
+    name.startsWith(".retrain-") || name.startsWith(".mat-")
 
   // ---- Codebook store (the model a versioned layout carries) -------
   // Hist + codebook live INSIDE the layout dir under `_`-prefixed names:
@@ -165,7 +145,7 @@ object VectorLayout {
   // in the vector store the way substr pins its width") ----------------
   // The layout's cell values are a function of (K, assignment mode);
   // serving or growing it under a DIFFERENT session resolution silently
-  // prunes the wrong partitions. `_meta` records the knobs the layout
+  // prunes the wrong partitions. `_pin` records the knobs the layout
   // was written under; the session-model fallback path REFUSES a
   // mismatch (SubstrLayout.scala:243-260 discipline), while
   // codebook-carrying dirs are self-describing (the stored model is
@@ -204,7 +184,7 @@ object VectorLayout {
         throw new IllegalStateException(
           s"VectorLayout: the model pin ${pinPath(dir)} is torn or unparsable — " +
             "rewrite it with the layout's ncells/assign, or rebuild the layout")
-      else if (fs(spark, dir).exists(new org.apache.hadoop.fs.Path(legacyMetaPath(dir))))
+      else if (Sidecar.exists(spark, legacyMetaPath(dir)))
         Some(spark.read.parquet(legacyMetaPath(dir))
           .select("ncells", "assign").collect().head)
           .map(r => (r.getInt(0), r.getString(1)))
@@ -239,8 +219,7 @@ object VectorLayout {
   private def modelFor(spark: SparkSession, sfDir: String,
                        resolvedDir: String): (Seq[(Long, Array[Long])], Int, String) = {
     val meta = readMeta(spark, resolvedDir)
-    if (fs(spark, resolvedDir).exists(
-        new org.apache.hadoop.fs.Path(codebookPath(resolvedDir)))) {
+    if (Sidecar.exists(spark, codebookPath(resolvedDir))) {
       val cents = readCodebook(spark, resolvedDir)
       // meta-less codebook dir (pre-pin legacy): the assign mode rides
       // the SESSION like the old activeAssignMode behavior — a hier
@@ -321,16 +300,9 @@ object VectorLayout {
     */
   def materializeVersioned(spark: SparkSession, sfDir: String,
                            root: String): Unit = {
-    val stage = root.stripSuffix("/") + "/.mat-" +
-      java.util.UUID.randomUUID().toString
-    try {
+    publishVersion(spark, root, 1, "mat") { stage =>
       materializeWhere(spark, sfDir, stage, lit(true))
       writeCodebook(spark, SimilarityQueries.trainedCentroids(spark, sfDir), stage)
-      publishDir(spark, stage, versionDir(root, 1))
-    } catch {
-      case e: Throwable =>
-        fs(spark, root).delete(new org.apache.hadoop.fs.Path(stage), true)
-        throw e
     }
     writePointer(spark, root, 1)
   }
@@ -360,14 +332,10 @@ object VectorLayout {
       s"retrainAndSwap($root) grown corpus")
     val cents = SimilarityQueries.trainCentroidsOver(corpus)
     val next = curN + 1
-    // staged build + single-rename publish: two CONCURRENT retrains both
-    // targeting v<N+1> each own a private stage; exactly one becomes the
-    // version dir, the loser self-sweeps (round-8 review: bare
-    // mode(overwrite) writes into a shared v<N+1> path would interleave
-    // the two builders' layout/hist/codebook)
-    val stage = root.stripSuffix("/") + "/.retrain-" +
-      java.util.UUID.randomUUID().toString
-    try {
+    // staged build + single-rename publish: bare mode(overwrite) writes
+    // into a shared v<N+1> path would interleave two concurrent
+    // retrains' layout/hist/codebook
+    publishVersion(spark, root, next, "retrain") { stage =>
       // a retrain is a FRESH model: the new version pins the live
       // session resolution, whatever the old version was pinned at
       val k = SimilarityQueries.nCellsOf(spark)
@@ -377,11 +345,6 @@ object VectorLayout {
       writeHist(spark, stage) // post-retrain occupancy IS the new baseline
       writeCodebook(spark, cents, stage)
       writeMeta(spark, stage, k, mode)
-      publishDir(spark, stage, versionDir(root, next))
-    } catch {
-      case e: Throwable =>
-        fs(spark, root).delete(new org.apache.hadoop.fs.Path(stage), true)
-        throw e
     }
     writePointer(spark, root, next)
     next
@@ -426,14 +389,6 @@ object VectorLayout {
     LogCompaction.vacuum(spark, dir, Seq(dir), nested = true)
   }
 
-  /** A `.retrain-*`/`.mat-*` stage dir younger than this is treated as
-    * a LIVE concurrent builder's and left alone by [[gcVersions]] —
-    * only stages this stale are presumed crashed. Generous on purpose:
-    * deleting a live stage fails its builder's tasks, while a crashed
-    * one only costs storage for a day.
-    */
-  val StageGraceMs: Long = 24L * 3600 * 1000
-
   /** Minimum WALL-CLOCK age of a retired version before [[gcVersions]]
     * may reclaim it, measured from the creation of the pointer marker
     * that superseded it. The round-8 grace was counted in maintenance
@@ -457,7 +412,7 @@ object VectorLayout {
     * family was never built (round-8 advice).
     */
   def exists(spark: SparkSession, root: String): Boolean =
-    fs(spark, root).exists(new org.apache.hadoop.fs.Path(resolve(spark, root)))
+    Sidecar.exists(spark, resolve(spark, root))
 
   /** Reclaim retired versions: delete the layout dirs of every
     * PUBLISHED version older than the newest `keep` (round-7 scaladoc
@@ -472,7 +427,7 @@ object VectorLayout {
     * versions they superseded. A complete-but-unpublished `v<N+1>`
     * (crash between rename and pointer) is never touched — the next
     * retrain publishes it. Crashed builders' `.retrain-*`/`.mat-*`
-    * stage dirs are swept once older than [[StageGraceMs]] (a younger
+    * stage dirs are swept once older than [[Sidecar.StageGraceMs]] (a younger
     * stage may be a live concurrent retrain, which [[retrainAndSwap]]
     * explicitly supports). Same grace discipline as
     * [[LogCompaction.vacuum]]: run once every reader constructed
@@ -486,44 +441,28 @@ object VectorLayout {
                  minAgeMs: Option[Long] = None): Seq[Int] = {
     require(keep >= 1, s"must keep at least the current version, got $keep")
     val cur = currentVersion(spark, root).getOrElse(return Nil)
-    val f = fs(spark, root)
-    val entries = f.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
+    Sidecar.sweepStale(spark, root)(isStage)
+    val entries = Sidecar.list(spark, root)
     val now = System.currentTimeMillis()
-    entries.foreach { s =>
-      val n = s.getPath.getName
-      if ((n.startsWith(".retrain-") || n.startsWith(".mat-")) &&
-        s.getModificationTime < now - StageGraceMs)
-        f.delete(s.getPath, true)
-    }
     // digits-only guard (the round-8 stray-value convention): a
     // malformed conf falls back to the default grace — the SAFE
     // direction — instead of throwing inside the GC path
     val grace = minAgeMs
-      .orElse(spark.conf.getOption(GcMinAgeKey)
-        .filter(v => v.nonEmpty && v.length <= 18 && v.forall(_.isDigit))
-        .map(_.toLong))
+      .orElse(spark.conf.getOption(GcMinAgeKey).flatMap(Sidecar.number))
       .getOrElse(VersionGraceMs)
     // version n was RETIRED the moment the first marker above it
     // appeared; that marker's mtime starts n's drain clock
-    val markerAt = entries.iterator
-      .filter(s => { val n = s.getPath.getName
-        n.startsWith(PointerPrefix) && n.length > PointerPrefix.length &&
-          n.drop(PointerPrefix.length).forall(_.isDigit) })
-      .map(s => s.getPath.getName.stripPrefix(PointerPrefix).toInt ->
-        s.getModificationTime)
+    val markerAt = entries
+      .flatMap(s => versionOf(s.getPath.getName, PointerPrefix).map(_ -> s.getModificationTime))
       .toMap
     def retiredAt(n: Int): Option[Long] = {
       val above = markerAt.view.filterKeys(_ > n).values
       if (above.isEmpty) None else Some(above.min)
     }
-    val victims = entries.iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.length > 1 &&
-        n.drop(1).forall(_.isDigit) => n.drop(1).toInt }
-      .filter(n => n <= cur - keep &&
-        retiredAt(n).exists(_ <= now - grace))
-      .toSeq.sorted
-    victims.foreach(n => f.delete(
-      new org.apache.hadoop.fs.Path(versionDir(root, n)), true))
+    val victims = entries.flatMap(s => versionOf(s.getPath.getName, "v"))
+      .filter(n => n <= cur - keep && retiredAt(n).exists(_ <= now - grace))
+      .sorted
+    victims.foreach(n => Sidecar.delete(spark, versionDir(root, n)))
     victims
   }
 
@@ -600,7 +539,7 @@ object VectorLayout {
     * fallback.
     */
   private def requireLayout(spark: SparkSession, dir: String): Unit =
-    if (!fs(spark, dir).exists(new org.apache.hadoop.fs.Path(dir)))
+    if (!Sidecar.exists(spark, dir))
       throw new IllegalStateException(
         s"VectorLayout: $dir does not exist — if this path came from a " +
           "pinned snapshot record, its version has been garbage-collected " +
@@ -889,26 +828,16 @@ object VectorLayout {
     * dirs are `ok` (awaiting the GC grace).
     */
   def fsck(spark: SparkSession, root: String): Seq[(String, String, String)] = {
-    val f = fs(spark, root)
-    val p = new org.apache.hadoop.fs.Path(root)
-    if (!f.exists(p))
+    if (!Sidecar.exists(spark, root))
       return Seq(("layout", "skip", s"no vector layout at $root"))
-    val level1 = f.listStatus(p).toSeq
-    val vdirs = level1.iterator
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case n if n.length > 1 && n.head == 'v' &&
-        isVersionNum(n.tail) => n.tail.toInt }
-      .toSeq
+    val level1 = Sidecar.list(spark, root)
+    val vdirs = level1.filter(_.isDirectory).flatMap(s => versionOf(s.getPath.getName, "v"))
     // a stage dir is only CRASHED debris once it outlives the liveness
     // grace — a younger one is likely a live retrain mid-build (the
     // gcVersions sweep convention; flagging a running maintenance job
     // as a crash would make every doctor-during-retrain cry wolf)
-    val now = System.currentTimeMillis()
-    val (agedStages, liveStages) = level1.filter { s =>
-      val n = s.getPath.getName
-      n.startsWith(".retrain-") || n.startsWith(".mat-")
-    }.partition(_.getModificationTime < now - StageGraceMs)
+    val (agedStages, liveStages) =
+      level1.filter(s => isStage(s.getPath.getName)).partition(Sidecar.stale)
     val stageRows =
       (if (agedStages.isEmpty) Nil
        else Seq(("version.stage", "warn",
@@ -949,7 +878,7 @@ object VectorLayout {
         val out = Seq.newBuilder[(String, String, String)]
         out ++= stageRows
         val cur = versionDir(root, v)
-        if (!f.exists(new org.apache.hadoop.fs.Path(cur)))
+        if (!Sidecar.exists(spark, cur))
           out += (("version", "fail",
             s"pointer ${PointerPrefix}$v names a missing dir — every probe " +
               "of this root fails; republish or roll the pointer forward"))

@@ -1,9 +1,6 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,7 +23,9 @@ import org.apache.spark.sql.functions._
   * append ([[serialAppend]]) rewrites it after every commit, and every
   * other writer ([[append]], [[idempotentAppend]]) deletes it before it
   * writes. A missing or unreadable sequence costs one [[maxId]] scan,
-  * the recovery path, after which the next append rewrites it.
+  * the recovery path, after which the next append rewrites it. The
+  * marker and the sequence are [[Sidecar]] files on the table's Hadoop
+  * `FileSystem`, so a table works wherever its parquet does.
   */
 object Warehouse {
 
@@ -35,33 +34,29 @@ object Warehouse {
     * `_SUCCESS` marker (what writing an empty partitioned frame would
     * leave, with no data file) and the sequence `0`.
     */
-  def createIfNotExists(path: String): Unit = {
-    val dir = Paths.get(path)
-    if (!Files.exists(dir)) {
-      Files.createDirectories(dir)
-      Files.createFile(dir.resolve("_SUCCESS"))
-      writeSequence(path, 0L)
+  def createIfNotExists(spark: SparkSession, path: String): Unit =
+    if (!Sidecar.exists(spark, path)) {
+      Sidecar.createOnce(spark, s"$path/_SUCCESS")
+      writeSequence(spark, path, 0L)
     }
-  }
 
-  private def sequenceFile(path: String): Path = Paths.get(path, "_sequence")
+  private def sequenceFile(path: String): String = s"$path/_sequence"
 
   /** The table's committed high-water mark; `None` when the sequence is
-    * missing or does not parse as a mark.
+    * missing or does not parse as a mark. The decimal mark has no
+    * trailing newline, so the read trims rather than requiring one.
     */
-  private def readSequence(path: String): Option[Long] =
-    Try(new String(Files.readAllBytes(sequenceFile(path)), UTF_8).trim.toLong)
-      .toOption.filter(_ >= 0)
+  private def readSequence(spark: SparkSession, path: String): Option[Long] =
+    Sidecar.readTrimmed(spark, sequenceFile(path))(_.toLong).filter(_ >= 0)
 
-  /** Publish `mark` with an atomic rename, so a reader sees the old file,
-    * no file or the new one, never a torn write.
+  /** Replace the mark, so a reader sees the old file, no file or the new
+    * one, never a torn write.
     */
-  private def writeSequence(path: String, mark: Long): Unit = {
-    val tmp = Paths.get(path, "_sequence.tmp")
-    Files.write(tmp, mark.toString.getBytes(UTF_8))
-    Files.move(tmp, sequenceFile(path),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeSequence(spark: SparkSession, path: String, mark: Long): Unit =
+    Sidecar.replace(spark, sequenceFile(path), mark.toString.getBytes(UTF_8))
+
+  private def dropSequence(spark: SparkSession, path: String): Unit =
+    Sidecar.delete(spark, sequenceFile(path))
 
   /** K1 with SERIAL ids: the reference's 5-minute insert into a table
     * with a `SERIAL` key (airflow_dags.py:93-109). Ids continue from the
@@ -73,10 +68,10 @@ object Warehouse {
     * rewritten once the append has committed.
     */
   def serialAppend(spark: SparkSession, candles: DataFrame, path: String): Unit = {
-    val start = readSequence(path).getOrElse(maxId(spark, path))
+    val start = readSequence(spark, path).getOrElse(maxId(spark, path))
     val mark = Observation()
     append(Ohlcv.assignIds(candles, start).observe(mark, max("id").as("id")), path)
-    writeSequence(path, Option(mark.get("id")).fold(start)(_.asInstanceOf[Long]))
+    writeSequence(spark, path, Option(mark.get("id")).fold(start)(_.asInstanceOf[Long]))
   }
 
   /** K1/K4: append into the partitioned table (JDBC append ≅ COPY).
@@ -96,7 +91,7 @@ object Warehouse {
     * the sequence does not know of.
     */
   def append(df: DataFrame, path: String): Unit = {
-    Files.deleteIfExists(sequenceFile(path))
+    dropSequence(df.sparkSession, path)
     df.select(Ohlcv.columns.map(df.col): _*)
       .write.mode("append")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
@@ -130,7 +125,7 @@ object Warehouse {
     * table's sequence before it writes.
     */
   def idempotentAppend(df: DataFrame, path: String, batchId: Long): Unit = {
-    Files.deleteIfExists(sequenceFile(path))
+    dropSequence(df.sparkSession, path)
     df.select(Ohlcv.columns.map(df.col): _*)
       .withColumn("__batch_id", lit(batchId))
       .write.mode("overwrite")
@@ -161,7 +156,7 @@ object Warehouse {
     */
   private def streamRows(spark: SparkSession, path: String): DataFrame = {
     val dir = streamSection(path)
-    if (Files.exists(Paths.get(dir)))
+    if (Sidecar.exists(spark, dir))
       spark.read.schema(streamSchema).parquet(dir)
     else
       spark.createDataFrame(
@@ -188,12 +183,10 @@ object Warehouse {
     * ([[graft.streaming.CandleStream.warehouseSink]]) therefore calls it
     * only on the FIRST batch after a (re)start and tracks the mark
     * incrementally afterwards, so steady state is O(batch), not
-    * O(table). Existence check is java.nio = local-filesystem analog,
-    * consistent with this module's parquet-directory warehouse model;
-    * a DFS deployment swaps in the Hadoop FileSystem API here.
+    * O(table).
     */
   def streamMaxId(spark: SparkSession, path: String, belowBatch: Long): Long =
-    if (!Files.exists(Paths.get(path))) 0L
+    if (!Sidecar.exists(spark, path)) 0L
     else batchRows(spark, path).select(col("id"))
       .unionByName(streamRows(spark, path)
         .filter(col("__batch_id") < belowBatch).select(col("id")))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.operators.SimilarityQueries
-import graft.sources.VectorLayout
+import graft.sources.{Sidecar, VectorLayout}
 
 /** Streaming retrieval endpoint: query vectors ARRIVE as a stream and
   * each micro-batch probes the static IVF cell index — the serving
@@ -84,8 +84,7 @@ object VectorStream {
     IngestSink.start(vectors, checkpoint)(
       VectorLayout.append(_, sfDir, layoutDir, _, _))
 
-  private def watermarkDir(outDir: String) =
-    new org.apache.hadoop.fs.Path(outDir.stripSuffix("/") + "__watermarks")
+  private def watermarkDir(outDir: String) = outDir.stripSuffix("/") + "__watermarks"
 
   /** The highest micro-batch id the stream's checkpoint has COMMITTED —
     * from the `<checkpoint>/commits/<batchId>` markers Structured
@@ -93,28 +92,20 @@ object VectorStream {
     * absent checkpoint.
     */
   private def committedBatch(spark: SparkSession,
-                             checkpoint: String): Option[Long] = {
-    val d = new org.apache.hadoop.fs.Path(
-      checkpoint.stripSuffix("/") + "/commits")
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(d)) None
-    else fs.listStatus(d).iterator.map(_.getPath.getName)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit))
-      .map(_.toLong).maxOption
-  }
+                             checkpoint: String): Option[Long] =
+    Sidecar.list(spark, checkpoint.stripSuffix("/") + "/commits")
+      .flatMap(s => Sidecar.number(s.getPath.getName)).maxOption
+
+  private val PrunedPrefix = "_pruned-"
+  private val RecordPrefix = "wm-"
 
   /** The pin-prune floor: the highest `_pruned-<W>` marker, below which
     * `wm-<id>` records have been reclaimed and a missing record means
     * FINALIZED, not first-attempt.
     */
-  private def prunedWatermark(fs: org.apache.hadoop.fs.FileSystem,
-                              dir: org.apache.hadoop.fs.Path): Option[Long] =
-    if (!fs.exists(dir)) None
-    else fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .filter(n => n.startsWith("_pruned-") &&
-        n.stripPrefix("_pruned-").nonEmpty &&
-        n.stripPrefix("_pruned-").forall(_.isDigit))
-      .map(_.stripPrefix("_pruned-").toLong).maxOption
+  private def prunedWatermark(spark: SparkSession, dir: String): Option[Long] =
+    Sidecar.list(spark, dir)
+      .flatMap(s => Sidecar.numbered(s.getPath.getName, PrunedPrefix)).maxOption
 
   /** Reclaim pin records the checkpoint has outlived — the maintenance
     * companion of [[probeLayoutSink]] (run it beside
@@ -140,43 +131,22 @@ object VectorStream {
       case None => Nil
       case Some(w) =>
         val dir = watermarkDir(outDir)
-        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(dir)) return Nil
-        val marker = new org.apache.hadoop.fs.Path(dir, s"_pruned-$w")
-        if (prunedWatermark(fs, dir).forall(_ < w) && !fs.exists(marker))
-          fs.create(marker, false).close()
+        if (!Sidecar.exists(spark, dir)) return Nil
+        if (prunedWatermark(spark, dir).forall(_ < w))
+          Sidecar.createOnce(spark, s"$dir/$PrunedPrefix$w")
         // only the MAX floor is ever consulted: markers below the one
         // just published are dead files — leaving them would rebuild
         // the very small-files growth this function exists to stop
-        fs.listStatus(dir).iterator.map(_.getPath)
-          .filter { p =>
-            val s = p.getName.stripPrefix("_pruned-")
-            p.getName.startsWith("_pruned-") && s.nonEmpty &&
-              s.forall(_.isDigit) && s.toLong < w
-          }
-          .foreach(p => fs.delete(p, false))
-        val victims = fs.listStatus(dir).iterator
-          .map(_.getPath)
-          .flatMap { p =>
-            val n = p.getName.stripPrefix("wm-")
-            if (p.getName.startsWith("wm-") && n.nonEmpty &&
-              n.forall(_.isDigit) && n.toLong < w) Some(n.toLong -> p)
-            else None
-          }
-          .toSeq.sortBy(_._1)
-        victims.foreach { case (_, p) => fs.delete(p, false) }
-        // crashed writers leave `wm-<id>.tmp-<uuid>` temps the rename
-        // never consumed; sweep the ones old enough to be dead (the
-        // StageGraceMs liveness convention — a younger temp may belong
-        // to a live writer racing this prune)
-        val now = System.currentTimeMillis()
-        fs.listStatus(dir).iterator
-          .filter { s =>
-            val n = s.getPath.getName
-            n.startsWith("wm-") && n.contains(".tmp-") &&
-              s.getModificationTime < now - VectorLayout.StageGraceMs
-          }
-          .foreach(s => fs.delete(s.getPath, false))
+        def below(prefix: String) = Sidecar.list(spark, dir).flatMap { s =>
+          Sidecar.numbered(s.getPath.getName, prefix).filter(_ < w).map(_ -> s.getPath.toString)
+        }.sortBy(_._1)
+        below(PrunedPrefix).foreach { case (_, p) => Sidecar.delete(spark, p) }
+        val victims = below(RecordPrefix)
+        victims.foreach { case (_, p) => Sidecar.delete(spark, p) }
+        // crashed writers leave record temps the rename never consumed;
+        // sweep the ones old enough to be dead (a younger temp may
+        // belong to a live writer racing this prune)
+        Sidecar.sweepStale(spark, dir)(Sidecar.isTemp)
         victims.map(_._1)
     }
 
@@ -184,16 +154,12 @@ object VectorStream {
     * and reader/doctor ([[fsckPins]]): line 1 = resolved layout dir,
     * line 2 = pinned layout watermark. None on any torn/short read.
     */
-  private def readPin(fs: org.apache.hadoop.fs.FileSystem,
-                      p: org.apache.hadoop.fs.Path): Option[(String, Long)] =
-    scala.util.Try {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      txt.trim.split("\n")
-    }.toOption
-      .filter(l => l.length == 2 && l(1).matches("-?\\d+"))
-      .map(l => (l(0), l(1).toLong))
+  private def readPin(spark: SparkSession, path: String): Option[(String, Long)] =
+    Sidecar.readTrimmed(spark, path) { txt =>
+      val Array(dir, wm) = txt.split("\n")
+      require(wm.matches("-?\\d+"), s"torn pin record $path")
+      dir -> wm.toLong
+    }
 
   /** Read-only integrity report of a stream's pin sidecar — the
     * [[graft.Doctor]] leg the store-root fsck cannot reach (pins are
@@ -204,30 +170,25 @@ object VectorStream {
   def fsckPins(spark: SparkSession, outDir: String,
                checkpoint: String): Seq[(String, String, String)] = {
     val dir = watermarkDir(outDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir))
+    if (!Sidecar.exists(spark, dir))
       return Seq(("pins", "skip",
         s"no pin sidecar at $dir (stream never probed a layout)"))
-    def asId(s: String): Option[Long] =
-      if (s.nonEmpty && s.length <= 18 && s.forall(c => c >= '0' && c <= '9'))
-        Some(s.toLong) else None
     val out = Seq.newBuilder[(String, String, String)]
-    val names = fs.listStatus(dir).map(_.getPath.getName).toSeq
-    val temps = names.count(n => n.startsWith("wm-") && n.contains(".tmp-"))
+    val names = Sidecar.list(spark, dir).map(_.getPath.getName)
+    val temps = names.count(Sidecar.isTemp)
     if (temps > 0)
       out += (("pins.stage", "warn",
         s"$temps crashed writer temp(s); pruneWatermarks sweeps aged ones"))
-    val markers = names.filter(_.startsWith("_pruned-"))
-      .flatMap(n => asId(n.stripPrefix("_pruned-")))
+    val markers = names.flatMap(Sidecar.numbered(_, PrunedPrefix))
     if (markers.size > 1)
       out += (("pins", "warn",
         s"${markers.size} _pruned-* markers (crashed retire) — only the max " +
           s"floor ${markers.max} is consulted; the next prune retires the rest"))
     val floor = markers.maxOption
-    val recNames = names.filter(n => n.startsWith("wm-") && !n.contains(".tmp-"))
-    val recs = recNames.flatMap(n => asId(n.stripPrefix("wm-"))).sorted
+    val recNames = names.filter(n => n.startsWith(RecordPrefix) && !Sidecar.isTemp(n))
+    val recs = recNames.flatMap(Sidecar.numbered(_, RecordPrefix)).sorted
     val foreign = recNames.size - recs.size +
-      names.count(n => !n.startsWith("wm-") && !n.startsWith("_pruned-") &&
+      names.count(n => !n.startsWith(RecordPrefix) && !n.startsWith(PrunedPrefix) &&
         !n.startsWith("."))
     if (foreign > 0)
       out += (("pins", "warn",
@@ -243,7 +204,7 @@ object VectorStream {
     var broken = List.empty[Long]
     val conf = spark.sparkContext.hadoopConfiguration
     recs.foreach { id =>
-      readPin(fs, new org.apache.hadoop.fs.Path(dir, s"wm-$id")) match {
+      readPin(spark, s"$dir/$RecordPrefix$id") match {
         case None => malformed += 1
         case Some((pinnedDir, _)) =>
           // the pinned LAYOUT may live on a different filesystem than
@@ -303,22 +264,21 @@ object VectorStream {
   private def pinnedSnapshot(spark: SparkSession, outDir: String,
                              layoutDir: String, batchId: Long): (String, Long) = {
     val dir = watermarkDir(outDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir, s"wm-$batchId")
+    val p = s"$dir/$RecordPrefix$batchId"
     // a crash can leave an empty/truncated record (round-8 review):
     // validate on read, and treat a malformed record as absent — it is
     // deleted and re-pinned, never parsed into an exception that bricks
     // every subsequent retry of the batch
     def parse(): Option[(String, Long)] =
-      if (!fs.exists(p)) None
-      else readPin(fs, p).orElse { fs.delete(p, false); None }
+      if (!Sidecar.exists(spark, p)) None
+      else readPin(spark, p).orElse { Sidecar.delete(spark, p); None }
     parse().getOrElse {
       // no record: first attempt — unless the batch fell below the
       // prune floor, where a missing record means FINALIZED: re-pinning
       // against today's layout would rewrite this batch's partition
       // with different top-k rows, the exact corruption the pin exists
       // to prevent
-      prunedWatermark(fs, dir).filter(batchId < _).foreach { w =>
+      prunedWatermark(spark, dir).filter(batchId < _).foreach { w =>
         throw new IllegalStateException(
           s"VectorStream: batch $batchId is below the pin-prune " +
             s"watermark $w and its snapshot record is gone — a " +
@@ -330,15 +290,10 @@ object VectorStream {
       }
       val resolved = VectorLayout.resolve(spark, layoutDir)
       val wm = VectorLayout.maxBatchId(spark, resolved)
-      // write-temp-then-rename: the record appears complete or not at
-      // all; a concurrent first attempt's rename simply replaces (file
-      // renames don't nest), and BOTH writers re-read the published
+      // staged publish: the record appears complete or not at all, and
+      // BOTH writers of a racing first attempt re-read the published
       // record so they agree
-      val tmp = new org.apache.hadoop.fs.Path(dir,
-        s"wm-$batchId.tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(s"$resolved\n$wm".getBytes("UTF-8")) finally out.close()
-      if (!fs.rename(tmp, p) && fs.exists(tmp)) fs.delete(tmp, false)
+      Sidecar.publish(spark, p, s"$resolved\n$wm".getBytes("UTF-8"))
       parse().getOrElse((resolved, wm))
     }
   }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.operators.SubstrDedup
-import graft.sources.{IdAuthority, SubstrLayout, VectorLayout}
+import graft.sources.{IdAuthority, Sidecar, SubstrLayout, VectorLayout}
 
 /** Negative-path drain (round-11 verdict stretch #8): StreamDrain
   * always succeeds, so the fsck severity contract — warn for states
@@ -30,7 +30,7 @@ class ChaosDrainSpec extends SparkSpec {
 
   private def ageLease(root: String): Unit =
     assert(leaseFile(root).setLastModified(
-      System.currentTimeMillis() - 2 * VectorLayout.StageGraceMs))
+      System.currentTimeMillis() - 2 * Sidecar.StageGraceMs))
 
   /** The crash: record published, lease held, NEITHER log written —
     * exactly what a process kill inside [[SubstrLayout.append]]'s try

@@ -42,7 +42,7 @@ class DoctorSpec extends SparkSpec {
     // a YOUNG stage dir may be a live fold (ok, not warn) — age it
     // past the liveness grace so it reads as crashed debris
     assert(junk.setLastModified(System.currentTimeMillis() -
-      2 * sources.VectorLayout.StageGraceMs))
+      2 * sources.Sidecar.StageGraceMs))
     try {
       val rows = Doctor.check(spark, root)
       val w = rows.find(r => r._1 == "text" && r._2 == "tokens.stage")

@@ -40,6 +40,20 @@ class IdAuthoritySpec extends SparkSpec {
     assert(bloomFiles(root) === Seq("bloom-0", "bloom-m1"))
   }
 
+  test("an all-digit record name past Long range is a stray, not an overflow") {
+    val root = Files.createTempDirectory("graft-ida-stray").toString
+    IdAuthority.recordBase(spark, root, ids(0, 1000), baseBatch = -1L)
+    assert(new java.io.File(root, "_id_bloom/bloom-99999999999999999999").createNewFile())
+    // the guard still finds bloom-m1, so the clean batch stays lazy
+    IdAuthority.guardAndRecord(spark, root, batchId = 0L,
+      arrivalIds = ids(5000, 5100),
+      priorIds = sys.error("a stray name must not hide the base record"),
+      who = "spec", what = "spec prefix")
+    IdAuthority.completeAppend(spark, root)
+    assert(IdAuthority.prune(spark, root, watermark = 0L) === Seq(-1L))
+    assert(bloomFiles(root) === Seq("bloom-0", "bloom-99999999999999999999"))
+  }
+
   test("a duplicated id refuses through the bloom with an exact confirm") {
     val root = Files.createTempDirectory("graft-ida-dup").toString
     IdAuthority.recordBase(spark, root, ids(0, 1000), baseBatch = -1L)
@@ -241,7 +255,7 @@ class IdAuthoritySpec extends SparkSpec {
     // manufacture the exact two-ahead corruption the lease exists to
     // prevent)
     assert(lease.setLastModified(System.currentTimeMillis() -
-      2 * graft.sources.VectorLayout.StageGraceMs))
+      2 * graft.sources.Sidecar.StageGraceMs))
     IdAuthority.guardAndRecord(spark, root, batchId = 0L,
       arrivalIds = ids(5000, 5100), priorIds = ids(0, 1000),
       who = "spec-writer-B", what = "spec prefix")

@@ -338,6 +338,9 @@ class LogCompactionSpec extends SparkSpec {
     // a stray sibling must be ignored, never a parse crash
     val md = new Path(root + "/_compaction/gen-2-wm-oops.bak")
     fs(root).create(md, false).close()
+    // all-digit numbers past Int/Long range are strays too, not overflows
+    Seq("gen-99999999999-wm-1", "gen-3-wm-99999999999999999999").foreach(n =>
+      fs(root).create(new Path(root + "/_compaction/" + n), false).close())
     LogCompaction.publish(spark, root, gen = 2, w = 7L)
     assert(LogCompaction.marker(spark, root)
       === Some(LogCompaction.Marker(2, 7L)), "highest generation must win")

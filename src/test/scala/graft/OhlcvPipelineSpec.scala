@@ -98,14 +98,26 @@ class OhlcvPipelineSpec extends SparkSpec {
 
   test("table creation runs no job; a first tick into an empty root runs 1") {
     val tbl = Paths.get(Files.createTempDirectory("graft-create").toString, "t").toString
-    assert(jobsDuring(Warehouse.createIfNotExists(tbl)) === 0)
+    assert(jobsDuring(Warehouse.createIfNotExists(spark, tbl)) === 0)
     val made = Files.list(Paths.get(tbl)).iterator().asScala.map(_.getFileName.toString).toSet
-    assert(made === Set("_SUCCESS", "_sequence"), "creation leaves no data file")
+    // the checksummed local file system writes a .crc beside each file
+    assert(made === Set("_SUCCESS", "._SUCCESS.crc", "_sequence", "._sequence.crc"),
+      "creation leaves no data file")
     assert(Warehouse.table(spark, tbl).count() === 0)
 
     val root = Files.createTempDirectory("graft-first").toString
     assert(jobsDuring(Pipeline.ingestTick(spark, root, "Bitcoin", Seq(payload))) === 1)
     assert(ingestIds(root) === Seq(1L))
+  }
+
+  test("a file: URI root keeps its sequence beside its table") {
+    val root = Files.createTempDirectory("graft-uri").toString
+    Seq("04:30:00", "04:35:00").foreach(t =>
+      Pipeline.ingestTick(spark, "file:" + root, "Bitcoin", Seq(payloadAt(t, 28361.2))))
+    assert(ingestIds(root) === Seq(1L, 2L))
+    assert(new String(Files.readAllBytes(Paths.get(root, "ingest", "Bitcoin", "_sequence"))) === "2")
+    assert(!Files.exists(Paths.get("file:")),
+      "a file: root must not leave a stray file: tree under the working directory")
   }
 
   private def ingestIds(root: String): Seq[Long] =

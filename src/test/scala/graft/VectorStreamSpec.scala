@@ -183,6 +183,10 @@ class VectorStreamSpec extends SparkSpec {
     assert(VectorStream.pruneWatermarks(spark, out, ckpt) === Seq(0L))
     assert(sidecar() === Seq("_pruned-1", "wm-1"),
       "only records >= the committed watermark may survive a prune")
+    // an all-digit floor past Long range is a stray: the prune and the
+    // next batch's pin ignore it rather than overflow on it
+    val stray = new java.io.File(wmDir, "_pruned-99999999999999999999")
+    assert(stray.createNewFile())
     assert(VectorStream.pruneWatermarks(spark, out, ckpt) === Nil,
       "a re-run reclaims nothing further")
 
@@ -194,6 +198,7 @@ class VectorStreamSpec extends SparkSpec {
     graft.sources.VectorLayout.append(spark, Sf, layout, clones, batchId = 7L)
     writeOneFile(queries.filter(col("vec_id") === 23), qdir, "q3.parquet")
     val grown = drain(ckpt)
+    assert(stray.delete())
     assert(sidecar() === Seq("_pruned-1", "wm-1", "wm-2"),
       "a live continuation must pin its new batch beside the survivors")
     assert(grown.filter(_._1 <= 22) === first,
@@ -240,7 +245,7 @@ class VectorStreamSpec extends SparkSpec {
     assert(temp.createNewFile())
     assert(rows().exists(r => r._1 == "pins.stage" && r._2 == "warn"))
     assert(temp.setLastModified(
-      System.currentTimeMillis() - 2 * graft.sources.VectorLayout.StageGraceMs))
+      System.currentTimeMillis() - 2 * graft.sources.Sidecar.StageGraceMs))
     VectorStream.pruneWatermarks(spark, out, ckpt)
     assert(!temp.exists(), "an aged temp must be swept by the prune")
     assert(!rows().exists(_._1 == "pins.stage"), "swept temp must clear the warn")

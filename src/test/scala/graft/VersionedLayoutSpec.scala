@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.operators.SimilarityQueries
-import graft.sources.VectorLayout
+import graft.sources.{Sidecar, VectorLayout}
 
 /** Retrain-and-swap for the ANN layout (round-7 judge ask: drift said
   * RETRAIN but nothing retrained): when growth concentrates, a retrain
@@ -75,7 +75,13 @@ class VersionedLayoutSpec extends SparkSpec {
     // IGNORED by pointer resolution, not throw on every read path
     java.nio.file.Files.writeString(
       new java.io.File(root, "_CURRENT_v2.bak").toPath, "junk")
+    // all-digit names past Int range: neither the pointer read nor the
+    // GC's marker and version listings may overflow on them
+    java.nio.file.Files.writeString(
+      new java.io.File(root, "_CURRENT_v99999999999").toPath, "")
+    assert(new java.io.File(root, "v99999999999").mkdir())
     assert(VectorLayout.currentVersion(spark, root) === Some(2))
+    assert(VectorLayout.gcVersions(spark, root) === Nil)
     assert(rows(VectorLayout.probeQuerySet(spark, Sf, root, qvs)) === postSwap)
 
     // no stage leftovers: the builder-private staging dirs were renamed
@@ -91,7 +97,7 @@ class VersionedLayoutSpec extends SparkSpec {
     val crashed = new java.io.File(root, ".retrain-crashed")
     assert(crashed.mkdir())
     assert(crashed.setLastModified(
-      System.currentTimeMillis() - VectorLayout.StageGraceMs - 60000))
+      System.currentTimeMillis() - Sidecar.StageGraceMs - 60000))
     val live = new java.io.File(root, ".retrain-live")
     assert(live.mkdir())
     // under the DEFAULT wall-clock grace a just-retired v1 SURVIVES —
