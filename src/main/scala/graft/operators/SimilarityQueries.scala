@@ -2440,6 +2440,15 @@ object SimilarityQueries {
   private val oQ = s"SELECT v AS qv FROM e WHERE vec_id = $QueryVecId"
   private val oCos = VO.cosine("v", "qv")
 
+  /** DuckDB's dot product over integer (quantized) vectors, exact in
+    * double below 2^53 — and the 6-dp cosine the trained models assign
+    * and probe by, the SQL twin of `graft_cosine` on quantized rows.
+    */
+  private def oDot(a: String, b: String): String =
+    s"list_dot_product(($a)::DOUBLE[], ($b)::DOUBLE[])"
+  private def oQCos(a: String, b: String): String =
+    s"round(${oDot(a, b)} / (sqrt(${oDot(a, a)}) * sqrt(${oDot(b, b)})), 6)"
+
   private lazy val oPairsExact: String =
     s"WITH e AS ($oE) " +
     s"SELECT vec_a, vec_b, cos FROM (" +
@@ -2487,30 +2496,6 @@ object SimilarityQueries {
     s"round(${VO.cosine("a.v", "b.v")}, 6) AS cos FROM e a JOIN e b ON a.vec_id < b.vec_id), " +
     oKnnRankTail("p")
 
-  /** IVF-probe kNN oracle over an optionally-restricted query side
-    * (candidates always corpus-wide) — mirrors [[knnAnn]] /
-    * [[knnAnnSample]] riding [[probeQuerySet]].
-    */
-  private def oKnnAnnOver(srcWhere: String, nprobe: Int = -1): String = {
-    val np = if (nprobe > 0) nprobe else activeNProbe
-    s"WITH e AS ($oE), $oCells, " +
-    s"qs AS (SELECT q.vec_id AS src, q.v AS qv, c.cid, " +
-    s"round(${VO.cosine("c.cv", "q.v")}, 6) AS ccos FROM e q, cents c$srcWhere), " +
-    s"qc AS (SELECT src, qv, cid AS cell FROM (" +
-    s"SELECT *, row_number() OVER (PARTITION BY src ORDER BY ccos DESC, cid) AS rn FROM qs) " +
-    s"WHERE rn <= $np), " +
-    s"cand AS (SELECT src, vec_id AS dst, round(${VO.cosine("v", "qv")}, 6) AS cos " +
-    s"FROM cells JOIN qc USING (cell) WHERE vec_id <> src) " +
-    s"SELECT src, dst, cos, rn FROM (" +
-    s"SELECT *, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn FROM cand) " +
-    s"WHERE rn <= $KnnK"
-  }
-
-  private def oKnnAnn: String = oKnnAnnOver("")
-  private def oKnnAnnSample: String = oKnnAnnOver(
-    s" WHERE ${graft.functions.Buckets.sqlBucket("q.vec_id::VARCHAR", KnnSampleBuckets)}" +
-      s" = $activeKnnSampleBucket")
-
   private def oCells: String =
     s"""cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id BETWEEN 1 AND $activeNCells),
        |scored AS (SELECT e.vec_id, e.v, c.cid, round(${VO.cosine("e.v", "c.cv")}, 6) AS ccos FROM e, cents c),
@@ -2527,9 +2512,7 @@ object SimilarityQueries {
   private val oKmeansFin: String = s"a${KmeansIters + 1}"
 
   private def oKmeansChain: String = {
-    def qdot(a: String, b: String) = s"list_dot_product(($a)::DOUBLE[], ($b)::DOUBLE[])"
-    def score(cv: String) =
-      s"round(${qdot("qv", cv)} / (sqrt(${qdot("qv", "qv")}) * sqrt(${qdot(cv, cv)})), 6)"
+    def score(cv: String) = oQCos("qv", cv)
     def assign(si: String, ci: String, ai: String, from: String = "q") =
       s"""$si AS (SELECT q.vec_id, q.qv, c.cid, ${score("c.cv")} AS sc FROM $from q, $ci c),
          |$ai AS MATERIALIZED (SELECT vec_id, qv, cid AS cell FROM (
@@ -2795,13 +2778,10 @@ object SimilarityQueries {
     * labels there), `nprobe` the selectivity adjustment.
     */
   private def oPqProbeRerank(nprobe: Int, filterSql: String): String = {
-    def qd(a: String, b: String) = s"list_dot_product(($a)::DOUBLE[], ($b)::DOUBLE[])"
-    val sc = s"round(${qd("qq.qqv", "c.cv")} / " +
-      s"(sqrt(${qd("qq.qqv", "qq.qqv")}) * sqrt(${qd("c.cv", "c.cv")})), 6)"
     s"""WITH $oKmeansChain,
        |${oPqSubChains()},
        |qq AS (SELECT qv AS qqv FROM q WHERE vec_id = $QueryVecId),
-       |ps AS (SELECT c.cid, $sc AS ccos FROM c$KmeansIters c, qq),
+       |ps AS (SELECT c.cid, ${oQCos("qq.qqv", "c.cv")} AS ccos FROM c$KmeansIters c, qq),
        |pc AS (SELECT cid AS qcell FROM (
        |  SELECT *, row_number() OVER (ORDER BY ccos DESC, cid) AS rn FROM ps)
        |  WHERE rn <= $nprobe),
@@ -2818,168 +2798,6 @@ object SimilarityQueries {
 
   private def oAnnIvfPqMulti: String = oPqProbeRerank(activeNProbe, "")
 
-  /** PQ-compressed kNN oracle over an optionally-restricted query side
-    * (candidates always corpus-wide) — mirrors [[knnPqOver]] stage for
-    * stage: probe ranking by the assignment's integer cosine, ADC
-    * shortlist per source over the code/codebook joins, exact-cosine
-    * rerank of the shortlist alone.
-    */
-  private def oKnnPqOver(srcWhere: String, pqk: Int = PqK,
-                         shortlist: Int = PqShortlist): String = {
-    def qd(a: String, b: String) = s"list_dot_product(($a)::DOUBLE[], ($b)::DOUBLE[])"
-    val sc = s"round(${qd("q.qv", "c.cv")} / " +
-      s"(sqrt(${qd("q.qv", "q.qv")}) * sqrt(${qd("c.cv", "c.cv")})), 6)"
-    // ADC as a model-sized LUT — the Spark side's [[adcLut]] shape.
-    // The previous spelling carried the 64-long query vector onto
-    // every candidate row and joined M corpus×nprobe-sized kd CTEs
-    // USING (src, vec_id): at the 10×/K=200 decade DuckDB (which
-    // re-inlines multiply-referenced CTEs) spilled the host's disk on
-    // it. Here the per-(source, sub, code) partial distances are
-    // src × M × pqk rows; candidates join the skinny pivoted code
-    // table and SUM — integer arithmetic identical term for term.
-    val kcb = (0 until PqM).map(m =>
-      s"SELECT $m::INTEGER AS sub, cid, cv FROM p${m}c$PqIters")
-      .mkString("kcb AS (", " UNION ALL ", ")")
-    val lutD = s"list_sum(list_transform(range(1, ${PqSubDim + 1}), " +
-      s"i -> (s.qqv[kcb.sub * $PqSubDim + i] - (kcb.cv)[i]) * " +
-      s"(s.qqv[kcb.sub * $PqSubDim + i] - (kcb.cv)[i])))"
-    s"""WITH $oKmeansChain,
-       |${oPqSubChains(pqk)},
-       |ps AS (SELECT q.vec_id AS src, c.cid, $sc AS ccos FROM q, c$KmeansIters c$srcWhere),
-       |pc AS (SELECT src, cid AS qcell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY ccos DESC, cid) AS rn FROM ps)
-       |  WHERE rn <= $activeNProbe),
-       |$kcb,
-       |klut AS MATERIALIZED (SELECT s.src, kcb.sub, kcb.cid AS code, $lutD AS d
-       |  FROM (SELECT vec_id AS src, qv AS qqv FROM q$srcWhere) s, kcb),
-       |cand AS (SELECT pc.src, a.vec_id FROM pc JOIN $oKmeansFin a ON a.cell = pc.qcell
-       |  WHERE a.vec_id <> pc.src),
-       |ck AS MATERIALIZED (SELECT cand.src, cand.vec_id, k.sub, k.code
-       |  FROM cand JOIN codes k ON k.vec_id = cand.vec_id),
-       |kcd AS (SELECT ck.src, ck.vec_id, SUM(l.d) AS d
-       |  FROM ck JOIN klut l ON l.src = ck.src AND l.sub = ck.sub AND l.code = ck.code
-       |  GROUP BY 1, 2),
-       |sl AS (SELECT src, vec_id FROM (
-       |  SELECT src, vec_id, row_number() OVER (
-       |    PARTITION BY src ORDER BY d, vec_id) AS srn
-       |  FROM kcd) WHERE srn <= $shortlist)
-       |SELECT src, dst, cos, rn FROM (
-       |  SELECT sl.src, sl.vec_id AS dst,
-       |    round(${VO.cosine("ev.v", "qs.v")}, 6) AS cos,
-       |    row_number() OVER (PARTITION BY sl.src
-       |      ORDER BY round(${VO.cosine("ev.v", "qs.v")}, 6) DESC, sl.vec_id) AS rn
-       |  FROM sl JOIN e ev ON sl.vec_id = ev.vec_id JOIN e qs ON sl.src = qs.vec_id)
-       |WHERE rn <= $KnnK""".stripMargin.replace("\n", " ")
-  }
-
-  private def oKnnPq: String = oKnnPqOver("")
-  private def oKnnPqSample: String = oKnnPqOver(
-    s" WHERE ${graft.functions.Buckets.sqlBucket("q.vec_id::VARCHAR", KnnSampleBuckets)} = 0")
-
-  /** Residual-encoded (IVFADC) corpus-wide kNN oracle — [[oKnnPqOver]]
-    * with the residual chain: the trained-assignment CTE yields each
-    * vector's residual against its OWN cell's final centroid, the PQ
-    * sub-chains train on those residuals (prefix `r`), and the ADC
-    * stage compares the QUERY's residual against the PROBED cell's
-    * centroid (CTE `pr`) to the candidate's residual codes — candidates
-    * live in the probed cell, so both residuals reference the same
-    * centroid, exactly like the Spark side ([[knnPqResOver]]).
-    */
-  private def oKnnPqResOver(srcWhere: String, pqk: Int = PqK,
-                            shortlist: Int = PqShortlist): String = {
-    def qd(a: String, b: String) = s"list_dot_product(($a)::DOUBLE[], ($b)::DOUBLE[])"
-    val sc = s"round(${qd("q.qv", "c.cv")} / " +
-      s"(sqrt(${qd("q.qv", "q.qv")}) * sqrt(${qd("c.cv", "c.cv")})), 6)"
-    val dims = PqM * PqSubDim
-    // residual ADC LUT — [[adcResLut]]'s shape: per (source,
-    // probed-cell, sub, code), src × nprobe × M × pqk rows, never the
-    // corpus (see oKnnPqOver's note on the spelling this replaced —
-    // the residual form is where it actually spilled the disk, the
-    // per-(src, cell) rqv multiplying the candidate payload)
-    val kcb = (0 until PqM).map(m =>
-      s"SELECT $m::INTEGER AS sub, cid, cv FROM rp${m}c$PqIters")
-      .mkString("kcb AS (", " UNION ALL ", ")")
-    val lutD = s"list_sum(list_transform(range(1, ${PqSubDim + 1}), " +
-      s"i -> (pr.rqv[kcb.sub * $PqSubDim + i] - (kcb.cv)[i]) * " +
-      s"(pr.rqv[kcb.sub * $PqSubDim + i] - (kcb.cv)[i])))"
-    s"""WITH $oKmeansChain,
-       |res AS MATERIALIZED (SELECT a.vec_id, a.cell,
-       |  list_transform(range(1, ${dims + 1}), i -> a.qv[i] - c.cv[i]) AS rv
-       |  FROM $oKmeansFin a JOIN c$KmeansIters c ON a.cell = c.cid),
-       |${oPqSubChains(pqk, "res", "rv", "r")},
-       |ps AS (SELECT q.vec_id AS src, q.qv, c.cid, $sc AS ccos FROM q, c$KmeansIters c$srcWhere),
-       |pc AS (SELECT src, qv, cid AS qcell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY ccos DESC, cid) AS rn FROM ps)
-       |  WHERE rn <= $activeNProbe),
-       |pr AS MATERIALIZED (SELECT pc.src, pc.qcell,
-       |  list_transform(range(1, ${dims + 1}), i -> pc.qv[i] - c.cv[i]) AS rqv
-       |  FROM pc JOIN c$KmeansIters c ON pc.qcell = c.cid),
-       |$kcb,
-       |klut AS MATERIALIZED (SELECT pr.src, pr.qcell, kcb.sub, kcb.cid AS code, $lutD AS d
-       |  FROM pr, kcb),
-       |cand AS (SELECT pr.src, pr.qcell, a.vec_id FROM pr JOIN $oKmeansFin a ON a.cell = pr.qcell
-       |  WHERE a.vec_id <> pr.src),
-       |ck AS MATERIALIZED (SELECT cand.src, cand.qcell, cand.vec_id, k.sub, k.code
-       |  FROM cand JOIN rcodes k ON k.vec_id = cand.vec_id),
-       |kcd AS (SELECT ck.src, ck.vec_id, SUM(l.d) AS d
-       |  FROM ck JOIN klut l ON l.src = ck.src AND l.qcell = ck.qcell
-       |    AND l.sub = ck.sub AND l.code = ck.code
-       |  GROUP BY 1, 2),
-       |sl AS (SELECT src, vec_id FROM (
-       |  SELECT src, vec_id, row_number() OVER (
-       |    PARTITION BY src ORDER BY d, vec_id) AS srn
-       |  FROM kcd) WHERE srn <= $shortlist)
-       |SELECT src, dst, cos, rn FROM (
-       |  SELECT sl.src, sl.vec_id AS dst,
-       |    round(${VO.cosine("ev.v", "qs.v")}, 6) AS cos,
-       |    row_number() OVER (PARTITION BY sl.src
-       |      ORDER BY round(${VO.cosine("ev.v", "qs.v")}, 6) DESC, sl.vec_id) AS rn
-       |  FROM sl JOIN e ev ON sl.vec_id = ev.vec_id JOIN e qs ON sl.src = qs.vec_id)
-       |WHERE rn <= $KnnK""".stripMargin.replace("\n", " ")
-  }
-
-  private def oKnnPqRes: String = oKnnPqResOver("")
-
-  /** Trained-quantizer corpus-wide kNN oracle — the kmeans chain's
-    * centroids rank per source by the assignment's integer cosine,
-    * candidates are the probed cells' assigned members, exact-cosine
-    * rerank. Mirrors [[knnAnnKmeans]] (and its store-backed twin that
-    * VerifyStream dumps under the same name).
-    */
-  private def oKnnKmeans: String = oKnnKmeansOver(oKnnBucketWhere())
-
-  /** Trained-kmeans kNN oracle over an optionally-restricted query
-    * side (candidates always corpus-wide) — mirrors [[knnAnnKmeans]]
-    * honoring [[KnnBucketKey]].
-    */
-  private def oKnnKmeansOver(srcWhere: String): String = {
-    def qd(a: String, b: String) = s"list_dot_product(($a)::DOUBLE[], ($b)::DOUBLE[])"
-    val sc = s"round(${qd("q.qv", "c.cv")} / " +
-      s"(sqrt(${qd("q.qv", "q.qv")}) * sqrt(${qd("c.cv", "c.cv")})), 6)"
-    s"""WITH $oKmeansChain,
-       |ps AS (SELECT q.vec_id AS src, c.cid, $sc AS ccos FROM q, c$KmeansIters c$srcWhere),
-       |pc AS (SELECT src, cid AS qcell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY ccos DESC, cid) AS rn FROM ps)
-       |  WHERE rn <= $activeNProbe),
-       |cand AS (SELECT pc.src, a.vec_id FROM pc JOIN $oKmeansFin a ON a.cell = pc.qcell
-       |  WHERE a.vec_id <> pc.src)
-       |SELECT src, dst, cos, rn FROM (
-       |  SELECT cand.src, cand.vec_id AS dst,
-       |    round(${VO.cosine("ev.v", "qs.v")}, 6) AS cos,
-       |    row_number() OVER (PARTITION BY cand.src
-       |      ORDER BY round(${VO.cosine("ev.v", "qs.v")}, 6) DESC, cand.vec_id) AS rn
-       |  FROM cand JOIN e ev ON cand.vec_id = ev.vec_id JOIN e qs ON cand.src = qs.vec_id)
-       |WHERE rn <= $KnnK""".stripMargin.replace("\n", " ")
-  }
-  /** Two-level-probe corpus-wide kNN oracle — mirrors [[knnAnnHier]]
-    * stage for stage: the super-quantizer Lloyd chain trains over the
-    * kmeans chain's FINAL centroids (K rows — model-over-model, the
-    * driver-side [[trainSuper]] in SQL), sources rank the K2 supers,
-    * member centroids of the probed supers rank next, and candidates +
-    * exact rerank are the [[oKnnKmeans]] tail verbatim.
-    */
-  private def oKnnHier: String = oKnnHierOver(oKnnBucketWhere())
-
   /** The super-quantizer Lloyd chain over the kmeans chain's FINAL
     * centroids (`c$KmeansIters`) — the SQL twin of [[trainSuper]]. CTE
     * names carry `pfx` so the hierarchical PROBE chain (`h`) and the
@@ -2989,13 +2807,10 @@ object SimilarityQueries {
     * scell).
     */
   private def oSuperChain(pfx: String): String = {
-    def qd(a: String, b: String) = s"list_dot_product(($a)::DOUBLE[], ($b)::DOUBLE[])"
-    def sc(a: String, b: String) =
-      s"round(${qd(a, b)} / (sqrt(${qd(a, a)}) * sqrt(${qd(b, b)})), 6)"
     val k2 = hierK2(activeNCells)
     val cfin = s"c$KmeansIters"
     def assign(si: String, ci: String, ai: String) =
-      s"""$si AS (SELECT t.cid, t.cv, s.sid, ${sc("t.cv", "s.sv")} AS scs FROM $cfin t, $ci s),
+      s"""$si AS (SELECT t.cid, t.cv, s.sid, ${oQCos("t.cv", "s.sv")} AS scs FROM $cfin t, $ci s),
          |$ai AS MATERIALIZED (SELECT cid, cv, sid AS scell FROM (
          |  SELECT *, row_number() OVER (PARTITION BY cid ORDER BY scs DESC, sid) AS rn FROM $si)
          |  WHERE rn = 1)""".stripMargin
@@ -3014,157 +2829,128 @@ object SimilarityQueries {
        |${assign(s"${pfx}s$fin", s"${pfx}c$KmeansIters", s"${pfx}a$fin")}""".stripMargin
   }
 
-  private def oKnnHierOver(srcWhere: String): String = {
-    def qd(a: String, b: String) = s"list_dot_product(($a)::DOUBLE[], ($b)::DOUBLE[])"
-    def sc(a: String, b: String) =
-      s"round(${qd(a, b)} / (sqrt(${qd(a, a)}) * sqrt(${qd(b, b)})), 6)"
-    val fin = KmeansIters + 1
-    s"""WITH $oKmeansChain,
-       |${oSuperChain("h")},
-       |ps AS (SELECT q.vec_id AS src, s.sid, ${sc("q.qv", "s.sv")} AS scos FROM q, hc$KmeansIters s$srcWhere),
-       |psel AS (SELECT src, sid FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY scos DESC, sid) AS rn FROM ps)
-       |  WHERE rn <= $activeNProbe),
-       |cs AS (SELECT p.src, m.cid, ${sc("q2.qv", "m.cv")} AS ccos
-       |  FROM psel p JOIN ha$fin m ON m.scell = p.sid JOIN q q2 ON q2.vec_id = p.src),
-       |pc AS (SELECT src, cid AS qcell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY ccos DESC, cid) AS rn FROM cs)
-       |  WHERE rn <= $activeNProbe),
-       |cand AS (SELECT pc.src, a.vec_id FROM pc JOIN $oKmeansFin a ON a.cell = pc.qcell
-       |  WHERE a.vec_id <> pc.src)
-       |SELECT src, dst, cos, rn FROM (
-       |  SELECT cand.src, cand.vec_id AS dst,
-       |    round(${VO.cosine("ev.v", "qs.v")}, 6) AS cos,
-       |    row_number() OVER (PARTITION BY cand.src
-       |      ORDER BY round(${VO.cosine("ev.v", "qs.v")}, 6) DESC, cand.vec_id) AS rn
-       |  FROM cand JOIN e ev ON cand.vec_id = ev.vec_id JOIN e qs ON cand.src = qs.vec_id)
-       |WHERE rn <= $KnnK""".stripMargin.replace("\n", " ")
-  }
-
-  /** Composed hier+PQ corpus-wide kNN oracle — [[oKnnHierOver]]'s
-    * two-level probe chain (super Lloyd over the final centroids,
-    * source ranks supers, probed supers' members rank next) feeding
-    * [[oKnnPqOver]]'s ADC stage (model-sized per-source LUT, candidates
-    * join the pivoted code table and SUM, shortlist window) and the
-    * shared exact rerank tail — the SQL twin of [[knnHierPqOver]],
-    * stage for stage.
+  /** The oracle of one kNN stack, the SQL twin of [[knnOver]]: the same
+    * `(probe, scan)` value, over the sources `srcWhere` keeps (a `WHERE`
+    * on `q.vec_id` appended to the probe's FROM list; candidates stay
+    * corpus-wide). Every model retrains in SQL.
+    *   - PROBE, `pc(src, qcell)`: the `np` best cells per source. `Flat`
+    *     ranks the kmeans chain's final centroids by the assignment's
+    *     integer cosine; `Hier` ranks the [[oSuperChain]] supers, then
+    *     the probed supers' members; `Seeded` ranks the seed cells
+    *     ([[oCells]]) by the float cosine, as [[probeQuerySet]] does.
+    *   - SCAN: `Raw` proposes the probed cells' members (`cand`); `Pq`
+    *     keeps the `depth` best per source by ADC distance (`sl`). With
+    *     `residual`, the codebooks train on each vector's residual
+    *     against its own cell's centroid (`res`, `r`-prefixed chains),
+    *     and the LUT is keyed per (source, probed cell) on the query's
+    *     residual against that cell's centroid (`pr`): candidates live in
+    *     the probed cell, so both residuals reference the same centroid.
+    *   - RERANK: exact cosine, the top `k` per source.
+    * The ADC is a model-sized LUT, [[adcLut]]'s shape: per-(source[,
+    * cell], sub, code) partial distances, src × [nprobe ×] M × pqk rows,
+    * that candidates join through the skinny pivoted code table and SUM,
+    * integer arithmetic identical term for term. The spelling it
+    * replaced carried the 64-long query vector onto every candidate row
+    * and joined M corpus × nprobe-sized CTEs: at the 10×/K=200 decade
+    * DuckDB (which re-inlines multiply-referenced CTEs) spilled the
+    * host's disk on it, worst in the residual form.
     */
-  private def oKnnHierPqOver(srcWhere: String, pqk: Int = PqK,
-                             shortlist: Int = PqShortlist): String = {
-    def qd(a: String, b: String) = s"list_dot_product(($a)::DOUBLE[], ($b)::DOUBLE[])"
-    def sc(a: String, b: String) =
-      s"round(${qd(a, b)} / (sqrt(${qd(a, a)}) * sqrt(${qd(b, b)})), 6)"
+  private def oKnnOver(probe: Probe, scan: Scan, srcWhere: String, k: Int = KnnK): String = {
+    require(scan == Raw || !probe.isInstanceOf[Seeded], "the seeded stack scans raw vectors")
+    def top(from: String, cols: String, order: String, n: Int) =
+      s"SELECT $cols FROM (SELECT *, row_number() OVER (PARTITION BY src ORDER BY $order) " +
+        s"AS rn FROM $from) WHERE rn <= $n"
     val fin = KmeansIters + 1
-    val kcb = (0 until PqM).map(m =>
-      s"SELECT $m::INTEGER AS sub, cid, cv FROM p${m}c$PqIters")
-      .mkString("kcb AS (", " UNION ALL ", ")")
-    val lutD = s"list_sum(list_transform(range(1, ${PqSubDim + 1}), " +
-      s"i -> (s.qqv[kcb.sub * $PqSubDim + i] - (kcb.cv)[i]) * " +
-      s"(s.qqv[kcb.sub * $PqSubDim + i] - (kcb.cv)[i])))"
-    s"""WITH $oKmeansChain,
-       |${oPqSubChains(pqk)},
-       |${oSuperChain("h")},
-       |ps AS (SELECT q.vec_id AS src, s.sid, ${sc("q.qv", "s.sv")} AS scos FROM q, hc$KmeansIters s$srcWhere),
-       |psel AS (SELECT src, sid FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY scos DESC, sid) AS rn FROM ps)
-       |  WHERE rn <= $activeNProbe),
-       |cs AS (SELECT p.src, m.cid, ${sc("q2.qv", "m.cv")} AS ccos
-       |  FROM psel p JOIN ha$fin m ON m.scell = p.sid JOIN q q2 ON q2.vec_id = p.src),
-       |pc AS (SELECT src, cid AS qcell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY ccos DESC, cid) AS rn FROM cs)
-       |  WHERE rn <= $activeNProbe),
-       |$kcb,
-       |klut AS MATERIALIZED (SELECT s.src, kcb.sub, kcb.cid AS code, $lutD AS d
-       |  FROM (SELECT vec_id AS src, qv AS qqv FROM q$srcWhere) s, kcb),
-       |cand AS (SELECT pc.src, a.vec_id FROM pc JOIN $oKmeansFin a ON a.cell = pc.qcell
-       |  WHERE a.vec_id <> pc.src),
-       |ck AS MATERIALIZED (SELECT cand.src, cand.vec_id, k.sub, k.code
-       |  FROM cand JOIN codes k ON k.vec_id = cand.vec_id),
-       |kcd AS (SELECT ck.src, ck.vec_id, SUM(l.d) AS d
-       |  FROM ck JOIN klut l ON l.src = ck.src AND l.sub = ck.sub AND l.code = ck.code
-       |  GROUP BY 1, 2),
-       |sl AS (SELECT src, vec_id FROM (
-       |  SELECT src, vec_id, row_number() OVER (
-       |    PARTITION BY src ORDER BY d, vec_id) AS srn
-       |  FROM kcd) WHERE srn <= $shortlist)
-       |SELECT src, dst, cos, rn FROM (
-       |  SELECT sl.src, sl.vec_id AS dst,
-       |    round(${VO.cosine("ev.v", "qs.v")}, 6) AS cos,
-       |    row_number() OVER (PARTITION BY sl.src
-       |      ORDER BY round(${VO.cosine("ev.v", "qs.v")}, 6) DESC, sl.vec_id) AS rn
-       |  FROM sl JOIN e ev ON sl.vec_id = ev.vec_id JOIN e qs ON sl.src = qs.vec_id)
-       |WHERE rn <= $KnnK""".stripMargin.replace("\n", " ")
+    val np = probe match { case Seeded(n) if n > 0 => n; case _ => activeNProbe }
+    val (model, members) = probe match {
+      case Seeded(_) => (s"e AS ($oE), $oCells", "cells")
+      case _ => (oKmeansChain, oKmeansFin)
+    }
+    val probeCtes = probe match {
+      case Seeded(_) => Seq(s"ps AS (SELECT q.vec_id AS src, c.cid, " +
+        s"round(${VO.cosine("c.cv", "q.v")}, 6) AS ccos FROM e q, cents c$srcWhere)")
+      case Flat => Seq(s"ps AS (SELECT q.vec_id AS src, c.cid, ${oQCos("q.qv", "c.cv")} AS ccos " +
+        s"FROM q, c$KmeansIters c$srcWhere)")
+      case Hier => Seq(oSuperChain("h"),
+        s"ps AS (SELECT q.vec_id AS src, s.sid, ${oQCos("q.qv", "s.sv")} AS scos " +
+          s"FROM q, hc$KmeansIters s$srcWhere)",
+        s"psel AS (${top("ps", "src, sid", "scos DESC, sid", np)})",
+        s"cs AS (SELECT p.src, m.cid, ${oQCos("q.qv", "m.cv")} AS ccos " +
+          s"FROM psel p JOIN ha$fin m ON m.scell = p.sid JOIN q ON q.vec_id = p.src)")
+    }
+    val pc = s"pc AS (${top(if (probe == Hier) "cs" else "ps", "src, cid AS qcell", "ccos DESC, cid", np)})"
+    val residual = scan match { case Pq(_, _, r) => r; case Raw => false }
+    val keys = if (residual) Seq("src", "qcell") else Seq("src")
+    def cols(t: String) = keys.map(c => s"$t.$c").mkString(", ")
+    val cand = s"cand AS (SELECT ${cols("pc")}, a.vec_id FROM pc JOIN $members a " +
+      "ON a.cell = pc.qcell WHERE a.vec_id <> pc.src)"
+    val (scanModel, scanCtes, shortlist) = scan match {
+      case Raw => (Nil, Nil, "cand")
+      case Pq(pqk, depth, _) =>
+        val pfx = if (residual) "r" else ""
+        def resid(a: String) =
+          s"list_transform(range(1, ${PqM * PqSubDim + 1}), i -> $a.qv[i] - c.cv[i])"
+        val kcb = (0 until PqM).map(m => s"SELECT $m::INTEGER AS sub, cid, cv FROM ${pfx}p${m}c$PqIters")
+        val lutD = s"list_sum(list_transform(range(1, ${PqSubDim + 1}), " +
+          s"i -> (pr.lqv[kcb.sub * $PqSubDim + i] - (kcb.cv)[i]) * " +
+          s"(pr.lqv[kcb.sub * $PqSubDim + i] - (kcb.cv)[i])))"
+        (if (residual) Seq(s"res AS MATERIALIZED (SELECT a.vec_id, a.cell, ${resid("a")} AS rv " +
+            s"FROM $oKmeansFin a JOIN c$KmeansIters c ON a.cell = c.cid)",
+            oPqSubChains(pqk, "res", "rv", "r"))
+         else Seq(oPqSubChains(pqk)),
+         Seq(
+           if (residual) s"pr AS MATERIALIZED (SELECT pc.src, pc.qcell, ${resid("q")} AS lqv " +
+             s"FROM pc JOIN q ON q.vec_id = pc.src JOIN c$KmeansIters c ON pc.qcell = c.cid)"
+           else s"pr AS (SELECT vec_id AS src, qv AS lqv FROM q$srcWhere)",
+           kcb.mkString("kcb AS (", " UNION ALL ", ")"),
+           s"klut AS MATERIALIZED (SELECT ${cols("pr")}, kcb.sub, kcb.cid AS code, $lutD AS d " +
+             "FROM pr, kcb)",
+           s"ck AS MATERIALIZED (SELECT ${cols("cand")}, cand.vec_id, k.sub, k.code " +
+             s"FROM cand JOIN ${pfx}codes k ON k.vec_id = cand.vec_id)",
+           s"kcd AS (SELECT ck.src, ck.vec_id, SUM(l.d) AS d FROM ck JOIN klut l ON " +
+             (keys :+ "sub" :+ "code").map(c => s"l.$c = ck.$c").mkString(" AND ") + " GROUP BY 1, 2)",
+           s"sl AS (${top("kcd", "src, vec_id", "d, vec_id", depth)})"),
+         "sl")
+    }
+    val rerank = s"rr AS (SELECT x.src, x.vec_id AS dst, round(${VO.cosine("ev.v", "qs.v")}, 6) " +
+      s"AS cos FROM $shortlist x JOIN e ev ON x.vec_id = ev.vec_id JOIN e qs ON x.src = qs.vec_id)"
+    ((model +: scanModel) ++ probeCtes ++ (pc +: cand +: scanCtes :+ rerank))
+      .mkString("WITH ", ",\n", s"\n${top("rr", "src, dst, cos, rn", "cos DESC, dst", k)}")
+      .replace("\n", " ")
   }
 
-  private def oKnnHierPq: String = oKnnHierPqOver("")
-  private def oKnnHierPqSample: String = oKnnHierPqOver(
-    s" WHERE ${graft.functions.Buckets.sqlBucket("q.vec_id::VARCHAR", KnnSampleBuckets)}" +
-      s" = $activeKnnSampleBucket")
-
-  /** Composed hier + RESIDUAL-PQ corpus-wide kNN oracle —
-    * [[oKnnHierPqOver]]'s two-level probe chain feeding
-    * [[oKnnPqResOver]]'s residual ADC stage (residual corpus + `r`
-    * sub-chains, the query's residual against each PROBED cell's
-    * centroid in `pr`, per-(src, qcell) LUT) and the shared exact
-    * rerank tail — the SQL twin of [[knnHierPqResOver]], stage for
-    * stage.
+  /** A registered stack's oracle: only the trained raw rows honour the
+    * [[KnnBucketKey]] chunks, as in [[knnMemo]].
     */
-  private def oKnnHierPqResOver(srcWhere: String, pqk: Int = PqK,
-                                shortlist: Int = PqShortlist): String = {
-    def qd(a: String, b: String) = s"list_dot_product(($a)::DOUBLE[], ($b)::DOUBLE[])"
-    def sc(a: String, b: String) =
-      s"round(${qd(a, b)} / (sqrt(${qd(a, a)}) * sqrt(${qd(b, b)})), 6)"
-    val fin = KmeansIters + 1
-    val dims = PqM * PqSubDim
-    val kcb = (0 until PqM).map(m =>
-      s"SELECT $m::INTEGER AS sub, cid, cv FROM rp${m}c$PqIters")
-      .mkString("kcb AS (", " UNION ALL ", ")")
-    val lutD = s"list_sum(list_transform(range(1, ${PqSubDim + 1}), " +
-      s"i -> (pr.rqv[kcb.sub * $PqSubDim + i] - (kcb.cv)[i]) * " +
-      s"(pr.rqv[kcb.sub * $PqSubDim + i] - (kcb.cv)[i])))"
-    s"""WITH $oKmeansChain,
-       |res AS MATERIALIZED (SELECT a.vec_id, a.cell,
-       |  list_transform(range(1, ${dims + 1}), i -> a.qv[i] - c.cv[i]) AS rv
-       |  FROM $oKmeansFin a JOIN c$KmeansIters c ON a.cell = c.cid),
-       |${oPqSubChains(pqk, "res", "rv", "r")},
-       |${oSuperChain("h")},
-       |ps AS (SELECT q.vec_id AS src, s.sid, ${sc("q.qv", "s.sv")} AS scos FROM q, hc$KmeansIters s$srcWhere),
-       |psel AS (SELECT src, sid FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY scos DESC, sid) AS rn FROM ps)
-       |  WHERE rn <= $activeNProbe),
-       |cs AS (SELECT p.src, m.cid, ${sc("q2.qv", "m.cv")} AS ccos
-       |  FROM psel p JOIN ha$fin m ON m.scell = p.sid JOIN q q2 ON q2.vec_id = p.src),
-       |pc AS (SELECT src, cid AS qcell FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY src ORDER BY ccos DESC, cid) AS rn FROM cs)
-       |  WHERE rn <= $activeNProbe),
-       |pr AS MATERIALIZED (SELECT pc.src, pc.qcell,
-       |  list_transform(range(1, ${dims + 1}), i -> q2.qv[i] - c.cv[i]) AS rqv
-       |  FROM pc JOIN q q2 ON q2.vec_id = pc.src JOIN c$KmeansIters c ON pc.qcell = c.cid),
-       |$kcb,
-       |klut AS MATERIALIZED (SELECT pr.src, pr.qcell, kcb.sub, kcb.cid AS code, $lutD AS d
-       |  FROM pr, kcb),
-       |cand AS (SELECT pr.src, pr.qcell, a.vec_id FROM pr JOIN $oKmeansFin a ON a.cell = pr.qcell
-       |  WHERE a.vec_id <> pr.src),
-       |ck AS MATERIALIZED (SELECT cand.src, cand.qcell, cand.vec_id, k.sub, k.code
-       |  FROM cand JOIN rcodes k ON k.vec_id = cand.vec_id),
-       |kcd AS (SELECT ck.src, ck.vec_id, SUM(l.d) AS d
-       |  FROM ck JOIN klut l ON l.src = ck.src AND l.qcell = ck.qcell
-       |    AND l.sub = ck.sub AND l.code = ck.code
-       |  GROUP BY 1, 2),
-       |sl AS (SELECT src, vec_id FROM (
-       |  SELECT src, vec_id, row_number() OVER (
-       |    PARTITION BY src ORDER BY d, vec_id) AS srn
-       |  FROM kcd) WHERE srn <= $shortlist)
-       |SELECT src, dst, cos, rn FROM (
-       |  SELECT sl.src, sl.vec_id AS dst,
-       |    round(${VO.cosine("ev.v", "qs.v")}, 6) AS cos,
-       |    row_number() OVER (PARTITION BY sl.src
-       |      ORDER BY round(${VO.cosine("ev.v", "qs.v")}, 6) DESC, sl.vec_id) AS rn
-       |  FROM sl JOIN e ev ON sl.vec_id = ev.vec_id JOIN e qs ON sl.src = qs.vec_id)
-       |WHERE rn <= $KnnK""".stripMargin.replace("\n", " ")
+  private def oKnnStack(name: String): String = {
+    val (_, probe, scan) = knnStacks(name)
+    oKnnOver(probe, scan, (probe, scan) match {
+      case (Flat | Hier, Raw) => oKnnBucketWhere()
+      case _ => ""
+    })
   }
 
-  private def oKnnHierPqRes: String = oKnnHierPqResOver("")
+  /** The [[KnnSampleBuckets]] source bucket `b`, as a stack's `srcWhere`. */
+  private def oSampleWhere(b: Int): String =
+    s" WHERE ${graft.functions.Buckets.sqlBucket("q.vec_id::VARCHAR", KnnSampleBuckets)} = $b"
+
+  /** [[edgeRecall]]'s SQL twin: |approx ∩ exact| / |exact| on (src, dst). */
+  private def oEdgeRecall(approx: String, exact: String = oKnnExact): String =
+    s"SELECT hits, n_exact, round(hits::DOUBLE / n_exact, 6) AS recall FROM " +
+      s"(SELECT COUNT(*) AS hits FROM ($approx) a JOIN ($exact) x USING (src, dst)), " +
+      s"(SELECT COUNT(*) AS n_exact FROM ($exact))"
+
+  /** [[recallTable]]'s SQL twin: labelled [[oEdgeRecall]] rows, unioned. */
+  private def oRecallTable(exact: String, rows: (String, String)*): String =
+    rows.map { case (n, sql) => s"SELECT '$n' AS variant, * FROM (${oEdgeRecall(sql, exact)})" }
+      .mkString(" UNION ALL ")
+
+  /** Every memoized stack's oracle, and its `_recall` row where one is registered. */
+  private def oKnnStacks: Map[String, String] = {
+    val rows = knnStacks.keys.map(n => n -> oKnnStack(n)).toMap
+    rows ++ rows.collect { case (n, sql) if queries.contains(s"${n}_recall") =>
+      s"${n}_recall" -> oEdgeRecall(sql) }
+  }
 
   private def oAnnFilteredPq: String =
     oPqProbeRerank(NProbeFiltered, s"AND e.label = $FilterLabel")
@@ -3181,7 +2967,7 @@ object SimilarityQueries {
        |SELECT w.vec_id, w.cell, (d.vec_id IS NULL) AS kept
        |FROM w LEFT JOIN d ON w.vec_id = d.vec_id""".stripMargin.replace("\n", " ")
 
-  def oracle: Map[String, String] = Map(
+  def oracle: Map[String, String] = oKnnStacks ++ Map(
     "sim_kmeans_cells" -> oKmeans,
     "sim_ann_kmeans" -> oAnnKmeans,
     "sim_semantic_dedup" -> oSemDedup,
@@ -3213,67 +2999,21 @@ object SimilarityQueries {
        "CAST(floor(SUM(qx)::DOUBLE / COUNT(*)) AS BIGINT) AS centroid_q " +
        "FROM q GROUP BY 1, 2"),
     "sim_knn_join" -> oKnnExact,
-    "sim_knn_ann" -> oKnnAnn,
-    "sim_knn_ann_sample" -> oKnnAnnSample,
-    "sim_knn_ann_recall" ->
-      (s"SELECT hits, n_exact, round(hits::DOUBLE / n_exact, 6) AS recall FROM " +
-       s"(SELECT COUNT(*) AS hits FROM ($oKnnAnn) a JOIN ($oKnnExact) x USING (src, dst)), " +
-       s"(SELECT COUNT(*) AS n_exact FROM ($oKnnExact))"),
-    "sim_knn_ann_pq" -> oKnnPq,
-    "sim_knn_ann_pq_sample" -> oKnnPqSample,
-    "sim_knn_ann_kmeans" -> oKnnKmeans,
+    "sim_knn_ann_sample" -> oKnnOver(Seeded(), Raw, oSampleWhere(activeKnnSampleBucket)),
+    "sim_knn_ann_pq_sample" -> oKnnOver(Flat, Pq(), oSampleWhere(0)),
+    "sim_knn_ann_hier_sample" -> oKnnOver(Hier, Raw, oSampleWhere(0)),
+    "sim_knn_ann_hier_pq_sample" -> oKnnOver(Hier, Pq(), oSampleWhere(activeKnnSampleBucket)),
     "sim_knn_ann_auto" ->
-      (if (activeProbeMode == "hier") oKnnHier else oKnnKmeans),
-    "sim_knn_ann_hier" -> oKnnHier,
-    "sim_knn_ann_hier_sample" -> oKnnHierOver(
-      s" WHERE ${graft.functions.Buckets.sqlBucket("q.vec_id::VARCHAR", KnnSampleBuckets)} = 0"),
-    "sim_knn_ann_hier_recall" ->
-      (s"SELECT hits, n_exact, round(hits::DOUBLE / n_exact, 6) AS recall FROM " +
-       s"(SELECT COUNT(*) AS hits FROM ($oKnnHier) a JOIN ($oKnnExact) x USING (src, dst)), " +
-       s"(SELECT COUNT(*) AS n_exact FROM ($oKnnExact))"),
-    "sim_knn_ann_hier_pq" -> oKnnHierPq,
-    "sim_knn_ann_hier_pq_sample" -> oKnnHierPqSample,
-    "sim_knn_ann_hier_pq_recall" ->
-      (s"SELECT hits, n_exact, round(hits::DOUBLE / n_exact, 6) AS recall FROM " +
-       s"(SELECT COUNT(*) AS hits FROM ($oKnnHierPq) a JOIN ($oKnnExact) x USING (src, dst)), " +
-       s"(SELECT COUNT(*) AS n_exact FROM ($oKnnExact))"),
-    "sim_knn_ann_hier_pq_res" -> oKnnHierPqRes,
-    "sim_knn_ann_hier_pq_res_recall" ->
-      (s"SELECT hits, n_exact, round(hits::DOUBLE / n_exact, 6) AS recall FROM " +
-       s"(SELECT COUNT(*) AS hits FROM ($oKnnHierPqRes) a JOIN ($oKnnExact) x USING (src, dst)), " +
-       s"(SELECT COUNT(*) AS n_exact FROM ($oKnnExact))"),
-    "sim_knn_ann_pq_recall" ->
-      (s"SELECT hits, n_exact, round(hits::DOUBLE / n_exact, 6) AS recall FROM " +
-       s"(SELECT COUNT(*) AS hits FROM ($oKnnPq) a JOIN ($oKnnExact) x USING (src, dst)), " +
-       s"(SELECT COUNT(*) AS n_exact FROM ($oKnnExact))"),
-    "sim_knn_ann_pq_res" -> oKnnPqRes,
-    "sim_knn_ann_pq_res_recall" ->
-      (s"SELECT hits, n_exact, round(hits::DOUBLE / n_exact, 6) AS recall FROM " +
-       s"(SELECT COUNT(*) AS hits FROM ($oKnnPqRes) a JOIN ($oKnnExact) x USING (src, dst)), " +
-       s"(SELECT COUNT(*) AS n_exact FROM ($oKnnExact))"),
-    "sim_knn_ann_pq_tradeoff" -> Seq(
-      ("base", PqK, PqShortlist),
-      ("shortlist2x", PqK, PqShortlist2x),
-      ("codebook2x", PqK2x, PqShortlist)).map { case (n, pk, sl) =>
-        s"SELECT '$n' AS variant, hits, n_exact, " +
-        s"round(hits::DOUBLE / n_exact, 6) AS recall FROM " +
-        s"(SELECT COUNT(*) AS hits FROM (${oKnnPqOver("", pk, sl)}) a " +
-        s"JOIN ($oKnnExact) x USING (src, dst)), " +
-        s"(SELECT COUNT(*) AS n_exact FROM ($oKnnExact))"
-      }.mkString(" UNION ALL "),
-    "sim_knn_ann_probe_tradeoff" -> {
-      val srcW =
-        s" WHERE ${graft.functions.Buckets.sqlBucket("q.vec_id::VARCHAR", KnnSampleBuckets)} = 0"
-      val exactS = s"SELECT * FROM ($oKnnExact) WHERE " +
-        s"${graft.functions.Buckets.sqlBucket("src::VARCHAR", KnnSampleBuckets)} = 0"
-      Seq(1, NProbeIvf, ProbeTradeoffWide).map { np =>
-        s"SELECT 'np$np' AS variant, hits, n_exact, " +
-        s"round(hits::DOUBLE / n_exact, 6) AS recall FROM " +
-        s"(SELECT COUNT(*) AS hits FROM (${oKnnAnnOver(srcW, np)}) a " +
-        s"JOIN ($exactS) x USING (src, dst)), " +
-        s"(SELECT COUNT(*) AS n_exact FROM ($exactS))"
-      }.mkString(" UNION ALL ")
-    },
+      oKnnStack(if (activeProbeMode == "hier") "sim_knn_ann_hier" else "sim_knn_ann_kmeans"),
+    "sim_knn_ann_pq_tradeoff" -> oRecallTable(oKnnExact,
+      "base" -> oKnnStack("sim_knn_ann_pq"),
+      "shortlist2x" -> oKnnOver(Flat, Pq(depth = PqShortlist2x), ""),
+      "codebook2x" -> oKnnOver(Flat, Pq(pqk = PqK2x), "")),
+    "sim_knn_ann_probe_tradeoff" -> oRecallTable(
+      s"SELECT * FROM ($oKnnExact) WHERE " +
+        s"${graft.functions.Buckets.sqlBucket("src::VARCHAR", KnnSampleBuckets)} = 0",
+      Seq(1, NProbeIvf, ProbeTradeoffWide).map(np =>
+        s"np$np" -> oKnnOver(Seeded(np), Raw, oSampleWhere(0))): _*),
     "sim_ivf_cells" ->
       (s"WITH e AS ($oE), $oCells " +
        "SELECT cell, COUNT(*) AS n_vecs FROM cells GROUP BY 1"),
@@ -3292,17 +3032,8 @@ object SimilarityQueries {
           |FROM (SELECT vec_id FROM ($oFiltered)) v
           |JOIN (SELECT vec_id FROM ($oFilteredBrute)) b USING (vec_id)""".stripMargin.replace("\n", " ")),
     "sim_ann_batch" ->
-      (s"WITH e AS ($oE), $oCells, " +
-       s"qset AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $NBatchQ), " +
-       s"qs AS (SELECT qid, qv, cid, round(${VO.cosine("cv", "qv")}, 6) AS ccos FROM cents, qset), " +
-       s"qc AS (SELECT qid, qv, cid AS qcell FROM (" +
-       s"SELECT *, row_number() OVER (PARTITION BY qid ORDER BY ccos DESC, cid) AS rn FROM qs) " +
-       s"WHERE rn <= $activeNProbe), " +
-       s"cand AS (SELECT qid, vec_id, round(${VO.cosine("v", "qv")}, 6) AS cos " +
-       s"FROM cells JOIN qc ON cell = qcell WHERE vec_id <> qid) " +
-       s"SELECT qid, vec_id, cos, rn::INTEGER AS rn FROM (" +
-       s"SELECT *, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn FROM cand) " +
-       s"WHERE rn <= $RecallK"),
+      (s"SELECT src AS qid, dst AS vec_id, cos, rn::INTEGER AS rn FROM " +
+       s"(${oKnnOver(Seeded(), Raw, s" WHERE q.vec_id < $NBatchQ", RecallK)})"),
     "sim_quantize_int8" ->
       (s"WITH e AS ($oE), m AS (SELECT vec_id, v, " +
        "list_max(list_transform(v, x -> abs(x))) AS maxabs FROM e) " +

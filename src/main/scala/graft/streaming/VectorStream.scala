@@ -174,11 +174,14 @@ object VectorStream {
       return Seq(("pins", "skip",
         s"no pin sidecar at $dir (stream never probed a layout)"))
     val out = Seq.newBuilder[(String, String, String)]
-    val names = Sidecar.list(spark, dir).map(_.getPath.getName)
-    val temps = names.count(Sidecar.isTemp)
+    val entries = Sidecar.list(spark, dir)
+    val names = entries.map(_.getPath.getName)
+    // only an AGED temp is crashed debris; a young one may be a live
+    // probe's first publish (IdAuthority.fsck's convention)
+    val temps = entries.count(e => Sidecar.isTemp(e.getPath.getName) && Sidecar.stale(e))
     if (temps > 0)
       out += (("pins.stage", "warn",
-        s"$temps crashed writer temp(s); pruneWatermarks sweeps aged ones"))
+        s"$temps crashed writer temp(s); pruneWatermarks sweeps them"))
     val markers = names.flatMap(Sidecar.numbered(_, PrunedPrefix))
     if (markers.size > 1)
       out += (("pins", "warn",

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -70,6 +70,34 @@ class IdAuthoritySpec extends SparkSpec {
       arrivalIds = ids(999, 1010), priorIds = ids(0, 999),
       who = "spec", what = "spec prefix")
     IdAuthority.completeAppend(spark, root)
+  }
+
+  Seq[(String, Array[Byte] => Array[Byte])](
+    "garbled" -> (_.map(b => (~b).toByte)),
+    "truncated" -> (b => b.take(b.length / 2))
+  ).foreach { case (how, tear) =>
+    test(s"a $how newest single-file record: fsck names it, the guard falls back to the exact path") {
+      val root = Files.createTempDirectory("graft-ida-torn").toString
+      IdAuthority.recordBase(spark, root, ids(0, 1000), baseBatch = -1L)
+      IdAuthority.guardAndRecord(spark, root, batchId = 0L, arrivalIds = ids(1000, 1100),
+        priorIds = ids(0, 1000), who = "spec", what = "spec prefix")
+      IdAuthority.completeAppend(spark, root)
+      // without its .crc the record parser itself meets the torn bytes
+      val rec = Paths.get(root, "_id_bloom", "bloom-0")
+      Files.write(rec, tear(Files.readAllBytes(rec)))
+      Files.delete(Paths.get(root, "_id_bloom", ".bloom-0.crc"))
+      val rows = IdAuthority.fsck(spark, root, Some(0L))
+      assert(rows.exists(r => r._2 == "fail" && r._3.contains("bloom-0 unreadable")), rows)
+      val e = intercept[IllegalStateException] {
+        IdAuthority.guardAndRecord(spark, root, batchId = 1L, arrivalIds = ids(1099, 1110),
+          priorIds = ids(0, 1100), who = "spec", what = "spec prefix")
+      }
+      assert(e.getMessage.contains("already exists in the spec prefix"), e.getMessage)
+      IdAuthority.guardAndRecord(spark, root, batchId = 1L, arrivalIds = ids(2000, 2010),
+        priorIds = ids(0, 1100), who = "spec", what = "spec prefix")
+      IdAuthority.completeAppend(spark, root)
+      assert(bloomFiles(root) === Seq("bloom-0", "bloom-1", "bloom-m1"))
+    }
   }
 
   test("a batch that repeats a doc_id refuses in every document layout, naming the id") {

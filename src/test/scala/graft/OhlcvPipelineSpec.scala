@@ -158,6 +158,25 @@ class OhlcvPipelineSpec extends SparkSpec {
     test(s"ids stay 1..n after $what between ticks")(ticksAround(between))
   }
 
+  test("a torn _sequence (empty, garbled, cut mid-number) costs one maxId scan, ids stay 1..n") {
+    val day = (0 until 60 by 5).map(m => payloadAt(f"04:$m%02d:00", 28361.2))
+    // "1" is "12" cut mid-number: the bare decimal cannot tell, the
+    // checksummed file: system's ._sequence.crc does
+    Seq("empty" -> "", "garbled" -> "12x", "cut mid-number" -> "1").foreach { case (what, torn) =>
+      val root = Files.createTempDirectory("graft-torn-seq").toString
+      val tbl = s"$root/ingest/Bitcoin"
+      val sequence = Paths.get(tbl, "_sequence")
+      Pipeline.ingestTick(spark, root, "Bitcoin", day)
+      assert(new String(Files.readAllBytes(sequence)) === "12")
+      Files.write(sequence, torn.getBytes)
+      val scan = jobsDuring(Warehouse.maxId(spark, tbl))
+      assert(jobsDuring(tickAt(root, "05:00:00")) === 1 + scan,
+        s"$what: the tick must recover through one maxId scan")
+      assert(ingestIds(root) === (1L to 13L), s"$what: ids must stay exactly 1..n")
+      assert(new String(Files.readAllBytes(sequence)) === "13")
+    }
+  }
+
   test("an empty tick appends nothing and keeps the sequence") {
     val root = Files.createTempDirectory("graft-empty").toString
     Pipeline.ingestTick(spark, root, "Bitcoin", Seq(payload))

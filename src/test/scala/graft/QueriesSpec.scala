@@ -489,6 +489,29 @@ class QueriesSpec extends SparkSpec {
     CacheLife.release(spark)
   }
 
+  test("the kNN oracles follow the live nprobe and knnbucket knobs (strings only, no job)") {
+    val flat = Seq("sim_knn_ann", "sim_knn_ann_kmeans", "sim_knn_ann_pq", "sim_knn_ann_pq_res")
+    val hier = Seq("sim_knn_ann_hier", "sim_knn_ann_hier_pq", "sim_knn_ann_hier_pq_res")
+    def cuts(sql: String) = """rn <= 6\b""".r.findAllMatchIn(sql).size
+    val bucket = graft.functions.Buckets.sqlBucket("q.vec_id::VARCHAR",
+      SimilarityQueries.KnnSampleBuckets) + " BETWEEN 5 AND 9"
+    val jobs = jobsDuring {
+      assert((flat ++ hier).forall(n => cuts(SimilarityQueries.oracle(n)) == 0))
+      val np6 = withConf(SimilarityQueries.NProbeKey -> "6")(SimilarityQueries.oracle)
+      // one probe cut per source; the hier probe cuts supers, then members
+      flat.foreach(n => assert(cuts(np6(n)) == 1, s"$n: ${cuts(np6(n))} probe cuts"))
+      hier.foreach(n => assert(cuts(np6(n)) == 2, s"$n: ${cuts(np6(n))} probe cuts"))
+      val b55 = withConf(SimilarityQueries.KnnBucketKey -> "5:5")(SimilarityQueries.oracle)
+      // only the trained raw rows honour the bucket chunks, as knnMemo does
+      Seq("sim_knn_ann_kmeans", "sim_knn_ann_hier").foreach(n =>
+        assert(b55(n).contains(bucket), s"$n must restrict its sources to buckets 5..9"))
+      Seq("sim_knn_ann_pq", "sim_knn_ann_pq_res", "sim_knn_ann_hier_pq",
+        "sim_knn_ann_hier_pq_res").foreach(n =>
+        assert(!b55(n).contains("BETWEEN 5 AND 9"), s"$n must stay corpus-wide"))
+    }
+    assert(jobs == 0, s"generating oracle SQL ran $jobs Spark job(s)")
+  }
+
   test("sim.nprobe knob: probing every cell makes the kNN join exact; nprobe=0 refuses") {
     intercept[IllegalArgumentException] {
       withConf(SimilarityQueries.NProbeKey -> "0") {

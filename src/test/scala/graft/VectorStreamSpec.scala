@@ -240,12 +240,14 @@ class VectorStreamSpec extends SparkSpec {
     assert(rows() === Seq(("pins", "ok", "2 pin record(s), committed batch 1")),
       s"fresh sidecar must be clean: ${rows()}")
 
-    // crashed writer temp: warn, and an AGED one is swept by the prune
+    // a young temp may be a live writer's: no warn; aged past the grace
+    // it is a crashed writer's: warn, and the prune sweeps it
     val temp = new java.io.File(wmDir, "wm-1.tmp-deadbeef")
     assert(temp.createNewFile())
-    assert(rows().exists(r => r._1 == "pins.stage" && r._2 == "warn"))
+    assert(!rows().exists(_._1 == "pins.stage"), s"a fresh temp must not warn: ${rows()}")
     assert(temp.setLastModified(
       System.currentTimeMillis() - 2 * graft.sources.Sidecar.StageGraceMs))
+    assert(rows().exists(r => r._1 == "pins.stage" && r._2 == "warn"))
     VectorStream.pruneWatermarks(spark, out, ckpt)
     assert(!temp.exists(), "an aged temp must be swept by the prune")
     assert(!rows().exists(_._1 == "pins.stage"), "swept temp must clear the warn")
